@@ -95,10 +95,11 @@ object VectorFunctions {
 /** SparkSessionExtensions hook so external users get graft's native
   * SQL functions at session build time (`.withExtensions(new
   * GraftExtensions)` or `spark.sql.extensions=graft.functions
-  * .GraftExtensions`): scalars `float_dot`, `pair_pack`, `pair_prod`,
-  * `pair_diff`, `pair_pack_after`, `shingles`, `double_bits`, `bits_double`,
-  * `bloom_might_contain`; aggregates `top_k_by_score(k, score, id,
-  * extra)`, `misra_gries(k, key)`, `bloom_agg(bits, hashes, key)`.
+  * .GraftExtensions`): scalars `float_dot`, the [[PairExpand]] kinds
+  * `pair_pack`, `pair_prod`, `pair_diff`, `pair_pack_after`, `shingles`,
+  * `double_bits`, `bits_double`, `bloom_might_contain`; aggregates
+  * `top_k_by_score(k, score, id, extra)`, `misra_gries(k, key)`,
+  * `kmv_mins(k, key)`, `bloom_agg(bits, hashes, key)`.
   * The driver harness builds plain sessions, so library queries call
   * the Column surfaces directly.
   */
@@ -111,11 +112,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       e.injectFunction((
         new FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder))
     inject("float_dot", classOf[FloatDot], exprs => FloatDot(exprs(0), exprs(1)))
-    inject("pair_pack", classOf[PairPack], exprs => PairPack(exprs(0)))
-    inject("pair_prod", classOf[PairProd], exprs => PairProd(exprs(0)))
-    inject("pair_diff", classOf[PairDiff], exprs => PairDiff(exprs(0)))
-    inject("pair_pack_after", classOf[PairPackAfter],
-      exprs => PairPackAfter(exprs(0), exprs(1)))
+    Seq(PairExpand.Pack, PairExpand.Prod, PairExpand.Diff, PairExpand.PackAfter).foreach(kind =>
+      inject(kind.name, classOf[PairExpand], exprs => PairExpand(kind, exprs)))
     // width must be a foldable literal (evaluated at registration)
     inject("shingles", classOf[Shingles],
       exprs => Shingles(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue))

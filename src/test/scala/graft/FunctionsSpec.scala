@@ -1,8 +1,12 @@
 package graft
 
-import graft.functions.{GraftExtensions, VectorFunctions}
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.{GraftExtensions, PairDiff, PairPack, PairPackAfter, PairProd, SpanPairPack,
+  VectorFunctions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSessionExtensions}
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Surface coverage for the custom-function registration paths: the
@@ -83,7 +87,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("span_pair_pack equals the double-explode span filter on random spans") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
     val base = functions.PairPack.Base
     // random per-user span tables: distinct items, random (smin ≤ smax)
     // step spans — the generator must emit exactly the ordered pairs
@@ -124,6 +127,22 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
     val e2 = intercept[Exception](
       run(Seq(1L, 2L), Seq(1L, functions.PairPack.Base), Seq(4L, 4L)))
     assert(e2.getMessage.contains("outside [0, 2^32)"))
+    // the same contract at its edges on range-derived (codegen) inputs
+    val base = PairPack.Base
+    def span(ids: Column) = SpanPairPack.spanPairPack(longs(1, 2), ids, longs(4, 4))
+    for (badId <- Seq(-1L, base); ids <- Seq(longs(badId, 2), longs(2, badId)))
+      rejected(span(ids), "span_pair_pack:", "outside [0, 2^32)")
+    assert(one[Long](span(longs(0, base - 1))).sorted === Seq(base - 1, (base - 1) * base).sorted)
+    rejected(SpanPairPack.spanPairPack(longs(3, 1), longs(1, 2), longs(4, 4)), "span_pair_pack:", "non-decreasing")
+    rejected(SpanPairPack.spanPairPack(longs(1, 2), longs(1, 2, 3), longs(4, 4)),
+      "span_pair_pack:", "differ in length")
+    // MaxElems elements pass when no span qualifies (smax below every
+    // smin, so the output is empty); one more is rejected
+    val max = SpanPairPack.MaxElems
+    val low = array_repeat(col("id"), max)
+    assert(one[Long](SpanPairPack.spanPairPack(consecutive(max, from = 1), consecutive(max), low)).isEmpty)
+    val over = consecutive(max + 1)
+    rejected(SpanPairPack.spanPairPack(over, over, over), "span_pair_pack:", s"exceeds $max")
   }
 
   test("pair_diff expands v(i)-v(j) in pair_pack's iteration order") {
@@ -142,7 +161,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("misra-gries: frequent keys survive any partitioning and merge order") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
     val keyGen = Gen.frequency((6, Gen.chooseNum(0L, 4L)), (4, Gen.chooseNum(5L, 400L)))
     val p = Prop.forAll(Gen.listOf(keyGen), Gen.chooseNum(2, 8), Gen.chooseNum(1, 5)) {
       (xs: List[Long], k: Int, parts: Int) =>
@@ -176,7 +194,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bloom: no false negatives ever; overlap batch flagged, rest new") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
     // buffer-level law: every inserted key tests positive after any
     // partition split + merge (OR is order-independent)
     val p = Prop.forAll(Gen.listOf(Gen.long), Gen.chooseNum(1, 4)) { (xs: List[Long], parts: Int) =>
@@ -211,9 +228,26 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
     val bad = Seq(Seq(1L, 1L << 33)).toDF("ids")
       .select(functions.PairPack.pairPack(col("ids")).as("pk"))
     val e = intercept[Exception] { bad.collect() }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("pair_pack")), s"unexpected error: $e")
+    // the rest of the i<j kinds' contract at its edges, on range-derived
+    // (non-foldable, codegen) inputs: ids -1 and 2^32 in either position,
+    // 2^32-1 accepted, MaxElems + 1 elements, aligned lengths, sorted keys
+    val base = PairPack.Base
+    for (badId <- Seq(-1L, base); ids <- Seq(longs(badId, 2), longs(2, badId))) {
+      rejected(PairPack.pairPack(ids), "pair_pack:", "outside [0, 2^32)")
+      rejected(PairPackAfter.pairPackAfter(longs(0, 1), ids), "pair_pack_after:", "outside [0, 2^32)")
+    }
+    assert(one[Long](PairPack.pairPack(longs(0, base - 1))) === Seq(base - 1))
+    assert(one[Long](PairPack.pairPack(longs(base - 2, base - 1))) === Seq((base - 2) * base + base - 1))
+    assert(one[Long](PairPackAfter.pairPackAfter(longs(0, 1), longs(base - 1, 0))) === Seq((base - 1) * base))
+    val over = consecutive(PairPack.MaxElems + 1)
+    val exceeds = s"exceeds ${PairPack.MaxElems}"
+    rejected(PairPack.pairPack(over), "pair_pack:", exceeds)
+    rejected(PairProd.pairProd(over.cast("array<double>")), "pair_prod:", exceeds)
+    rejected(PairDiff.pairDiff(over.cast("array<double>")), "pair_diff:", exceeds)
+    rejected(PairPackAfter.pairPackAfter(over, over), "pair_pack_after:", exceeds)
+    rejected(PairPackAfter.pairPackAfter(longs(0, 1, 2), longs(1, 2)), "pair_pack_after:", "differ in length")
+    rejected(PairPackAfter.pairPackAfter(longs(3, 1), longs(1, 2)), "pair_pack_after:", "non-decreasing")
   }
 
   test("count-min sketch never underestimates and ranks probes by exact count") {
@@ -231,5 +265,123 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
     // second run is bit-identical regardless of partitioning
     val again = operators.Advanced.cmSketch(spark, sfTest).collect()
     assert(rows.map(_.toSeq).toSeq === again.map(_.toSeq).toSeq)
+  }
+
+  // ---- pair expansion: the codegen path and the bounds contract ----
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  /** Long array of `id + x` over the one-row `spark.range(1)` (id = 0):
+    * the values of `xs`, but not foldable, so the query is not
+    * evaluated at optimization time. */
+  private def longs(xs: Long*): Column = array(xs.map(col("id") + _): _*)
+
+  /** `n` consecutive longs from `from`, non-foldable like [[longs]]. */
+  private def consecutive(n: Int, from: Long = 0L): Column =
+    sequence(col("id") + from, col("id") + (from + n - 1))
+
+  private def one[T](c: Column): Seq[T] = spark.range(1).select(c).head.getSeq[T](0)
+
+  private def rejected(c: Column, fn: String, what: String): Unit = {
+    val e = intercept[Exception](spark.range(1).select(c).collect())
+    assert(messages(e).exists(m => m.contains(fn) && m.contains(what)), s"unexpected error: $e")
+  }
+
+  /** One random group: positional ids in [0, 2^32) (duplicates allowed,
+    * the range ends likely), aligned values, non-decreasing keys with
+    * ties, and span ends smax >= key. */
+  private val groupGen = for {
+    n <- Gen.chooseNum(0, 12)
+    ids <- Gen.listOfN(n, Gen.oneOf(Gen.chooseNum(0L, 40L), Gen.chooseNum(0L, PairPack.Base - 1)))
+    vals <- Gen.listOfN(n, Gen.chooseNum(-40, 40).map(_ / 4.0))
+    keys <- Gen.listOfN(n, Gen.chooseNum(0L, 6L)).map(_.sorted)
+    ds <- Gen.listOfN(n, Gen.chooseNum(0L, 4L))
+  } yield (ids, vals, keys, keys.zip(ds).map { case (k, d) => k + d })
+
+  /** Whether `plan` runs a Generate over `fn` inside a whole-stage
+    * codegen stage (not behind one of its InputAdapters). */
+  private def codegenGenerate(plan: SparkPlan, fn: String): Boolean = {
+    def inStage(p: SparkPlan): Boolean = p match {
+      case _: InputAdapter => false
+      case g: GenerateExec if g.generator.toString.contains(s"$fn(") => true
+      case other => other.children.exists(inStage)
+    }
+    new AdaptiveSparkPlanHelper {}.collect(plan) { case w: WholeStageCodegenExec => w }
+      .exists(w => inStage(w.child))
+  }
+
+  /** Element rows (g, i, id, v, k, x) of the aligned arrays. */
+  private def elems(in: DataFrame, side: String): DataFrame =
+    in.select(col("g"), posexplode(arrays_zip(col("ids"), col("vals"), col("keys"), col("smax"))))
+      .select(col("g"), col("pos").as(s"i$side"), col("col.ids").as(s"id$side"),
+        col("col.vals").as(s"v$side"), col("col.keys").as(s"k$side"), col("col.smax").as(s"x$side"))
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
+  /** Property: on cached (non-local) random groups, `custom` runs `fn`
+    * in a whole-stage-codegen Generate, with codegen fallback off so a
+    * compile error fails, and returns the same rows as the posexplode
+    * self-join filtered by `cond` and projected to `cols`. */
+  private def matchesSelfJoin(fn: String, custom: DataFrame => DataFrame, cond: Column,
+      cols: Column*): Unit = {
+    val session = spark
+    import session.implicits._
+    val fallback = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try {
+      val p = Prop.forAllNoShrink(Gen.listOf(groupGen)) { groups =>
+        val in = groups.zipWithIndex.map { case ((i, v, k, x), g) => (g.toLong, i, v, k, x) }
+          .toDF("g", "ids", "vals", "keys", "smax").cache()
+        try {
+          val got = custom(in)
+          assert(codegenGenerate(got.queryExecution.executedPlan, fn),
+            got.queryExecution.executedPlan.toString)
+          val want = elems(in, "a").join(elems(in, "b"), Seq("g")).where(cond)
+            .select(col("g") +: cols: _*)
+          sortedRows(got) == sortedRows(want)
+        } finally in.unpersist()
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5), p)
+      assert(res.passed, res.status.toString)
+    } finally prev.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
+  }
+
+  // a·2³² + b as bits: the product overflows a signed long (an ANSI
+  // error) for ids at or above 2³¹
+  private val packed: Column = shiftleft(col("ida"), 32).bitwiseOR(col("idb"))
+
+  test("pair_pack on the codegen path equals the posexplode self-join") {
+    matchesSelfJoin("pair_pack",
+      _.select(col("g"), explode(PairPack.pairPack(col("ids")))),
+      col("ia") < col("ib"), packed)
+  }
+
+  test("pair_prod on the codegen path aligns with pair_pack like the self-join") {
+    matchesSelfJoin("pair_prod",
+      _.select(col("g"), explode(arrays_zip(PairPack.pairPack(col("ids")),
+        PairProd.pairProd(col("vals")))).as("z")).select(col("g"), col("z.*")),
+      col("ia") < col("ib"), packed, col("va") * col("vb"))
+  }
+
+  test("pair_diff on the codegen path aligns with pair_pack like the self-join") {
+    matchesSelfJoin("pair_diff",
+      _.select(col("g"), explode(arrays_zip(PairPack.pairPack(col("ids")),
+        PairDiff.pairDiff(col("vals")))).as("z")).select(col("g"), col("z.*")),
+      col("ia") < col("ib"), packed, col("va") - col("vb"))
+  }
+
+  test("pair_pack_after on the codegen path equals the strictly-later self-join") {
+    matchesSelfJoin("pair_pack_after",
+      _.select(col("g"), explode(PairPackAfter.pairPackAfter(col("keys"), col("ids")))),
+      col("ia") < col("ib") && col("kb") > col("ka"), packed)
+  }
+
+  test("span_pair_pack on the codegen path equals the span self-join") {
+    matchesSelfJoin("span_pair_pack",
+      _.select(col("g"), explode(SpanPairPack.spanPairPack(col("keys"), col("ids"), col("smax")))),
+      col("ia") =!= col("ib") && col("ka") < col("xb"), packed)
   }
 }
