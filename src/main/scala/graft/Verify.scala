@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,35 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (dev-only): comma-separated query-name filter
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark rejects
-      // natively; read as long nanos (Tables.events normalizes to µs).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the broadcast policy (SCALING.md) leans on AQE picking up
-      // unhinted small sides from runtime stats: pin it on explicitly
-      .config("spark.sql.adaptive.enabled", "true")
-      // TypedImperativeAggregates (TopKByScore, MisraGries) run in
-      // ObjectHashAggregateExec, which falls back to SORT-BASED
-      // aggregation after only 128 distinct keys per task — silently
-      // re-introducing the full-input sort the bounded top-K aggregate
-      // exists to avoid. 1M keys × ~400 B/buffer bounds the object map
-      // at ~400 MB/task, far past every per-task group count here.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // AQE byte-based partition coalescing is blind to downstream
-      // per-row cost: a small exchange feeding a pair/shingle GENERATOR
-      // coalesces to one task and serializes the expansion (measured:
-      // 1.5 s single-task stages at local[32]). Lowering the coalesce
-      // floor keeps small-but-CPU-heavy shuffles parallel; at real
-      // scale partitions sit far above either floor, so this only
-      // changes behavior where the default was pathological.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     // A crashed query must surface in the correctness artifact, not
     // vanish from it: record every failure (name -> error) and write the

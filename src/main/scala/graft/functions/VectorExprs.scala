@@ -100,8 +100,11 @@ object VectorFunctions {
   * `double_bits`, `bits_double`, `bloom_might_contain`; aggregates
   * `top_k_by_score(k, score, id, extra)`, `misra_gries(k, key)`,
   * `kmv_mins(k, key)`, `bloom_agg(bits, hashes, key)`.
-  * The driver harness builds plain sessions, so library queries call
-  * the Column surfaces directly.
+  * [[graft.GraftSession]], the session of every main and of the tests,
+  * does not install it: the driver runs `SparkEntry.queries` on its own
+  * plain session, where a query that called a function by its SQL name
+  * would fail after passing here. Library queries call the Column
+  * surfaces directly.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier

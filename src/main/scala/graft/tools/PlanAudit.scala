@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: sweep EVERY SparkEntry query's physical plan for the
   * shapes this suite bans at 100 TB — `Exchange SinglePartition` and
@@ -9,34 +11,27 @@ import org.apache.spark.sql.SparkSession
   * the audit's consumer (PlanShapeSpec pins); this tool is the raw
   * sweep that finds candidates. Not part of the driver contract.
   *
-  * Usage: runMain graft.tools.PlanAudit [sfDir] [q_a,q_b,...]
-  * (second arg scopes the sweep; scoped runs also dump each query's
-  * full formatted plan for eyeballing the mechanism.)
+  * Usage: runMain graft.tools.PlanAudit <sfDir> [q_a,q_b [outDir suffix]]
+  *   - the second arg scopes the sweep; a scoped run also prints each
+  *     query's full formatted plan,
+  *   - or, given an outDir and suffix, writes it to
+  *     <outDir>/<name>_<suffix>.txt instead — the plans/r<N>/
+  *     before/after evidence artifact.
+  *
+  * The session is [[graft.GraftSession]]'s (SPARK_GRAFT_CPUS, default
+  * 4), and the SparkEntry.warm hooks run first, as in Bench, so
+  * memoized/serve-backed queries show their steady-state serving plan
+  * (the shape Bench times), not the one-time build.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
+    val sfDir = args(0)
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").map(_.trim).toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // AQE byte-based partition coalescing is blind to downstream
-      // per-row cost: a small exchange feeding a pair/shingle GENERATOR
-      // coalesces to one task and serializes the expansion (measured:
-      // 1.5 s single-task stages at local[32]). Lowering the coalesce
-      // floor keeps small-but-CPU-heavy shuffles parallel; at real
-      // scale partitions sit far above either floor, so this only
-      // changes behavior where the default was pathological.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val out: Option[(String, String)] = if (args.length > 3) Some((args(2), args(3))) else None
+    out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
+    val spark = graft.GraftSession.getOrCreate()
+    graft.SparkEntry.warm.foreach { case (_, hook) => hook(spark, sfDir) }
 
     // Formatted mode dedupes reused subtrees, so counts reflect the
     // actual physical plan. Two detectors:
@@ -52,7 +47,7 @@ object PlanAudit {
       .foreach { case (name, q) =>
       try {
         val plan = q(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          ExplainMode.fromString("formatted"))
         val sp = "Arguments: SinglePartition".r.findAllIn(plan).length
         val gw = globalWin.findAllIn(plan).length
         val cp = "CartesianProduct".r.findAllIn(plan).length
@@ -68,7 +63,12 @@ object PlanAudit {
         val rescans = facts.map { t =>
           t -> s"$t\\.parquet".r.findAllIn(plan).length
         }.filter(_._2 >= 3)
-        if (only.nonEmpty) println(s"[audit-plan] $name\n$plan")
+        out match {
+          case Some((dir, suffix)) =>
+            Files.writeString(Paths.get(s"$dir/${name}_$suffix.txt"), plan)
+            println(s"[audit-plan] wrote $dir/${name}_$suffix.txt")
+          case None => if (only.nonEmpty) println(s"[audit-plan] $name\n$plan")
+        }
         if (sp > 0 || gw > 0 || cp > 0 || rescans.nonEmpty) {
           nOff += 1
           val rs = if (rescans.isEmpty) ""

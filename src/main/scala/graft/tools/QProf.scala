@@ -1,48 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler — the ONE parameterized runner (r10 advisor: the
   * former one-off stage profilers duplicated pipeline bodies and
   * could silently drift from the queries they mirrored; this tool
-  * only ever calls REGISTERED code paths — SparkEntry.queries and the
-  * operator families' warm hooks — so it cannot).
+  * only ever calls REGISTERED code paths — SparkEntry.queries and
+  * SparkEntry.warm, the hooks Bench runs — so it cannot).
   *
   * Usage:
   *   runMain graft.tools.QProf q_a,q_b [runs]  — per-run seconds for
   *     registry queries in one warmed session (default 3 runs)
   *   runMain graft.tools.QProf warm            — per-family warm-stage
-  *     seconds (the memoized shared tables: interaction caps, pair
-  *     aggregates, similarity models, ANN index passes, eval split,
-  *     BPE training — exactly the stages the expensive tail shares)
+  *     seconds of SparkEntry.warm (the memoized shared tables: interaction
+  *     caps, pair aggregates, similarity models, ANN index passes, eval
+  *     split, BPE training — exactly the stages the expensive tail shares)
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1); the session is
+  * [[graft.GraftSession]]'s (SPARK_GRAFT_CPUS, default 4).
   */
 object QProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // AQE byte-based partition coalescing is blind to downstream
-      // per-row cost: a small exchange feeding a pair/shingle GENERATOR
-      // coalesces to one task and serializes the expansion (measured:
-      // 1.5 s single-task stages at local[32]). Lowering the coalesce
-      // floor keeps small-but-CPU-heavy shuffles parallel; at real
-      // scale partitions sit far above either floor, so this only
-      // changes behavior where the default was pathological.
-      // SPARK_GRAFT_QPROF_MINPART overrides the floor for A/B runs
-      // (dev tool only — Bench/Verify keep the fixed value)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_QPROF_MINPART", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
 
     def timed(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
@@ -50,18 +28,8 @@ object QProf {
       println(f"QPROF $label%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
 
-    val warms: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-      "warm:recsys"      -> (graft.operators.Recsys.warm _),
-      "warm:dedup"       -> (graft.operators.Dedup.warm _),
-      "warm:graphrank"   -> (graft.operators.GraphRank.warm _),
-      "warm:training"    -> (graft.operators.Training.warm _),
-      "warm:mlrecsys"    -> (graft.operators.MlRecsys.warm _),
-      "warm:similarity"  -> (graft.operators.Similarity.warm _),
-      "warm:pipelineops" -> (graft.operators.PipelineOps.warm _),
-      "warm:text"        -> (graft.operators.TextAnalysis.warm _))
-
     if (args.headOption.contains("warm")) {
-      warms.foreach { case (label, w) => timed(label)(w(spark, sfDir)) }
+      graft.SparkEntry.warm.foreach { case (family, w) => timed(s"warm:$family")(w(spark, sfDir)) }
     } else {
       val names =
         if (args(0) == "all") graft.SparkEntry.queries.keys.toSeq
@@ -100,7 +68,7 @@ object QProf {
               s"t=${i.numTasks} [$ops] $sh ${site.getOrElse("")}"))
           }
         })
-      warms.foreach { case (_, w) => w(spark, sfDir) } // Bench-identical warmup
+      graft.SparkEntry.warm.foreach { case (_, w) => w(spark, sfDir) } // Bench-identical warmup
       names.foreach { n =>
         val fn = graft.SparkEntry.queries(n)
         val ts = (1 to runs).map { r =>

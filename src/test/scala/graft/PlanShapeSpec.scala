@@ -112,6 +112,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       "fallback threshold must be raised or 128 distinct keys trigger a full sort per task")
   }
 
+  test("test sessions plan under every GraftSession setting (root and newSession)") {
+    // every pin in this suite holds only for the conf Bench and Verify run
+    for ((name, s) <- Seq("SparkFixture.session" -> SparkFixture.session, "newSession" -> planSession);
+         (k, v) <- GraftSession.settings(SparkFixture.Cpus))
+      assert(s.conf.getOption(k).contains(v), s"$name: $k is ${s.conf.getOption(k)}, GraftSession sets $v")
+  }
+
   test("contamination: no per-token regex re-evaluation in scan-level filters") {
     val p = plan(operators.TextAnalysis.contamination(planSession, sfTest))
     // the O(len^2) round-3 bug: pushdown inlined the trigram HOF into a

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local SparkSession for ScalaTest suites — mirrors the
-  * Verify/Bench harness configs (UTC, nanos-as-long, small shuffle).
+/** Shared local SparkSession for ScalaTest suites: the mains' own
+  * [[GraftSession]] conf, so tests plan what Bench and Verify run,
+  * plus the test-only Hive catalog.
   */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
@@ -17,19 +18,13 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the broadcast policy (SCALING.md) leans on AQE picking up
-      // unhinted small sides from runtime stats: pin it on explicitly
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // keep TypedImperativeAggregates hash-based (see Verify.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
+  /** Fixed, not SPARK_GRAFT_CPUS: plan pins and partition-sensitive
+    * expectations were written against 4 shuffle partitions, and a test
+    * must not change outcome with the host's core count. */
+  val Cpus = 4
+
+  lazy val session: SparkSession = GraftSession.getOrCreate(
+    GraftSession.builder(Cpus)
       // Hive-backed catalog (SURVEY §2.1 S4): embedded Derby metastore
       // + warehouse under target/ so persistent-table semantics (the
       // reference family's Hive warehouse source/sink) run in tests.
@@ -38,9 +33,5 @@ object SparkFixture {
       .config("spark.sql.warehouse.dir", "target/hive-warehouse")
       .config("javax.jdo.option.ConnectionURL",
         "jdbc:derby:;databaseName=target/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      .enableHiveSupport())
 }
