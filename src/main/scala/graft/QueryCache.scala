@@ -7,11 +7,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memo cache for shared intermediate tables (capped
-  * interactions, similarity matrices, shingle sets).
+  * interactions, similarity matrices, shingle sets), plus [[once]],
+  * the per-session build-once guard of the serve-table writes.
   *
   * Lifecycle (the round-2 advisor flagged the raw ConcurrentHashMaps
   * this replaces as a leak + staleness hazard):
   *   - entries are keyed (session, tag) and persisted MEMORY_AND_DISK;
+  *     a [[once]] tag keeps no data, only its done mark;
   *   - a SparkListener registered once per session drops that session's
   *     entries when its application ends, and every access sweeps
   *     entries whose SparkContext has stopped, so stopped sessions
@@ -25,6 +27,7 @@ import org.apache.spark.storage.StorageLevel
 object QueryCache {
 
   private val cache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val ran = ConcurrentHashMap.newKeySet[(SparkSession, String)]()
   private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
 
   /** Memoize `build` (persisted) under (spark, tag).
@@ -38,13 +41,7 @@ object QueryCache {
     * unpersisting the loser.
     */
   def memo(spark: SparkSession, tag: String)(build: => DataFrame): DataFrame = {
-    sweepStopped()
-    if (hooked.add(spark)) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-          dropEntries(spark, unpersist = false) // executors are gone; just release refs
-      })
-    }
+    track(spark)
     val key = (spark, tag)
     val existing = cache.get(key)
     if (existing != null) existing
@@ -57,6 +54,35 @@ object QueryCache {
       // cache too. The duplicate persist call was already a no-op
       // ("already cached" plan match); dropping the reference suffices.
       if (prev != null) prev else built
+    }
+  }
+
+  /** Run `effect` once per (spark, tag) — the build-once guard of a
+    * side effect whose result lives outside the session (a serve
+    * table written to the catalog). Same lifecycle as [[memo]]: a
+    * nested `once`/`memo` inside `effect` is fine (contains + add,
+    * never computeIfAbsent), the tag is marked done only after
+    * `effect` returns (a throwing effect re-runs on the next call),
+    * and [[invalidate]] or the context stopping forgets it. Two
+    * threads racing on a fresh tag may both run `effect`, like
+    * [[memo]]'s benign double build. */
+  def once(spark: SparkSession, tag: String)(effect: => Unit): Unit = {
+    track(spark)
+    val key = (spark, tag)
+    if (!ran.contains(key)) {
+      effect
+      ran.add(key): Unit
+    }
+  }
+
+  /** Sweep stopped sessions and hook `spark`'s application end once. */
+  private def track(spark: SparkSession): Unit = {
+    sweepStopped()
+    if (hooked.add(spark)) {
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          dropEntries(spark, unpersist = false) // executors are gone; just release refs
+      })
     }
   }
 
@@ -74,6 +100,7 @@ object QueryCache {
         it.remove()
       }
     }
+    ran.removeIf(_._1 eq spark)
     // NOTE: the session stays in `hooked` — its listener remains
     // registered and valid, and removing it here would make every
     // invalidate+memo cycle stack a fresh duplicate listener on the
@@ -86,6 +113,7 @@ object QueryCache {
   private def sweepStopped(): Unit = {
     val it = cache.keySet().iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
+    ran.removeIf(_._1.sparkContext.isStopped)
     val hs = hooked.iterator()
     while (hs.hasNext) if (hs.next().sparkContext.isStopped) hs.remove()
   }

@@ -17,7 +17,7 @@ object SparkEntry {
     * (SURVEY.md §7.1).
     */
   def entry(spark: SparkSession): DataFrame =
-    queries.getOrElse("q_itemcf_recommend", queries("q_pricing_summary"))(
+    queries("q_itemcf_recommend")(
       spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */

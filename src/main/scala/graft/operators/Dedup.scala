@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -457,33 +458,25 @@ object Dedup {
   /** Catalog names for the persisted dedup index, unique +
     * deterministic per fixture dir (the [[graft.operators.Similarity]]
     * serve-index naming discipline). */
-  private[graft] def dedupIndexNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Seq("shingles", "sizes").map(n => n -> s"graft_dedup_${n}_$tag").toMap
-  }
+  private[graft] def dedupIndexNames(sfDir: String): Map[String, String] =
+    Seq("shingles", "sizes").map(n => n -> Sources.serveName(s"dedup_$n", sfDir)).toMap
 
   /** Build-once: persist the STANDING corpus's dedup index — the
     * inverted shingle index (doc_id < [[IncrementalFrom]]) bucketed by
     * shingle (the probe join key: an arriving batch's shingle join
     * reads only matching buckets and never reshuffles the resident
     * index) and the per-doc shingle sizes bucketed by doc_id. Written
-    * once per (session, sfDir) to an external temp location, memoized
-    * through [[graft.QueryCache]] — the q_ivf_serve pattern applied
-    * to the dedup pillar. */
+    * once per (session, sfDir) ([[graft.QueryCache.once]]) by
+    * [[graft.sources.Sources.publish]] to a warehouse-rooted serve
+    * location — the q_ivf_serve pattern applied to the dedup pillar. */
   private[graft] def ensureDedupIndex(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"dedup_serve_written:$sfDir") {
+    graft.QueryCache.once(spark, s"dedup_serve_written:$sfDir") {
       val names = dedupIndexNames(sfDir)
-      names.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-      def loc(n: String) = graft.sources.Sources.serveLocation(spark, names(n))
       val old = shingles(spark, sfDir).where(col("doc_id") < IncrementalFrom)
-      graft.sources.Sources.writeBucketedTable(
-        old, names("shingles"), Seq("s"), 8, Seq("s"), Some(loc("shingles")))
-      graft.sources.Sources.writeBucketedTable(
-        old.groupBy("doc_id").agg(count(lit(1)).as("ns")),
-        names("sizes"), Seq("doc_id"), 8, Seq("doc_id"), Some(loc("sizes")))
-      spark.range(1).toDF("ok") // memo marker: the index exists
-    }.count(): Unit
+      Sources.publish(old, names("shingles"), Seq("s"), 8, Seq("s"))
+      Sources.publish(old.groupBy("doc_id").agg(count(lit(1)).as("ns")),
+        names("sizes"), Seq("doc_id"), 8, Seq("doc_id"))
+    }
 
   /** Serve incremental dedup from the PERSISTED index — the
     * build-once/serve-many leg of the dedup pillar, mirroring
@@ -520,11 +513,8 @@ object Dedup {
   /** Catalog names of the GROW-lineage dedup index — a separate
     * lineage from [[dedupIndexNames]] because growing THOSE tables
     * would silently change q_dedup_serve's corpus. */
-  private[graft] def dedupGrowNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Seq("shingles", "sizes").map(n => n -> s"graft_dedupgrow_${n}_$tag").toMap
-  }
+  private[graft] def dedupGrowNames(sfDir: String): Map[String, String] =
+    Seq("shingles", "sizes").map(n => n -> Sources.serveName(s"dedupgrow_$n", sfDir)).toMap
 
   /** Build + grow, once per session: persist the standing corpus's
     * inverted shingle index (the [[ensureDedupIndex]] layout, separate
@@ -539,15 +529,14 @@ object Dedup {
     * not each other — the parallel-admission policy; both engines
     * mirror it exactly). */
   private[graft] def ensureDedupGrow(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"dedup_grow_appended:$sfDir") {
+    graft.QueryCache.once(spark, s"dedup_grow_appended:$sfDir") {
       val names = dedupGrowNames(sfDir)
       writeResidentIndex(spark, sfDir, names)
       // wave 1 dedups against the RELOADED standing index
       admitWave(spark, names,
         shingles(spark, sfDir)
           .where(col("doc_id") >= IncrementalFrom && col("doc_id") < GrowMid))
-      spark.range(1).toDF("ok") // memo marker: the index has grown
-    }.count(): Unit
+    }
 
   /** (Re)write a grow-lineage resident index: the standing corpus's
     * shingles bucketed by shingle and sizes bucketed by doc_id —
@@ -555,15 +544,11 @@ object Dedup {
     * twin (which grows its OWN lineage, never the registry's). */
   private[graft] def writeResidentIndex(spark: SparkSession, sfDir: String,
       names: Map[String, String]): Unit = {
-    names.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-    def loc(n: String) = graft.sources.Sources.serveLocation(spark, names(n))
     val standing = shingles(spark, sfDir).where(col("doc_id") < IncrementalFrom)
       .localCheckpoint() // index write + size write read it
-    graft.sources.Sources.writeBucketedTable(
-      standing, names("shingles"), Seq("s"), 8, Seq("s"), Some(loc("shingles")))
-    graft.sources.Sources.writeBucketedTable(
-      standing.groupBy("doc_id").agg(count(lit(1)).as("ns")),
-      names("sizes"), Seq("doc_id"), 8, Seq("doc_id"), Some(loc("sizes")))
+    Sources.publish(standing, names("shingles"), Seq("s"), 8, Seq("s"))
+    Sources.publish(standing.groupBy("doc_id").agg(count(lit(1)).as("ns")),
+      names("sizes"), Seq("doc_id"), 8, Seq("doc_id"))
   }
 
   /** ADMIT one wave of (doc_id, s) shingle rows into a grow-lineage
@@ -593,9 +578,9 @@ object Dedup {
         >= JaccardThreshold)
       .select("new_id").distinct()
     val survivors = wave.join(dupIds, wave("doc_id") === dupIds("new_id"), "left_anti")
-    graft.sources.Sources.appendBucketedTable(
+    Sources.appendBucketedTable(
       survivors.select("doc_id", "s"), names("shingles"), Seq("s"), 8, Seq("s"))
-    graft.sources.Sources.appendBucketedTable(
+    Sources.appendBucketedTable(
       survivors.groupBy("doc_id").agg(count(lit(1)).as("ns")),
       names("sizes"), Seq("doc_id"), 8, Seq("doc_id"))
     // A foreachBatch sink executes the append through streaming's
@@ -667,45 +652,26 @@ object Dedup {
   /** Catalog names of the COMPACTED grow-lineage index and the
     * deletion leg's tombstone table — each its own lineage (the grown
     * and standing serve tables other queries read stay immutable). */
-  private[graft] def dedupCompactNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Map("shingles" -> s"graft_dedupcmp_shingles_$tag",
-        "sizes" -> s"graft_dedupcmp_sizes_$tag",
-        "tombstones" -> s"graft_deduptomb_ids_$tag")
-  }
+  private[graft] def dedupCompactNames(sfDir: String): Map[String, String] =
+    Map("shingles" -> "dedupcmp_shingles", "sizes" -> "dedupcmp_sizes",
+        "tombstones" -> "deduptomb_ids")
+      .map { case (k, stem) => k -> Sources.serveName(stem, sfDir) }
 
   /** COMPACT the grown dedup index (r12 verdict #5 — the ANN
     * compactor's pattern transplanted): every admission wave appends
     * its own per-bucket files into the grown shingle/size tables, so
     * after months of batches a bucket is hundreds of fragments.
-    * Read each grown table's LOCATION as plain parquet (through the
-    * catalog-resolved bucketed scan the planner elides the
-    * repartition as redundant and KEEPS the fragmentation — the
-    * measured q_ivf_serve_compact gotcha), repartition ON THE BUCKET
-    * COLUMN (repartition's hash IS the bucket hash), and rewrite the
-    * minimal one-file-per-bucket layout. A physical rewrite, never a
-    * semantic change — the spec pins strictly-fewer files AND
+    * [[graft.sources.Sources.compact]] rewrites each grown table into
+    * the minimal one-file-per-bucket layout. A physical rewrite, never
+    * a semantic change — the spec pins strictly-fewer files AND
     * bit-identical serve. */
   private[graft] def ensureDedupCompact(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"dedup_grow_compacted:$sfDir") {
+    graft.QueryCache.once(spark, s"dedup_grow_compacted:$sfDir") {
       ensureDedupGrow(spark, sfDir)
       val grown = dedupGrowNames(sfDir)
       val names = dedupCompactNames(sfDir)
-      def grownLoc(t: String) = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(grown(t))).location.toString
-      graft.sources.Sources.retireTable(spark, names("shingles"))
-      graft.sources.Sources.retireTable(spark, names("sizes"))
-      graft.sources.Sources.writeBucketedTable(
-        spark.read.parquet(grownLoc("shingles")).repartition(8, col("s")),
-        names("shingles"), Seq("s"), 8, Seq("s"),
-        Some(graft.sources.Sources.serveLocation(spark, names("shingles"))))
-      graft.sources.Sources.writeBucketedTable(
-        spark.read.parquet(grownLoc("sizes")).repartition(8, col("doc_id")),
-        names("sizes"), Seq("doc_id"), 8, Seq("doc_id"),
-        Some(graft.sources.Sources.serveLocation(spark, names("sizes"))))
-      spark.range(1).toDF("ok") // memo marker: compaction ran
-    }.count(): Unit
+      Seq("shingles", "sizes").foreach(t => Sources.compact(spark, grown(t), names(t)))
+    }
 
   /** Serve wave-2 dedup from the COMPACTED grown index — must be
     * indistinguishable from [[dedupServeGrow]] (shared oracle),
@@ -728,17 +694,13 @@ object Dedup {
     * "forget these documents" job needs only the index, never a
     * corpus scan. */
   private[graft] def ensureDedupTombstones(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"dedup_tombstones_written:$sfDir") {
+    graft.QueryCache.once(spark, s"dedup_tombstones_written:$sfDir") {
       ensureDedupIndex(spark, sfDir)
-      val names = dedupCompactNames(sfDir)
-      graft.sources.Sources.retireTable(spark, names("tombstones"))
-      graft.sources.Sources.writeExternalTable(
+      Sources.publish(
         spark.table(dedupIndexNames(sfDir)("sizes"))
           .select("doc_id").where(col("doc_id") % DedupTombMod === 0),
-        names("tombstones"),
-        graft.sources.Sources.serveLocation(spark, names("tombstones")))
-      spark.range(1).toDF("ok") // memo marker: the tombstones exist
-    }.count(): Unit
+        dedupCompactNames(sfDir)("tombstones"))
+    }
 
   /** Serve incremental dedup with the tombstone table honored at
     * SERVE time (r12 verdict #4, dedup pillar): the resident index

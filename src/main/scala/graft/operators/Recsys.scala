@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -345,11 +346,7 @@ object Recsys {
 
   /** Catalog name of the persisted ItemCF model, unique per fixture
     * dir (the serve-index naming discipline). */
-  private[graft] def cfModelName(sfDir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_itemcf_sim_$tag"
-  }
+  private[graft] def cfModelName(sfDir: String): String = Sources.serveName("itemcf_sim", sfDir)
 
   /** Build-once: persist the trained ItemCF similarity model (the
     * per-item top-K neighbor table) as an external catalog table,
@@ -357,17 +354,12 @@ object Recsys {
     * production pattern — recsys pipelines train the similarity matrix
     * in a batch job, write it to the warehouse/serving store, and
     * every recommendation request reads the STORED model, never the
-    * training pipeline. Memoized marker via [[graft.QueryCache]]. */
+    * training pipeline. Written once per session ([[graft.QueryCache.once]]). */
   private[graft] def ensureCfModel(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"itemcf_serve_written:$sfDir") {
-      val name = cfModelName(sfDir)
-      graft.sources.Sources.retireTable(spark, name)
-      graft.sources.Sources.writeBucketedTable(
-        itemcfSimilarity(spark, sfDir), name,
-        Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"),
-        Some(graft.sources.Sources.serveLocation(spark, name)))
-      spark.range(1).toDF("ok") // memo marker: the model table exists
-    }.count(): Unit
+    graft.QueryCache.once(spark, s"itemcf_serve_written:$sfDir") {
+      Sources.publish(itemcfSimilarity(spark, sfDir), cfModelName(sfDir),
+        Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"))
+    }
 
   /** Serve ItemCF recommendations from the PERSISTED model — the
     * build-once/serve-many leg of the CF pillar ([[graft.operators
@@ -479,14 +471,13 @@ object Recsys {
         "n_common_pairs", "overlap_bp", "n_top1_changed")
   }
 
+  /** The four tables of a CF store snapshot (frozen or advanced). */
+  private val CfStoreParts = Seq("strengths", "pairs", "counts", "model")
+
   /** Catalog names of the frozen model's persisted sufficient
     * statistics (the refresh store), unique per fixture dir. */
-  private[graft] def cfStoreNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Seq("strengths", "pairs", "counts", "model")
-      .map(n => n -> s"graft_cfstore_${n}_$tag").toMap
-  }
+  private[graft] def cfStoreNames(sfDir: String): Map[String, String] =
+    CfStoreParts.map(n => n -> Sources.serveName(s"cfstore_$n", sfDir)).toMap
 
   /** Build-once: persist the FROZEN ItemCF model's internal state —
     * the pre-[[SplitDate]] per-(user, item) strength aggregate
@@ -502,10 +493,8 @@ object Recsys {
     * delta keep their persisted rows verbatim, so only the affected
     * subset re-ranks. */
   private[graft] def ensureCfStore(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"itemcf_store_written:$sfDir") {
+    graft.QueryCache.once(spark, s"itemcf_store_written:$sfDir") {
       val names = cfStoreNames(sfDir)
-      names.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-      def loc(n: String) = graft.sources.Sources.serveLocation(spark, names(n))
       val train = trainInteractions(spark, sfDir).localCheckpoint()
       val capped = capHistories(train).localCheckpoint() // pairs + counts read it
       val pairs = pairsWithin(capped.select("user_id", "item_id"), "user_id", "item_id")
@@ -513,17 +502,13 @@ object Recsys {
         .localCheckpoint() // store write + frozen-model knn read it
       val counts = capped.groupBy("item_id").agg(count(lit(1)).as("n_users"))
         .localCheckpoint() // ≤ |items| rows; same two consumers
-      graft.sources.Sources.writeBucketedTable(
-        train, names("strengths"), Seq("user_id"), CfStoreBuckets, Seq("user_id", "item_id"),
-        Some(loc("strengths")))
-      graft.sources.Sources.writeBucketedTable(
-        pairs, names("pairs"), Seq("pk"), CfStoreBuckets, Seq("pk"), Some(loc("pairs")))
-      graft.sources.Sources.writeExternalTable(counts, names("counts"), loc("counts"))
-      graft.sources.Sources.writeBucketedTable(
-        knnFromPairCounts(unpack(pairs, "item_i", "item_j"), counts),
-        names("model"), Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"), Some(loc("model")))
-      spark.range(1).toDF("ok") // memo marker: the store exists
-    }.count(): Unit
+      Sources.publish(train, names("strengths"),
+        Seq("user_id"), CfStoreBuckets, Seq("user_id", "item_id"))
+      Sources.publish(pairs, names("pairs"), Seq("pk"), CfStoreBuckets, Seq("pk"))
+      Sources.publish(counts, names("counts"))
+      Sources.publish(knnFromPairCounts(unpack(pairs, "item_i", "item_j"), counts),
+        names("model"), Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"))
+    }
 
   /** Post-[[SplitDate]] interaction batch — the rows that ARRIVED
     * since the frozen model trained, collapsed to per-(user, item)
@@ -846,30 +831,22 @@ object Recsys {
   }
 
   /** Catalog name of the PUBLISHED refreshed model. */
-  private[graft] def cfRefreshedName(sfDir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_itemcf_refreshed_$tag"
-  }
+  private[graft] def cfRefreshedName(sfDir: String): String =
+    Sources.serveName("itemcf_refreshed", sfDir)
 
   /** PUBLISH the refreshed model: write [[itemcfRefresh]]'s output as
     * the new serving table (same bucketed layout as the fresh model's
-    * [[ensureCfModel]]). retire+saveAsTable is the atomic catalog swap
+    * [[ensureCfModel]]). [[Sources.publish]]'s retire+saveAsTable is the catalog swap
     * a production rollout performs; the old model's location is
     * reclaimed. This is the last hop of the lifecycle the drift alarm
     * starts: drift (q_itemcf_drift says "retrain now") → refresh
     * (delta merge, q_itemcf_refresh) → publish (this) → serve
     * (q_itemcf_refresh_serve). */
   private[graft] def ensureRefreshedModel(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"itemcf_refresh_published:$sfDir") {
-      val name = cfRefreshedName(sfDir)
-      graft.sources.Sources.retireTable(spark, name)
-      graft.sources.Sources.writeBucketedTable(
-        itemcfRefresh(spark, sfDir), name,
-        Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"),
-        Some(graft.sources.Sources.serveLocation(spark, name)))
-      spark.range(1).toDF("ok") // memo marker: the rollout happened
-    }.count(): Unit
+    graft.QueryCache.once(spark, s"itemcf_refresh_published:$sfDir") {
+      Sources.publish(itemcfRefresh(spark, sfDir), cfRefreshedName(sfDir),
+        Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"))
+    }
 
   /** Serve recommendations from the PUBLISHED refreshed model. The
     * refreshed model is row-identical to the from-scratch model (the
@@ -887,12 +864,8 @@ object Recsys {
     * [[cfStoreNames]]: advancing THOSE tables in place would silently
     * change q_itemcf_refresh's inputs (the immutable-serve-table
     * discipline every grow leg follows). */
-  private[graft] def cfChainNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Seq("strengths", "pairs", "counts", "model")
-      .map(n => n -> s"graft_cfadv_${n}_$tag").toMap
-  }
+  private[graft] def cfChainNames(sfDir: String): Map[String, String] =
+    CfStoreParts.map(n => n -> Sources.serveName(s"cfadv_$n", sfDir)).toMap
 
   /** ADVANCE the store (r12 verdict #1 — the leg that lets the refresh
     * lifecycle iterate past day one): fold batch b₁ = [SplitDate,
@@ -908,34 +881,28 @@ object Recsys {
     * the changed set reads only matching user_id buckets); the pair
     * and count merges are complete post-merge stores already. */
   private[graft] def ensureChainStore(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"itemcf_chain_advanced:$sfDir") {
+    graft.QueryCache.once(spark, s"itemcf_chain_advanced:$sfDir") {
       ensureCfStore(spark, sfDir)
       val old = cfStoreNames(sfDir)
       val adv = cfChainNames(sfDir)
-      adv.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-      def loc(n: String) = graft.sources.Sources.serveLocation(spark, adv(n))
       val post1 = deltaBetween(spark, sfDir, SplitDate, Some(ChainDate))
         .localCheckpoint() // merge + model refresh read it
       val m = mergeStats(spark.table(old("strengths")), spark.table(old("pairs")),
         spark.table(old("counts")), post1)
-      graft.sources.Sources.writeBucketedTable(
+      Sources.publish(
         spark.table(old("strengths")).join(m.changed, Seq("user_id"), "left_anti")
           .unionByName(m.mergedStr),
-        adv("strengths"), Seq("user_id"), CfStoreBuckets, Seq("user_id", "item_id"),
-        Some(loc("strengths")))
-      graft.sources.Sources.writeBucketedTable(
-        m.mergedPairs, adv("pairs"), Seq("pk"), CfStoreBuckets, Seq("pk"), Some(loc("pairs")))
-      graft.sources.Sources.writeExternalTable(
-        m.mergedCounts, adv("counts"), loc("counts"))
-      graft.sources.Sources.writeBucketedTable(
+        adv("strengths"), Seq("user_id"), CfStoreBuckets, Seq("user_id", "item_id"))
+      Sources.publish(m.mergedPairs, adv("pairs"), Seq("pk"), CfStoreBuckets, Seq("pk"))
+      Sources.publish(m.mergedCounts, adv("counts"))
+      Sources.publish(
         refreshRank(m, spark.table(old("pairs")),
           // same adaptive tail as the registry path (b₁ is fixture-shaped)
           oldModelOpt = if (rerankDelta(m.cntDelta.count(),
               spark.table(old("counts")).count()))
             Some(spark.table(old("model"))) else None),
-        adv("model"), Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"), Some(loc("model")))
-      spark.range(1).toDF("ok") // memo marker: the store advanced
-    }.count(): Unit
+        adv("model"), Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"))
+    }
 
   /** The refresh CHAIN: refresh #2 runs from the ADVANCED store —
     * batch b₂ = [ChainDate, ∞) folds into the snapshot

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Sources
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -530,49 +531,36 @@ object Similarity {
 
   /** Catalog names, unique + deterministic per fixture dir (the same
     * session may serve several SFs). */
-  private[graft] def serveTableNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+  private[graft] def serveTableNames(sfDir: String): Map[String, String] =
     Seq("cells", "centroids", "codebooks", "codes", "vectors_q")
-      .map(n => n -> s"graft_ivf_${n}_$tag").toMap
-  }
+      .map(n => n -> Sources.serveName(s"ivf_$n", sfDir)).toMap
 
   /** Build-once: write the index artifacts as EXTERNAL catalog tables
-    * (fresh temp location per build — no stale-data aliasing across
-    * sessions; a production deployment points `path` at its index
-    * volume instead). The corpus-sized tables are BUCKETED on their
-    * serve-side join keys — inverted lists by cell, codes and
-    * quantized vectors by vec_id — so at 10⁹ vectors a probe reads
-    * only matching buckets and the shortlist joins co-locate without
-    * reshuffling the corpus. Memoized through [[graft.QueryCache]]
-    * (1-row marker), so the write happens once per (session, sfDir)
-    * and the serve query pays only the reads.
+    * through [[graft.sources.Sources.publish]] (a warehouse-rooted
+    * location with a fresh nonce per build, the previous build retired
+    * — no stale-data aliasing across sessions or JVMs; a production
+    * deployment points the location at its index volume instead). The
+    * corpus-sized tables are BUCKETED on their serve-side join keys —
+    * inverted lists by cell, codes and quantized vectors by vec_id — so
+    * at 10⁹ vectors a probe reads only matching buckets and the
+    * shortlist joins co-locate without reshuffling the corpus. Guarded
+    * by [[graft.QueryCache.once]], so the write happens once per
+    * (session, sfDir) and the serve query pays only the reads.
     */
   private[graft] def ensureServeIndex(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"ivf_serve_written:$sfDir") {
+    graft.QueryCache.once(spark, s"ivf_serve_written:$sfDir") {
       val names = serveTableNames(sfDir)
-      // stable warehouse-rooted locations + retire-on-rebuild (r11
-      // advisor: temp-dir locations dangle across JVMs and each
-      // rebuild orphaned its predecessor)
-      names.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-      def loc(n: String) = graft.sources.Sources.serveLocation(spark, names(n))
       val e0 = Tables.embeddings(spark, sfDir)
-      graft.sources.Sources.writeBucketedTable(
-        cellAssignFrom(e0, NCells).select("vec_id", "cid"),
-        names("cells"), Seq("cid"), 8, Seq("cid"), Some(loc("cells")))
-      graft.sources.Sources.writeExternalTable(
-        e0.where(col("vec_id") < NCells).select("vec_id", "embedding"),
-        names("centroids"), loc("centroids"))
-      graft.sources.Sources.writeExternalTable(
-        Training.pqCodebooks(spark, sfDir), names("codebooks"), loc("codebooks"))
-      graft.sources.Sources.writeBucketedTable(
-        Training.pqCodes(spark, sfDir),
-        names("codes"), Seq("vec_id"), 8, Seq("vec_id"), Some(loc("codes")))
-      graft.sources.Sources.writeBucketedTable(
-        Training.pqSub(spark, sfDir),
-        names("vectors_q"), Seq("vec_id"), 8, Seq("vec_id"), Some(loc("vectors_q")))
-      spark.range(1).toDF("ok") // memo marker: the artifacts exist
-    }.count(): Unit
+      Sources.publish(cellAssignFrom(e0, NCells).select("vec_id", "cid"),
+        names("cells"), Seq("cid"), 8, Seq("cid"))
+      Sources.publish(e0.where(col("vec_id") < NCells).select("vec_id", "embedding"),
+        names("centroids"))
+      Sources.publish(Training.pqCodebooks(spark, sfDir), names("codebooks"))
+      Sources.publish(Training.pqCodes(spark, sfDir),
+        names("codes"), Seq("vec_id"), 8, Seq("vec_id"))
+      Sources.publish(Training.pqSub(spark, sfDir),
+        names("vectors_q"), Seq("vec_id"), 8, Seq("vec_id"))
+    }
 
   private def serveIndex(spark: SparkSession, sfDir: String): ServeIndex = {
     ensureServeIndex(spark, sfDir)
@@ -1347,29 +1335,21 @@ object Similarity {
     * IVF-flat index stores per cell), bucketed by cell, plus the
     * coarse centroid table. Distinct from [[serveTableNames]]'s
     * full-corpus PQ lineage: this one exists to GROW. */
-  private[graft] def ingestIndexNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Seq("lists", "centroids").map(n => n -> s"graft_ivfing_${n}_$tag").toMap
-  }
+  private[graft] def ingestIndexNames(sfDir: String): Map[String, String] =
+    Seq("lists", "centroids").map(n => n -> Sources.serveName(s"ivfing_$n", sfDir)).toMap
 
   /** Build-once: persist the BASE corpus's IVF-flat index (lists
     * bucketed by cid, centroids from the base's `vec_id < NCells`
     * members — the frozen quantizer q_ivf_ingest audits). */
   private[graft] def ensureIngestIndex(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"ivf_serve_ingest_written:$sfDir") {
+    graft.QueryCache.once(spark, s"ivf_serve_ingest_written:$sfDir") {
       val names = ingestIndexNames(sfDir)
-      names.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-      def loc(n: String) = graft.sources.Sources.serveLocation(spark, names(n))
       val base = Tables.embeddings(spark, sfDir).where(!isIngestBatch)
-      graft.sources.Sources.writeBucketedTable(
-        cellAssignTo(base, base, NCells),
-        names("lists"), Seq("cid"), 8, Seq("cid"), Some(loc("lists")))
-      graft.sources.Sources.writeExternalTable(
-        base.where(col("vec_id") < NCells).select("vec_id", "embedding"),
-        names("centroids"), loc("centroids"))
-      spark.range(1).toDF("ok") // memo marker: the index exists
-    }.count(): Unit
+      Sources.publish(cellAssignTo(base, base, NCells),
+        names("lists"), Seq("cid"), 8, Seq("cid"))
+      Sources.publish(base.where(col("vec_id") < NCells).select("vec_id", "embedding"),
+        names("centroids"))
+    }
 
   /** Grow-only ingest APPEND: the arriving batch is assigned into the
     * frozen cells against the RELOADED centroid table (the assignment
@@ -1380,15 +1360,14 @@ object Similarity {
     * rewritten or reshuffled — SourcesSpec pins that contract by file
     * listing. Memoized so the batch lands exactly once per session. */
   private[graft] def ensureIngestAppend(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"ivf_serve_ingest_appended:$sfDir") {
+    graft.QueryCache.once(spark, s"ivf_serve_ingest_appended:$sfDir") {
       ensureIngestIndex(spark, sfDir)
       val names = ingestIndexNames(sfDir)
       val batch = Tables.embeddings(spark, sfDir).where(isIngestBatch)
-      graft.sources.Sources.appendBucketedTable(
+      Sources.appendBucketedTable(
         cellAssignTo(batch, spark.table(names("centroids")), NCells),
         names("lists"), Seq("cid"), 8, Seq("cid"))
-      spark.range(1).toDF("ok") // memo marker: the batch is resident
-    }.count(): Unit
+    }
 
   /** Serve multi-probe IVF retrieval from the GROWN persisted index —
     * the leg q_ivf_ingest was missing (r11 verdict #2): the base index
@@ -1435,45 +1414,24 @@ object Similarity {
   /** Catalog name of the COMPACTED ingest index (one table: the
     * rewritten inverted lists; centroids are shared with the ingest
     * lineage — compaction never touches the quantizer). */
-  private[graft] def compactIndexName(sfDir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_ivfcmp_lists_$tag"
-  }
+  private[graft] def compactIndexName(sfDir: String): String =
+    Sources.serveName("ivfcmp_lists", sfDir)
 
   /** Index COMPACTION — the maintenance job the grow-only contract
     * eventually demands: every [[ensureIngestAppend]] lands its own
     * per-bucket files, so after months of daily batches a bucket is
     * hundreds of small files and scan cost degrades (open/seek
-    * overhead, no bucket-level sort). Compaction reads the grown table
-    * ONCE and rewrites it as a fresh bucketed + sorted table — one
-    * shuffle-free pass (the read is already bucketed by cid and the
-    * write buckets by cid), after which readers see the identical rows
-    * in the minimal file layout. ServeIndexSpec pins both halves:
-    * strictly fewer data files AND bit-identical retrieval. */
+    * overhead, no bucket-level sort). Compaction
+    * ([[graft.sources.Sources.compact]]) reads the grown table ONCE and
+    * rewrites it as a fresh bucketed + sorted table, after which
+    * readers see the identical rows in the minimal file layout.
+    * ServeIndexSpec pins both halves: strictly fewer data files AND
+    * bit-identical retrieval. */
   private[graft] def ensureIngestCompact(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"ivf_serve_compacted:$sfDir") {
+    graft.QueryCache.once(spark, s"ivf_serve_compacted:$sfDir") {
       ensureIngestAppend(spark, sfDir)
-      val name = compactIndexName(sfDir)
-      graft.sources.Sources.retireTable(spark, name)
-      // a compactor works at the FILE level: read the grown table's
-      // location as plain parquet (through the catalog-resolved
-      // bucketed scan, the planner elides the repartition as redundant
-      // against the claimed bucket layout and each input split then
-      // writes its own per-bucket files — measured: the "compaction"
-      // kept the fragment count), then repartition ON THE BUCKET
-      // COLUMN — repartition's hash IS the bucket hash (Murmur3 pmod
-      // n) — so each task holds exactly one bucket and writes exactly
-      // one file: the minimal layout
-      val lists = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          ingestIndexNames(sfDir)("lists"))).location
-      graft.sources.Sources.writeBucketedTable(
-        spark.read.parquet(lists.toString).repartition(8, col("cid")),
-        name, Seq("cid"), 8, Seq("cid"),
-        Some(graft.sources.Sources.serveLocation(spark, name)))
-      spark.range(1).toDF("ok") // memo marker: compaction ran
-    }.count(): Unit
+      Sources.compact(spark, ingestIndexNames(sfDir)("lists"), compactIndexName(sfDir))
+    }
 
   /** Serve from the COMPACTED index — must be indistinguishable from
     * the grown index it rewrote (shared oracle, declared after
@@ -1554,35 +1512,27 @@ object Similarity {
     * analog), the code table, and the quantized vectors the exact
     * re-rank reads — the latter two bucketed by vec_id and GROWN by
     * appends, never rebuilt. */
-  private[graft] def pqIngestNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Seq("codebooks", "codes", "vectors_q").map(n => n -> s"graft_pqing_${n}_$tag").toMap
-  }
+  private[graft] def pqIngestNames(sfDir: String): Map[String, String] =
+    Seq("codebooks", "codes", "vectors_q")
+      .map(n => n -> Sources.serveName(s"pqing_$n", sfDir)).toMap
 
   /** Build-once: train PQ codebooks on the BASE corpus only and
     * persist them with the base's codes and quantized vectors — the
     * PQ sibling of [[ensureIngestIndex]] (which owns the coarse
     * lists + centroids this lineage shares). */
   private[graft] def ensurePqIngestIndex(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"pq_ingest_written:$sfDir") {
+    graft.QueryCache.once(spark, s"pq_ingest_written:$sfDir") {
       ensureIngestIndex(spark, sfDir)
       val names = pqIngestNames(sfDir)
-      names.values.foreach(n => graft.sources.Sources.retireTable(spark, n))
-      def loc(n: String) = graft.sources.Sources.serveLocation(spark, names(n))
       val baseEs = Training.pqSubOf(Training.quantizedOf(
           Tables.embeddings(spark, sfDir).where(!isIngestBatch)))
         .localCheckpoint() // codebook training + codes + vectors read it
       val cb = Training.pqCodebooksOf(baseEs)
-      graft.sources.Sources.writeExternalTable(cb, names("codebooks"), loc("codebooks"))
-      graft.sources.Sources.writeBucketedTable(
-        Training.pqCodesOf(baseEs, cb),
-        names("codes"), Seq("vec_id"), 8, Seq("vec_id"), Some(loc("codes")))
-      graft.sources.Sources.writeBucketedTable(
-        baseEs, names("vectors_q"), Seq("vec_id"), 8, Seq("vec_id"),
-        Some(loc("vectors_q")))
-      spark.range(1).toDF("ok") // memo marker: the PQ artifacts exist
-    }.count(): Unit
+      Sources.publish(cb, names("codebooks"))
+      Sources.publish(Training.pqCodesOf(baseEs, cb),
+        names("codes"), Seq("vec_id"), 8, Seq("vec_id"))
+      Sources.publish(baseEs, names("vectors_q"), Seq("vec_id"), 8, Seq("vec_id"))
+    }
 
   /** Grow the PQ lineage: quantize the arriving batch, ENCODE it
     * against the RELOADED frozen codebooks (the codebooks never see
@@ -1594,20 +1544,19 @@ object Similarity {
     * codebooks plus two bucketed appends; nothing resident is read,
     * rewritten or reshuffled (SourcesSpec's append contract). */
   private[graft] def ensurePqIngestAppend(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"pq_ingest_appended:$sfDir") {
+    graft.QueryCache.once(spark, s"pq_ingest_appended:$sfDir") {
       ensurePqIngestIndex(spark, sfDir)
       ensureIngestAppend(spark, sfDir)
       val names = pqIngestNames(sfDir)
       val batchEs = Training.pqSubOf(Training.quantizedOf(
           Tables.embeddings(spark, sfDir).where(isIngestBatch)))
         .localCheckpoint() // encode + vector append read it
-      graft.sources.Sources.appendBucketedTable(
+      Sources.appendBucketedTable(
         Training.pqCodesOf(batchEs, spark.table(names("codebooks"))),
         names("codes"), Seq("vec_id"), 8, Seq("vec_id"))
-      graft.sources.Sources.appendBucketedTable(
+      Sources.appendBucketedTable(
         batchEs, names("vectors_q"), Seq("vec_id"), 8, Seq("vec_id"))
-      spark.range(1).toDF("ok") // memo marker: the batch is encoded
-    }.count(): Unit
+    }
 
   /** Serve the COMPOSED IVF→PQ retrieval from the GROWN frozen-index
     * lineage — the production day-2 shape for the 10⁹-vector layout:
@@ -1775,28 +1724,21 @@ object Similarity {
     * compliance job delivers) and the COMPACTED post-delete lists
     * (tombstoned rows physically dropped). Own lineage — the grown
     * lists table other queries serve from stays immutable. */
-  private[graft] def tombNames(sfDir: String): Map[String, String] = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Map("tombstones" -> s"graft_ivftomb_ids_$tag",
-        "lists" -> s"graft_ivftomb_lists_$tag")
-  }
+  private[graft] def tombNames(sfDir: String): Map[String, String] =
+    Map("tombstones" -> "ivftomb_ids", "lists" -> "ivftomb_lists")
+      .map { case (k, stem) => k -> Sources.serveName(stem, sfDir) }
 
   /** Persist the tombstone set. Derived from the grown lists table's
     * id column — ZERO corpus scans: a delete request needs only the
     * index, exactly like the CF pillar's store-only delete. */
   private[graft] def ensureTombstones(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"ivf_tombstones_written:$sfDir") {
+    graft.QueryCache.once(spark, s"ivf_tombstones_written:$sfDir") {
       ensureIngestAppend(spark, sfDir)
-      val names = tombNames(sfDir)
-      graft.sources.Sources.retireTable(spark, names("tombstones"))
-      graft.sources.Sources.writeExternalTable(
+      Sources.publish(
         spark.table(ingestIndexNames(sfDir)("lists"))
           .select("vec_id").where(col("vec_id") % TombMod === TombRem),
-        names("tombstones"),
-        graft.sources.Sources.serveLocation(spark, names("tombstones")))
-      spark.range(1).toDF("ok") // memo marker: the tombstones exist
-    }.count(): Unit
+        tombNames(sfDir)("tombstones"))
+    }
 
   /** Serve retrieval with the tombstone table honored at SERVE time
     * (r12 verdict #4, ANN pillar): the grown inverted lists anti-join
@@ -1825,28 +1767,18 @@ object Similarity {
   /** The PHYSICAL deletion pass the serve-time mask eventually
     * demands (the compaction/retention job): rewrite the grown lists
     * WITHOUT the tombstoned rows — [[ensureIngestCompact]]'s
-    * read-location-as-plain-parquet + repartition-on-bucket-column
-    * rewrite, composed with the anti-join — so the deleted vectors'
-    * bytes leave the index entirely (true erasure, not just masking).
+    * [[graft.sources.Sources.compact]] with the anti-join as its `keep`
+    * — so the deleted vectors' bytes leave the index entirely (true erasure, not just masking).
     * Serving from the compacted table must be indistinguishable from
     * the masked serve (shared oracle); the spec additionally pins the
     * physical row drop and the shrunken layout. */
   private[graft] def ensureDeleteCompact(spark: SparkSession, sfDir: String): Unit =
-    graft.QueryCache.memo(spark, s"ivf_delete_compacted:$sfDir") {
+    graft.QueryCache.once(spark, s"ivf_delete_compacted:$sfDir") {
       ensureTombstones(spark, sfDir)
       val names = tombNames(sfDir)
-      graft.sources.Sources.retireTable(spark, names("lists"))
-      val grownLoc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          ingestIndexNames(sfDir)("lists"))).location
-      graft.sources.Sources.writeBucketedTable(
-        spark.read.parquet(grownLoc.toString)
-          .join(broadcast(spark.table(names("tombstones"))), Seq("vec_id"), "left_anti")
-          .repartition(8, col("cid")),
-        names("lists"), Seq("cid"), 8, Seq("cid"),
-        Some(graft.sources.Sources.serveLocation(spark, names("lists"))))
-      spark.range(1).toDF("ok") // memo marker: the erasure ran
-    }.count(): Unit
+      Sources.compact(spark, ingestIndexNames(sfDir)("lists"), names("lists"),
+        _.join(broadcast(spark.table(names("tombstones"))), Seq("vec_id"), "left_anti"))
+    }
 
   /** Serve from the post-delete COMPACTED index — same contract as
     * [[ivfServeDelete]] (shared oracle): masking and erasing must be

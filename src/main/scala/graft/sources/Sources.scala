@@ -148,6 +148,60 @@ object Sources {
     w1.saveAsTable(table)
   }
 
+  /** Catalog name of a serve table: `graft_<stem>_<tag>`, where the
+    * tag (the first four MD5 bytes of `sfDir`, hex) keeps the names
+    * unique and deterministic per fixture dir — one session may serve
+    * several SFs, and a later JVM sharing the metastore finds the same
+    * table under the same name. */
+  def serveName(stem: String, sfDir: String): String = {
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    s"graft_${stem}_$tag"
+  }
+
+  /** (Re)build a serve table: [[retireTable]] the previous build, then
+    * write `df` as an EXTERNAL catalog table at a fresh
+    * [[serveLocation]] — bucketed by `bucketCols` into `nBuckets`
+    * files (sorted by `sortCols`) when `bucketCols` is non-empty, a
+    * plain parquet table otherwise (small broadcast artifacts:
+    * centroids, codebooks, tombstone sets). `df` must not read `table`
+    * itself: the retire drops it before the write runs. */
+  def publish(df: DataFrame, table: String, bucketCols: Seq[String] = Nil,
+              nBuckets: Int = 0, sortCols: Seq[String] = Nil): Unit = {
+    val spark = df.sparkSession
+    retireTable(spark, table)
+    val loc = serveLocation(spark, table)
+    if (bucketCols.isEmpty) writeExternalTable(df, table, loc)
+    else writeBucketedTable(df, table, bucketCols, nBuckets, sortCols, Some(loc))
+  }
+
+  /** COMPACT a grown bucketed serve table into `to`: every
+    * [[appendBucketedTable]] lands its own per-bucket files, so after
+    * many batches a bucket is many fragments. The rewrite keeps
+    * `from`'s bucket spec (columns, count, sort) from the catalog,
+    * applies `keep` (e.g. a tombstone anti-join that erases rows) and
+    * [[publish]]es one file per bucket.
+    *
+    * A compactor works at the FILE level: it reads `from`'s location
+    * as plain parquet. Through the catalog-resolved bucketed scan the
+    * planner elides the repartition as redundant against the claimed
+    * bucket layout and each input split then writes its own per-bucket
+    * files (measured: the "compaction" kept the fragment count). The
+    * repartition is ON THE BUCKET COLUMNS with the bucket count —
+    * repartition's hash IS the bucket hash (Murmur3 pmod n) — so each
+    * task holds exactly one bucket and writes exactly one file. */
+  def compact(spark: SparkSession, from: String, to: String,
+              keep: DataFrame => DataFrame = identity): Unit = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(from))
+    val spec = meta.bucketSpec.getOrElse(
+      throw new IllegalArgumentException(s"compact: $from is not a bucketed table"))
+    val rows = keep(spark.read.parquet(meta.location.toString))
+    publish(rows.repartition(spec.numBuckets,
+        spec.bucketColumnNames.map(org.apache.spark.sql.functions.col): _*),
+      to, spec.bucketColumnNames, spec.numBuckets, spec.sortColumnNames)
+  }
+
   /** Fresh external location for a serve-index table: a stable root
     * under the session's WAREHOUSE path (so a later JVM sharing the
     * metastore never inherits a catalog entry pointing at a cleaned

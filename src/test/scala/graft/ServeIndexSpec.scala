@@ -38,6 +38,46 @@ class ServeIndexSpec extends AnyFunSuite with SparkFixture {
   private def corpusScans(plan: String): Seq[String] =
     scanLocations(plan).filterNot(_.contains("/graft_serve/"))
 
+  test("serve-table names are pinned: every lineage keeps its catalog name for sfTest") {
+    // The metastore and warehouse under target/ persist across JVMs: a
+    // renamed table would orphan the previous name's location.
+    val pinned = Map(
+      "cfModelName" -> Seq("graft_itemcf_sim_a1e8d12c"),
+      "cfRefreshedName" -> Seq("graft_itemcf_refreshed_a1e8d12c"),
+      "cfStoreNames" -> Seq("graft_cfstore_counts_a1e8d12c", "graft_cfstore_model_a1e8d12c",
+        "graft_cfstore_pairs_a1e8d12c", "graft_cfstore_strengths_a1e8d12c"),
+      "cfChainNames" -> Seq("graft_cfadv_counts_a1e8d12c", "graft_cfadv_model_a1e8d12c",
+        "graft_cfadv_pairs_a1e8d12c", "graft_cfadv_strengths_a1e8d12c"),
+      "dedupIndexNames" -> Seq("graft_dedup_shingles_a1e8d12c", "graft_dedup_sizes_a1e8d12c"),
+      "dedupGrowNames" -> Seq("graft_dedupgrow_shingles_a1e8d12c",
+        "graft_dedupgrow_sizes_a1e8d12c"),
+      "dedupCompactNames" -> Seq("graft_dedupcmp_shingles_a1e8d12c",
+        "graft_dedupcmp_sizes_a1e8d12c", "graft_deduptomb_ids_a1e8d12c"),
+      "serveTableNames" -> Seq("graft_ivf_cells_a1e8d12c", "graft_ivf_centroids_a1e8d12c",
+        "graft_ivf_codebooks_a1e8d12c", "graft_ivf_codes_a1e8d12c",
+        "graft_ivf_vectors_q_a1e8d12c"),
+      "ingestIndexNames" -> Seq("graft_ivfing_centroids_a1e8d12c", "graft_ivfing_lists_a1e8d12c"),
+      "compactIndexName" -> Seq("graft_ivfcmp_lists_a1e8d12c"),
+      "pqIngestNames" -> Seq("graft_pqing_codebooks_a1e8d12c", "graft_pqing_codes_a1e8d12c",
+        "graft_pqing_vectors_q_a1e8d12c"),
+      "tombNames" -> Seq("graft_ivftomb_ids_a1e8d12c", "graft_ivftomb_lists_a1e8d12c"))
+    val got = Map(
+      "cfModelName" -> Seq(Recsys.cfModelName(sfTest)),
+      "cfRefreshedName" -> Seq(Recsys.cfRefreshedName(sfTest)),
+      "cfStoreNames" -> Recsys.cfStoreNames(sfTest).values.toSeq.sorted,
+      "cfChainNames" -> Recsys.cfChainNames(sfTest).values.toSeq.sorted,
+      "dedupIndexNames" -> Dedup.dedupIndexNames(sfTest).values.toSeq.sorted,
+      "dedupGrowNames" -> Dedup.dedupGrowNames(sfTest).values.toSeq.sorted,
+      "dedupCompactNames" -> Dedup.dedupCompactNames(sfTest).values.toSeq.sorted,
+      "serveTableNames" -> Similarity.serveTableNames(sfTest).values.toSeq.sorted,
+      "ingestIndexNames" -> Similarity.ingestIndexNames(sfTest).values.toSeq.sorted,
+      "compactIndexName" -> Seq(Similarity.compactIndexName(sfTest)),
+      "pqIngestNames" -> Similarity.pqIngestNames(sfTest).values.toSeq.sorted,
+      "tombNames" -> Similarity.tombNames(sfTest).values.toSeq.sorted)
+    pinned.foreach { case (f, names) => assert(got(f) === names, s"$f renamed a serve table") }
+    assert(got.values.flatten.toSet.size === 30, "two lineages share a table name")
+  }
+
   test("serving from the reloaded index is row-identical to the in-session build") {
     val served = Similarity.ivfServe(spark, sfTest).collect()
     val inSession = Similarity.ivfPq(spark, sfTest).collect()

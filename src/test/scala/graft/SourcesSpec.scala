@@ -262,6 +262,17 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       "append rewrote resident bucket files (name/size/mtime changed)")
     assert(after.size > before.size, "append must add new bucket files")
     assert(spark.table(t).count() === 5, "readers must merge resident + appended")
+    // compact: the grown table rewritten one file per bucket, same rows
+    val c = "graft_test_append_contract_cmp"
+    Sources.compact(spark, t, c)
+    val cLoc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(c)).location)
+    val cFiles = cLoc.listFiles().count(f => f.isFile && f.getName.startsWith("part-"))
+    assert(cFiles > 0 && cFiles < after.size, s"compact kept $cFiles of ${after.size} files")
+    assert(cFiles <= 4, "compact must write at most one file per bucket")
+    def rows(table: String) = spark.table(table).as[(Long, String)].collect().sorted.toSeq
+    assert(rows(c) === rows(t), "compact must keep every row")
+    graft.sources.Sources.retireTable(spark, c)
     graft.sources.Sources.retireTable(spark, t)
   }
 
@@ -280,6 +291,19 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     assert(loc2 != loc1, "each build gets a fresh nonce location")
     graft.sources.Sources.writeExternalTable(Seq((2L, "b")).toDF("k", "v"), t, loc2)
     assert(spark.table(t).count() === 1)
+    // publish = retire + fresh location + write: plain, then bucketed
+    def meta() = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t))
+    Sources.publish(Seq((3L, "c"), (4L, "d")).toDF("k", "v"), t)
+    val loc3 = meta().location.getPath
+    assert(!new java.io.File(loc2).exists(), "publish must retire the previous location")
+    assert(loc3.contains("/graft_serve/") && meta().bucketSpec.isEmpty)
+    Sources.publish(Seq((5L, "e"), (6L, "f"), (7L, "g")).toDF("k", "v"), t, Seq("k"), 4, Seq("k"))
+    assert(!new java.io.File(loc3).exists(), "publish must retire the previous location")
+    assert(meta().location.getPath.contains("/graft_serve/"))
+    assert(meta().bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames))
+      === Some((4, Seq("k"), Seq("k"))), "a bucketed publish records its bucket spec")
+    assert(spark.table(t).count() === 3)
     graft.sources.Sources.retireTable(spark, t)
   }
 }
