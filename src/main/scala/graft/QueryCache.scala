@@ -4,23 +4,26 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memo cache for shared intermediate tables (capped
   * interactions, similarity matrices, shingle sets), plus [[once]],
-  * the per-session build-once guard of the serve-table writes.
+  * the per-session build-once guard of the serve-table writes, and
+  * [[schema]], the per-session schema of each fixture file.
   *
   * Lifecycle (the round-2 advisor flagged the raw ConcurrentHashMaps
   * this replaces as a leak + staleness hazard):
   *   - entries are keyed (session, tag) and persisted MEMORY_AND_DISK;
-  *     a [[once]] tag keeps no data, only its done mark;
+  *     a [[once]] tag keeps no data, only its done mark; a [[schema]]
+  *     entry is keyed (session, path) and keeps only the schema;
   *   - a SparkListener registered once per session drops that session's
   *     entries when its application ends, and every access sweeps
   *     entries whose SparkContext has stopped, so stopped sessions
   *     never pin DataFrames for the JVM lifetime;
-  *   - [[invalidate]] unpersists and drops a live session's entries —
-  *     call it if the parquet under a cached sfDir is REWRITTEN within
-  *     a session. Absent that call, inputs are assumed immutable for
+  *   - [[invalidate]] unpersists and drops a live session's entries,
+  *     done marks and schemas — call it if the parquet under a cached
+  *     sfDir is REWRITTEN within a session. Absent that call, inputs are assumed immutable for
   *     the session's lifetime (the normal batch-pipeline contract:
   *     sources are immutable snapshots while a run is in flight).
   */
@@ -28,6 +31,7 @@ object QueryCache {
 
   private val cache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private val ran = ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+  private val schemas = new ConcurrentHashMap[(SparkSession, String), StructType]()
   private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
 
   /** Memoize `build` (persisted) under (spark, tag).
@@ -75,6 +79,23 @@ object QueryCache {
     }
   }
 
+  /** The schema of the parquet at `path`: `infer` runs once per
+    * (spark, path) and later calls return its result. Reading with a
+    * known schema skips the reader's inference job, so a query that
+    * reads the same fixture again builds without running Spark. Same
+    * lifecycle and immutable-input contract as [[memo]]. */
+  def schema(spark: SparkSession, path: String)(infer: => StructType): StructType = {
+    track(spark)
+    val key = (spark, path)
+    val known = schemas.get(key)
+    if (known != null) known
+    else {
+      val inferred = infer
+      val prev = schemas.putIfAbsent(key, inferred)
+      if (prev != null) prev else inferred
+    }
+  }
+
   /** Sweep stopped sessions and hook `spark`'s application end once. */
   private def track(spark: SparkSession): Unit = {
     sweepStopped()
@@ -101,6 +122,7 @@ object QueryCache {
       }
     }
     ran.removeIf(_._1 eq spark)
+    schemas.keySet().removeIf(_._1 eq spark)
     // NOTE: the session stays in `hooked` — its listener remains
     // registered and valid, and removing it here would make every
     // invalidate+memo cycle stack a fresh duplicate listener on the
@@ -114,6 +136,7 @@ object QueryCache {
     val it = cache.keySet().iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
     ran.removeIf(_._1.sparkContext.isStopped)
+    schemas.keySet().removeIf(_._1.sparkContext.isStopped)
     val hs = hooked.iterator()
     while (hs.hasNext) if (hs.next().sparkContext.isStopped) hs.remove()
   }

@@ -5,9 +5,11 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.{VectorAssembler, Word2Vec}
 import org.apache.spark.ml.fpm.FPGrowth
 import org.apache.spark.ml.recommendation.ALS
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** MLlib-backed recommenders (SURVEY.md §2.9 M5–M7). These are not
   * SQL-expressible, so none carry a DuckDB oracle — the driver records
@@ -312,17 +314,30 @@ object MlRecsys {
     // floor is the scale-invariant statement "seen by at least
     // SeqPatternMinUsers users"; the one driver-side count is a model
     // hyperparameter from data size (same discipline as pagerank's |V|).
-    val nSeqs = seqs.count().max(1L)
+    //
+    // MLlib's RDD PrefixSpan is called directly: the ml wrapper would
+    // hand it an uncached mapped RDD and re-run the two-level
+    // aggregation above in every mining pass. Persisted here, it runs
+    // once; `run` materializes the patterns at the input's storage
+    // level before it returns, so the input is released after mining.
+    val sequences = seqs.select("sequence").rdd
+      .map(_.getSeq[scala.collection.Seq[Any]](0).map(_.toArray).toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nSeqs = sequences.count().max(1L)
     val minUsers = SeqPatternMinUsers * math.sqrt(nSeqs / SeqPatternGateSeqs)
-    val ps = new org.apache.spark.ml.fpm.PrefixSpan()
-      .setSequenceCol("sequence")
+    val mined = new org.apache.spark.mllib.fpm.PrefixSpan()
       // length cap 2 = the "A then B" granularity every downstream
       // consumer (next-item shelf, transition features) actually uses;
       // the projected-database search space is exponential in the cap,
       // so 3 paid several-fold the runtime for patterns nothing read
       .setMinSupport(math.min(math.max(minUsers / nSeqs, 1e-4), 0.5))
       .setMaxPatternLength(2)
-    ps.findFrequentSequentialPatterns(seqs)
+      .run(sequences)
+      .freqSequences.map(f => Row(f.sequence.map(_.toSeq).toSeq, f.freq))
+    sequences.unpersist(blocking = false)
+    spark.createDataFrame(mined, StructType(Seq(
+        StructField("sequence", seqs.schema("sequence").dataType, nullable = false),
+        StructField("freq", LongType, nullable = false))))
       .select(concat_ws(";", expr(
         "transform(sequence, step -> concat_ws(',', transform(step, x -> cast(x AS string))))"))
           .as("pattern"),

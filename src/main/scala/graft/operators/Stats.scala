@@ -1,9 +1,13 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Advanced OLAP / optimizer-statistics operators: skyline (Pareto
   * front), exact equi-depth histogram, differentially-private release
@@ -2740,57 +2744,87 @@ object Stats {
     * grid converges to <0.1% margin error well inside 3 rounds). */
   val RakeRounds = 3
 
+  /** One cell of the raking grid: its population and sample counts. */
+  final case class RakeCell(segment: String, region: String, nPop: Long, nSample: Long)
+
   /** Raking / iterative proportional fitting — the survey-weighting
     * step every biased-sample analysis needs: a 25% deterministic hash
     * sample of the customer base is reweighted so its (segment,
     * region) cell weights reproduce the POPULATION margins on both
     * axes. Classic IPF: scale each cell by target/current for the
-    * segment margin, then for the region margin, repeat. Everything
-    * rides the aggregated 5×5 cell grid (dimension-sized), so each
-    * round is two margin aggregates + a broadcast join — the heavy
-    * pass is the one population/sample cell aggregation.
+    * segment margin, then for the region margin, repeat.
     *
-    * Fixed point: w in [[RakeUnit]] units; the scale ratio is
-    * (t·Unit²) div s (≈Unit-sized), then w' = (w·ratio) div Unit —
-    * exact BIGINT floor arithmetic, identical in the unrolled oracle.
-    * Bound: w·ratio ≤ pop·Unit · 4·Unit ≈ 4e17 at fixture scale;
-    * at population scale move the product to DECIMAL(38) (the
-    * [[revenueGini]] escape hatch). An all-empty sample margin keeps
-    * its cells at weight 0 (the documented raking caveat) rather than
-    * dividing by zero.
+    * The heavy pass is the one population/sample cell aggregation,
+    * a single Spark plan. Its output is the segments × regions grid
+    * (dimension-sized: 25 cells on TPC-H), so it is collected once and
+    * the rounds run on the driver in [[rakeGrid]]; the raked grid comes
+    * back as a local relation: as Spark plans, every step would pay
+    * its own one-task jobs for 25 numbers.
     */
   def raking(spark: SparkSession, sfDir: String): DataFrame = {
     val nat = broadcast(Tables.nation(spark, sfDir).select("n_nationkey", "n_regionkey"))
     val reg = broadcast(Tables.region(spark, sfDir).select("r_regionkey", "r_name"))
-    val base = Tables.customer(spark, sfDir)
+    val sampled = expr(
+      "cast(conv(substring(md5(concat_ws('-', cast(c_custkey AS string), 'rake')), 1, 8), 16, 10) AS bigint)") % 4 === 0
+    // One aggregate yields both counts. A cell with a null key gets
+    // n_sample 0: the oracle's pop ⟕ samp join matches no null key.
+    val grid = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment").as("segment"), col("c_nationkey"))
       .join(nat, col("c_nationkey") === col("n_nationkey"))
       .join(reg, col("n_regionkey") === col("r_regionkey"))
       .select(col("c_custkey"), col("segment"), col("r_name").as("region"))
-    val pop = base.groupBy("segment", "region").agg(count(lit(1)).as("n_pop"))
-    val samp = base.where(expr(
-        "cast(conv(substring(md5(concat_ws('-', cast(c_custkey AS string), 'rake')), 1, 8), 16, 10) AS bigint)") % 4 === 0)
-      .groupBy("segment", "region").agg(count(lit(1)).as("n_sample"))
-    var cells = pop.join(samp, Seq("segment", "region"), "left")
-      .select(col("segment"), col("region"), col("n_pop"),
-              coalesce(col("n_sample"), lit(0L)).as("n_sample"))
-      .withColumn("w", col("n_sample") * RakeUnit)
-      .localCheckpoint()
-    val segT = cells.groupBy("segment").agg(sum("n_pop").as("t"))
-    val regT = cells.groupBy("region").agg(sum("n_pop").as("t"))
-    val step = s"CASE WHEN s > 0 THEN (w * ((t * ${RakeUnit * RakeUnit}) div s)) div $RakeUnit ELSE 0 END"
-    for (_ <- 1 to RakeRounds) {
-      val sSeg = cells.groupBy("segment").agg(sum("w").as("s"))
-      cells = cells.join(broadcast(sSeg), "segment").join(broadcast(segT), "segment")
-        .withColumn("w", expr(step)).drop("s", "t")
-      val sReg = cells.groupBy("region").agg(sum("w").as("s"))
-      cells = cells.join(broadcast(sReg), "region").join(broadcast(regT), "region")
-        .withColumn("w", expr(step)).drop("s", "t")
-        .localCheckpoint()
+      .groupBy("segment", "region")
+      .agg(count(lit(1)).as("n_pop"),
+           when(col("segment").isNull || col("region").isNull, 0L)
+             .otherwise(count(when(sampled, 1))).as("n_sample"))
+    val cells = grid.collect().toSeq.map(r =>
+      RakeCell(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    val rows = rakeGrid(cells).map { case (c, w) =>
+      Row(c.segment, c.region, c.nPop, c.nSample, w)
     }
-    cells.select(col("segment"), col("region"), col("n_pop"),
-                 col("n_sample"), col("w").as("w_units"))
+    spark.createDataFrame(rows.asJava, grid.schema.add("w_units", LongType))
       .orderBy("segment", "region")
+  }
+
+  /** The IPF rounds of [[raking]] over the collected grid: [[RakeRounds]]
+    * × (segment step, region step), each cell paired with its weight w
+    * in [[RakeUnit]] units, starting at n_sample·Unit.
+    *
+    * A step's targets t are the population margins of the whole grid;
+    * s is the current weight margin. Fixed point: the scale ratio is
+    * (t·Unit²) div s (≈Unit-sized), then w' = (w·ratio) div Unit —
+    * exact BIGINT floor arithmetic, identical in the unrolled oracle,
+    * and an overflow throws [[ArithmeticException]] as Spark's ANSI
+    * arithmetic does. Bound: w·ratio ≤ pop·Unit · 4·Unit ≈ 4e17 at
+    * fixture scale; at population scale move the product to
+    * BigInt/DECIMAL(38) (the [[revenueGini]] escape hatch). A margin
+    * whose sample is empty (s = 0) keeps its cells at weight 0 (the
+    * documented raking caveat) rather than dividing by zero. A step
+    * drops the cells whose key on its margin is null, as the oracle's
+    * margin joins do.
+    */
+  def rakeGrid(cells: Seq[RakeCell]): Seq[(RakeCell, Long)] = {
+    def totals(pairs: Seq[(String, Long)]): Map[String, Long] =
+      pairs.filter(_._1 != null).groupMapReduce(_._1)(_._2)(Math.addExact)
+    val segT = totals(cells.map(c => c.segment -> c.nPop))
+    val regT = totals(cells.map(c => c.region -> c.nPop))
+    val unit2 = Math.multiplyExact(RakeUnit, RakeUnit)
+    def step(ws: Seq[(RakeCell, Long)], key: RakeCell => String,
+             t: Map[String, Long]): Seq[(RakeCell, Long)] = {
+      val live = ws.filter { case (c, _) => key(c) != null }
+      val s = totals(live.map { case (c, w) => key(c) -> w })
+      live.map { case (c, w) =>
+        val sm = s(key(c))
+        c -> (if (sm > 0) Math.multiplyExact(w, Math.multiplyExact(t(key(c)), unit2) / sm) / RakeUnit
+              else 0L)
+      }
+    }
+    var ws = cells.map(c => c -> Math.multiplyExact(c.nSample, RakeUnit))
+    for (_ <- 1 to RakeRounds) {
+      ws = step(ws, _.segment, segT)
+      ws = step(ws, _.region, regT)
+    }
+    ws
   }
 
   val rakingSql: String = {

@@ -1,15 +1,18 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: sweep EVERY SparkEntry query's physical plan for the
   * shapes this suite bans at 100 TB — `Exchange SinglePartition` and
   * window specs with an empty PARTITION BY — and print one line per
-  * offender with the matched fragment. The whitelist logic lives in
-  * the audit's consumer (PlanShapeSpec pins); this tool is the raw
-  * sweep that finds candidates. Not part of the driver contract.
+  * query, with the matched fragment on each offender's. The whitelist
+  * logic lives in the audit's consumer (PlanShapeSpec pins); this tool
+  * is the raw sweep that finds candidates. Not part of the driver
+  * contract.
   *
   * Usage: runMain graft.tools.PlanAudit <sfDir> [q_a,q_b [outDir suffix]]
   *   - the second arg scopes the sweep; a scoped run also prints each
@@ -22,8 +25,36 @@ import org.apache.spark.sql.execution.ExplainMode
   * 4), and the SparkEntry.warm hooks run first, as in Bench, so
   * memoized/serve-backed queries show their steady-state serving plan
   * (the shape Bench times), not the one-time build.
+  *
+  * Every query gets one `[audit]` line with `buildJobs`, the Spark jobs
+  * its registry function ran before returning its DataFrame (driver
+  * actions, checkpoints, schema inference), and the last line totals
+  * them over the swept queries.
   */
 object PlanAudit {
+  private val groups = new AtomicLong
+
+  /** Run `body` and count the Spark jobs it started, from the context's
+    * status tracker under a job group of its own (no listener). The
+    * tracker is fed asynchronously, in event order, so a one-task fence
+    * job submitted after `body` is awaited before counting: once the
+    * tracker knows the fence, it knows every job `body` started. */
+  def countJobs[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-count-${groups.incrementAndGet()}"
+    sc.setJobGroup(group, "counted")
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-fence", "count fence")
+    try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-fence").isEmpty) {
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException("job count: the status tracker never saw the fence job")
+      Thread.sleep(5)
+    }
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val only: Set[String] =
@@ -42,12 +73,16 @@ object PlanAudit {
     //    order = a window with an empty PARTITION BY (global sort).
     val globalWin = """windowspecdefinition\([^(),]*#\d+L? (ASC|DESC)""".r
     var nOff = 0
+    var jobs = 0
+    var swept = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, q) =>
       try {
-        val plan = q(spark, sfDir).queryExecution.explainString(
-          ExplainMode.fromString("formatted"))
+        val (df, buildJobs) = countJobs(spark)(q(spark, sfDir))
+        jobs += buildJobs
+        swept += 1
+        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
         val sp = "Arguments: SinglePartition".r.findAllIn(plan).length
         val gw = globalWin.findAllIn(plan).length
         val cp = "CartesianProduct".r.findAllIn(plan).length
@@ -69,18 +104,19 @@ object PlanAudit {
             println(s"[audit-plan] wrote $dir/${name}_$suffix.txt")
           case None => if (only.nonEmpty) println(s"[audit-plan] $name\n$plan")
         }
-        if (sp > 0 || gw > 0 || cp > 0 || rescans.nonEmpty) {
+        val flags = if (sp > 0 || gw > 0 || cp > 0 || rescans.nonEmpty) {
           nOff += 1
           val rs = if (rescans.isEmpty) ""
             else rescans.map { case (t, c) => s"$t×$c" }.mkString(" rescans=", ",", "")
-          println(f"[audit] $name%-28s singlePartitionExchanges=$sp globalWindows=$gw cartesians=$cp$rs")
-        }
+          s" singlePartitionExchanges=$sp globalWindows=$gw cartesians=$cp$rs"
+        } else ""
+        println(f"[audit] $name%-28s buildJobs=$buildJobs$flags")
       } catch {
         case e: Throwable =>
           println(s"[audit] $name FAILED TO PLAN: ${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
       }
     }
-    println(s"[audit] done: $nOff queries flagged")
+    println(s"[audit] done: $nOff queries flagged; buildJobs=$jobs over $swept queries")
     spark.stop()
   }
 }

@@ -18,6 +18,21 @@ class RelationalSpec extends AnyFunSuite with SparkFixture {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("build-job budget: after a warm build, only q_raking's grid collect runs at build time") {
+    val names = Seq("q_window_ranks", "q_top_customers", "q_price_elasticity", "q_raking")
+    val registry = SparkEntry.queries
+    // the warm build infers each fixture schema once for the session
+    names.foreach(n => registry(n)(spark, sfTest))
+    val jobs = names.map { n =>
+      n -> tools.PlanAudit.countJobs(spark)(registry(n)(spark, sfTest))._2
+    }.toMap
+    info(s"build-time jobs: $jobs")
+    assert(jobs("q_window_ranks") === 0)
+    assert(jobs("q_top_customers") === 0)
+    assert(jobs("q_price_elasticity") === 0)
+    assert(jobs("q_raking") <= 4, "q_raking builds with its one grid collect only")
+  }
+
   test("oracleSql keys are a subset of queries keys") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without a query: $missing")

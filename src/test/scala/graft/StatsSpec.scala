@@ -931,6 +931,11 @@ class StatsSpec extends AnyFunSuite with SparkFixture {
       }
     }
     for (_ <- 1 to S.RakeRounds) { stepBy(_._1, segT); stepBy(_._2, regT) }
+    // the driver-side kernel alone, on the replay's own grid
+    val kernel = S.rakeGrid(pop.toSeq.map { case ((sg, rg), n) =>
+      S.RakeCell(sg, rg, n, samp.getOrElse((sg, rg), 0L))
+    }).map { case (c, wu) => (c.segment, c.region) -> wu }.toMap
+    assert(kernel === w, "rakeGrid must equal the local IPF replay")
     val got = S.raking(spark, sfTest).collect()
     assert(got.length === pop.size)
     got.foreach { r =>
@@ -952,6 +957,33 @@ class StatsSpec extends AnyFunSuite with SparkFixture {
       assert(math.abs(a - t * u).toDouble / (t * u) < 0.02,
         s"segment $seg margin off after ${S.RakeRounds} rounds")
     }
+  }
+
+  test("rakeGrid: an empty-sample segment stays at weight 0; overflow throws instead of wrapping") {
+    val S = operators.Stats
+    val u = S.RakeUnit
+    // segment "b" has no sampled cell: its margin s is 0 in every
+    // segment step, so its cells keep weight 0 and nothing divides by 0
+    val grid = Seq(
+      S.RakeCell("a", "x", 40, 10), S.RakeCell("a", "y", 60, 20),
+      S.RakeCell("b", "x", 30, 0), S.RakeCell("b", "y", 70, 0))
+    val raked = S.rakeGrid(grid).map { case (c, w) => (c.segment, c.region) -> w }.toMap
+    assert(raked.keySet === Set(("a", "x"), ("a", "y"), ("b", "x"), ("b", "y")))
+    assert(raked(("b", "x")) === 0L && raked(("b", "y")) === 0L)
+    assert(raked(("a", "x")) > 0L && raked(("a", "y")) > 0L)
+    // the last step fits the region margins: the whole population of a
+    // region (70, 130) lands on segment "a"'s cell, less the floor loss
+    // of six exact integer steps
+    assert(raked(("a", "x")) === 69999992L && raked(("a", "y")) === 129999986L)
+    assert(70 * u - raked(("a", "x")) < 70 && 130 * u - raked(("a", "y")) < 130)
+    // a null key drops its cell, as the margin joins do
+    val withNull = S.rakeGrid(grid :+ S.RakeCell(null, "x", 5, 5)).map(_._1)
+    assert(withNull.forall(_.segment != null) && withNull.size === 4)
+    // t·Unit² overflows BIGINT at t ≈ 9.3e6, and w·ratio ≤ t·Unit²
+    // overflows with it: the kernel throws as ANSI arithmetic does
+    intercept[ArithmeticException](S.rakeGrid(Seq(S.RakeCell("a", "x", 10000000L, 1))))
+    // n_sample·Unit overflows before the first round
+    intercept[ArithmeticException](S.rakeGrid(Seq(S.RakeCell("a", "x", 1, 10000000000000L))))
   }
 
   test("join explosion: fanout audit matches exact local key counts") {

@@ -71,4 +71,44 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     // expression that failed analysis when the fixture flipped to NTZ)
     assert(ev.select(unix_micros(col("ts"))).head.getLong(0) > 0L)
   }
+
+  test("table: schema inferred once per session; invalidate and newSession re-infer") {
+    val session = spark
+    import session.implicits._
+    val jobs = (s: org.apache.spark.sql.SparkSession, name: String, dir: String) =>
+      tools.PlanAudit.countJobs(s)(Tables.table(s, dir, name))
+    val dir = java.nio.file.Files.createTempDirectory("schemamemo").toString
+    Seq(1L, 2L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val (first, inferJobs) = jobs(spark, "t", dir)
+    assert(first.columns.toSeq === Seq("x"))
+    assert(inferJobs >= 1, "the first read of a path infers its schema with a job")
+    val (again, againJobs) = jobs(spark, "t", dir)
+    assert(againJobs === 0, "a second read of the same path must run no job")
+    assert(again.schema === first.schema && again.count() === 2L)
+    // fresh attribute ids per read: a self-join of two reads resolves
+    assert(first.join(again, first("x") === again("x")).count() === 2L)
+    // rewrite with a different schema: the session keeps its schema
+    // (inputs immutable) until invalidate drops it
+    Seq((3L, "c")).toDF("x", "y").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq === Seq("x"))
+    QueryCache.invalidate(spark)
+    val (rewritten, rewriteJobs) = jobs(spark, "t", dir)
+    assert(rewritten.columns.toSeq === Seq("x", "y") && rewriteJobs >= 1)
+    assert(rewritten.as[(Long, String)].collect().toSeq === Seq((3L, "c")))
+    // a new session infers on its own
+    val other = spark.newSession()
+    assert(jobs(other, "t", dir)._2 >= 1, "a new session must infer again")
+    assert(jobs(other, "t", dir)._2 === 0)
+    QueryCache.invalidate(other)
+  }
+
+  test("events read twice yields the same normalized µs timestamp column and values") {
+    val a = Tables.events(spark, sfTest)
+    val (b, jobs) = tools.PlanAudit.countJobs(spark)(Tables.events(spark, sfTest))
+    assert(jobs === 0, "the second events read must reuse the session's schema")
+    assert(a.schema === b.schema && b.schema("ts").dataType === TimestampType)
+    val us = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(col("event_id"), unix_micros(col("ts"))).orderBy("event_id").collect().toSeq
+    assert(us(a) === us(b))
+  }
 }
