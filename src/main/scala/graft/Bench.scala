@@ -2,6 +2,9 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // dev-only: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those queries
+    // (unset for the driver's full sweep)
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.getOrCreate()
     // JVM/codegen/reader warmup so the first measured query doesn't
     // absorb one-time session costs (standard bench hygiene; runs a
@@ -37,14 +40,8 @@ object Bench {
     // Failures are excluded from timing, listed in the JSON, and make
     // the whole run exit nonzero so the 2x gate can't pass on a
     // partially-broken suite.
-    // dev-only: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those queries
-    // (unset for the driver's full sweep)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     def timeAll(): Seq[(String, Either[String, Double])] =
-      SparkEntry.queries.toSeq
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
+      selected.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val r = try {
           fn(spark, sfDir).count()
@@ -62,9 +59,7 @@ object Bench {
     val sweeps = (1 to runs).map(_ => timeAll().toMap)
     // Per-query median over SUCCESSFUL runs only; a query with zero
     // successful runs across all sweeps is a failure.
-    val (failed, results) = SparkEntry.queries.keys.toSeq
-      .filter(k => only.forall(_.contains(k)))
-      .partitionMap { k =>
+    val (failed, results) = selected.keys.toSeq.partitionMap { k =>
       val ok = sweeps.flatMap(_(k).toOption)
       if (ok.isEmpty) Left(k) else Right(k -> median(ok))
     }

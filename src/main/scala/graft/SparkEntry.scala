@@ -4,11 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Query registry: each operator family contributes a map of
-  * `name -> (SparkSession, sfDir) => DataFrame` plus DuckDB oracle SQL
-  * for every SQL-expressible query. Non-SQL-expressible ops (MLlib
-  * models, HLL estimates) intentionally omit oracle entries — the
-  * driver records a rows-only check and ScalaTest covers semantics.
+  * Query registry: every family lists its queries once, as
+  * [[QuerySpec]]s (name, builder `(SparkSession, sfDir) => DataFrame`,
+  * optional DuckDB oracle SQL), and `queries` and `oracleSql` derive
+  * from the concatenation of those lists in `families` order. A name
+  * declared twice fails initialization. Non-SQL-expressible ops (MLlib
+  * models, HLL estimates) declare no oracle: they get a rows-only
+  * check and ScalaTest covers semantics.
   */
 object SparkEntry {
 
@@ -20,23 +22,47 @@ object SparkEntry {
     queries("q_itemcf_recommend")(
       spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-      operators.Recsys.queries ++
-      operators.MlRecsys.queries ++
-      operators.Dedup.queries ++
-      operators.Similarity.queries ++
-      operators.TextAnalysis.queries ++
-      operators.Multimodal.queries ++
-      operators.Advanced.queries ++
-      operators.Analytics.queries ++
-      operators.AsOf.queries ++
-      operators.PipelineOps.queries ++
-      operators.GraphRank.queries ++
-      operators.Training.queries ++
-      operators.Stats.queries ++
-      streaming.Streams.queries
+  /** Every family that registers queries (SURVEY.md §2), in registry order. */
+  lazy val families: Seq[QueryFamily] = Seq(
+    operators.Relational,
+    operators.Recsys,
+    operators.MlRecsys,
+    operators.Dedup,
+    operators.Similarity,
+    operators.TextAnalysis,
+    operators.Multimodal,
+    operators.Advanced,
+    operators.Analytics,
+    operators.AsOf,
+    operators.PipelineOps,
+    operators.GraphRank,
+    operators.Training,
+    operators.Stats,
+    streaming.Streams)
+
+  /** Every family's specs, in `families` order. */
+  lazy val specs: Seq[QuerySpec] = families.flatMap(_.specs)
+
+  /** One entry per implemented operator; throws on a duplicate name. */
+  lazy val queries: Map[String, QuerySpec.Build] = QuerySpec.queries(specs)
+
+  /** For each key in queries with an oracle, equivalent SQL runnable by
+    * DuckDB on the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = QuerySpec.oracleSql(specs)
+
+  /** The registered queries named in `only` (comma-separated), or all of
+    * them when `only` is None. Throws IllegalArgumentException naming
+    * every name that is not registered, so a typo in a tool's filter
+    * fails before any work instead of selecting nothing. */
+  def select(only: Option[String]): Map[String, QuerySpec.Build] = only match {
+    case None => queries
+    case Some(list) =>
+      val names = list.split(",").map(_.trim).toSet
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty,
+        s"unregistered query name(s): ${unknown.toSeq.sorted.map(n => s"'$n'").mkString(", ")}")
+      queries.filter { case (name, _) => names(name) }
+  }
 
   /** The families' warm hooks, `family -> hook(spark, sfDir)`, in run
     * order. Each materializes its session-shared memoized tables
@@ -54,24 +80,4 @@ object SparkEntry {
     "Similarity" -> operators.Similarity.warm,
     "PipelineOps" -> operators.PipelineOps.warm,
     "TextAnalysis" -> operators.TextAnalysis.warm)
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  lazy val oracleSql: Map[String, String] =
-    operators.Relational.oracleSql ++
-      operators.Recsys.oracleSql ++
-      operators.MlRecsys.oracleSql ++
-      operators.Dedup.oracleSql ++
-      operators.Similarity.oracleSql ++
-      operators.TextAnalysis.oracleSql ++
-      operators.Multimodal.oracleSql ++
-      operators.Advanced.oracleSql ++
-      operators.Analytics.oracleSql ++
-      operators.AsOf.oracleSql ++
-      operators.PipelineOps.oracleSql ++
-      operators.GraphRank.oracleSql ++
-      operators.Training.oracleSql ++
-      operators.Stats.oracleSql ++
-      streaming.Streams.oracleSql
 }

@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (dev-only): comma-separated query-name filter
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    val selected = SparkEntry.select(args.lift(2))
     val spark = GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     // A crashed query must surface in the correctness artifact, not
@@ -15,8 +15,6 @@ object Verify {
     // queries that produced no output at all (see ADVICE round 5 — 46
     // crashed queries once disappeared from a 111-green report).
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

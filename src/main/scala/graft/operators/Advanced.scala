@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import graft.functions.WeightedPref
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * pure-SQL TF-IDF content similarity (M8) — the last two SURVEY.md §2
   * rows without a query.
   */
-object Advanced {
-
-  type Q = (SparkSession, String) => DataFrame
+object Advanced extends QueryFamily {
 
   /** A7: per-user weighted preference via the typed Aggregator,
     * registered as SQL `weighted_pref`. The oracle reproduces the same
@@ -686,29 +684,16 @@ object Advanced {
        |JOIN per pb ON pb.source = u.src_b
        |ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_join_explosion"     -> (joinExplosion _),
-    "q_skew_profile"       -> (skewProfile _),
-    "q_incremental_agg"    -> (incrementalAgg _),
-    "q_udaf_weighted_pref" -> (udafWeightedPref _),
-    "q_tfidf_terms"        -> (tfidfTerms _),
-    "q_tfidf_doc_sim"      -> (tfidfDocSim _),
-    "q_heavy_hitters"      -> (heavyHitters _),
-    "q_cms_counts"         -> (cmSketch _),
-    "q_kmv_distinct"       -> (kmvDistinct _),
-    "q_kmv_overlap"        -> (kmvOverlap _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_join_explosion"     -> joinExplosionSql,
-    "q_skew_profile"       -> skewProfileSql,
-    "q_incremental_agg"    -> incrementalAggSql,
-    "q_udaf_weighted_pref" -> udafWeightedPrefSql,
-    "q_tfidf_terms"        -> tfidfTermsSql,
-    "q_tfidf_doc_sim"      -> tfidfDocSimSql,
-    "q_heavy_hitters"      -> heavyHittersSql,
-    "q_cms_counts"         -> cmSketchSql,
-    "q_kmv_distinct"       -> kmvDistinctSql,
-    "q_kmv_overlap"        -> kmvOverlapSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_join_explosion", joinExplosion _, Some(joinExplosionSql)),
+    QuerySpec("q_skew_profile", skewProfile _, Some(skewProfileSql)),
+    QuerySpec("q_incremental_agg", incrementalAgg _, Some(incrementalAggSql)),
+    QuerySpec("q_udaf_weighted_pref", udafWeightedPref _, Some(udafWeightedPrefSql)),
+    QuerySpec("q_tfidf_terms", tfidfTerms _, Some(tfidfTermsSql)),
+    QuerySpec("q_tfidf_doc_sim", tfidfDocSim _, Some(tfidfDocSimSql)),
+    QuerySpec("q_heavy_hitters", heavyHitters _, Some(heavyHittersSql)),
+    QuerySpec("q_cms_counts", cmSketch _, Some(cmSketchSql)),
+    QuerySpec("q_kmv_distinct", kmvDistinct _, Some(kmvDistinctSql)),
+    QuerySpec("q_kmv_overlap", kmvOverlap _, Some(kmvOverlapSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
   * tables — per-user state stays K rows per user, so a 1000-executor
   * run shuffles each event exactly once.
   */
-object Analytics {
-
-  type Q = (SparkSession, String) => DataFrame
+object Analytics extends QueryFamily {
 
   /** Ordered conversion funnel view → click → purchase: a user converts
     * to a stage only via an event STRICTLY AFTER their entry into the
@@ -2545,83 +2543,43 @@ object Analytics {
       |FROM cn, gl
       |ORDER BY stratum""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_cmh"               -> (cmhTest _),
-    "q_load_heatmap"      -> (loadHeatmap _),
-    "q_ab_srm"            -> (abSrm _),
-    "q_burst_detect"      -> (burstDetect _),
-    "q_session_entropy"   -> (sessionEntropy _),
-    "q_concurrency_peak"  -> (concurrencyPeak _),
-    "q_debounce"          -> (debounce _),
-    "q_cuped"             -> (cuped _),
-    "q_diff_in_diff"      -> (diffInDiff _),
-    "q_ab_power"          -> (abPower _),
-    "q_seasonal_decompose" -> (seasonalDecompose _),
-    "q_window_funnel"     -> (windowFunnel _),
-    "q_cohort_ltv"        -> (cohortLtv _),
-    "q_forecast_naive"    -> (forecastNaive _),
-    "q_stickiness"        -> (stickiness _),
-    "q_new_vs_returning"  -> (newVsReturning _),
-    "q_conversion_lag"    -> (conversionLag _),
-    "q_churn_labels"      -> (churnLabels _),
-    "q_ab_test"           -> (abTest _),
-    "q_mcnemar"           -> (mcnemar _),
-    "q_paired_t"          -> (pairedT _),
-    "q_latest_snapshot"   -> (latestSnapshot _),
-    "q_value_histogram"   -> (valueHistogram _),
-    "q_session_paths"     -> (sessionPaths _),
-    "q_mad_outliers"      -> (madOutliers _),
-    "q_ewma_smooth"       -> (ewmaSmooth _),
-    "q_session_funnel"    -> (sessionFunnel _),
-    "q_retention_cohorts" -> (retentionCohorts _),
-    "q_anomaly_events"    -> (anomalyEvents _),
-    "q_gap_fill"          -> (gapFillDaily _),
-    "q_corr_stats"        -> (corrStats _),
-    "q_attribution"       -> (multiTouchAttribution _),
-    "q_cem_uplift"        -> (cemUplift _),
-    "q_position_bias"     -> (positionBias _),
-    "q_msprt"             -> (msprt _),
-    "q_rdd_effect"        -> (rddEffect _),
-    "q_markov_attribution" -> (markovAttribution _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_cmh"               -> cmhTestSql,
-    "q_load_heatmap"      -> loadHeatmapSql,
-    "q_ab_srm"            -> abSrmSql,
-    "q_burst_detect"      -> burstDetectSql,
-    "q_session_entropy"   -> sessionEntropySql,
-    "q_concurrency_peak"  -> concurrencyPeakSql,
-    "q_debounce"          -> debounceSql,
-    "q_cuped"             -> cupedSql,
-    "q_diff_in_diff"      -> diffInDiffSql,
-    "q_ab_power"          -> abPowerSql,
-    "q_seasonal_decompose" -> seasonalDecomposeSql,
-    "q_window_funnel"     -> windowFunnelSql,
-    "q_cohort_ltv"        -> cohortLtvSql,
-    "q_forecast_naive"    -> forecastNaiveSql,
-    "q_stickiness"        -> stickinessSql,
-    "q_new_vs_returning"  -> newVsReturningSql,
-    "q_conversion_lag"    -> conversionLagSql,
-    "q_churn_labels"      -> churnLabelsSql,
-    "q_ab_test"           -> abTestSql,
-    "q_mcnemar"           -> mcnemarSql,
-    "q_paired_t"          -> pairedTSql,
-    "q_latest_snapshot"   -> latestSnapshotSql,
-    "q_value_histogram"   -> valueHistogramSql,
-    "q_session_paths"     -> sessionPathsSql,
-    "q_mad_outliers"      -> madOutliersSql,
-    "q_ewma_smooth"       -> ewmaSmoothSql,
-    "q_session_funnel"    -> sessionFunnelSql,
-    "q_retention_cohorts" -> retentionCohortsSql,
-    "q_anomaly_events"    -> anomalyEventsSql,
-    "q_gap_fill"          -> gapFillDailySql,
-    "q_corr_stats"        -> corrStatsSql,
-    "q_attribution"       -> multiTouchAttributionSql,
-    "q_cem_uplift"        -> cemUpliftSql,
-    "q_position_bias"     -> positionBiasSql,
-    "q_msprt"             -> msprtSql,
-    "q_rdd_effect"        -> rddEffectSql,
-    "q_markov_attribution" -> markovAttributionSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_cmh", cmhTest _, Some(cmhTestSql)),
+    QuerySpec("q_load_heatmap", loadHeatmap _, Some(loadHeatmapSql)),
+    QuerySpec("q_ab_srm", abSrm _, Some(abSrmSql)),
+    QuerySpec("q_burst_detect", burstDetect _, Some(burstDetectSql)),
+    QuerySpec("q_session_entropy", sessionEntropy _, Some(sessionEntropySql)),
+    QuerySpec("q_concurrency_peak", concurrencyPeak _, Some(concurrencyPeakSql)),
+    QuerySpec("q_debounce", debounce _, Some(debounceSql)),
+    QuerySpec("q_cuped", cuped _, Some(cupedSql)),
+    QuerySpec("q_diff_in_diff", diffInDiff _, Some(diffInDiffSql)),
+    QuerySpec("q_ab_power", abPower _, Some(abPowerSql)),
+    QuerySpec("q_seasonal_decompose", seasonalDecompose _, Some(seasonalDecomposeSql)),
+    QuerySpec("q_window_funnel", windowFunnel _, Some(windowFunnelSql)),
+    QuerySpec("q_cohort_ltv", cohortLtv _, Some(cohortLtvSql)),
+    QuerySpec("q_forecast_naive", forecastNaive _, Some(forecastNaiveSql)),
+    QuerySpec("q_stickiness", stickiness _, Some(stickinessSql)),
+    QuerySpec("q_new_vs_returning", newVsReturning _, Some(newVsReturningSql)),
+    QuerySpec("q_conversion_lag", conversionLag _, Some(conversionLagSql)),
+    QuerySpec("q_churn_labels", churnLabels _, Some(churnLabelsSql)),
+    QuerySpec("q_ab_test", abTest _, Some(abTestSql)),
+    QuerySpec("q_mcnemar", mcnemar _, Some(mcnemarSql)),
+    QuerySpec("q_paired_t", pairedT _, Some(pairedTSql)),
+    QuerySpec("q_latest_snapshot", latestSnapshot _, Some(latestSnapshotSql)),
+    QuerySpec("q_value_histogram", valueHistogram _, Some(valueHistogramSql)),
+    QuerySpec("q_session_paths", sessionPaths _, Some(sessionPathsSql)),
+    QuerySpec("q_mad_outliers", madOutliers _, Some(madOutliersSql)),
+    QuerySpec("q_ewma_smooth", ewmaSmooth _, Some(ewmaSmoothSql)),
+    QuerySpec("q_session_funnel", sessionFunnel _, Some(sessionFunnelSql)),
+    QuerySpec("q_retention_cohorts", retentionCohorts _, Some(retentionCohortsSql)),
+    QuerySpec("q_anomaly_events", anomalyEvents _, Some(anomalyEventsSql)),
+    QuerySpec("q_gap_fill", gapFillDaily _, Some(gapFillDailySql)),
+    QuerySpec("q_corr_stats", corrStats _, Some(corrStatsSql)),
+    QuerySpec("q_attribution", multiTouchAttribution _, Some(multiTouchAttributionSql)),
+    QuerySpec("q_cem_uplift", cemUplift _, Some(cemUpliftSql)),
+    QuerySpec("q_position_bias", positionBias _, Some(positionBiasSql)),
+    QuerySpec("q_msprt", msprt _, Some(msprtSql)),
+    QuerySpec("q_rdd_effect", rddEffect _, Some(rddEffectSql)),
+    QuerySpec("q_markov_attribution", markovAttribution _, Some(markovAttributionSql)),
   )
 }

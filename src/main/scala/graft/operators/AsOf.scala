@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,9 +30,7 @@ import org.apache.spark.sql.functions._
   * the match condition is the inclusive right.time <= left.time —
   * matching DuckDB's `ASOF JOIN ... ON l.t >= r.t` oracle exactly.
   */
-object AsOf {
-
-  type Q = (SparkSession, String) => DataFrame
+object AsOf extends QueryFamily {
 
   /** Generic as-of join.
     *
@@ -246,15 +244,9 @@ object AsOf {
       |FROM v
       |ORDER BY custkey, version""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_asof_event_order" -> (asofEventOrder _),
-    "q_asof_next_order"  -> (asofNextOrder _),
-    "q_scd2_history"     -> (scd2History _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_asof_event_order" -> asofEventOrderSql,
-    "q_asof_next_order"  -> asofNextOrderSql,
-    "q_scd2_history"     -> scd2HistorySql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_asof_event_order", asofEventOrder _, Some(asofEventOrderSql)),
+    QuerySpec("q_asof_next_order", asofNextOrder _, Some(asofNextOrderSql)),
+    QuerySpec("q_scd2_history", scd2History _, Some(scd2HistorySql)),
   )
 }

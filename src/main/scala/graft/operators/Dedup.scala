@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   * the entire point of LSH at 100 TB. The candidate→verify flow never
   * materializes the O(n²) pair space.
   */
-object Dedup {
-
-  type Q = (SparkSession, String) => DataFrame
+object Dedup extends QueryFamily {
 
   /** Shingle width (tokens) for MinHash / n-gram Jaccard. */
   val ShingleW = 3
@@ -1608,49 +1606,26 @@ object Dedup {
        |WHERE iw / (wa.wsum + wb.wsum - iw) >= $WJacThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_jaccard_idf"       -> (jaccardIdf _),
-    "q_sorted_neighborhood" -> (sortedNeighborhood _),
-    "q_record_linkage"    -> (recordLinkage _),
-    "q_ngram_novelty"     -> (ngramNovelty _),
-    "q_containment"       -> (containment _),
-    "q_fuzzy_names"       -> (fuzzyNames _),
-    "q_dedup_exact"       -> (exactDedup _),
-    "q_dedup_ngram_jaccard" -> (ngramJaccard _),
-    "q_dedup_minhash_lsh" -> (minhashLsh _),
-    "q_lsh_recall"        -> (lshRecall _),
-    "q_dedup_simhash"     -> (simhashPairs _),
-    "q_dedup_embedding"   -> (embeddingNearDup _),
-    "q_dedup_incremental" -> (incrementalDedup _),
-    "q_dedup_serve"       -> (dedupServe _),
-    "q_dedup_serve_grow"  -> (dedupServeGrow _),
-    "q_dedup_serve_compact" -> (dedupServeCompact _),
-    "q_dedup_serve_delete" -> (dedupServeDelete _),
-    "q_dedup_bloom"       -> (bloomDedup _),
-    "q_dedup_substring"   -> (substringDedup _),
-    "q_source_overlap"    -> (sourceOverlap _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_jaccard_idf"       -> jaccardIdfSql,
-    "q_sorted_neighborhood" -> sortedNeighborhoodSql,
-    "q_record_linkage"    -> recordLinkageSql,
-    "q_ngram_novelty"     -> ngramNoveltySql,
-    "q_containment"       -> containmentSql,
-    "q_fuzzy_names"       -> fuzzyNamesSql,
-    "q_dedup_exact"       -> exactDedupSql,
-    "q_dedup_ngram_jaccard" -> ngramJaccardSql,
-    "q_dedup_minhash_lsh" -> minhashLshSql,
-    "q_lsh_recall"        -> lshRecallSql,
-    "q_dedup_simhash"     -> simhashPairsSql,
-    "q_dedup_embedding"   -> embeddingNearDupSql,
-    "q_dedup_incremental" -> incrementalDedupSql,
-    "q_dedup_serve"       -> dedupServeSql,
-    "q_dedup_serve_grow"  -> dedupServeGrowSql,
-    "q_dedup_serve_compact" -> dedupServeCompactSql,
-    "q_dedup_serve_delete" -> dedupServeDeleteSql,
-    "q_dedup_bloom"       -> bloomDedupSql,
-    "q_dedup_substring"   -> substringDedupSql,
-    "q_source_overlap"    -> sourceOverlapSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_jaccard_idf", jaccardIdf _, Some(jaccardIdfSql)),
+    QuerySpec("q_sorted_neighborhood", sortedNeighborhood _, Some(sortedNeighborhoodSql)),
+    QuerySpec("q_record_linkage", recordLinkage _, Some(recordLinkageSql)),
+    QuerySpec("q_ngram_novelty", ngramNovelty _, Some(ngramNoveltySql)),
+    QuerySpec("q_containment", containment _, Some(containmentSql)),
+    QuerySpec("q_fuzzy_names", fuzzyNames _, Some(fuzzyNamesSql)),
+    QuerySpec("q_dedup_exact", exactDedup _, Some(exactDedupSql)),
+    QuerySpec("q_dedup_ngram_jaccard", ngramJaccard _, Some(ngramJaccardSql)),
+    QuerySpec("q_dedup_minhash_lsh", minhashLsh _, Some(minhashLshSql)),
+    QuerySpec("q_lsh_recall", lshRecall _, Some(lshRecallSql)),
+    QuerySpec("q_dedup_simhash", simhashPairs _, Some(simhashPairsSql)),
+    QuerySpec("q_dedup_embedding", embeddingNearDup _, Some(embeddingNearDupSql)),
+    QuerySpec("q_dedup_incremental", incrementalDedup _, Some(incrementalDedupSql)),
+    QuerySpec("q_dedup_serve", dedupServe _, Some(dedupServeSql)),
+    QuerySpec("q_dedup_serve_grow", dedupServeGrow _, Some(dedupServeGrowSql)),
+    QuerySpec("q_dedup_serve_compact", dedupServeCompact _, Some(dedupServeCompactSql)),
+    QuerySpec("q_dedup_serve_delete", dedupServeDelete _, Some(dedupServeDeleteSql)),
+    QuerySpec("q_dedup_bloom", bloomDedup _, Some(bloomDedupSql)),
+    QuerySpec("q_dedup_substring", substringDedup _, Some(substringDedupSql)),
+    QuerySpec("q_source_overlap", sourceOverlap _, Some(sourceOverlapSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryCache
+import graft.{QueryCache, QueryFamily, QuerySpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,9 +38,7 @@ import org.apache.spark.sql.functions._
   * below ~9e6 per edge; a 100 TB deployment with hotter edges would
   * move the contribution product to DECIMAL(38,0) — same plan shape.
   */
-object GraphRank {
-
-  type Q = (SparkSession, String) => DataFrame
+object GraphRank extends QueryFamily {
 
   /** Fixed PageRank rounds (unrolled identically in the oracle). */
   val Rounds = 5
@@ -2031,47 +2029,25 @@ object GraphRank {
        |ORDER BY round""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_katz"           -> (katz(_, _)),
-    "q_closeness"      -> (closeness(_, _)),
-    "q_ktruss"         -> (ktruss _),
-    "q_hits"           -> (hits _),
-    "q_kcore"          -> (kcore _),
-    "q_shortest_paths" -> (shortestPaths _),
-    "q_rwr_proximity"  -> (rwrProximity _),
-    "q_salsa"          -> (salsa _),
-    "q_assortativity"  -> (assortativity _),
-    "q_item_bfs"       -> (itemBfs _),
-    "q_item_pagerank"  -> (itemPagerank _),
-    "q_pair_pmi"       -> (pairPmi _),
-    "q_triangle_count" -> (triangleCount _),
-    "q_cooccur_jaccard" -> (cooccurJaccard _),
-    "q_simrank"        -> (simrank _),
-    "q_item_communities" -> (itemCommunities _),
-    "q_modularity"     -> (modularity _),
-    "q_local_clustering" -> (localClustering _),
-    "q_link_predict"   -> (linkPredict _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_katz"           -> katzSql,
-    "q_closeness"      -> closenessSql,
-    "q_ktruss"         -> ktrussSql,
-    "q_hits"           -> hitsSql,
-    "q_kcore"          -> kcoreSql,
-    "q_shortest_paths" -> shortestPathsSql,
-    "q_rwr_proximity"  -> rwrProximitySql,
-    "q_salsa"          -> salsaSql,
-    "q_assortativity"  -> assortativitySql,
-    "q_item_bfs"       -> itemBfsSql,
-    "q_item_pagerank"  -> itemPagerankSql,
-    "q_pair_pmi"       -> pairPmiSql,
-    "q_triangle_count" -> triangleCountSql,
-    "q_cooccur_jaccard" -> cooccurJaccardSql,
-    "q_simrank"        -> simrankSql,
-    "q_item_communities" -> itemCommunitiesSql,
-    "q_modularity"     -> modularitySql,
-    "q_local_clustering" -> localClusteringSql,
-    "q_link_predict"   -> linkPredictSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_katz", katz(_, _), Some(katzSql)),
+    QuerySpec("q_closeness", closeness(_, _), Some(closenessSql)),
+    QuerySpec("q_ktruss", ktruss _, Some(ktrussSql)),
+    QuerySpec("q_hits", hits _, Some(hitsSql)),
+    QuerySpec("q_kcore", kcore _, Some(kcoreSql)),
+    QuerySpec("q_shortest_paths", shortestPaths _, Some(shortestPathsSql)),
+    QuerySpec("q_rwr_proximity", rwrProximity _, Some(rwrProximitySql)),
+    QuerySpec("q_salsa", salsa _, Some(salsaSql)),
+    QuerySpec("q_assortativity", assortativity _, Some(assortativitySql)),
+    QuerySpec("q_item_bfs", itemBfs _, Some(itemBfsSql)),
+    QuerySpec("q_item_pagerank", itemPagerank _, Some(itemPagerankSql)),
+    QuerySpec("q_pair_pmi", pairPmi _, Some(pairPmiSql)),
+    QuerySpec("q_triangle_count", triangleCount _, Some(triangleCountSql)),
+    QuerySpec("q_cooccur_jaccard", cooccurJaccard _, Some(cooccurJaccardSql)),
+    QuerySpec("q_simrank", simrank _, Some(simrankSql)),
+    QuerySpec("q_item_communities", itemCommunities _, Some(itemCommunitiesSql)),
+    QuerySpec("q_modularity", modularity _, Some(modularitySql)),
+    QuerySpec("q_local_clustering", localClustering _, Some(localClusteringSql)),
+    QuerySpec("q_link_predict", linkPredict _, Some(linkPredictSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.{VectorAssembler, Word2Vec}
 import org.apache.spark.ml.fpm.FPGrowth
@@ -28,9 +28,7 @@ import org.apache.spark.storage.StorageLevel
   * on per-user sequences with numPartitions=1 for reproducibility (at
   * real scale: more partitions, accepting run-to-run vector drift).
   */
-object MlRecsys {
-
-  type Q = (SparkSession, String) => DataFrame
+object MlRecsys extends QueryFamily {
 
   val Seed = 42L
 
@@ -612,24 +610,18 @@ object MlRecsys {
     ()
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_als_recommend"     -> (alsRecommend _),
-    "q_als_implicit"      -> (alsImplicit _),
-    "q_fpgrowth_itemsets" -> (fpgrowthItemsets _),
-    "q_assoc_rules"       -> (assocRules _),
-    "q_item2vec_synonyms" -> (item2vecSynonyms _),
-    "q_lr_ranking"        -> (lrRanking _),
-    "q_seq_patterns"      -> (seqPatterns _),
-    "q_seq_patterns_exact" -> (seqPatternsExact _),
-  )
-
   /** Seeded/iterative MLlib models (ALS, Word2Vec, LR) are not
     * SQL-expressible: rows-only checks + MlRecsysSpec invariants.
     * FP-Growth is exact and seedless, so it does carry an oracle.
     */
-  val oracleSql: Map[String, String] = Map(
-    "q_fpgrowth_itemsets" -> fpgrowthItemsetsSql,
-    "q_assoc_rules"       -> assocRulesSql,
-    "q_seq_patterns_exact" -> seqPatternsExactSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_als_recommend", alsRecommend _, None),
+    QuerySpec("q_als_implicit", alsImplicit _, None),
+    QuerySpec("q_fpgrowth_itemsets", fpgrowthItemsets _, Some(fpgrowthItemsetsSql)),
+    QuerySpec("q_assoc_rules", assocRules _, Some(assocRulesSql)),
+    QuerySpec("q_item2vec_synonyms", item2vecSynonyms _, None),
+    QuerySpec("q_lr_ranking", lrRanking _, None),
+    QuerySpec("q_seq_patterns", seqPatterns _, None),
+    QuerySpec("q_seq_patterns_exact", seqPatternsExact _, Some(seqPatternsExactSql)),
   )
 }

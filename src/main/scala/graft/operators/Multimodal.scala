@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   * (batched, no per-row JVM↔native churn) exactly as a real decoder
   * would want.
   */
-object Multimodal {
-
-  type Q = (SparkSession, String) => DataFrame
+object Multimodal extends QueryFamily {
 
   /** Binary passthrough: cast → slice → hash → length, grouped per
     * source. Proves BinaryType survives scans, projections and
@@ -492,23 +490,13 @@ object Multimodal {
        |GROUP BY d.source
        |ORDER BY d.source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_media_dedup"        -> (mediaDedup _),
-    "q_media_neardup"      -> (mediaNearDup _),
-    "q_media_canonical"    -> (mediaCanonical _),
-    "q_binary_passthrough" -> (binaryPassthrough _),
-    "q_media_features"     -> (mediaFeatures _),
-    "q_media_frames"       -> (mediaFrameSample _),
-    "q_media_resize"       -> (mediaResize _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_media_dedup"        -> mediaDedupSql,
-    "q_media_neardup"      -> mediaNearDupSql,
-    "q_media_canonical"    -> mediaCanonicalSql,
-    "q_binary_passthrough" -> binaryPassthroughSql,
-    "q_media_features"     -> mediaFeaturesSql,
-    "q_media_frames"       -> mediaFrameSampleSql,
-    "q_media_resize"       -> mediaResizeSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_media_dedup", mediaDedup _, Some(mediaDedupSql)),
+    QuerySpec("q_media_neardup", mediaNearDup _, Some(mediaNearDupSql)),
+    QuerySpec("q_media_canonical", mediaCanonical _, Some(mediaCanonicalSql)),
+    QuerySpec("q_binary_passthrough", binaryPassthrough _, Some(binaryPassthroughSql)),
+    QuerySpec("q_media_features", mediaFeatures _, Some(mediaFeaturesSql)),
+    QuerySpec("q_media_frames", mediaFrameSample _, Some(mediaFrameSampleSql)),
+    QuerySpec("q_media_resize", mediaResize _, Some(mediaResizeSql)),
   )
 }

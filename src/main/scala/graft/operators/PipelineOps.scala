@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,9 +18,7 @@ import org.apache.spark.sql.functions._
   *   - corpus health checks need per-group embedding CENTROIDS and
   *     spread (drift detection, cluster quality).
   */
-object PipelineOps {
-
-  type Q = (SparkSession, String) => DataFrame
+object PipelineOps extends QueryFamily {
 
   /** Max label-propagation rounds before declaring non-convergence. */
   val MaxCcRounds = 20
@@ -1408,52 +1406,28 @@ object PipelineOps {
        |ORDER BY split_a, split_b""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_split_leakage"       -> (splitLeakage _),
-    "q_zorder_layout"       -> (zorderLayout _),
-    "q_k_anonymity"         -> (kAnonymity _),
-    "q_t_closeness"         -> (tCloseness _),
-    "q_l_diversity"         -> (lDiversity _),
-    "q_dedup_clusters"      -> (dedupClusters _),
-    "q_hash_sample"         -> (hashSample _),
-    "q_stratified_sample"   -> (stratifiedSample _),
-    "q_embedding_centroids" -> (embeddingCentroids _),
-    "q_embedding_quantize"  -> (embeddingQuantize _),
-    "q_weighted_sample"     -> (weightedSample _),
-    "q_weighted_reservoir"  -> (weightedReservoir _),
-    "q_seq_pack"            -> (seqPack _),
-    "q_dedup_canonical"     -> (canonicalCorpus _),
-    "q_embed_health"        -> (embedHealth _),
-    "q_train_shuffle"       -> (trainShuffle _),
-    "q_mix_plan"            -> (mixPlan _),
-    "q_doc_chunks"          -> (docChunks _),
-    "q_group_split"         -> (groupSplit _),
-    "q_merge_upsert"        -> (mergeUpsert _),
-    "q_time_split"          -> (timeSplit _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_split_leakage"       -> splitLeakageSql,
-    "q_zorder_layout"       -> zorderLayoutSql,
-    "q_k_anonymity"         -> kAnonymitySql,
-    "q_t_closeness"         -> tClosenessSql,
-    "q_l_diversity"         -> lDiversitySql,
-    "q_dedup_clusters"      -> dedupClustersSql,
-    "q_hash_sample"         -> hashSampleSql,
-    "q_stratified_sample"   -> stratifiedSampleSql,
-    "q_embedding_centroids" -> embeddingCentroidsSql,
-    "q_embedding_quantize"  -> embeddingQuantizeSql,
-    "q_weighted_sample"     -> weightedSampleSql,
-    "q_weighted_reservoir"  -> weightedReservoirSql,
-    "q_seq_pack"            -> seqPackSql,
-    "q_dedup_canonical"     -> canonicalCorpusSql,
-    "q_embed_health"        -> embedHealthSql,
-    "q_train_shuffle"       -> trainShuffleSql,
-    "q_mix_plan"            -> mixPlanSql,
-    "q_doc_chunks"          -> docChunksSql,
-    "q_group_split"         -> groupSplitSql,
-    "q_merge_upsert"        -> mergeUpsertSql,
-    "q_time_split"          -> timeSplitSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_split_leakage", splitLeakage _, Some(splitLeakageSql)),
+    QuerySpec("q_zorder_layout", zorderLayout _, Some(zorderLayoutSql)),
+    QuerySpec("q_k_anonymity", kAnonymity _, Some(kAnonymitySql)),
+    QuerySpec("q_t_closeness", tCloseness _, Some(tClosenessSql)),
+    QuerySpec("q_l_diversity", lDiversity _, Some(lDiversitySql)),
+    QuerySpec("q_dedup_clusters", dedupClusters _, Some(dedupClustersSql)),
+    QuerySpec("q_hash_sample", hashSample _, Some(hashSampleSql)),
+    QuerySpec("q_stratified_sample", stratifiedSample _, Some(stratifiedSampleSql)),
+    QuerySpec("q_embedding_centroids", embeddingCentroids _, Some(embeddingCentroidsSql)),
+    QuerySpec("q_embedding_quantize", embeddingQuantize _, Some(embeddingQuantizeSql)),
+    QuerySpec("q_weighted_sample", weightedSample _, Some(weightedSampleSql)),
+    QuerySpec("q_weighted_reservoir", weightedReservoir _, Some(weightedReservoirSql)),
+    QuerySpec("q_seq_pack", seqPack _, Some(seqPackSql)),
+    QuerySpec("q_dedup_canonical", canonicalCorpus _, Some(canonicalCorpusSql)),
+    QuerySpec("q_embed_health", embedHealth _, Some(embedHealthSql)),
+    QuerySpec("q_train_shuffle", trainShuffle _, Some(trainShuffleSql)),
+    QuerySpec("q_mix_plan", mixPlan _, Some(mixPlanSql)),
+    QuerySpec("q_doc_chunks", docChunks _, Some(docChunksSql)),
+    QuerySpec("q_group_split", groupSplit _, Some(groupSplitSql)),
+    QuerySpec("q_merge_upsert", mergeUpsert _, Some(mergeUpsertSql)),
+    QuerySpec("q_time_split", timeSplit _, Some(timeSplitSql)),
   )
 
 }

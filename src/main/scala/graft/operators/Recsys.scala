@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -30,9 +30,7 @@ import org.apache.spark.sql.functions._
   *    similarity aggregate, keeping the recommend join's build side
   *    K·|items| instead of |items|².
   */
-object Recsys {
-
-  type Q = (SparkSession, String) => DataFrame
+object Recsys extends QueryFamily {
 
   /** Bucket count for the persisted CF serve/store tables. The refresh
     * merge deliberately RIDES this layout shuffle-free (the
@@ -3363,84 +3361,47 @@ object Recsys {
        |) WHERE rk <= $CalibTop
        |ORDER BY rk""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_rec_calibration"   -> (recCalibration _),
-    "q_serendipity"       -> (serendipity _),
-    "q_cold_start"         -> (coldStart _),
-    "q_eval_novelty"      -> (evalNovelty _),
-    "q_itemcf_explain"    -> (itemcfExplain _),
-    "q_mmr_rerank"        -> (mmrRerank _),
-    "q_brand_affinity"    -> (brandAffinity _),
-    "q_seq_buy_pairs"     -> (seqBuyPairs _),
-    "q_trending_items"    -> (trendingItems _),
-    "q_rec_diversity"     -> (recDiversity _),
-    "q_rec_coverage"      -> (recCoverage _),
-    "q_eval_ranking"      -> (evalRanking _),
-    "q_eval_gauc"         -> (evalGauc _),
-    "q_sknn_recommend"    -> (sknnRecommend _),
-    "q_markov_next"       -> (markovNext _),
-    "q_itemcf_similarity" -> (itemcfSimilarity _),
-    "q_itemcf_weighted"   -> (itemcfWeighted _),
-    "q_itemcf_decay"      -> (itemcfDecay _),
-    "q_itemcf_recommend"  -> (itemcfRecommend _),
-    "q_itemcf_serve"      -> (itemcfServe _),
-    "q_itemcf_drift"      -> (itemcfDrift _),
-    "q_itemcf_refresh"    -> (itemcfRefresh _),
-    "q_itemcf_refresh_serve" -> (itemcfRefreshServe _),
-    "q_itemcf_refresh_chain" -> (itemcfRefreshChain _),
-    "q_itemcf_delete"     -> (itemcfDelete _),
-    "q_slope_one"         -> (slopeOne _),
-    "q_usercf_similarity" -> (usercfSimilarity _),
-    "q_usercf_recommend"  -> (usercfRecommend _),
-    "q_swing_similarity"  -> (swingSimilarity _),
-    "q_content_recommend" -> (contentRecommend _),
-    "q_eval_popularity"   -> (evalPopularity _),
-    "q_eval_ips"          -> (evalIps _),
-    "q_eval_dr"           -> (evalDr _),
-    "q_eval_markov"       -> (evalMarkov _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_rec_calibration"   -> recCalibrationSql,
-    "q_cold_start"        -> coldStartSql,
-    "q_eval_novelty"      -> evalNoveltySql,
-    "q_itemcf_explain"    -> itemcfExplainSql,
-    "q_mmr_rerank"        -> mmrRerankSql,
-    "q_brand_affinity"    -> brandAffinitySql,
-    "q_seq_buy_pairs"     -> seqBuyPairsSql,
-    "q_trending_items"    -> trendingItemsSql,
-    "q_rec_diversity"     -> recDiversitySql,
-    "q_rec_coverage"      -> recCoverageSql,
-    "q_eval_ranking"      -> evalRankingSql,
-    "q_eval_gauc"         -> evalGaucSql,
-    "q_sknn_recommend"    -> sknnRecommendSql,
-    "q_markov_next"       -> markovNextSql,
-    "q_itemcf_similarity" -> itemcfSimilaritySql,
-    "q_itemcf_weighted"   -> itemcfWeightedSql,
-    "q_itemcf_decay"      -> itemcfDecaySql,
-    "q_itemcf_recommend"  -> itemcfRecommendSql,
-    "q_itemcf_serve"      -> itemcfRecommendSql,
-    "q_itemcf_drift"      -> itemcfDriftSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_rec_calibration", recCalibration _, Some(recCalibrationSql)),
+    QuerySpec("q_serendipity", serendipity _, Some(serendipitySql)),
+    QuerySpec("q_cold_start", coldStart _, Some(coldStartSql)),
+    QuerySpec("q_eval_novelty", evalNovelty _, Some(evalNoveltySql)),
+    QuerySpec("q_itemcf_explain", itemcfExplain _, Some(itemcfExplainSql)),
+    QuerySpec("q_mmr_rerank", mmrRerank _, Some(mmrRerankSql)),
+    QuerySpec("q_brand_affinity", brandAffinity _, Some(brandAffinitySql)),
+    QuerySpec("q_seq_buy_pairs", seqBuyPairs _, Some(seqBuyPairsSql)),
+    QuerySpec("q_trending_items", trendingItems _, Some(trendingItemsSql)),
+    QuerySpec("q_rec_diversity", recDiversity _, Some(recDiversitySql)),
+    QuerySpec("q_rec_coverage", recCoverage _, Some(recCoverageSql)),
+    QuerySpec("q_eval_ranking", evalRanking _, Some(evalRankingSql)),
+    QuerySpec("q_eval_gauc", evalGauc _, Some(evalGaucSql)),
+    QuerySpec("q_sknn_recommend", sknnRecommend _, Some(sknnRecommendSql)),
+    QuerySpec("q_markov_next", markovNext _, Some(markovNextSql)),
+    QuerySpec("q_itemcf_similarity", itemcfSimilarity _, Some(itemcfSimilaritySql)),
+    QuerySpec("q_itemcf_weighted", itemcfWeighted _, Some(itemcfWeightedSql)),
+    QuerySpec("q_itemcf_decay", itemcfDecay _, Some(itemcfDecaySql)),
+    QuerySpec("q_itemcf_recommend", itemcfRecommend _, Some(itemcfRecommendSql)),
+    QuerySpec("q_itemcf_serve", itemcfServe _, Some(itemcfRecommendSql)),
+    QuerySpec("q_itemcf_drift", itemcfDrift _, Some(itemcfDriftSql)),
     // the refresh's oracle IS the from-scratch full-corpus model —
     // delta-merge identity is the correctness contract
-    "q_itemcf_refresh"    -> itemcfSimilaritySql,
+    QuerySpec("q_itemcf_refresh", itemcfRefresh _, Some(itemcfSimilaritySql)),
     // refreshed model == fresh model, so serving from the published
     // refresh must equal the plain recommend
-    "q_itemcf_refresh_serve" -> itemcfRecommendSql,
+    QuerySpec("q_itemcf_refresh_serve", itemcfRefreshServe _, Some(itemcfRecommendSql)),
     // two sequential refreshes from the advanced store == one combined
     // refresh == from-scratch (semilattice associativity) — the chain
     // shares the from-scratch oracle
-    "q_itemcf_refresh_chain" -> itemcfSimilaritySql,
-    "q_itemcf_delete"     -> itemcfDeleteSql,
-    "q_slope_one"         -> slopeOneSql,
-    "q_usercf_similarity" -> usercfSimilaritySql,
-    "q_usercf_recommend"  -> usercfRecommendSql,
-    "q_swing_similarity"  -> swingSimilaritySql,
-    "q_content_recommend" -> contentRecommendSql,
-    "q_eval_popularity"   -> evalPopularitySql,
-    "q_serendipity"       -> serendipitySql,
-    "q_eval_ips"          -> evalIpsSql,
-    "q_eval_dr"           -> evalDrSql,
-    "q_eval_markov"       -> evalMarkovSql,
+    QuerySpec("q_itemcf_refresh_chain", itemcfRefreshChain _, Some(itemcfSimilaritySql)),
+    QuerySpec("q_itemcf_delete", itemcfDelete _, Some(itemcfDeleteSql)),
+    QuerySpec("q_slope_one", slopeOne _, Some(slopeOneSql)),
+    QuerySpec("q_usercf_similarity", usercfSimilarity _, Some(usercfSimilaritySql)),
+    QuerySpec("q_usercf_recommend", usercfRecommend _, Some(usercfRecommendSql)),
+    QuerySpec("q_swing_similarity", swingSimilarity _, Some(swingSimilaritySql)),
+    QuerySpec("q_content_recommend", contentRecommend _, Some(contentRecommendSql)),
+    QuerySpec("q_eval_popularity", evalPopularity _, Some(evalPopularitySql)),
+    QuerySpec("q_eval_ips", evalIps _, Some(evalIpsSql)),
+    QuerySpec("q_eval_dr", evalDr _, Some(evalDrSql)),
+    QuerySpec("q_eval_markov", evalMarkov _, Some(evalMarkovSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   * facts shuffle on their join keys once, filters stay sargable so they
   * reach the parquet scan.
   */
-object Relational {
-
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends QueryFamily {
 
   /** TPC-H Q1-style pricing summary. Single scan + partial/final hash
     * aggregate on 2 low-cardinality keys; at scale this is map-side
@@ -1633,99 +1631,52 @@ object Relational {
       |FROM catalog c LEFT JOIN dead d ON d.p_brand = c.p_brand
       |ORDER BY c.p_brand""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_dead_stock"          -> (deadStock _),
-    "q_dow_profile"         -> (dowProfile _),
-    "q_reorder_rate"        -> (reorderRate _),
-    "q_mom_growth"          -> (momGrowth _),
-    "q_lateral_topn"        -> (lateralTopN _),
-    "q_setops_all"          -> (setopsAll _),
-    "q_late_shipments"      -> (lateShipments _),
-    "q_supplier_share"      -> (supplierShare _),
-    "q_data_quality"        -> (dataQuality _),
-    "q_window_navigation"   -> (windowNavigation _),
-    "q_unpivot_metrics"     -> (unpivotMetrics _),
-    "q_full_outer_reconcile" -> (fullOuterReconcile _),
-    "q_rfm_segments"        -> (rfmSegments _),
-    "q_scalar_subquery"     -> (ordersAboveCustAvg _),
-    "q_percentiles"         -> (pricePercentiles _),
-    "q_salted_agg"          -> (saltedEventStats _),
-    "q_pricing_summary"     -> (pricingSummary _),
-    "q_revenue_by_nation"   -> (revenueByNation _),
-    "q_top_customers"       -> (topCustomers _),
-    "q_customer_order_counts" -> (customerOrderCounts _),
-    "q_semi_big_spenders"   -> (bigSpenders _),
-    "q_anti_parts_not_shipped" -> (partsNotShipped1998 _),
-    "q_range_event_attribution" -> (eventOrderAttribution _),
-    "q_cross_nation_event_grid" -> (nationEventGrid _),
-    "q_rollup_revenue"      -> (revenueRollup _),
-    "q_grouping_sets"       -> (orderGroupingSets _),
-    "q_cube_orders"         -> (ordersCube _),
-    "q_pivot_events"        -> (eventPivot _),
-    "q_window_top_parts"    -> (topPartsPerBrand _),
-    "q_window_running_revenue" -> (runningRevenue _),
-    "q_window_event_gaps"   -> (eventGaps _),
-    "q_window_range_frame"  -> (rangeFrameStats _),
-    "q_window_sessions"     -> (sessionStats _),
-    "q_window_ranks"        -> (nationRevenueRanks _),
-    "q_setops_users"        -> (setOpsUsers _),
-    "q_event_type_stats"    -> (eventTypeStats _),
-    "q_approx_distinct"     -> (approxDistinctUsers _),
-    "q_sketch_distinct"     -> (sketchDistinct _),
-    "q_orders_by_month"     -> (ordersByMonth _),
-    "q_json_props"          -> (jsonPropsStats _),
-    "q_variant_props"       -> (variantProps _),
-    "q_implicit_preference" -> (implicitPreference _),
-    "q_null_handling"       -> (nullHandling _),
-    "q_map_column"          -> (mapColumnStats _),
-    "q_top_lineitems"       -> (topLineitems _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_dead_stock"          -> deadStockSql,
-    "q_dow_profile"         -> dowProfileSql,
-    "q_reorder_rate"        -> reorderRateSql,
-    "q_mom_growth"          -> momGrowthSql,
-    "q_lateral_topn"        -> lateralTopNSql,
-    "q_setops_all"          -> setopsAllSql,
-    "q_late_shipments"      -> lateShipmentsSql,
-    "q_supplier_share"      -> supplierShareSql,
-    "q_data_quality"        -> dataQualitySql,
-    "q_window_navigation"   -> windowNavigationSql,
-    "q_unpivot_metrics"     -> unpivotMetricsSql,
-    "q_full_outer_reconcile" -> fullOuterReconcileSql,
-    "q_rfm_segments"        -> rfmSegmentsSql,
-    "q_scalar_subquery"     -> ordersAboveCustAvgSql,
-    "q_percentiles"         -> pricePercentilesSql,
-    "q_salted_agg"          -> saltedEventStatsSql,
-    "q_pricing_summary"     -> pricingSummarySql,
-    "q_revenue_by_nation"   -> revenueByNationSql,
-    "q_top_customers"       -> topCustomersSql,
-    "q_customer_order_counts" -> customerOrderCountsSql,
-    "q_semi_big_spenders"   -> bigSpendersSql,
-    "q_anti_parts_not_shipped" -> partsNotShipped1998Sql,
-    "q_range_event_attribution" -> eventOrderAttributionSql,
-    "q_cross_nation_event_grid" -> nationEventGridSql,
-    "q_rollup_revenue"      -> revenueRollupSql,
-    "q_grouping_sets"       -> orderGroupingSetsSql,
-    "q_cube_orders"         -> ordersCubeSql,
-    "q_pivot_events"        -> eventPivotSql,
-    "q_window_top_parts"    -> topPartsPerBrandSql,
-    "q_window_running_revenue" -> runningRevenueSql,
-    "q_window_event_gaps"   -> eventGapsSql,
-    "q_window_range_frame"  -> rangeFrameStatsSql,
-    "q_window_sessions"     -> sessionStatsSql,
-    "q_window_ranks"        -> nationRevenueRanksSql,
-    "q_setops_users"        -> setOpsUsersSql,
-    "q_event_type_stats"    -> eventTypeStatsSql,
-    "q_sketch_distinct"     -> sketchDistinctSql,
-    // q_approx_distinct: no oracle by design (HLL estimates are engine-specific)
-    "q_orders_by_month"     -> ordersByMonthSql,
-    "q_json_props"          -> jsonPropsStatsSql,
-    "q_variant_props"       -> variantPropsSql,
-    "q_implicit_preference" -> implicitPreferenceSql,
-    "q_null_handling"       -> nullHandlingSql,
-    "q_map_column"          -> mapColumnStatsSql,
-    "q_top_lineitems"       -> topLineitemsSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_dead_stock", deadStock _, Some(deadStockSql)),
+    QuerySpec("q_dow_profile", dowProfile _, Some(dowProfileSql)),
+    QuerySpec("q_reorder_rate", reorderRate _, Some(reorderRateSql)),
+    QuerySpec("q_mom_growth", momGrowth _, Some(momGrowthSql)),
+    QuerySpec("q_lateral_topn", lateralTopN _, Some(lateralTopNSql)),
+    QuerySpec("q_setops_all", setopsAll _, Some(setopsAllSql)),
+    QuerySpec("q_late_shipments", lateShipments _, Some(lateShipmentsSql)),
+    QuerySpec("q_supplier_share", supplierShare _, Some(supplierShareSql)),
+    QuerySpec("q_data_quality", dataQuality _, Some(dataQualitySql)),
+    QuerySpec("q_window_navigation", windowNavigation _, Some(windowNavigationSql)),
+    QuerySpec("q_unpivot_metrics", unpivotMetrics _, Some(unpivotMetricsSql)),
+    QuerySpec("q_full_outer_reconcile", fullOuterReconcile _, Some(fullOuterReconcileSql)),
+    QuerySpec("q_rfm_segments", rfmSegments _, Some(rfmSegmentsSql)),
+    QuerySpec("q_scalar_subquery", ordersAboveCustAvg _, Some(ordersAboveCustAvgSql)),
+    QuerySpec("q_percentiles", pricePercentiles _, Some(pricePercentilesSql)),
+    QuerySpec("q_salted_agg", saltedEventStats _, Some(saltedEventStatsSql)),
+    QuerySpec("q_pricing_summary", pricingSummary _, Some(pricingSummarySql)),
+    QuerySpec("q_revenue_by_nation", revenueByNation _, Some(revenueByNationSql)),
+    QuerySpec("q_top_customers", topCustomers _, Some(topCustomersSql)),
+    QuerySpec("q_customer_order_counts", customerOrderCounts _, Some(customerOrderCountsSql)),
+    QuerySpec("q_semi_big_spenders", bigSpenders _, Some(bigSpendersSql)),
+    QuerySpec("q_anti_parts_not_shipped", partsNotShipped1998 _, Some(partsNotShipped1998Sql)),
+    QuerySpec("q_range_event_attribution", eventOrderAttribution _, Some(eventOrderAttributionSql)),
+    QuerySpec("q_cross_nation_event_grid", nationEventGrid _, Some(nationEventGridSql)),
+    QuerySpec("q_rollup_revenue", revenueRollup _, Some(revenueRollupSql)),
+    QuerySpec("q_grouping_sets", orderGroupingSets _, Some(orderGroupingSetsSql)),
+    QuerySpec("q_cube_orders", ordersCube _, Some(ordersCubeSql)),
+    QuerySpec("q_pivot_events", eventPivot _, Some(eventPivotSql)),
+    QuerySpec("q_window_top_parts", topPartsPerBrand _, Some(topPartsPerBrandSql)),
+    QuerySpec("q_window_running_revenue", runningRevenue _, Some(runningRevenueSql)),
+    QuerySpec("q_window_event_gaps", eventGaps _, Some(eventGapsSql)),
+    QuerySpec("q_window_range_frame", rangeFrameStats _, Some(rangeFrameStatsSql)),
+    QuerySpec("q_window_sessions", sessionStats _, Some(sessionStatsSql)),
+    QuerySpec("q_window_ranks", nationRevenueRanks _, Some(nationRevenueRanksSql)),
+    QuerySpec("q_setops_users", setOpsUsers _, Some(setOpsUsersSql)),
+    QuerySpec("q_event_type_stats", eventTypeStats _, Some(eventTypeStatsSql)),
+    // no oracle by design (HLL estimates are engine-specific)
+    QuerySpec("q_approx_distinct", approxDistinctUsers _, None),
+    QuerySpec("q_sketch_distinct", sketchDistinct _, Some(sketchDistinctSql)),
+    QuerySpec("q_orders_by_month", ordersByMonth _, Some(ordersByMonthSql)),
+    QuerySpec("q_json_props", jsonPropsStats _, Some(jsonPropsStatsSql)),
+    QuerySpec("q_variant_props", variantProps _, Some(variantPropsSql)),
+    QuerySpec("q_implicit_preference", implicitPreference _, Some(implicitPreferenceSql)),
+    QuerySpec("q_null_handling", nullHandling _, Some(nullHandlingSql)),
+    QuerySpec("q_map_column", mapColumnStats _, Some(mapColumnStatsSql)),
+    QuerySpec("q_top_lineitems", topLineitems _, Some(topLineitemsSql)),
   )
 }

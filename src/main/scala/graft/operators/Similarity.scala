@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import graft.sources.Sources
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
   * (zip_with+aggregate ↔ list_reduce), so values are bit-identical and
   * rankings (on 6dp-rounded cosine + id tie-break) are engine-stable.
   */
-object Similarity {
-
-  type Q = (SparkSession, String) => DataFrame
+object Similarity extends QueryFamily {
 
   /** Number of query vectors (lowest vec_ids). */
   val NQueries = 20
@@ -2381,59 +2379,32 @@ object Similarity {
     s"WITH $tiers\n$unions\nORDER BY dims"
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_matryoshka"      -> (matryoshka _),
-    "q_knn_bruteforce"  -> (knnBruteForce _),
-    "q_knn_ivf"         -> (knnIvf _),
-    "q_ivf_pq"          -> (ivfPq _),
-    "q_ivf_pq_filtered" -> (ivfPqFiltered _),
-    "q_ivf_serve"       -> (ivfServe _),
-    "q_ivf_serve_filtered" -> (ivfServeFiltered _),
-    "q_ivf_serve_ingest" -> (ivfServeIngest _),
-    "q_ivf_serve_compact" -> (ivfServeCompact _),
-    "q_ivf_serve_pq_ingest" -> (ivfServePqIngest _),
-    "q_pq_ingest_recall" -> (pqIngestRecall _),
-    "q_ivf_serve_delete" -> (ivfServeDelete _),
-    "q_ivf_serve_delete_compact" -> (ivfServeDeleteCompact _),
-    "q_ivf_pq_rerank_curve" -> (ivfPqRerankCurve _),
-    "q_ivf_recall_curve" -> (ivfRecallCurve _),
-    "q_knn_filtered"    -> (knnFiltered _),
-    "q_knn_filtered_curve" -> (knnFilteredCurve _),
-    "q_ivf_ingest"      -> (ivfIngest _),
-    "q_ivf_ingest_recall" -> (ivfIngestRecall _),
-    "q_hard_negatives"  -> (hardNegatives _),
-    "q_mutual_knn"      -> (mutualKnn _),
-    "q_mutual_knn_clusters" -> (mutualKnnClusters _),
-    "q_knn_lsh"         -> (knnLsh _),
-    "q_lsh_hyperplane"  -> (lshHyperplane _),
-    "q_hybrid_rrf"      -> (hybridRrf _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_matryoshka"      -> matryoshkaSql,
-    "q_knn_bruteforce"  -> knnBruteForceSql,
-    "q_knn_ivf"         -> knnIvfSql,
-    "q_ivf_pq"          -> ivfPqSql,
-    "q_ivf_pq_filtered" -> ivfPqFilteredSql,
-    "q_ivf_serve"       -> ivfServeSql,
-    "q_ivf_serve_filtered" -> ivfServeFilteredSql,
-    "q_ivf_serve_ingest" -> ivfServeIngestSql,
-    "q_ivf_serve_compact" -> ivfServeCompactSql,
-    "q_ivf_serve_pq_ingest" -> ivfServePqIngestSql,
-    "q_pq_ingest_recall" -> pqIngestRecallSql,
-    "q_ivf_serve_delete" -> ivfServeDeleteSql,
-    "q_ivf_serve_delete_compact" -> ivfServeDeleteCompactSql,
-    "q_ivf_pq_rerank_curve" -> ivfPqRerankCurveSql,
-    "q_ivf_recall_curve" -> ivfRecallCurveSql,
-    "q_knn_filtered"    -> knnFilteredSql,
-    "q_knn_filtered_curve" -> knnFilteredCurveSql,
-    "q_ivf_ingest"      -> ivfIngestSql,
-    "q_ivf_ingest_recall" -> ivfIngestRecallSql,
-    "q_hard_negatives"  -> hardNegativesSql,
-    "q_mutual_knn"      -> mutualKnnSql,
-    "q_mutual_knn_clusters" -> mutualKnnClustersSql,
-    "q_lsh_hyperplane"  -> lshHyperplaneSql,
-    "q_hybrid_rrf"      -> hybridRrfSql,
-    // q_knn_lsh: MLlib hashing — not SQL-expressible, rows-only check
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_matryoshka", matryoshka _, Some(matryoshkaSql)),
+    QuerySpec("q_knn_bruteforce", knnBruteForce _, Some(knnBruteForceSql)),
+    QuerySpec("q_knn_ivf", knnIvf _, Some(knnIvfSql)),
+    QuerySpec("q_ivf_pq", ivfPq _, Some(ivfPqSql)),
+    QuerySpec("q_ivf_pq_filtered", ivfPqFiltered _, Some(ivfPqFilteredSql)),
+    QuerySpec("q_ivf_serve", ivfServe _, Some(ivfServeSql)),
+    QuerySpec("q_ivf_serve_filtered", ivfServeFiltered _, Some(ivfServeFilteredSql)),
+    QuerySpec("q_ivf_serve_ingest", ivfServeIngest _, Some(ivfServeIngestSql)),
+    QuerySpec("q_ivf_serve_compact", ivfServeCompact _, Some(ivfServeCompactSql)),
+    QuerySpec("q_ivf_serve_pq_ingest", ivfServePqIngest _, Some(ivfServePqIngestSql)),
+    QuerySpec("q_pq_ingest_recall", pqIngestRecall _, Some(pqIngestRecallSql)),
+    QuerySpec("q_ivf_serve_delete", ivfServeDelete _, Some(ivfServeDeleteSql)),
+    QuerySpec("q_ivf_serve_delete_compact", ivfServeDeleteCompact _, Some(ivfServeDeleteCompactSql)),
+    QuerySpec("q_ivf_pq_rerank_curve", ivfPqRerankCurve _, Some(ivfPqRerankCurveSql)),
+    QuerySpec("q_ivf_recall_curve", ivfRecallCurve _, Some(ivfRecallCurveSql)),
+    QuerySpec("q_knn_filtered", knnFiltered _, Some(knnFilteredSql)),
+    QuerySpec("q_knn_filtered_curve", knnFilteredCurve _, Some(knnFilteredCurveSql)),
+    QuerySpec("q_ivf_ingest", ivfIngest _, Some(ivfIngestSql)),
+    QuerySpec("q_ivf_ingest_recall", ivfIngestRecall _, Some(ivfIngestRecallSql)),
+    QuerySpec("q_hard_negatives", hardNegatives _, Some(hardNegativesSql)),
+    QuerySpec("q_mutual_knn", mutualKnn _, Some(mutualKnnSql)),
+    QuerySpec("q_mutual_knn_clusters", mutualKnnClusters _, Some(mutualKnnClustersSql)),
+    // MLlib hashing — not SQL-expressible, rows-only check
+    QuerySpec("q_knn_lsh", knnLsh _, None),
+    QuerySpec("q_lsh_hyperplane", lshHyperplane _, Some(lshHyperplaneSql)),
+    QuerySpec("q_hybrid_rrf", hybridRrf _, Some(hybridRrfSql)),
   )
 }

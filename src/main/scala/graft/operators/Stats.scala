@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Advanced OLAP / optimizer-statistics operators: skyline (Pareto
   * front), exact equi-depth histogram, differentially-private release
@@ -36,9 +37,7 @@ import org.apache.spark.sql.types.LongType
   *    pairs followed by one narrow shuffle — the standard rewrite that
   *    keeps sliding DAU linear in input size.
   */
-object Stats {
-
-  type Q = (SparkSession, String) => DataFrame
+object Stats extends QueryFamily {
 
   /** Local-skyline pruning buckets. More buckets = more parallelism in
     * phase 1 and more survivors into phase 2; survivors ≈ buckets ×
@@ -2758,8 +2757,9 @@ object Stats {
     * a single Spark plan. Its output is the segments × regions grid
     * (dimension-sized: 25 cells on TPC-H), so it is collected once and
     * the rounds run on the driver in [[rakeGrid]]; the raked grid comes
-    * back as a local relation: as Spark plans, every step would pay
-    * its own one-task jobs for 25 numbers.
+    * back as one partition of a local relation, sorted on the driver:
+    * as Spark plans, every step (and the final sort) would pay its own
+    * one-task jobs for 25 numbers.
     */
   def raking(spark: SparkSession, sfDir: String): DataFrame = {
     val nat = broadcast(Tables.nation(spark, sfDir).select("n_nationkey", "n_regionkey"))
@@ -2779,11 +2779,13 @@ object Stats {
              .otherwise(count(when(sampled, 1))).as("n_sample"))
     val cells = grid.collect().toSeq.map(r =>
       RakeCell(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val rows = rakeGrid(cells).map { case (c, w) =>
-      Row(c.segment, c.region, c.nPop, c.nSample, w)
-    }
-    spark.createDataFrame(rows.asJava, grid.schema.add("w_units", LongType))
-      .orderBy("segment", "region")
+    // Spark's string `asc` order (UTF-8 bytes); rakeGrid drops null keys.
+    val rows = rakeGrid(cells)
+      .sortBy { case (c, _) => (UTF8String.fromString(c.segment), UTF8String.fromString(c.region)) }
+      .map { case (c, w) => Row(c.segment, c.region, c.nPop, c.nSample, w) }
+    // one partition: the cells write as one file (a local scan would
+    // split 25 rows over the cores, one file each)
+    spark.createDataFrame(rows.asJava, grid.schema.add("w_units", LongType)).coalesce(1)
   }
 
   /** The IPF rounds of [[raking]] over the collected grid: [[RakeRounds]]
@@ -2869,87 +2871,45 @@ object Stats {
        |ORDER BY segment, region""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_raking"         -> (raking _),
-    "q_qini"           -> (qini _),
-    "q_qte"            -> (qte _),
-    "q_conformal"      -> (conformal _),
-    "q_kruskal_wallis" -> (kruskalWallis _),
-    "q_anova"          -> (anovaSegments _),
-    "q_levene"         -> (leveneTest _),
-    "q_gain_deciles"   -> (gainDeciles _),
-    "q_ship_lag"       -> (shipLag _),
-    "q_trade_flows"    -> (tradeFlows _),
-    "q_revenue_gini"   -> (revenueGini _),
-    "q_price_elasticity" -> (priceElasticity _),
-    "q_mann_whitney"   -> (mannWhitney _),
-    "q_eval_auc"       -> (evalAuc _),
-    "q_spearman"       -> (spearman _),
-    "q_spearman_decimal" -> (spearmanDecimal _),
-    "q_mutual_info"    -> (mutualInfo _),
-    "q_acf"            -> (acf _),
-    "q_theil_sen"      -> (theilSen _),
-    "q_mann_kendall"   -> (mannKendall _),
-    "q_wilcoxon"       -> (wilcoxonSignedRank _),
-    "q_overdispersion" -> (overdispersion _),
-    "q_winsorize"      -> (winsorize _),
-    "q_hill_tail"      -> (hillTail _),
-    "q_wilson_lb"      -> (wilsonLb _),
-    "q_ks_test"        -> (ksTest _),
-    "q_kendall_tau"    -> (kendallTau _),
-    "q_changepoint"    -> (changepoint _),
-    "q_survival_km"    -> (survivalKm _),
-    "q_rolling_median" -> (rollingMedian _),
-    "q_rolling_corr"   -> (rollingCorr _),
-    "q_psi_drift"      -> (psiDrift _),
-    "q_bayes_rate"     -> (bayesRate _),
-    "q_benford"        -> (benford _),
-    "q_bootstrap_ci"   -> (bootstrapCi _),
-    "q_pareto_front"   -> (paretoFront _),
-    "q_equidepth_hist" -> (equidepthHist _),
-    "q_dp_counts"      -> (dpCounts _),
-    "q_sliding_dau"    -> (slidingDau _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_raking"         -> rakingSql,
-    "q_qini"           -> qiniSql,
-    "q_qte"            -> qteSql,
-    "q_conformal"      -> conformalSql,
-    "q_kruskal_wallis" -> kruskalWallisSql,
-    "q_anova"          -> anovaSegmentsSql,
-    "q_levene"         -> leveneTestSql,
-    "q_gain_deciles"   -> gainDecilesSql,
-    "q_ship_lag"       -> shipLagSql,
-    "q_trade_flows"    -> tradeFlowsSql,
-    "q_revenue_gini"   -> revenueGiniSql,
-    "q_price_elasticity" -> priceElasticitySql,
-    "q_mann_whitney"   -> mannWhitneySql,
-    "q_eval_auc"       -> evalAucSql,
-    "q_spearman"       -> spearmanSql,
-    "q_spearman_decimal" -> spearmanDecimalSql,
-    "q_mutual_info"    -> mutualInfoSql,
-    "q_acf"            -> acfSql,
-    "q_theil_sen"      -> theilSenSql,
-    "q_mann_kendall"   -> mannKendallSql,
-    "q_wilcoxon"       -> wilcoxonSignedRankSql,
-    "q_overdispersion" -> overdispersionSql,
-    "q_winsorize"      -> winsorizeSql,
-    "q_hill_tail"      -> hillTailSql,
-    "q_wilson_lb"      -> wilsonLbSql,
-    "q_ks_test"        -> ksTestSql,
-    "q_kendall_tau"    -> kendallTauSql,
-    "q_changepoint"    -> changepointSql,
-    "q_survival_km"    -> survivalKmSql,
-    "q_rolling_median" -> rollingMedianSql,
-    "q_rolling_corr"   -> rollingCorrSql,
-    "q_psi_drift"      -> psiDriftSql,
-    "q_bayes_rate"     -> bayesRateSql,
-    "q_benford"        -> benfordSql,
-    "q_bootstrap_ci"   -> bootstrapCiSql,
-    "q_pareto_front"   -> paretoFrontSql,
-    "q_equidepth_hist" -> equidepthHistSql,
-    "q_dp_counts"      -> dpCountsSql,
-    "q_sliding_dau"    -> slidingDauSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_raking", raking _, Some(rakingSql)),
+    QuerySpec("q_qini", qini _, Some(qiniSql)),
+    QuerySpec("q_qte", qte _, Some(qteSql)),
+    QuerySpec("q_conformal", conformal _, Some(conformalSql)),
+    QuerySpec("q_kruskal_wallis", kruskalWallis _, Some(kruskalWallisSql)),
+    QuerySpec("q_anova", anovaSegments _, Some(anovaSegmentsSql)),
+    QuerySpec("q_levene", leveneTest _, Some(leveneTestSql)),
+    QuerySpec("q_gain_deciles", gainDeciles _, Some(gainDecilesSql)),
+    QuerySpec("q_ship_lag", shipLag _, Some(shipLagSql)),
+    QuerySpec("q_trade_flows", tradeFlows _, Some(tradeFlowsSql)),
+    QuerySpec("q_revenue_gini", revenueGini _, Some(revenueGiniSql)),
+    QuerySpec("q_price_elasticity", priceElasticity _, Some(priceElasticitySql)),
+    QuerySpec("q_mann_whitney", mannWhitney _, Some(mannWhitneySql)),
+    QuerySpec("q_eval_auc", evalAuc _, Some(evalAucSql)),
+    QuerySpec("q_spearman", spearman _, Some(spearmanSql)),
+    QuerySpec("q_spearman_decimal", spearmanDecimal _, Some(spearmanDecimalSql)),
+    QuerySpec("q_mutual_info", mutualInfo _, Some(mutualInfoSql)),
+    QuerySpec("q_acf", acf _, Some(acfSql)),
+    QuerySpec("q_theil_sen", theilSen _, Some(theilSenSql)),
+    QuerySpec("q_mann_kendall", mannKendall _, Some(mannKendallSql)),
+    QuerySpec("q_wilcoxon", wilcoxonSignedRank _, Some(wilcoxonSignedRankSql)),
+    QuerySpec("q_overdispersion", overdispersion _, Some(overdispersionSql)),
+    QuerySpec("q_winsorize", winsorize _, Some(winsorizeSql)),
+    QuerySpec("q_hill_tail", hillTail _, Some(hillTailSql)),
+    QuerySpec("q_wilson_lb", wilsonLb _, Some(wilsonLbSql)),
+    QuerySpec("q_ks_test", ksTest _, Some(ksTestSql)),
+    QuerySpec("q_kendall_tau", kendallTau _, Some(kendallTauSql)),
+    QuerySpec("q_changepoint", changepoint _, Some(changepointSql)),
+    QuerySpec("q_survival_km", survivalKm _, Some(survivalKmSql)),
+    QuerySpec("q_rolling_median", rollingMedian _, Some(rollingMedianSql)),
+    QuerySpec("q_rolling_corr", rollingCorr _, Some(rollingCorrSql)),
+    QuerySpec("q_psi_drift", psiDrift _, Some(psiDriftSql)),
+    QuerySpec("q_bayes_rate", bayesRate _, Some(bayesRateSql)),
+    QuerySpec("q_benford", benford _, Some(benfordSql)),
+    QuerySpec("q_bootstrap_ci", bootstrapCi _, Some(bootstrapCiSql)),
+    QuerySpec("q_pareto_front", paretoFront _, Some(paretoFrontSql)),
+    QuerySpec("q_equidepth_hist", equidepthHist _, Some(equidepthHistSql)),
+    QuerySpec("q_dp_counts", dpCounts _, Some(dpCountsSql)),
+    QuerySpec("q_sliding_dau", slidingDau _, Some(slidingDauSql)),
   )
 }

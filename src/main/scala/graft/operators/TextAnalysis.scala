@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
   * work followed by one aggregate — the embarrassingly-parallel shape
   * that scales linearly with corpus size.
   */
-object TextAnalysis {
-
-  type Q = (SparkSession, String) => DataFrame
+object TextAnalysis extends QueryFamily {
 
   private val normSpark = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
   private val normDuck = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
@@ -2137,67 +2135,35 @@ object TextAnalysis {
        |FROM k""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_filter_kappa" -> (filterKappa _),
-    "q_textrank_keywords" -> (textrankKeywords _),
-    "q_vocab_coverage" -> (vocabCoverage _),
-    "q_rake_keywords" -> (rakeKeywords _),
-    "q_boilerplate" -> (boilerplate _),
-    "q_importance_sample" -> (importanceSample _),
-    "q_corpus_entropy" -> (corpusEntropy _),
-    "q_zipf_fit"       -> (zipfFit _),
-    "q_readability"    -> (readability _),
-    "q_text_profile"   -> (textProfile _),
-    "q_lang_id"        -> (langId _),
-    "q_quality_score"  -> (qualityScore _),
-    "q_token_budget"   -> (tokenBudget _),
-    "q_token_stats"    -> (tokenStats _),
-    "q_doc_fingerprint" -> (docFingerprint _),
-    "q_pii_scrub"      -> (piiScrub _),
-    "q_bigram_lm"      -> (bigramLm _),
-    "q_quality_curriculum" -> (qualityCurriculum _),
-    "q_repetition"     -> (repetition _),
-    "q_contamination"  -> (contamination _),
-    "q_bm25_rank"      -> (bm25Rank _),
-    "q_bpe_merges"     -> (bpeMerges _),
-    "q_bpe_train"      -> (bpeTrain _),
-    "q_bpe_apply"      -> (bpeApply _),
-    "q_bpe_curve"      -> (bpeCurve _),
-    "q_bpe_vocab"      -> (bpeVocab _),
-    "q_bpe_holdout"    -> (bpeHoldout _),
-    "q_chi2_terms"     -> (chi2Terms _),
-    "q_c4_filter"      -> (c4Filter _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_filter_kappa" -> filterKappaSql,
-    "q_textrank_keywords" -> textrankKeywordsSql,
-    "q_vocab_coverage" -> vocabCoverageSql,
-    "q_rake_keywords" -> rakeKeywordsSql,
-    "q_boilerplate" -> boilerplateSql,
-    "q_importance_sample" -> importanceSampleSql,
-    "q_corpus_entropy" -> corpusEntropySql,
-    "q_zipf_fit"       -> zipfFitSql,
-    "q_readability"    -> readabilitySql,
-    "q_text_profile"   -> textProfileSql,
-    "q_lang_id"        -> langIdSql,
-    "q_quality_score"  -> qualityScoreSql,
-    "q_token_budget"   -> tokenBudgetSql,
-    "q_token_stats"    -> tokenStatsSql,
-    "q_doc_fingerprint" -> docFingerprintSql,
-    "q_pii_scrub"      -> piiScrubSql,
-    "q_bigram_lm"      -> bigramLmSql,
-    "q_quality_curriculum" -> qualityCurriculumSql,
-    "q_repetition"     -> repetitionSql,
-    "q_contamination"  -> contaminationSql,
-    "q_bm25_rank"      -> bm25RankSql,
-    "q_bpe_merges"     -> bpeMergesSql,
-    "q_bpe_train"      -> bpeTrainSql,
-    "q_bpe_apply"      -> bpeApplySql,
-    "q_bpe_curve"      -> bpeCurveSql,
-    "q_bpe_vocab"      -> bpeVocabSql,
-    "q_bpe_holdout"    -> bpeHoldoutSql,
-    "q_chi2_terms"     -> chi2TermsSql,
-    "q_c4_filter"      -> c4FilterSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_filter_kappa", filterKappa _, Some(filterKappaSql)),
+    QuerySpec("q_textrank_keywords", textrankKeywords _, Some(textrankKeywordsSql)),
+    QuerySpec("q_vocab_coverage", vocabCoverage _, Some(vocabCoverageSql)),
+    QuerySpec("q_rake_keywords", rakeKeywords _, Some(rakeKeywordsSql)),
+    QuerySpec("q_boilerplate", boilerplate _, Some(boilerplateSql)),
+    QuerySpec("q_importance_sample", importanceSample _, Some(importanceSampleSql)),
+    QuerySpec("q_corpus_entropy", corpusEntropy _, Some(corpusEntropySql)),
+    QuerySpec("q_zipf_fit", zipfFit _, Some(zipfFitSql)),
+    QuerySpec("q_readability", readability _, Some(readabilitySql)),
+    QuerySpec("q_text_profile", textProfile _, Some(textProfileSql)),
+    QuerySpec("q_lang_id", langId _, Some(langIdSql)),
+    QuerySpec("q_quality_score", qualityScore _, Some(qualityScoreSql)),
+    QuerySpec("q_token_budget", tokenBudget _, Some(tokenBudgetSql)),
+    QuerySpec("q_token_stats", tokenStats _, Some(tokenStatsSql)),
+    QuerySpec("q_doc_fingerprint", docFingerprint _, Some(docFingerprintSql)),
+    QuerySpec("q_pii_scrub", piiScrub _, Some(piiScrubSql)),
+    QuerySpec("q_bigram_lm", bigramLm _, Some(bigramLmSql)),
+    QuerySpec("q_quality_curriculum", qualityCurriculum _, Some(qualityCurriculumSql)),
+    QuerySpec("q_repetition", repetition _, Some(repetitionSql)),
+    QuerySpec("q_contamination", contamination _, Some(contaminationSql)),
+    QuerySpec("q_bm25_rank", bm25Rank _, Some(bm25RankSql)),
+    QuerySpec("q_bpe_merges", bpeMerges _, Some(bpeMergesSql)),
+    QuerySpec("q_bpe_train", bpeTrain _, Some(bpeTrainSql)),
+    QuerySpec("q_bpe_apply", bpeApply _, Some(bpeApplySql)),
+    QuerySpec("q_bpe_curve", bpeCurve _, Some(bpeCurveSql)),
+    QuerySpec("q_bpe_vocab", bpeVocab _, Some(bpeVocabSql)),
+    QuerySpec("q_bpe_holdout", bpeHoldout _, Some(bpeHoldoutSql)),
+    QuerySpec("q_chi2_terms", chi2Terms _, Some(chi2TermsSql)),
+    QuerySpec("q_c4_filter", c4Filter _, Some(c4FilterSql)),
   )
 }

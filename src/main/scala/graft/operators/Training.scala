@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryCache, Tables}
+import graft.{QueryCache, QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,9 +30,7 @@ import org.apache.spark.sql.functions._
   *    candidate once on (user, item) — linear in users·slots, never
   *    users×items.
   */
-object Training {
-
-  type Q = (SparkSession, String) => DataFrame
+object Training extends QueryFamily {
 
   /** k-means cluster count (init = the K lowest vec_ids). */
   val KClusters = 8
@@ -1839,41 +1837,22 @@ object Training {
        |FROM perdoc GROUP BY source
        |ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_embed_mmd"        -> (embedMmd _),
-    "q_span_corruption"  -> (spanCorruption _),
-    "q_dpo_pairs"        -> (dpoPairs _),
-    "q_embed_pc1"        -> (embedPc1 _),
-    "q_kcenter_coreset"  -> (kcenterCoreset _),
-    "q_pq_adc"           -> (pqAdc _),
-    "q_feature_hash"     -> (featureHash _),
-    "q_target_encode"    -> (targetEncode _),
-    "q_quantile_norm"    -> (quantileNorm _),
-    "q_kmeans_embed"     -> (kmeansEmbed _),
-    "q_cluster_purity"   -> (clusterPurity _),
-    "q_cluster_validity" -> (clusterValidity _),
-    "q_semantic_dedup"   -> (semanticDedup _),
-    "q_negative_sample"  -> (negativeSample _),
-    "q_negative_sample_pop" -> (negativeSamplePop _),
-    "q_calibration_bins" -> (calibrationBins _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_span_corruption"  -> spanCorruptionSql,
-    "q_dpo_pairs"        -> dpoPairsSql,
-    "q_embed_mmd"        -> embedMmdSql,
-    "q_embed_pc1"        -> embedPc1Sql,
-    "q_kcenter_coreset"  -> kcenterCoresetSql,
-    "q_pq_adc"           -> pqAdcSql,
-    "q_feature_hash"     -> featureHashSql,
-    "q_target_encode"    -> targetEncodeSql,
-    "q_quantile_norm"    -> quantileNormSql,
-    "q_kmeans_embed"     -> kmeansEmbedSql,
-    "q_cluster_purity"   -> clusterPuritySql,
-    "q_cluster_validity" -> clusterValiditySql,
-    "q_semantic_dedup"   -> semanticDedupSql,
-    "q_negative_sample"  -> negativeSampleSql,
-    "q_negative_sample_pop" -> negativeSamplePopSql,
-    "q_calibration_bins" -> calibrationBinsSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_embed_mmd", embedMmd _, Some(embedMmdSql)),
+    QuerySpec("q_span_corruption", spanCorruption _, Some(spanCorruptionSql)),
+    QuerySpec("q_dpo_pairs", dpoPairs _, Some(dpoPairsSql)),
+    QuerySpec("q_embed_pc1", embedPc1 _, Some(embedPc1Sql)),
+    QuerySpec("q_kcenter_coreset", kcenterCoreset _, Some(kcenterCoresetSql)),
+    QuerySpec("q_pq_adc", pqAdc _, Some(pqAdcSql)),
+    QuerySpec("q_feature_hash", featureHash _, Some(featureHashSql)),
+    QuerySpec("q_target_encode", targetEncode _, Some(targetEncodeSql)),
+    QuerySpec("q_quantile_norm", quantileNorm _, Some(quantileNormSql)),
+    QuerySpec("q_kmeans_embed", kmeansEmbed _, Some(kmeansEmbedSql)),
+    QuerySpec("q_cluster_purity", clusterPurity _, Some(clusterPuritySql)),
+    QuerySpec("q_cluster_validity", clusterValidity _, Some(clusterValiditySql)),
+    QuerySpec("q_semantic_dedup", semanticDedup _, Some(semanticDedupSql)),
+    QuerySpec("q_negative_sample", negativeSample _, Some(negativeSampleSql)),
+    QuerySpec("q_negative_sample_pop", negativeSamplePop _, Some(negativeSamplePopSql)),
+    QuerySpec("q_calibration_bins", calibrationBins _, Some(calibrationBinsSql)),
   )
 }

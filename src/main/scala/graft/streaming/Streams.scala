@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{QueryFamily, QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
   * All shuffles key on (window/user) — the same partitioning a
   * 1000-executor stream would use.
   */
-object Streams {
-
-  type Q = (SparkSession, String) => DataFrame
+object Streams extends QueryFamily {
 
   /** T1 tumbling 1-hour window aggregate per event_type. */
   def tumblingCounts(events: DataFrame): DataFrame =
@@ -718,33 +716,18 @@ object Streams {
        |FROM arrivals a JOIN model m ON m.item_i = a.item_id
        |ORDER BY a.user_id, a.item_id, m.rk""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_stream_kmv"      -> (kmvWindowUsersQuery _),
-    "q_stream_upsert"   -> (upsertQuery _),
-    "q_stream_drift"    -> (driftQuery _),
-    "q_stream_topk"     -> (topUsersQuery _),
-    "q_stream_tumbling" -> (tumblingQuery _),
-    "q_stream_users"    -> (tumblingUsersQuery _),
-    "q_stream_sliding"  -> (slidingQuery _),
-    "q_stream_sessions" -> (sessionQuery _),
-    "q_stream_dedup"    -> (dedupQuery _),
-    "q_stream_late"     -> (lateQuery _),
-    "q_stream_join"     -> (streamJoinQuery _),
-    "q_stream_cf_score" -> (cfStreamScoreQuery _),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_stream_kmv"      -> kmvWindowUsersSql,
-    "q_stream_upsert"   -> upsertSql,
-    "q_stream_drift"    -> driftSql,
-    "q_stream_topk"     -> topUsersSql,
-    "q_stream_tumbling" -> tumblingSql,
-    "q_stream_users"    -> tumblingUsersSql,
-    "q_stream_sliding"  -> slidingSql,
-    "q_stream_sessions" -> sessionSql,
-    "q_stream_dedup"    -> dedupSql,
-    "q_stream_late"     -> lateSql,
-    "q_stream_join"     -> streamJoinSql,
-    "q_stream_cf_score" -> cfStreamScoreSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_stream_kmv", kmvWindowUsersQuery _, Some(kmvWindowUsersSql)),
+    QuerySpec("q_stream_upsert", upsertQuery _, Some(upsertSql)),
+    QuerySpec("q_stream_drift", driftQuery _, Some(driftSql)),
+    QuerySpec("q_stream_topk", topUsersQuery _, Some(topUsersSql)),
+    QuerySpec("q_stream_tumbling", tumblingQuery _, Some(tumblingSql)),
+    QuerySpec("q_stream_users", tumblingUsersQuery _, Some(tumblingUsersSql)),
+    QuerySpec("q_stream_sliding", slidingQuery _, Some(slidingSql)),
+    QuerySpec("q_stream_sessions", sessionQuery _, Some(sessionSql)),
+    QuerySpec("q_stream_dedup", dedupQuery _, Some(dedupSql)),
+    QuerySpec("q_stream_late", lateQuery _, Some(lateSql)),
+    QuerySpec("q_stream_join", streamJoinQuery _, Some(streamJoinSql)),
+    QuerySpec("q_stream_cf_score", cfStreamScoreQuery _, Some(cfStreamScoreSql)),
   )
 }

@@ -57,8 +57,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val only: Set[String] =
-      if (args.length > 1) args(1).split(",").map(_.trim).toSet else Set.empty
+    val selected = graft.SparkEntry.select(args.lift(1))
     val out: Option[(String, String)] = if (args.length > 3) Some((args(2), args(3))) else None
     out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
     val spark = graft.GraftSession.getOrCreate()
@@ -75,9 +74,7 @@ object PlanAudit {
     var nOff = 0
     var jobs = 0
     var swept = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, q) =>
+    selected.toSeq.sortBy(_._1).foreach { case (name, q) =>
       try {
         val (df, buildJobs) = countJobs(spark)(q(spark, sfDir))
         jobs += buildJobs
@@ -102,7 +99,7 @@ object PlanAudit {
           case Some((dir, suffix)) =>
             Files.writeString(Paths.get(s"$dir/${name}_$suffix.txt"), plan)
             println(s"[audit-plan] wrote $dir/${name}_$suffix.txt")
-          case None => if (only.nonEmpty) println(s"[audit-plan] $name\n$plan")
+          case None => if (args.length > 1) println(s"[audit-plan] $name\n$plan")
         }
         val flags = if (sp > 0 || gw > 0 || cp > 0 || rescans.nonEmpty) {
           nOff += 1

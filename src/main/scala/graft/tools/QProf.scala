@@ -31,9 +31,7 @@ object QProf {
     if (args.headOption.contains("warm")) {
       graft.SparkEntry.warm.foreach { case (family, w) => timed(s"warm:$family")(w(spark, sfDir)) }
     } else {
-      val names =
-        if (args(0) == "all") graft.SparkEntry.queries.keys.toSeq
-        else args(0).split(",").toSeq
+      val selected = graft.SparkEntry.select(Some(args(0)).filter(_ != "all"))
       val runs = args.lift(1).map(_.toInt).getOrElse(3)
       // SPARK_GRAFT_QPROF_STAGES=1: per-stage wall time + callsite for
       // the LAST run of each query — attributes cost to code lines
@@ -69,8 +67,7 @@ object QProf {
           }
         })
       graft.SparkEntry.warm.foreach { case (_, w) => w(spark, sfDir) } // Bench-identical warmup
-      names.foreach { n =>
-        val fn = graft.SparkEntry.queries(n)
+      selected.foreach { case (n, fn) =>
         val ts = (1 to runs).map { r =>
           if (stageProf && r == runs) { Thread.sleep(500); stages.clear() }
           val t0 = System.nanoTime()

@@ -33,9 +33,35 @@ class RelationalSpec extends AnyFunSuite with SparkFixture {
     assert(jobs("q_raking") <= 4, "q_raking builds with its one grid collect only")
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without a query: $missing")
+  test("registry pins: 325 queries, 318 oracles, 7 rows-only, duplicate names fail") {
+    assert(SparkEntry.specs.size === 325)
+    assert(SparkEntry.queries.size === 325)
+    assert(SparkEntry.oracleSql.size === 318)
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet === Set(
+      "q_als_implicit", "q_als_recommend", "q_approx_distinct", "q_item2vec_synonyms",
+      "q_knn_lsh", "q_lr_ranking", "q_seq_patterns"))
+    val a = SparkEntry.specs.head
+    val b = SparkEntry.specs.last
+    val e = intercept[IllegalArgumentException](
+      QuerySpec.queries(Seq(a, b, a.copy(oracle = None))))
+    assert(e.getMessage.contains(a.name))
+    assert(!e.getMessage.contains(b.name))
+  }
+
+  test("select: every name must be registered; a typo throws before any work") {
+    assert(SparkEntry.select(None) eq SparkEntry.queries)
+    assert(SparkEntry.select(Some("q_raking, q_top_customers")).keySet ===
+      Set("q_raking", "q_top_customers"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("q_raking,q_rakng,q_nope")))
+    assert(e.getMessage.contains("'q_rakng'") && e.getMessage.contains("'q_nope'"))
+    assert(!e.getMessage.contains("'q_raking'"))
+    intercept[IllegalArgumentException](SparkEntry.select(Some("")))
+    // the tools fail on it before writing or warming anything
+    val out = java.nio.file.Files.createTempDirectory("verify-typo").resolve("out")
+    intercept[IllegalArgumentException](Verify.main(Array(sfTest, out.toString, "q_rakng")))
+    assert(!java.nio.file.Files.exists(out))
+    intercept[IllegalArgumentException](tools.PlanAudit.main(Array(sfTest, "q_rakng")))
   }
 
   test("window navigation: first/last bracket every row, fractions in (0,1]") {

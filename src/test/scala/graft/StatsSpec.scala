@@ -936,8 +936,16 @@ class StatsSpec extends AnyFunSuite with SparkFixture {
       S.RakeCell(sg, rg, n, samp.getOrElse((sg, rg), 0L))
     }).map { case (c, wu) => (c.segment, c.region) -> wu }.toMap
     assert(kernel === w, "rakeGrid must equal the local IPF replay")
-    val got = S.raking(spark, sfTest).collect()
+    val df = S.raking(spark, sfTest)
+    val got = df.collect()
     assert(got.length === pop.size)
+    // sorted on the driver: in orderBy order, one partition, and a
+    // write runs one job
+    assert(got.toSeq === df.orderBy("segment", "region").collect().toSeq)
+    assert(df.rdd.getNumPartitions === 1)
+    val writeJobs = tools.PlanAudit.countJobs(spark)(
+      df.write.format("noop").mode("overwrite").save())._2
+    assert(writeJobs === 1, "writing the raked grid runs a single job")
     got.foreach { r =>
       val k = (r.getAs[String]("segment"), r.getAs[String]("region"))
       assert(r.getAs[Long]("n_pop") === pop(k))

@@ -61,6 +61,11 @@ def main(sf_dir, out_dir):
         registry = sorted(json.loads(qj.read_text()))
     else:  # pre-r6 Verify output: fall back to written dirs
         registry = sorted(d.name for d in out.iterdir() if d.is_dir())
+    # An empty sweep (e.g. a Verify filter that matched nothing) checked
+    # nothing; it must not read as pass=0 fail=0 success.
+    if not registry:
+        print(f"no query to check in {out}")
+        return 1
 
     n_pass = n_fail = n_noracle = 0
     for name in registry:
