@@ -86,6 +86,15 @@ object VectorFunctions {
   def floatNorm(a: Column): Column =
     org.apache.spark.sql.functions.sqrt(floatDot(a, a))
 
+  /** DuckDB twin of [[floatDot]] for oracle SQL: the same left-to-right
+    * DOUBLE fold over two array expressions. */
+  def duckDot(a: String, b: String): String =
+    s"list_reduce(list_transform(range(1, len($a) + 1), " +
+      s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE), (x, y) -> x + y)"
+
+  /** DuckDB twin of [[floatNorm]]. */
+  def duckNorm(a: String): String = s"sqrt(${duckDot(a, a)})"
+
   /** Register `float_dot` for SQL-text call sites on this session. */
   def register(spark: SparkSession): Unit =
     GraftSqlBridge.registerFunction(spark, "float_dot",

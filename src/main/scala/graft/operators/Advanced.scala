@@ -59,8 +59,7 @@ object Advanced extends QueryFamily {
   /** Terms emitted per document. */
   val TfidfTop = 5
 
-  private val normSpark = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
-  private val normDuck = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
+  import TextNorm.{normDuck, normSpark}
 
   /** M8 TF-IDF: tf = term count in doc, idf = ln((N+1)/(df+1)) + 1
     * (smoothed — never divides by zero, deterministic), top-$TfidfTop

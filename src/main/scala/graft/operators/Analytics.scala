@@ -624,17 +624,6 @@ object Analytics extends QueryFamily {
        |GROUP BY churned
        |ORDER BY churned""".stripMargin
 
-  /** Deterministic A/B assignment + two-proportion test: users split
-    * into arms by key-hash parity (the reproducible assignment every
-    * experimentation platform uses — rerunning the analysis never
-    * reshuffles arms), "conversion" = heavy purchaser (purchase share
-    * above 20% — every fixture user purchases at least once, so raw
-    * purchase incidence is degenerate), then per-arm rates and the
-    * pooled two-proportion z statistic, zero-guarded for degenerate
-    * pools. On hash-split arms of one population z ≈ 0 — the A/A test
-    * that validates the pipeline. Counts are exact; the z formula is
-    * one IEEE expression rounded.
-    */
   /** Midpoint of the fixture observation window — the McNemar pairing
     * boundary (H1 vs H2). */
   val McnemarSplit = "2024-01-16 00:00:00"
@@ -809,6 +798,17 @@ object Analytics extends QueryFamily {
        |       ELSE 'stable' END AS verdict
        |FROM v""".stripMargin
 
+  /** Deterministic A/B assignment + two-proportion test: users split
+    * into arms by key-hash parity (the reproducible assignment every
+    * experimentation platform uses — rerunning the analysis never
+    * reshuffles arms), "conversion" = heavy purchaser (purchase share
+    * above 20% — every fixture user purchases at least once, so raw
+    * purchase incidence is degenerate), then per-arm rates and the
+    * pooled two-proportion z statistic, zero-guarded for degenerate
+    * pools. On hash-split arms of one population z ≈ 0 — the A/A test
+    * that validates the pipeline. Counts are exact; the z formula is
+    * one IEEE expression rounded.
+    */
   def abTest(spark: SparkSession, sfDir: String): DataFrame = {
     val perUser = Tables.events(spark, sfDir)
       .groupBy("user_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryFamily, QuerySpec, Tables}
+import graft.functions.VectorFunctions
 import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,8 +48,7 @@ object Dedup extends QueryFamily {
   private def h32Duck(e: String): String =
     s"('0x' || substr(md5($e), 1, 8))::BIGINT"
 
-  private val normSpark = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
-  private val normDuck = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
+  import TextNorm.{normDuck, normSpark}
 
   /** L1 exact dedup: normalized-text grouping, min(doc_id) survives.
     * Emits per-source totals (the fixture plants no exact dups — the
@@ -185,12 +185,6 @@ object Dedup extends QueryFamily {
        |WHERE round(inter / (na.ns + nb.ns - inter), 6) >= $JaccardThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** L2b MinHash + LSH banding: ${MinHashA.size}-permutation signature,
-    * bands of $BandW rows; docs colliding in ANY band become candidate
-    * pairs; candidates are verified with exact Jaccard ≥ $JaccardThreshold.
-    * Signatures are integer arithmetic on the portable 32-bit hash, so
-    * the DuckDB oracle reproduces them bit-for-bit.
-    */
   /** Band-collision candidate pairs (doc_a < doc_b, distinct) — the
     * LSH generator shared by the verify tier and the recall audit,
     * memoized per session.
@@ -224,6 +218,12 @@ object Dedup extends QueryFamily {
         .distinct()
     }
 
+  /** L2b MinHash + LSH banding: ${MinHashA.size}-permutation signature,
+    * bands of $BandW rows; docs colliding in ANY band become candidate
+    * pairs; candidates are verified with exact Jaccard ≥ $JaccardThreshold.
+    * Signatures are integer arithmetic on the portable 32-bit hash, so
+    * the DuckDB oracle reproduces them bit-for-bit.
+    */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val sh = shingles(spark, sfDir)
     val cands = minhashCandidates(spark, sfDir)
@@ -899,7 +899,7 @@ object Dedup extends QueryFamily {
     * is the correctness tier; Similarity.scala holds the LSH scale tier.
     */
   def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.VectorFunctions.{floatDot, floatNorm}
+    import VectorFunctions.{floatDot, floatNorm}
     // spread the stream side: the quadratic dot-product loop otherwise
     // runs on the small file's single scan task (r13, Tables.spread)
     val e = Tables.spread(Tables.embeddings(spark, sfDir), "vec_id")
@@ -916,13 +916,11 @@ object Dedup extends QueryFamily {
   val embeddingNearDupSql: String =
     s"""WITH e AS (
        |  SELECT vec_id, embedding,
-       |    sqrt(list_reduce(list_transform(range(1, len(embedding) + 1),
-       |         i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (x, y) -> x + y)) AS nrm
+       |    ${VectorFunctions.duckNorm("embedding")} AS nrm
        |  FROM embeddings
        |)
        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  round(list_reduce(list_transform(range(1, len(a.embedding) + 1),
-       |        i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE), (x, y) -> x + y)
+       |  round(${VectorFunctions.duckDot("a.embedding", "b.embedding")}
        |    / (a.nrm * b.nrm), 6) AS cos
        |FROM e a JOIN e b ON a.vec_id < b.vec_id
        |ORDER BY cos DESC, vec_a ASC, vec_b ASC

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryCache, QueryFamily, QuerySpec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -86,27 +86,73 @@ object GraphRank extends QueryFamily {
 
   /** Ceiling-parameterized variant so the shuffled-join branch is
     * exercisable in tests without a 10⁸-node fixture. */
+  private[graft] def itemPagerank(spark: SparkSession, sfDir: String,
+                                  bcastCeiling: Long): DataFrame = {
+    val nodes = copurchaseNodes(spark, sfDir)
+    val nV = nodes.count() // one tiny driver-side count to fix the base rank
+    pagerankOf(copurchaseEw(spark, sfDir), nodes, nV, bcastCeiling)
+      .withColumn("rk", row_number().over(Window.orderBy(col("rank").desc, col("item").asc)))
+      .where(col("rk") <= TopOut)
+      .select(col("rk"), col("item").as("item_id"), col("rank").as("rank_units"))
+      .orderBy("rk")
+  }
+
+  /** The broadcast-vs-shuffle choice of every ceiling-parameterized
+    * operator: broadcast `df` into its join only when it `fits`. */
+  private[graft] def bcastIf(fits: Boolean)(df: DataFrame): DataFrame =
+    if (fits) broadcast(df) else df
+
+  /** The co-purchase half-edge list (item_i < item_j, co ≥ `minCo`)
+    * from the shared pair aggregate — every graph operator's edges. */
+  private[graft] def halfEdges(spark: SparkSession, sfDir: String,
+                               minCo: Int = EdgeMinCo): DataFrame =
+    Recsys.unpack(Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "item_i", "item_j")
+      .where(col("co") >= minCo)
+      .select("item_i", "item_j", "co")
+
+  /** `vecSrc`⋈edges keyed by src, `term` summed by dst into (item, s). */
+  private def contribJoin(ew: DataFrame, vecSrc: DataFrame, term: Column,
+                          fitsBroadcast: Boolean): DataFrame =
+    ew.join(bcastIf(fitsBroadcast)(vecSrc), "src")
+      .groupBy(col("dst").as("item"))
+      .agg(term.as("s"))
+
+  private def rankTerm: Column = sum(expr("(rank * w) div ow"))
+
   /** One round's contribution aggregate — ranks⋈edges keyed by src,
     * summed by dst. Factored out so the plan of the hot per-round join
     * is assertable in PlanShapeSpec on both sides of the ceiling (the
     * loop's localCheckpoint truncates it out of the final plan). */
   private[graft] def rankContribJoin(ew: DataFrame, rankSrc: DataFrame,
                                      fitsBroadcast: Boolean): DataFrame =
-    ew.join(if (fitsBroadcast) broadcast(rankSrc) else rankSrc, "src")
-      .groupBy(col("dst").as("item"))
-      .agg(sum(expr("(rank * w) div ow")).as("s"))
+    contribJoin(ew, rankSrc, rankTerm, fitsBroadcast)
 
-  /** Memoized co-purchase edge table with out-degree attached
-    * (src, dst, w, ow) — the iterated input of the PageRank-family
-    * recurrences (plain PageRank and RWR serve from one build, the
-    * feature-store pattern of [[Recsys.itemPairAgg]]). A few
-    * partitions are plenty for the sparsified graph: per-round task
-    * scheduling otherwise dominates the tiny per-task work. The
-    * out-degree join is left unhinted — AQE broadcasts the
-    * node-sized side from runtime stats at catalog scale, and at a
-    * web-scale node count the same build degrades gracefully to a
-    * shuffled join.
-    */
+  /** The integer vertex walk of PageRank, RWR and Katz: `v` starts at
+    * `init`; each round sums `term` over in-edges into `s` and sets `v`
+    * to `next` (`s` is null where no edge arrives).
+    *
+    * r14 NOTE (measured, kept for the record): fusing all rounds into
+    * ONE job (no per-round localCheckpoint — legal here, the chain
+    * references the previous vector once per round) was TRIED and
+    * MEASURED SLOWER in an interleaved A/B under identical load
+    * (pagerank 2.0→3.2 s, rwr 2.1→3.3 s, katz 1.55→2.2 s medians):
+    * each run re-plans and re-codegens the full nested R-round plan
+    * and AQE re-optimizes it at every exchange, which costs more than
+    * the R−1 scheduler round-trips it saves. The per-round sever keeps
+    * each round a tiny cached-codegen plan; reverted. */
+  private def walk(ew: DataFrame, nodes: DataFrame, v: String, init: Column,
+                   term: Column, next: Column, rounds: Int,
+                   fitsBroadcast: Boolean): DataFrame = {
+    var x = nodes.withColumn(v, init).localCheckpoint()
+    for (_ <- 1 to rounds) {
+      val contrib = contribJoin(ew, x.withColumnRenamed("item", "src"), term, fitsBroadcast)
+      x = nodes.join(contrib, Seq("item"), "left")
+        .select(col("item"), next.as(v))
+        .localCheckpoint() // the vector is |items| rows; truncate lineage per round
+    }
+    x
+  }
+
   /** Mirror a one-direction (src, dst, w) half-edge frame into the
     * undirected edge table with out-weights attached — the build step
     * every pagerankOf consumer shares (co-purchase graph here, the
@@ -117,19 +163,27 @@ object GraphRank extends QueryFamily {
     edges.join(edges.groupBy("src").agg(sum("w").as("ow")), "src")
   }
 
+  /** Memoized co-purchase edge table with out-degree attached
+    * (src, dst, w, ow) — the iterated input of the PageRank-family
+    * recurrences and the hop BFS (one build serves them all, the
+    * feature-store pattern of [[Recsys.itemPairAgg]]). A few
+    * partitions are plenty for the sparsified graph: per-round task
+    * scheduling otherwise dominates the tiny per-task work. The
+    * out-degree join is left unhinted — AQE broadcasts the
+    * node-sized side from runtime stats at catalog scale, and at a
+    * web-scale node count the same build degrades gracefully to a
+    * shuffled join.
+    */
   private[graft] def copurchaseEw(spark: SparkSession, sfDir: String): DataFrame =
     QueryCache.memo(spark, s"copurchase_ew:$sfDir") {
-      val half = weightedHalfEdges(spark, sfDir)
-      mirrorWithOutW(half.select(
+      mirrorWithOutW(halfEdges(spark, sfDir).select(
         col("item_i").as("src"), col("item_j").as("dst"), col("co").as("w")))
         // r14 (guide §2.4 share the exchange — the simrank memo trick):
         // the cached layout is hash(dst, 8), so every PageRank-family
         // round's contribution aggregate (groupBy dst after the
         // broadcast rank join, which preserves the child layout) rides
-        // the memo's partitioning with ZERO per-round exchange. Same
-        // partition count as the old coalesce(8): a few partitions are
-        // plenty for the sparsified graph — per-round task scheduling
-        // otherwise dominates the tiny per-task work.
+        // the memo's partitioning with ZERO per-round exchange; 8
+        // partitions for the reason in the scaladoc above.
         .repartition(8, col("dst"))
     }
 
@@ -138,6 +192,13 @@ object GraphRank extends QueryFamily {
     QueryCache.memo(spark, s"copurchase_nodes:$sfDir") {
       copurchaseEw(spark, sfDir).select(col("src").as("item")).distinct()
     }
+
+  /** The strongest hub (max ow, ties to the smaller id): the seed of
+    * [[rwrProximity]] and [[shortestPaths]]. */
+  private def hubSeed(ew: DataFrame): Long =
+    ew.select("src", "ow").distinct()
+      .orderBy(col("ow").desc, col("src").asc)
+      .select("src").head().getLong(0)
 
   /** Force-build the memoized graph tables (see [[Recsys.warm]]). */
   def warm(spark: SparkSession, sfDir: String): Unit = {
@@ -155,40 +216,9 @@ object GraphRank extends QueryFamily {
                                 nV: Long, bcastCeiling: Long): DataFrame = {
     require(nV > 0, "pagerankOf: empty graph")
     val base = TotalUnits / nV
-    // catalog-sized node set → broadcast the rank vector into the
-    // per-round edge join; web-scale node set → the same recurrence
-    // with shuffled equi-joins on src
-    val fitsBroadcast = nV <= bcastCeiling
-    // r14 NOTE (measured, kept for the record): fusing all rounds into
-    // ONE job (no per-round localCheckpoint — legal here, the chain
-    // references the previous vector once per round) was TRIED and
-    // MEASURED SLOWER in an interleaved A/B under identical load
-    // (pagerank 2.0→3.2 s, rwr 2.1→3.3 s, katz 1.55→2.2 s medians):
-    // each run re-plans and re-codegens the full nested R-round plan
-    // and AQE re-optimizes it at every exchange, which costs more than
-    // the R−1 scheduler round-trips it saves. The per-round sever keeps
-    // each round a tiny cached-codegen plan; reverted.
-    var ranks = nodes.withColumn("rank", lit(base)).localCheckpoint()
-    for (_ <- 1 to Rounds) {
-      val contrib = rankContribJoin(
-        ew, ranks.withColumnRenamed("item", "src"), fitsBroadcast)
-      ranks = nodes.join(contrib, Seq("item"), "left")
-        .select(col("item"),
-          expr(s"(${100 - DampPct} * ${base}L + $DampPct * coalesce(s, 0L)) div 100").as("rank"))
-        .localCheckpoint() // rank vector is |items| rows; truncate lineage per round
-    }
-    ranks
-  }
-
-  private[graft] def itemPagerank(spark: SparkSession, sfDir: String,
-                                  bcastCeiling: Long): DataFrame = {
-    val nodes = copurchaseNodes(spark, sfDir)
-    val nV = nodes.count() // one tiny driver-side count to fix the base rank
-    pagerankOf(copurchaseEw(spark, sfDir), nodes, nV, bcastCeiling)
-      .withColumn("rk", row_number().over(Window.orderBy(col("rank").desc, col("item").asc)))
-      .where(col("rk") <= TopOut)
-      .select(col("rk"), col("item").as("item_id"), col("rank").as("rank_units"))
-      .orderBy("rk")
+    walk(ew, nodes, "rank", lit(base), rankTerm,
+      expr(s"(${100 - DampPct} * ${base}L + $DampPct * coalesce(s, 0L)) div 100"),
+      Rounds, nV <= bcastCeiling)
   }
 
   /** The unrolled integer-PageRank round CTEs pr1..prN — ONE
@@ -254,20 +284,14 @@ object GraphRank extends QueryFamily {
     * (pmi desc, item_i, item_j).
     */
   def pairPmi(spark: SparkSession, sfDir: String): DataFrame = {
-    val r = Recsys.cappedInteractions(spark, sfDir).select("user_id", "item_id")
-    val nUsers = r.agg(countDistinct(col("user_id")).as("u"))
-    val counts = r.groupBy("item_id").agg(count(lit(1)).as("n"))
-    val pairs = Recsys.unpack(Recsys.itemPairAgg(spark, sfDir).select("pk", "co"),
-        "item_i", "item_j")
-      .where(col("co") >= MinCo)
+    val nUsers = Recsys.cappedInteractions(spark, sfDir)
+      .agg(countDistinct(col("user_id")).as("u"))
     // Global top-K via orderBy().limit() — Catalyst plans a parallel
     // TakeOrderedAndProject (per-partition partial top-K, then a K-row
     // merge on the driver). The row_number window this replaces sorted
     // the ENTIRE scored pair table in one partition — the largest
     // single stage in the round-3 bench (26 s at sf0.1).
-    val top = pairs
-      .join(broadcast(counts.select(col("item_id").as("item_i"), col("n").as("ni"))), "item_i")
-      .join(broadcast(counts.select(col("item_id").as("item_j"), col("n").as("nj"))), "item_j")
+    val top = countedPairs(spark, sfDir)
       .crossJoin(broadcast(nUsers))
       .withColumn("pmi", round(log(col("co") * col("u") / (col("ni") * col("nj"))), 6))
       .orderBy(col("pmi").desc, col("item_i").asc, col("item_j").asc)
@@ -276,6 +300,16 @@ object GraphRank extends QueryFamily {
         Window.orderBy(col("pmi").desc, col("item_i").asc, col("item_j").asc)))
       .select(col("rk"), col("item_i"), col("item_j"), col("co"), col("pmi"))
       .orderBy("rk")
+  }
+
+  /** The [[MinCo]] pairs with both items' user counts (ni, nj) attached
+    * from the broadcast item-count table — shared by PMI and Jaccard. */
+  private def countedPairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val counts = Recsys.cappedInteractions(spark, sfDir)
+      .groupBy("item_id").agg(count(lit(1)).as("n"))
+    halfEdges(spark, sfDir, MinCo)
+      .join(broadcast(counts.select(col("item_id").as("item_i"), col("n").as("ni"))), "item_i")
+      .join(broadcast(counts.select(col("item_id").as("item_j"), col("n").as("nj"))), "item_j")
   }
 
   val pairPmiSql: String =
@@ -329,13 +363,9 @@ object GraphRank extends QueryFamily {
     * near-uniform degree.
     */
   def triangleCount(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "a", "b")
-      .where(col("co") >= TriMinCo)
-      .select("a", "b")
-    val wedges = e.select(col("a"), col("b").as("m"))
-      .join(e.select(col("a").as("m"), col("b").as("c")), "m")
-    val tris = wedges.join(e.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
+    val e = halfEdges(spark, sfDir, TriMinCo)
+      .select(col("item_i").as("a"), col("item_j").as("b"))
+    val tris = trianglesOf(e)
     val corners = tris.select(explode(array(col("a"), col("m"), col("c"))).as("item_id"))
       .groupBy("item_id").agg(count(lit(1)).as("n_triangles"))
     val total = tris.agg(count(lit(1)).as("n"))
@@ -347,6 +377,15 @@ object GraphRank extends QueryFamily {
       .select(col("rk"), col("item_id"), col("n_triangles"), col("n").as("total_triangles"))
       .orderBy("rk")
   }
+
+  /** Triangles (a, m, c), a < m < c, of an oriented (a, b) half-edge
+    * frame: the wedge join on the middle vertex, closed by one
+    * semi-join against e(a, c). */
+  private def trianglesOf(e: DataFrame): DataFrame =
+    e.select(col("a"), col("b").as("m"))
+      .join(e.select(col("a").as("m"), col("b").as("c")), "m")
+      .join(e.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
+      .select("a", "m", "c")
 
   val triangleCountSql: String =
     s"""WITH ${Recsys.cappedSql}, r AS (
@@ -384,14 +423,7 @@ object GraphRank extends QueryFamily {
     * shuffles beyond the global top-K merge.
     */
   def cooccurJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val r = Recsys.cappedInteractions(spark, sfDir).select("user_id", "item_id")
-    val counts = r.groupBy("item_id").agg(count(lit(1)).as("n"))
-    val pairs = Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "item_i", "item_j")
-      .where(col("co") >= MinCo)
-    val top = pairs
-      .join(broadcast(counts.select(col("item_id").as("item_i"), col("n").as("ni"))), "item_i")
-      .join(broadcast(counts.select(col("item_id").as("item_j"), col("n").as("nj"))), "item_j")
+    val top = countedPairs(spark, sfDir)
       .withColumn("jaccard", round(col("co") / (col("ni") + col("nj") - col("co")), 6))
       .orderBy(col("jaccard").desc, col("item_i").asc, col("item_j").asc)
       .limit(JacTop)
@@ -433,38 +465,20 @@ object GraphRank extends QueryFamily {
     * per-hop id extremes plus the count of items unreachable within
     * the bound. The reachability/diameter probe for any graph feature
     * pipeline. Frontier expansion is one join + one aggregate per hop
-    * — the textbook distributed BFS; `localCheckpoint` truncates
-    * lineage per round exactly like the connected-components iteration.
-    * All integers ⇒ exact oracle (recursive CTE, min-hop after).
+    * — the textbook distributed BFS ([[hopBfs]]). All integers ⇒
+    * exact oracle (recursive CTE, min-hop after).
     */
   def itemBfs(spark: SparkSession, sfDir: String): DataFrame =
     itemBfs(spark, sfDir, BroadcastNodeCeiling)
 
   private[graft] def itemBfs(spark: SparkSession, sfDir: String,
                              bcastCeiling: Long): DataFrame = {
-    val half = Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "item_i", "item_j")
-      .where(col("co") >= EdgeMinCo)
-    val edges = half.select(col("item_i").as("src"), col("item_j").as("dst"))
-      .unionByName(half.select(col("item_j").as("src"), col("item_i").as("dst")))
-      .coalesce(8).persist()
-    val nodes = edges.select(col("src").as("item")).distinct()
+    val nodes = copurchaseNodes(spark, sfDir)
     // a frontier can approach |V| rows by the middle hops, so it rides a
     // broadcast only under the same node ceiling as the pagerank rank
     // vector; above it the hop step is a shuffled semi-equi-join on src
-    val fitsBroadcast = nodes.count() <= bcastCeiling
-    val source = nodes.agg(min("item").as("item")).withColumn("d", lit(0L))
-    var dist = source.localCheckpoint()
-    for (k <- 1 to BfsMaxHops) {
-      val frontier = dist.where(col("d") === k - 1).select(col("item").as("src"))
-      val stepped = edges.join(if (fitsBroadcast) broadcast(frontier) else frontier, "src")
-        .select(col("dst").as("item")).distinct()
-        .withColumn("d", lit(k.toLong))
-      dist = dist.unionByName(stepped)
-        .groupBy("item").agg(min("d").as("d"))
-        .localCheckpoint()
-    }
-    edges.unpersist(blocking = false)
+    val dist = hopBfs(copurchaseEw(spark, sfDir).select("src", "dst"),
+      nodes.agg(min("item").as("item")), Nil, BfsMaxHops, nodes.count() <= bcastCeiling)
     val hist = dist.groupBy("d")
       .agg(count(lit(1)).as("n_items"), min("item").as("min_item"), max("item").as("max_item"))
     val unreachable = nodes.join(dist, Seq("item"), "left_anti")
@@ -472,6 +486,27 @@ object GraphRank extends QueryFamily {
       .select(lit(-1L).as("d"), col("n_items"), lit(null).cast("long").as("min_item"),
               lit(null).cast("long").as("max_item"))
     hist.unionByName(unreachable).orderBy("d")
+  }
+
+  /** Multi-source hop BFS over mirrored (src, dst) edges: (tags…, item,
+    * d) for every state within `hops` of a `seeds` row (tags…, item).
+    * The tags ride every grouping — none for [[itemBfs]], `lid` for
+    * [[closenessOf]] — so neither plan gains a key. */
+  private def hopBfs(edges: DataFrame, seeds: DataFrame, tags: Seq[String],
+                     hops: Int, fitsBroadcast: Boolean): DataFrame = {
+    val keys = (tags :+ "item").map(col)
+    var dist = seeds.select(keys :+ lit(0L).as("d"): _*).localCheckpoint()
+    for (k <- 1 to hops) {
+      val frontier = dist.where(col("d") === k - 1)
+        .select(tags.map(col) :+ col("item").as("src"): _*)
+      val stepped = edges.join(bcastIf(fitsBroadcast)(frontier), "src")
+        .select(tags.map(col) :+ col("dst").as("item"): _*).distinct()
+        .withColumn("d", lit(k.toLong))
+      dist = dist.unionByName(stepped)
+        .groupBy(keys: _*).agg(min("d").as("d"))
+        .localCheckpoint() // ≤ |tags|·|V| rows; truncate lineage per hop
+    }
+    dist
   }
 
   val itemBfsSql: String =
@@ -624,7 +659,7 @@ object GraphRank extends QueryFamily {
     // SimRank pairs that share no user at all (contrib without co).
     // Both sides pack a<b pairs identically, so pk-equality IS
     // (ia, ib)-equality; unpack after the join, where rows are final.
-    val ip = itemPairAgg0(spark, sfDir)
+    val ip = Recsys.itemPairAgg(spark, sfDir).select("pk", "co")
     val scored = Recsys.unpack(
         ip.join(contrib, Seq("pk"), "full")
           .select(col("pk"),
@@ -646,17 +681,11 @@ object GraphRank extends QueryFamily {
       .orderBy("rk")
   }
 
-  /** The shared memoized item-pair aggregate, co projection. */
-  private def itemPairAgg0(spark: SparkSession, sfDir: String): DataFrame =
-    Recsys.itemPairAgg(spark, sfDir).select("pk", "co")
-
-  /** |V| of the EdgeMinCo-sparsified co-purchase graph (test hook). */
-  private[graft] def sparsifiedNodeCount(spark: SparkSession, sfDir: String): Long = {
-    val half = Recsys.unpack(itemPairAgg0(spark, sfDir), "item_i", "item_j")
-      .where(col("co") >= EdgeMinCo)
-    half.select(col("item_i").as("v"))
-      .unionByName(half.select(col("item_j").as("v"))).distinct().count()
-  }
+  /** |V| of the EdgeMinCo-sparsified co-purchase graph, derived
+    * independently of [[copurchaseNodes]] (test hook). */
+  private[graft] def sparsifiedNodeCount(spark: SparkSession, sfDir: String): Long =
+    halfEdges(spark, sfDir).select(explode(array(col("item_i"), col("item_j"))))
+      .distinct().count()
 
   val simrankSql: String =
     s"""WITH ${Recsys.cappedSql}, r AS (
@@ -738,7 +767,7 @@ object GraphRank extends QueryFamily {
     */
   private[graft] def lpaRound(ew: DataFrame, lbls: DataFrame,
                               fitsBroadcast: Boolean): DataFrame =
-    ew.join(if (fitsBroadcast) broadcast(lbls) else lbls, "src")
+    ew.join(bcastIf(fitsBroadcast)(lbls), "src")
       .groupBy(col("dst").as("item"), col("lbl"))
       .agg(sum("w").as("sw"))
       .groupBy("item")
@@ -881,7 +910,7 @@ object GraphRank extends QueryFamily {
     val nHub = outW.count()
     require(nHub > 0, "salsa: empty transition graph")
     val fitsBroadcast = math.max(nHub, inW.count()) <= bcastCeiling
-    def maybe(df: DataFrame): DataFrame = if (fitsBroadcast) broadcast(df) else df
+    val maybe = bcastIf(fitsBroadcast) _
     val h0 = TotalUnits / nHub
     // a1(j) = sum_i h0 * w(ij) div out_w(i), h0 uniform over hubs
     val a1 = e.join(maybe(outW), "src")
@@ -948,15 +977,8 @@ object GraphRank extends QueryFamily {
     * corr runs over |edges| rows with both degree attaches broadcast
     * (|V|-row tables). No quadratic structure anywhere.
     */
-  /** EdgeMinCo-sparsified half edge list (i<j), one row per undirected
-    * edge — shared by [[assortativity]] and its spec. */
-  private[graft] def sparsifiedHalfEdges(spark: SparkSession, sfDir: String): DataFrame =
-    Recsys.unpack(Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "item_i", "item_j")
-      .where(col("co") >= EdgeMinCo)
-      .select("item_i", "item_j")
-
   def assortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val half = sparsifiedHalfEdges(spark, sfDir)
+    val half = halfEdges(spark, sfDir)
     val m = half.select(col("item_i").as("a"), col("item_j").as("b"))
       .unionByName(half.select(col("item_j").as("a"), col("item_i").as("b")))
     val deg = m.groupBy("a").agg(count(lit(1)).as("d"))
@@ -1010,35 +1032,18 @@ object GraphRank extends QueryFamily {
   def rwrProximity(spark: SparkSession, sfDir: String): DataFrame =
     rwrProximity(spark, sfDir, BroadcastNodeCeiling)
 
-  /** Weighted sparsified half-edges (co ≥ [[EdgeMinCo]]) — shared by
-    * the PageRank-family recurrences and their specs. */
-  private[graft] def weightedHalfEdges(spark: SparkSession, sfDir: String): DataFrame =
-    Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "item_i", "item_j")
-      .where(col("co") >= EdgeMinCo)
-
   private[graft] def rwrProximity(spark: SparkSession, sfDir: String,
                                   bcastCeiling: Long): DataFrame = {
     val ew = copurchaseEw(spark, sfDir)
     val nodes = copurchaseNodes(spark, sfDir)
     val nV = nodes.count()
     require(nV > 0, "rwrProximity: empty co-purchase graph")
-    val seed = ew.select("src", "ow").distinct()
-      .orderBy(col("ow").desc, col("src").asc)
-      .select("src").head.getLong(0)
-    val fitsBroadcast = nV <= bcastCeiling
-    var ranks = nodes.withColumn("rank",
-      when(col("item") === seed, lit(TotalUnits)).otherwise(lit(0L))).localCheckpoint()
-    for (_ <- 1 to Rounds) {
-      val contrib = rankContribJoin(
-        ew, ranks.withColumnRenamed("item", "src"), fitsBroadcast)
-      ranks = nodes.join(contrib, Seq("item"), "left")
-        .select(col("item"),
-          expr(s"((CASE WHEN item = ${seed}L THEN ${100 - DampPct} * ${TotalUnits}L ELSE 0L END)" +
-            s" + $DampPct * coalesce(s, 0L)) div 100").as("rank"))
-        .localCheckpoint() // see pagerankOf's r14 A/B note
-    }
-    ranks
+    val seed = hubSeed(ew)
+    walk(ew, nodes, "rank",
+      when(col("item") === seed, lit(TotalUnits)).otherwise(lit(0L)), rankTerm,
+      expr(s"((CASE WHEN item = ${seed}L THEN ${100 - DampPct} * ${TotalUnits}L ELSE 0L END)" +
+        s" + $DampPct * coalesce(s, 0L)) div 100"),
+      Rounds, nV <= bcastCeiling)
       .withColumn("rk", row_number().over(Window.orderBy(col("rank").desc, col("item").asc)))
       .where(col("rk") <= RwrTop)
       .select(col("rk"), col("item").as("item_id"), col("rank").as("rank_units"),
@@ -1122,9 +1127,7 @@ object GraphRank extends QueryFamily {
     */
   def shortestPaths(spark: SparkSession, sfDir: String): DataFrame = {
     val ew = copurchaseEw(spark, sfDir)
-    val seed = ew.select("src", "ow").distinct()
-      .orderBy(col("ow").desc, col("src").asc)
-      .select("src").head.getLong(0)
+    val seed = hubSeed(ew)
     val edges = ew.select(col("src"), col("dst"),
       expr(s"${SpCostUnit}L div w").as("cost"))
     var dist = edges.sparkSession.range(1)
@@ -1232,8 +1235,7 @@ object GraphRank extends QueryFamily {
                           bcastCeiling: Long): DataFrame = {
     val e = Recsys.cappedInteractions(spark, sfDir).select("user_id", "item_id")
     val users = e.select("user_id").distinct()
-    val fitsBroadcast = bipartiteMaxSide(spark, sfDir) <= bcastCeiling
-    def maybe(df: DataFrame): DataFrame = if (fitsBroadcast) broadcast(df) else df
+    val maybe = bcastIf(bipartiteMaxSide(spark, sfDir) <= bcastCeiling) _
     def renorm(raw0: DataFrame, key: String, v: String): DataFrame = {
       // checkpoint the raw vector once: it feeds both the 1-row max
       // and the renormed projection (and truncates per-round lineage)
@@ -1329,13 +1331,10 @@ object GraphRank extends QueryFamily {
     // kcoreOf peels the i<j half space, so hand it the half list
     // directly — mirroring here would double the upstream pair-agg
     // work only for kcoreOf's a<b normalization to throw half away.
-    val m = sparsifiedHalfEdges(spark, sfDir)
+    val m = halfEdges(spark, sfDir)
       .select(col("item_i").as("a"), col("item_j").as("b"))
-    val fitsBroadcast =
-      m.select(explode(array(col("a"), col("b"))).as("a"))
-        .distinct().count() <= bcastCeiling
-    val out = kcoreOf(m, KcoreK, KcoreRounds, fitsBroadcast)
-    out
+    // |V| of this EdgeMinCo graph is the memoized copurchaseNodes count
+    kcoreOf(m, KcoreK, KcoreRounds, copurchaseNodes(spark, sfDir).count() <= bcastCeiling)
       .withColumn("rk", row_number().over(Window.orderBy(col("d").desc, col("a").asc)))
       .where(col("rk") <= KcoreTop)
       .select(col("rk"), col("a").as("item_id"), col("d").as("core_deg"))
@@ -1362,7 +1361,7 @@ object GraphRank extends QueryFamily {
     * the full-round mirrored peel by both arguments. */
   private[graft] def kcoreOf(m: DataFrame, k: Int, rounds: Int,
                              fitsBroadcast: Boolean): DataFrame = {
-    def maybe(df: DataFrame): DataFrame = if (fitsBroadcast) broadcast(df) else df
+    val maybe = bcastIf(fitsBroadcast) _
     def degrees(half: DataFrame): DataFrame =
       half.select(explode(array(col("a"), col("b"))).as("a"))
         .groupBy("a").agg(count(lit(1)).as("d"))
@@ -1433,10 +1432,8 @@ object GraphRank extends QueryFamily {
     * the two global sums are map-side partials.
     */
   def localClustering(spark: SparkSession, sfDir: String): DataFrame =
-    localClusteringOf(Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "a", "b")
-      .where(col("co") >= TriMinCo)
-      .select("a", "b"))
+    localClusteringOf(halfEdges(spark, sfDir, TriMinCo)
+      .select(col("item_i").as("a"), col("item_j").as("b")))
 
   /** The wedge/cc/transitivity computation over ANY oriented (a, b)
     * half-edge frame — extracted so the scale spec can drive it on a
@@ -1445,9 +1442,7 @@ object GraphRank extends QueryFamily {
     val deg = e.select(col("a").as("item_id"))
       .unionByName(e.select(col("b").as("item_id")))
       .groupBy("item_id").agg(count(lit(1)).as("deg"))
-    val wedges = e.select(col("a"), col("b").as("m"))
-      .join(e.select(col("a").as("m"), col("b").as("c")), "m")
-    val tris = wedges.join(e.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
+    val tris = trianglesOf(e)
     val perItem = tris.select(explode(array(col("a"), col("m"), col("c"))).as("item_id"))
       .groupBy("item_id").agg(count(lit(1)).as("n_triangles"))
     val globals = tris.agg(count(lit(1)).as("t_total")).crossJoin(
@@ -1545,10 +1540,7 @@ object GraphRank extends QueryFamily {
     * aggregate every bucketed ANN/dedup tier already runs.
     */
   def linkPredict(spark: SparkSession, sfDir: String): DataFrame =
-    linkPredictOf(Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "item_i", "item_j")
-      .where(col("co") >= TriMinCo)
-      .select("item_i", "item_j"))
+    linkPredictOf(halfEdges(spark, sfDir, TriMinCo).select("item_i", "item_j"))
 
   /** The capped AA expansion over ANY (item_i, item_j) half-edge frame
     * — extracted so the spec can plant a super-cap hub and prove the
@@ -1640,9 +1632,7 @@ object GraphRank extends QueryFamily {
     */
   def modularity(spark: SparkSession, sfDir: String): DataFrame = {
     val lbl = lpaLabels(spark, sfDir)
-    val nV = copurchaseNodes(spark, sfDir).count()
-    val fitsBroadcast = nV <= BroadcastNodeCeiling
-    def maybe(df: DataFrame): DataFrame = if (fitsBroadcast) broadcast(df) else df
+    val maybe = bcastIf(copurchaseNodes(spark, sfDir).count() <= BroadcastNodeCeiling) _
     val ew = copurchaseEw(spark, sfDir)
       .join(maybe(lbl.select(col("src"), col("lbl").as("lc"))), "src")
       .join(maybe(lbl.select(col("src").as("dst"), col("lbl").as("ld"))), "dst")
@@ -1742,8 +1732,7 @@ object GraphRank extends QueryFamily {
   private[graft] def katz(spark: SparkSession, sfDir: String,
                           bcastCeiling: Long): DataFrame = {
     val nodes = copurchaseNodes(spark, sfDir)
-    val nV = nodes.count()
-    katzOf(copurchaseEw(spark, sfDir).select("src", "dst"), nodes, nV, bcastCeiling)
+    katzOf(copurchaseEw(spark, sfDir).select("src", "dst"), nodes, nodes.count(), bcastCeiling)
       .withColumn("rk", row_number().over(
         Window.orderBy(col("katz").desc, col("item").asc)))
       .where(col("rk") <= KatzTop)
@@ -1757,20 +1746,9 @@ object GraphRank extends QueryFamily {
   private[graft] def katzOf(edges: DataFrame, nodes: DataFrame,
                             nV: Long, bcastCeiling: Long): DataFrame = {
     require(nV > 0, "katzOf: empty graph")
-    val fitsBroadcast = nV <= bcastCeiling
-    var c = nodes.withColumn("katz", lit(0L)).localCheckpoint()
-    for (_ <- 1 to KatzRounds) {
-      val cSrc = c.withColumnRenamed("item", "src")
-      val contrib = edges
-        .join(if (fitsBroadcast) broadcast(cSrc) else cSrc, "src")
-        .groupBy(col("dst").as("item"))
-        .agg(sum(expr(
-          s"($KatzAlphaNum * (${KatzUnit}L + katz)) div $KatzAlphaDen")).as("s"))
-      c = nodes.join(contrib, Seq("item"), "left")
-        .select(col("item"), coalesce(col("s"), lit(0L)).as("katz"))
-        .localCheckpoint() // see pagerankOf's r14 A/B note
-    }
-    c
+    walk(edges, nodes, "katz", lit(0L),
+      sum(expr(s"($KatzAlphaNum * (${KatzUnit}L + katz)) div $KatzAlphaDen")),
+      coalesce(col("s"), lit(0L)), KatzRounds, nV <= bcastCeiling)
   }
 
   /** Oracle: the identical recurrence unrolled as kz0..kzN chained
@@ -1852,9 +1830,8 @@ object GraphRank extends QueryFamily {
 
   private[graft] def closeness(spark: SparkSession, sfDir: String,
                                bcastCeiling: Long): DataFrame = {
-    val nodes = copurchaseNodes(spark, sfDir)
     closenessOf(copurchaseEw(spark, sfDir).select("src", "dst"),
-                nodes.count(), bcastCeiling)
+                copurchaseNodes(spark, sfDir).count(), bcastCeiling)
   }
 
   /** Frame-parameterized core (scale-spec entry point): edges must be
@@ -1862,24 +1839,11 @@ object GraphRank extends QueryFamily {
   private[graft] def closenessOf(edges: DataFrame, nV: Long,
                                  bcastCeiling: Long): DataFrame = {
     require(nV > 0, "closenessOf: empty graph")
-    val fitsBroadcast = nV * NLandmarks <= bcastCeiling
     val landmarks = edges.groupBy("src").agg(count(lit(1)).as("dg"))
       .orderBy(col("dg").desc, col("src").asc).limit(NLandmarks)
       .select(col("src").as("lid"))
-    var dist = landmarks
-      .select(col("lid"), col("lid").as("item"), lit(0L).as("d"))
-      .localCheckpoint()
-    for (k <- 1 to CloseHops) {
-      val frontier = dist.where(col("d") === k - 1)
-        .select(col("lid"), col("item").as("src"))
-      val stepped = edges
-        .join(if (fitsBroadcast) broadcast(frontier) else frontier, "src")
-        .select(col("lid"), col("dst").as("item")).distinct()
-        .withColumn("d", lit(k.toLong))
-      dist = dist.unionByName(stepped)
-        .groupBy("lid", "item").agg(min("d").as("d"))
-        .localCheckpoint()
-    }
+    val dist = hopBfs(edges, landmarks.select(col("lid"), col("lid").as("item")),
+      Seq("lid"), CloseHops, nV * NLandmarks <= bcastCeiling)
     dist.where(col("d") >= 1)
       .groupBy("item")
       .agg(count(lit(1)).as("reached"),
@@ -1952,16 +1916,8 @@ object GraphRank extends QueryFamily {
     * integers throughout.
     */
   def ktruss(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = Recsys.unpack(
-        Recsys.itemPairAgg(spark, sfDir).select("pk", "co"), "a", "b")
-      .where(col("co") >= TriMinCo)
-      .select("a", "b")
-    def trisOf(e: DataFrame): DataFrame = {
-      val wedges = e.select(col("a"), col("b").as("m"))
-        .join(e.select(col("a").as("m"), col("b").as("c")), "m")
-      wedges.join(e.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
-        .select("a", "m", "c")
-    }
+    val base = halfEdges(spark, sfDir, TriMinCo)
+      .select(col("item_i").as("a"), col("item_j").as("b"))
     def stats(e: DataFrame, tris: DataFrame, r: Int): DataFrame =
       e.agg(count(lit(1)).as("n_edges"))
         .crossJoin(broadcast(tris.agg(count(lit(1)).as("n_triangles"))))
@@ -1970,7 +1926,7 @@ object GraphRank extends QueryFamily {
     var curve: DataFrame = null
     for (r <- 1 to TrussRounds) {
       // one wedge join per round, read twice (curve point + supports)
-      val tris = trisOf(e).localCheckpoint()
+      val tris = trianglesOf(e).localCheckpoint()
       val st = stats(e, tris, r - 1)
       curve = if (curve == null) st else curve.unionByName(st)
       val supp = tris.select(explode(array(
@@ -1982,7 +1938,7 @@ object GraphRank extends QueryFamily {
       e = e.join(supp.where(col("supp") >= TrussK - 2), Seq("a", "b"), "left_semi")
         .localCheckpoint()
     }
-    curve.unionByName(stats(e, trisOf(e), TrussRounds)).orderBy("round")
+    curve.unionByName(stats(e, trianglesOf(e), TrussRounds)).orderBy("round")
   }
 
   /** Oracle: the peel unrolled as e0..eN MATERIALIZED CTEs, each round

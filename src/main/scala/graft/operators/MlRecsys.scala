@@ -260,15 +260,6 @@ object MlRecsys extends QueryFamily {
       .orderBy("user_id", "rk")
   }
 
-  /** M-family sequential pattern mining: MLlib PrefixSpan over the
-    * per-user time-ordered item sequences (each order's basket is one
-    * itemset step). The gap-insensitive generalization of
-    * [[Recsys.seqBuyPairs]] — patterns may skip steps. Exact and
-    * seedless, but its output is frequent SEQUENCES of itemsets, whose
-    * SQL reconstruction beyond length 2 is not practical — rows-only
-    * check; the spec cross-checks the length-1 patterns against plain
-    * counts.
-    */
   /** Support floor for sequential patterns at the reference corpus
     * size, in users; the effective floor scales with √(n/GateSeqs) —
     * count-data noise grows like √n (Poisson), so a √-scaled floor
@@ -295,6 +286,15 @@ object MlRecsys extends QueryFamily {
         .distinct()
     }
 
+  /** M-family sequential pattern mining: MLlib PrefixSpan over the
+    * per-user time-ordered item sequences (each order's basket is one
+    * itemset step). The gap-insensitive generalization of
+    * [[Recsys.seqBuyPairs]] — patterns may skip steps. Exact and
+    * seedless, but its output is frequent SEQUENCES of itemsets, whose
+    * SQL reconstruction beyond length 2 is not practical — rows-only
+    * check; the spec cross-checks the length-1 patterns against plain
+    * counts.
+    */
   def seqPatterns(spark: SparkSession, sfDir: String): DataFrame = {
     val seqs = basketItems(spark, sfDir)
       .groupBy(col("user_id").as("o_custkey"), col("ok").as("o_orderkey"),
@@ -517,6 +517,13 @@ object MlRecsys extends QueryFamily {
        |ORDER BY freq DESC, pattern ASC
        |LIMIT 100""".stripMargin
 
+  /** Rule-tier floors. The fixture's baskets are sparse (max pairwise
+    * support 3–5 at any SF), so the support floor is an absolute count
+    * and confidence sits at 2%; a production corpus would use a
+    * relative floor like [[FpMinSupport]] — one constant to change. */
+  val RuleMinCount    = 2
+  val RuleMinConf     = 0.02
+
   /** Association rules — the directional tier above
     * [[fpgrowthItemsets]]: for every frequent ordered pair A→B, support
     * count, confidence n(A,B)/n(A), and lift n(A,B)·N/(n(A)·n(B)) —
@@ -532,13 +539,6 @@ object MlRecsys extends QueryFamily {
     * broadcast policy). Lift's numerator/denominator stay integer
     * until one final division.
     */
-  /** Rule-tier floors. The fixture's baskets are sparse (max pairwise
-    * support 3–5 at any SF), so the support floor is an absolute count
-    * and confidence sits at 2%; a production corpus would use a
-    * relative floor like [[FpMinSupport]] — one constant to change. */
-  val RuleMinCount    = 2
-  val RuleMinConf     = 0.02
-
   def assocRules(spark: SparkSession, sfDir: String): DataFrame = {
     // severed once: the distinct basket-item frame feeds the basket
     // count, the singles and BOTH self-join sides (r9s2 rescan sweep)

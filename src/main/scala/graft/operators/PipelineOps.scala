@@ -529,7 +529,7 @@ object PipelineOps extends QueryFamily {
     // once so the tokenize scan runs once (documents ×4 in the r9 plan)
     val t = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
-        size(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " "))
+        size(split(expr(TextNorm.normSpark), " "))
           .cast("long").as("n_tok"))
       .localCheckpoint()
     val mm = t.agg(min("doc_id").as("__mn"), max("doc_id").as("__mx"))
@@ -562,7 +562,7 @@ object PipelineOps extends QueryFamily {
   val seqPackSql: String =
     s"""WITH d AS (
        |  SELECT doc_id, source,
-       |    len(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '))::BIGINT AS n_tok
+       |    len(string_split(${TextNorm.normDuck}, ' '))::BIGINT AS n_tok
        |  FROM documents
        |), c AS (
        |  SELECT source, doc_id, n_tok,

@@ -66,6 +66,21 @@ object Recsys extends QueryFamily {
   /** K for precision/recall@K. */
   val EvalK = 10
 
+  /** Hot-user cap: top MaxHistory (strength desc, item asc) per user
+    * via the bounded top-K aggregate, not a row_number window — the
+    * aggregate's partial phase caps map-side instead of sort-shuffling
+    * the full interaction table (same rows out; downstream consumers
+    * impose their own order). Shared by the base and time-decayed
+    * interaction tables.
+    */
+  private[graft] def capHistories(interactions: DataFrame): DataFrame =
+    interactions
+      .groupBy("user_id")
+      .agg(graft.functions.TopKByScore.topK(
+        MaxHistory, col("strength"), col("item_id"), lit(0L)).as("hs"))
+      .select(col("user_id"), explode(col("hs")).as("h"))
+      .select(col("user_id"), col("h.id").as("item_id"), col("h.score").as("strength"))
+
   /** Deterministically capped user→item interactions: top MaxHistory
     * items per user by (strength desc, item asc).
     *
@@ -83,21 +98,6 @@ object Recsys extends QueryFamily {
     * under sfDir are assumed immutable per session — see QueryCache
     * for the invalidate escape hatch).
     */
-  /** Hot-user cap: top MaxHistory (strength desc, item asc) per user
-    * via the bounded top-K aggregate, not a row_number window — the
-    * aggregate's partial phase caps map-side instead of sort-shuffling
-    * the full interaction table (same rows out; downstream consumers
-    * impose their own order). Shared by the base and time-decayed
-    * interaction tables.
-    */
-  private[graft] def capHistories(interactions: DataFrame): DataFrame =
-    interactions
-      .groupBy("user_id")
-      .agg(graft.functions.TopKByScore.topK(
-        MaxHistory, col("strength"), col("item_id"), lit(0L)).as("hs"))
-      .select(col("user_id"), explode(col("hs")).as("h"))
-      .select(col("user_id"), col("h.id").as("item_id"), col("h.score").as("strength"))
-
   private[graft] def cappedInteractions(spark: SparkSession, sfDir: String): DataFrame =
     graft.QueryCache.memo(spark, s"recsys:interactions:$sfDir") {
       capHistories(Tables.interactions(spark, sfDir))
@@ -132,16 +132,6 @@ object Recsys extends QueryFamily {
       .withColumn(bName, col("pk").bitwiseAND(PackBase - 1L))
       .drop("pk")
 
-  /** Shared item-pair aggregate: packed pair → (Σ strength product,
-    * co-occurrence count). The binary ItemCF cosine consumes only `co`;
-    * the rating-weighted variant consumes `dot` and `co` — so both
-    * queries read ONE memoized aggregate instead of each re-expanding
-    * the ~n² per-user pair space (the two expansions were the top two
-    * entries in the round-2 bench). Expansion itself is fully codegen:
-    * [[graft.functions.PairPack]] packs the id pairs and
-    * [[graft.functions.PairProd]] emits the aligned strength products,
-    * zipped positionally — identical iteration order by construction.
-    */
   /** Codegen pair expansion + aggregate over any (user, item, strength)
     * interaction table — shared by the base pair aggregate and the
     * time-decayed variant.
@@ -163,6 +153,16 @@ object Recsys extends QueryFamily {
       .groupBy("pk")
       .agg(sum(col("prod")).as("dot"), sum(col("diff")).as("sdiff"), count(lit(1)).as("co"))
 
+  /** Shared item-pair aggregate: packed pair → (Σ strength product,
+    * co-occurrence count). The binary ItemCF cosine consumes only `co`;
+    * the rating-weighted variant consumes `dot` and `co` — so both
+    * queries read ONE memoized aggregate instead of each re-expanding
+    * the ~n² per-user pair space (the two expansions were the top two
+    * entries in the round-2 bench). Expansion itself is fully codegen:
+    * [[graft.functions.PairPack]] packs the id pairs and
+    * [[graft.functions.PairProd]] emits the aligned strength products,
+    * zipped positionally — identical iteration order by construction.
+    */
   private[operators] def itemPairAgg(spark: SparkSession, sfDir: String): DataFrame =
     graft.QueryCache.memo(spark, s"recsys:itempairs:$sfDir") {
       expandWeightedPairs(cappedInteractions(spark, sfDir))
@@ -205,11 +205,6 @@ object Recsys extends QueryFamily {
        |  ) WHERE hrk <= $MaxHistory
        |)""".stripMargin
 
-  /** M1 ItemCF similarity: cosine over binary co-occurrence,
-    * sim(i,j) = |N(i)∩N(j)| / sqrt(|N(i)|·|N(j)|), top-K neighbors per
-    * item. The i<j self-join halves the pair space; the union mirrors
-    * pairs back for per-item ranking.
-    */
   /** Similarity matrices are memoized+persisted like the interaction
     * table above: the recommend queries re-read them, and a production
     * pipeline materializes exactly this table (it IS the model).
@@ -219,6 +214,11 @@ object Recsys extends QueryFamily {
                      (build: => DataFrame): DataFrame =
     graft.QueryCache.memo(spark, s"recsys:sim:$kind:$sfDir")(build)
 
+  /** M1 ItemCF similarity: cosine over binary co-occurrence,
+    * sim(i,j) = |N(i)∩N(j)| / sqrt(|N(i)|·|N(j)|), top-K neighbors per
+    * item. The i<j self-join halves the pair space; the union mirrors
+    * pairs back for per-item ranking.
+    */
   def itemcfSimilarity(spark: SparkSession, sfDir: String): DataFrame =
     memoSim(spark, sfDir, "itemcf") { itemcfSimilarityPlan(spark, sfDir) }
 
@@ -303,8 +303,8 @@ object Recsys extends QueryFamily {
   /** M2 ItemCF recommend: score(u,c) = Σ_{i∈H(u)} sim(i,c)·strength(u,i)
     * over each history item's top-K neighbors, minus already-seen items
     * (left anti), top-N per user ranked on the ROUNDED score.
-    */
-  /** Memoized like the similarity models: five queries serve from the
+    *
+    * Memoized like the similarity models: five queries serve from the
     * same recommendation table (recommend itself, explanations,
     * novelty, coverage, diversity) — in production this IS the
     * materialized serving table, built once per model refresh.
@@ -585,15 +585,6 @@ object Recsys extends QueryFamily {
       mergedPairs: DataFrame, mergedCounts: DataFrame,
       pairDelta: DataFrame, cntDelta: DataFrame)
 
-  /** The refresh MERGE over explicit store frames — split out so the
-    * spec can replay the cap-boundary edge cases (a delta pushing an
-    * item across the MaxHistory cut) on planted data. `oldStrengths` /
-    * `oldPairs` (pk, co) / `oldCounts` are the persisted frozen-model
-    * statistics; `post` the batch's (user, item, strength) deltas —
-    * which may be NEGATIVE: a GDPR delete is a negative delta, and
-    * strengths are integral-valued doubles, so a full cancellation
-    * lands on exactly 0.0 and the > 0 filter drops the row (the same
-    * exactness argument the co ≤ 0 and n_users ≤ 0 drops rest on). */
   /** The UN-severed merged-strength plan — a projection of the SAME
     * [[perUserItem]] aggregate the first checkpoint job of
     * [[mergeStats]] executes (shared code, so the two cannot drift);
@@ -633,6 +624,15 @@ object Recsys extends QueryFamily {
       .agg(sum(when(col("old"), col("strength"))).as("so"),
         sum("strength").as("sn"))
 
+  /** The refresh MERGE over explicit store frames — split out so the
+    * spec can replay the cap-boundary edge cases (a delta pushing an
+    * item across the MaxHistory cut) on planted data. `oldStrengths` /
+    * `oldPairs` (pk, co) / `oldCounts` are the persisted frozen-model
+    * statistics; `post` the batch's (user, item, strength) deltas —
+    * which may be NEGATIVE: a GDPR delete is a negative delta, and
+    * strengths are integral-valued doubles, so a full cancellation
+    * lands on exactly 0.0 and the > 0 filter drops the row (the same
+    * exactness argument the co ≤ 0 and n_users ≤ 0 drops rest on). */
   private[graft] def mergeStats(oldStrengths: DataFrame, oldPairs: DataFrame,
       oldCounts: DataFrame, post: DataFrame): CfMerge = {
     val changed = post.select("user_id").distinct()
@@ -1501,18 +1501,6 @@ object Recsys extends QueryFamily {
   /** Min transitions for an item to be profiled (noise floor). */
   val MarkovMinOut = 5
 
-  /** First-order Markov next-item model — the sequence-based
-    * recommender tier: per-user item sequences in a fixed order
-    * (order date, order key, line number, part key — any rows still
-    * tied under that key are IDENTICAL items, whose internal order
-    * cannot change the transition multiset, so successions are
-    * engine-deterministic), consecutive-pair
-    * transition counts, and P(next=j | i) = n(i→j)/n(i→·) with the
-    * top-$MarkovTop next items per item. Sequence building is one
-    * window pass (no self-join); the transition aggregate is
-    * |interactions| rows, linear at any scale. Items with fewer than
-    * $MarkovMinOut outgoing transitions are dropped (noise floor).
-    */
   /** Memoized directed transition-edge aggregate (item → next item,
     * count) from the per-user purchase sequences — the edge list of
     * the sequence graph, shared by the Markov model and GraphRank's
@@ -1551,6 +1539,18 @@ object Recsys extends QueryFamily {
       |  GROUP BY 1, 2
       |)""".stripMargin
 
+  /** First-order Markov next-item model — the sequence-based
+    * recommender tier: per-user item sequences in a fixed order
+    * (order date, order key, line number, part key — any rows still
+    * tied under that key are IDENTICAL items, whose internal order
+    * cannot change the transition multiset, so successions are
+    * engine-deterministic), consecutive-pair
+    * transition counts, and P(next=j | i) = n(i→j)/n(i→·) with the
+    * top-$MarkovTop next items per item. Sequence building is one
+    * window pass (no self-join); the transition aggregate is
+    * |interactions| rows, linear at any scale. Items with fewer than
+    * $MarkovMinOut outgoing transitions are dropped (noise floor).
+    */
   def markovNext(spark: SparkSession, sfDir: String): DataFrame = {
     val trans = transitionEdges(spark, sfDir)
     val outs = trans.groupBy("item_id").agg(sum("n").as("n_out"))
@@ -1580,13 +1580,6 @@ object Recsys extends QueryFamily {
        |FROM ranked WHERE rk <= $MarkovTop
        |ORDER BY item_id, rk""".stripMargin
 
-  /** M9 evaluation metrics: precision@K / recall@K / coverage /
-    * popularity of a most-popular recommender on a time split
-    * (train < SplitDate ≤ test). The popularity recommender is the
-    * standard pure-SQL baseline (MLlib recommenders are evaluated by
-    * invariant tests instead — their scores aren't SQL-reproducible).
-    * Single-row summary output.
-    */
   /** Shared by the five eval-metric queries: the time split
     * (train < SplitDate ≤ test, distinct user–item pairs) and the
     * top-EvalK popularity recommendation list ranked 1..K — one
@@ -1636,6 +1629,13 @@ object Recsys extends QueryFamily {
       : (DataFrame, DataFrame, DataFrame) =
     (evalTrain(spark, sfDir), evalTest(spark, sfDir), evalRecs(spark, sfDir))
 
+  /** M9 evaluation metrics: precision@K / recall@K / coverage /
+    * popularity of a most-popular recommender on a time split
+    * (train < SplitDate ≤ test). The popularity recommender is the
+    * standard pure-SQL baseline (MLlib recommenders are evaluated by
+    * invariant tests instead — their scores aren't SQL-reproducible).
+    * Single-row summary output.
+    */
   def evalPopularity(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, test, recs) = popularitySplit(spark, sfDir)
     val testUsers = test.groupBy("user_id").agg(count(lit(1)).as("n_test_items"))

@@ -92,10 +92,8 @@ object Similarity extends QueryFamily {
       .orderBy("query_id", "rk")
   }
 
-  private val normDuck =
-    "sqrt(list_reduce(list_transform(range(1, len(embedding) + 1), i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (x, y) -> x + y))"
-  private val dotDuck =
-    "list_reduce(list_transform(range(1, len(a.embedding) + 1), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE), (x, y) -> x + y)"
+  private val normDuck = graft.functions.VectorFunctions.duckNorm("embedding")
+  private val dotDuck = graft.functions.VectorFunctions.duckDot("a.embedding", "b.embedding")
 
   val knnBruteForceSql: String =
     s"""WITH e AS (
@@ -1118,6 +1116,17 @@ object Similarity extends QueryFamily {
       .withColumn("is_new", col("__b").isNull)
       .select("vec_id", "embedding", "nrm", "cid", "is_new")
 
+  /** Rebuilt (from-scratch) assignment of the merged corpus, memoized
+    * per (session, sfDir): the audit arm BOTH ingest queries compare
+    * against — without the memo each invocation eagerly re-ran the
+    * full-corpus assignment (the r10 advisor's finding), so one sweep
+    * paid it twice. An index rebuild is a materialization in
+    * production too. */
+  private[graft] def ingestRebuilt(spark: SparkSession, sfDir: String): DataFrame =
+    graft.QueryCache.memo(spark, s"ivf_ingest_rebuilt:$sfDir") {
+      cellAssignFrom(Tables.embeddings(spark, sfDir), NCells).localCheckpoint()
+    }
+
   /** Incremental ANN ingest — the steady-state corpus-growth path
     * ([[graft.operators.Dedup]]'s q_dedup_incremental, transposed to
     * the ANN index): a new ~20% batch of embeddings is assigned into
@@ -1138,17 +1147,6 @@ object Similarity extends QueryFamily {
     * pass for the audit, and a slim vec_id-keyed join between them.
     * Nothing quadratic, nothing resident re-shuffled by the ingest.
     */
-  /** Rebuilt (from-scratch) assignment of the merged corpus, memoized
-    * per (session, sfDir): the audit arm BOTH ingest queries compare
-    * against — without the memo each invocation eagerly re-ran the
-    * full-corpus assignment (the r10 advisor's finding), so one sweep
-    * paid it twice. An index rebuild is a materialization in
-    * production too. */
-  private[graft] def ingestRebuilt(spark: SparkSession, sfDir: String): DataFrame =
-    graft.QueryCache.memo(spark, s"ivf_ingest_rebuilt:$sfDir") {
-      cellAssignFrom(Tables.embeddings(spark, sfDir), NCells).localCheckpoint()
-    }
-
   def ivfIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val e0 = Tables.embeddings(spark, sfDir)
     ivfIngestFrom(e0, e0.where(!isIngestBatch), NCells,

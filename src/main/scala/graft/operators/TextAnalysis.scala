@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis extends QueryFamily {
 
-  private val normSpark = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
-  private val normDuck = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
+  import TextNorm.{normDuck, normSpark}
 
-  /** BPE-family normalization: [[normSpark]]/[[normDuck]] plus
+  /** BPE-family normalization: [[TextNorm]]'s pair plus
     * stripping of the four fold sentinels ('|' symbol joiner, '§'
     * fold-state split, '¶' flush, '¬' rank pad). A corpus word
     * containing a sentinel would corrupt the symbol fold identically
@@ -95,12 +94,6 @@ object TextAnalysis extends QueryFamily {
        |GROUP BY 1, 2
        |ORDER BY lang, predicted""".stripMargin
 
-  /** Quality score in [0,1]: 0.4·length component (tokens/200 capped)
-    * + 0.3·stopword occurrence rate (capped at 3× an 8% target)
-    * + 0.3·mean-word-length closeness to 5 chars. Emitted as a decile
-    * histogram with component means — the shape a filtering pipeline
-    * thresholds on.
-    */
   /** Per-document scored frame shared by the decile histogram and the
     * token-budget selector: (doc_id, source, n_toks, sw_rate, awl,
     * score) with the 6dp-rounded composite quality score. */
@@ -118,6 +111,12 @@ object TextAnalysis extends QueryFamily {
         lit(0.3) * least(col("sw_rate") / lit(0.08), lit(1.0)) +
         lit(0.3) * greatest(lit(0.0), lit(1.0) - abs(col("awl") - lit(5.0)) / lit(5.0)), 6))
 
+  /** Quality score in [0,1]: 0.4·length component (tokens/200 capped)
+    * + 0.3·stopword occurrence rate (capped at 3× an 8% target)
+    * + 0.3·mean-word-length closeness to 5 chars. Emitted as a decile
+    * histogram with component means — the shape a filtering pipeline
+    * thresholds on.
+    */
   def qualityScore(spark: SparkSession, sfDir: String): DataFrame = {
     val d = qualityScored(spark, sfDir)
     d.withColumn("decile", least(floor(col("score") * 10), lit(9L)))
@@ -1372,16 +1371,6 @@ object TextAnalysis extends QueryFamily {
   /** Token length above which a doc is flagged (gibberish gate). */
   val C4MaxWordLen = 7
 
-  /** C4-style heuristic corpus filtering: per source, count documents
-    * failing each cleaning rule — too short, too repetitious (distinct-
-    * token ratio), no stopwords (non-language gate), over-long tokens
-    * (gibberish/code gate) — and the documents that pass all of them.
-    * These are the published C4/Gopher-family heuristics re-expressed
-    * as one scan of integer predicates: every rule is computed from the
-    * token array with higher-order functions, no UDFs, so the whole
-    * gate stays inside whole-stage codegen and pushes through a 100 TB
-    * corpus as a single map-side pass + one tiny aggregate.
-    */
   /** Per-document C4 gate flags — the ONE definition of the heuristic,
     * shared by the per-source audit ([[c4Filter]]) and the
     * filter-agreement diagnostic ([[filterKappa]]). */
@@ -1398,6 +1387,16 @@ object TextAnalysis extends QueryFamily {
       .withColumn("f_longword", (expr(
         s"aggregate(toks, 0, (m, t) -> greatest(m, length(t)))") > C4MaxWordLen).cast("long"))
 
+  /** C4-style heuristic corpus filtering: per source, count documents
+    * failing each cleaning rule — too short, too repetitious (distinct-
+    * token ratio), no stopwords (non-language gate), over-long tokens
+    * (gibberish/code gate) — and the documents that pass all of them.
+    * These are the published C4/Gopher-family heuristics re-expressed
+    * as one scan of integer predicates: every rule is computed from the
+    * token array with higher-order functions, no UDFs, so the whole
+    * gate stays inside whole-stage codegen and pushes through a 100 TB
+    * corpus as a single map-side pass + one tiny aggregate.
+    */
   def c4Filter(spark: SparkSession, sfDir: String): DataFrame = {
     val d = c4Flagged(spark, sfDir)
     d.groupBy("source")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryCache, QueryFamily, QuerySpec, Tables}
+import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,16 +44,6 @@ object Training extends QueryFamily {
     */
   val KmScale = 1000
 
-  /** Deterministic k-means over `embeddings`: quantize each dimension
-    * to integer fixed-point, init centroids from the [[KClusters]]
-    * lowest vec_ids, run [[KmRounds]] Lloyd's rounds (assign by exact
-    * integer squared distance with (dist, cluster) lexicographic
-    * tie-break; update by integer floor-division mean), then report
-    * per-cluster size, inertia, and a centroid checksum. All
-    * arithmetic is BIGINT ⇒ bit-identical across engines — unlike
-    * MLlib KMeans, whose float reductions make cluster boundaries
-    * run-order-dependent.
-    */
   /** Quantized (vec_id, pos, q) long table — shared input of every
     * k-means stage; memoized per (session, sfDir) because the Lloyd's
     * rounds re-read it KmRounds+1 times and SemDeDup reads it again.
@@ -68,38 +59,49 @@ object Training extends QueryFamily {
     }
 
   private[graft] def kmeansAssignOf(e: DataFrame, cent: DataFrame): DataFrame =
-    assign(e, cent)
+    assign(e, cent, Nil)
 
-  private def assign(e: DataFrame, c: DataFrame): DataFrame =
-    e.join(broadcast(c), "pos")
-      .groupBy("vec_id", "cluster")
+  /** One Lloyd's assignment: each (vec_id, keys…)'s nearest centroid by
+    * exact integer squared distance, (dist, cluster) tie-break. The keys
+    * ride every join and grouping: none for k-means, `sub` for PQ (M
+    * independent k-means in one dataflow). */
+  private def assign(e: DataFrame, c: DataFrame, keys: Seq[String]): DataFrame = {
+    val vk = ("vec_id" +: keys).map(col)
+    e.join(broadcast(c), keys :+ "pos")
+      .groupBy(vk :+ col("cluster"): _*)
       .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist"))
-      .groupBy("vec_id")
+      .groupBy(vk: _*)
       .agg(min(struct(col("dist"), col("cluster"))).as("m"))
-      .select(col("vec_id"), col("m.cluster").as("cluster"), col("m.dist").as("dist"))
+      .select(vk ++ Seq(col("m.cluster").as("cluster"), col("m.dist").as("dist")): _*)
+  }
 
-  /** Converged centroids (cluster, pos, c) after [[KmRounds]] Lloyd's
-    * rounds; memoized — q_kmeans_embed and q_semantic_dedup share one
-    * training run per session, the feature-store pattern the other
-    * model tables follow.
-    */
-  private[graft] def centroidsOf(e: DataFrame, k: Int): DataFrame = {
+  /** Deterministic Lloyd's k-means per `keys` group: init = the `k`
+    * lowest vec_ids, `rounds` rounds, update = integer floor-division
+    * mean. Returns the centroids (keys…, cluster, pos, c). */
+  private def train(e: DataFrame, k: Int, rounds: Int, keys: Seq[String]): DataFrame = {
     val initIds = e.select("vec_id").distinct().orderBy("vec_id").limit(k)
-      .withColumn("cluster", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy("vec_id")))
+      .withColumn("cluster", row_number().over(Window.orderBy("vec_id")))
     var cent = e.join(broadcast(initIds), "vec_id")
-      .select(col("cluster"), col("pos"), col("q").as("c"))
+      .select(keys.map(col) ++ Seq(col("cluster"), col("pos"), col("q").as("c")): _*)
       .localCheckpoint()
-    for (_ <- 1 to KmRounds) {
-      val asn = assign(e, cent)
-      cent = e.join(asn.select("vec_id", "cluster"), "vec_id")
-        .groupBy("cluster", "pos")
+    for (_ <- 1 to rounds) {
+      val asn = assign(e, cent, keys)
+      cent = e.join(asn.select(("vec_id" +: keys :+ "cluster").map(col): _*), "vec_id" +: keys)
+        .groupBy((keys ++ Seq("cluster", "pos")).map(col): _*)
         .agg(expr("sum(q) div count(1)").as("c"))
         .localCheckpoint() // K·dims rows; keep each round's plan flat
     }
     cent
   }
 
+  /** Centroids (cluster, pos, c) after [[KmRounds]] Lloyd's rounds. */
+  private[graft] def centroidsOf(e: DataFrame, k: Int): DataFrame =
+    train(e, k, KmRounds, Nil)
+
+  /** Converged centroids, memoized — q_kmeans_embed and
+    * q_semantic_dedup share one training run per session, the
+    * feature-store pattern the other model tables follow.
+    */
   private[operators] def kmeansCentroids(spark: SparkSession, sfDir: String): DataFrame =
     QueryCache.memo(spark, s"kmeans_cent:$sfDir") {
       centroidsOf(quantized(spark, sfDir), KClusters)
@@ -110,9 +112,19 @@ object Training extends QueryFamily {
     */
   private[operators] def kmeansAssign(spark: SparkSession, sfDir: String): DataFrame =
     QueryCache.memo(spark, s"kmeans_fin:$sfDir") {
-      assign(quantized(spark, sfDir), kmeansCentroids(spark, sfDir))
+      assign(quantized(spark, sfDir), kmeansCentroids(spark, sfDir), Nil)
     }
 
+  /** Deterministic k-means over `embeddings`: quantize each dimension
+    * to integer fixed-point, init centroids from the [[KClusters]]
+    * lowest vec_ids, run [[KmRounds]] Lloyd's rounds (assign by exact
+    * integer squared distance with (dist, cluster) lexicographic
+    * tie-break; update by integer floor-division mean), then report
+    * per-cluster size, inertia, and a centroid checksum. All
+    * arithmetic is BIGINT ⇒ bit-identical across engines — unlike
+    * MLlib KMeans, whose float reductions make cluster boundaries
+    * run-order-dependent.
+    */
   def kmeansEmbed(spark: SparkSession, sfDir: String): DataFrame = {
     val cent = kmeansCentroids(spark, sfDir)
     val fin = kmeansAssign(spark, sfDir)
@@ -861,7 +873,7 @@ object Training extends QueryFamily {
     Tables.documents(spark, sfDir)
       .where(col("doc_id") < FhDocs)
       .select(col("doc_id"),
-        explode(split(expr("regexp_replace(lower(trim(text)), '\\\\s+', ' ')"), " ")).as("tok"))
+        explode(split(expr(TextNorm.normSpark), " ")).as("tok"))
       .where(length(col("tok")) > 0)
       .withColumn("h", expr("cast(conv(substring(md5(tok), 1, 8), 16, 10) AS bigint)"))
       .withColumn("dim", (col("h") % FhDims).cast("int"))
@@ -874,7 +886,7 @@ object Training extends QueryFamily {
   val featureHashSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    unnest(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS tok
+       |    unnest(string_split(${TextNorm.normDuck}, ' ')) AS tok
        |  FROM documents WHERE doc_id < $FhDocs
        |), hashed AS (
        |  SELECT doc_id,
@@ -1090,19 +1102,6 @@ object Training extends QueryFamily {
   private[graft] def pqSubOf(eq: DataFrame): DataFrame =
     eq.withColumn("sub", expr(s"pos div $PqSubDim"))
 
-  /** One PQ assignment pass: nearest codeword PER SUBSPACE by exact
-    * integer squared distance, (dist, cluster) lexicographic
-    * tie-break — [[kmeansAssignOf]] generalized with `sub` carried
-    * through every grouping. */
-  private def pqAssign(es: DataFrame, c: DataFrame): DataFrame =
-    es.join(broadcast(c), Seq("sub", "pos"))
-      .groupBy("vec_id", "sub", "cluster")
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist"))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("dist"), col("cluster"))).as("m"))
-      .select(col("vec_id"), col("sub"),
-        col("m.cluster").as("cluster"), col("m.dist").as("dist"))
-
   /** Product-quantization codebooks: an INDEPENDENT deterministic
     * k-means per subspace ([[PqK]] codewords, [[PqRounds]] Lloyd's
     * rounds, init = the K lowest vec_ids' sub-vectors), run as ONE
@@ -1115,22 +1114,8 @@ object Training extends QueryFamily {
       pqCodebooksOf(pqSub(spark, sfDir))
     }
 
-  private[graft] def pqCodebooksOf(es: DataFrame): DataFrame = {
-    val initIds = es.select("vec_id").distinct().orderBy("vec_id").limit(PqK)
-      .withColumn("cluster", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy("vec_id")))
-    var cent = es.join(broadcast(initIds), "vec_id")
-      .select(col("sub"), col("cluster"), col("pos"), col("q").as("c"))
-      .localCheckpoint()
-    for (_ <- 1 to PqRounds) {
-      val asn = pqAssign(es, cent)
-      cent = es.join(asn.select("vec_id", "sub", "cluster"), Seq("vec_id", "sub"))
-        .groupBy("sub", "cluster", "pos")
-        .agg(expr("sum(q) div count(1)").as("c"))
-        .localCheckpoint() // M·K·subdim rows; keep each round's plan flat
-    }
-    cent
-  }
+  private[graft] def pqCodebooksOf(es: DataFrame): DataFrame =
+    train(es, PqK, PqRounds, Seq("sub"))
 
   /** Product quantization + asymmetric distance computation — the
     * billion-scale ANN serving layout (Jégou et al., PAMI 2011). Each
@@ -1166,13 +1151,9 @@ object Training extends QueryFamily {
   private[graft] def pqAdcFrom(es: DataFrame, cent: DataFrame,
                                nQueries: Int, topK: Int,
                                codes: Option[DataFrame] = None): DataFrame = {
-    val cd = codes.getOrElse(pqAssign(es, cent).select("vec_id", "sub", "cluster"))
+    val cd = codes.getOrElse(pqCodesOf(es, cent))
     val qIds = es.select("vec_id").distinct().orderBy("vec_id").limit(nQueries)
-    val lut = es.join(broadcast(qIds), "vec_id")
-      .select(col("vec_id").as("query_id"), col("sub"), col("pos"), col("q").as("qq"))
-      .join(broadcast(cent), Seq("sub", "pos"))
-      .groupBy("query_id", "sub", "cluster")
-      .agg(sum((col("qq") - col("c")) * (col("qq") - col("c"))).as("d"))
+    val lut = lutOf(es.join(broadcast(qIds), "vec_id"), cent)
     cd.join(broadcast(lut), Seq("sub", "cluster"))
       .where(col("query_id") =!= col("vec_id"))
       .groupBy("query_id", "vec_id")
@@ -1188,7 +1169,7 @@ object Training extends QueryFamily {
   /** Code table (vec_id, sub, cluster) for a frame — exposed for the
     * scale spec's compression accounting. */
   private[graft] def pqCodesOf(es: DataFrame, cent: DataFrame): DataFrame =
-    pqAssign(es, cent).select("vec_id", "sub", "cluster")
+    assign(es, cent, Seq("sub")).select("vec_id", "sub", "cluster")
 
   /** Per-query ADC lookup table over the `vec_id < nQueries` query
     * set: exact integer squared distance from each query's sub-vector
@@ -1196,8 +1177,12 @@ object Training extends QueryFamily {
     * size. Shared by [[graft.operators.Similarity.ivfPq]]'s re-rank
     * stage ([[pqAdcFrom]] keeps its own order-by-limit query set). */
   private[graft] def pqLutOf(es: DataFrame, cent: DataFrame, nQueries: Int): DataFrame =
-    es.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("sub"), col("pos"), col("q").as("qq"))
+    lutOf(es.where(col("vec_id") < nQueries), cent)
+
+  /** The ADC lookup table of the query rows `qs` (a subset of the
+    * quantized `es` rows): (query_id, sub, cluster, d). */
+  private def lutOf(qs: DataFrame, cent: DataFrame): DataFrame =
+    qs.select(col("vec_id").as("query_id"), col("sub"), col("pos"), col("q").as("qq"))
       .join(broadcast(cent), Seq("sub", "pos"))
       .groupBy("query_id", "sub", "cluster")
       .agg(sum((col("qq") - col("c")) * (col("qq") - col("c"))).as("d"))
@@ -1392,6 +1377,26 @@ object Training extends QueryFamily {
   val Pc1Rounds = 8
   val Pc1Scale = 1000L
 
+  /** Join-free integer covariance of the quantized embedding corpus:
+    * (i, j, cij) cells from map-side generated per-row outer products
+    * (see [[embedPc1]]'s scale note). Exposed for the plan-shape pin —
+    * the checkpoint in embedPc1 hides this stage from the final plan.
+    */
+  private[graft] def pc1CovOf(emb: DataFrame, e: DataFrame): DataFrame = {
+    val m = e.groupBy("pos").agg(expr("sum(q) div count(1)").as("m"))
+    val mArr = m.agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("ms"))
+      .select(transform(col("ms"), s => s.getField("m")).as("m_arr"))
+    emb
+      .select(expr(
+        s"transform(embedding, v -> cast(round((cast(v AS double) + 1.0d) * $KmScale, 0) AS bigint))")
+        .as("q_arr"))
+      .crossJoin(broadcast(mArr))
+      .select(zip_with(col("q_arr"), col("m_arr"), (q, mm) => q - mm).as("c_arr"))
+      .select(col("c_arr"), posexplode(col("c_arr")).as(Seq("i", "ci")))
+      .select(col("i"), col("ci"), posexplode(col("c_arr")).as(Seq("j", "cj")))
+      .groupBy("i", "j").agg(sum(col("ci") * col("cj")).as("cij"))
+  }
+
   /** Leading principal component of the embedding corpus by
     * fixed-point power iteration — the "is there a dominant
     * direction" diagnostic behind anisotropy audits and
@@ -1424,26 +1429,6 @@ object Training extends QueryFamily {
     * (both engines support it; same escape hatch revenueGini
     * documents for its rank sums).
     */
-  /** Join-free integer covariance of the quantized embedding corpus:
-    * (i, j, cij) cells from map-side generated per-row outer products
-    * (see [[embedPc1]]'s scale note). Exposed for the plan-shape pin —
-    * the checkpoint in embedPc1 hides this stage from the final plan.
-    */
-  private[graft] def pc1CovOf(emb: DataFrame, e: DataFrame): DataFrame = {
-    val m = e.groupBy("pos").agg(expr("sum(q) div count(1)").as("m"))
-    val mArr = m.agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("ms"))
-      .select(transform(col("ms"), s => s.getField("m")).as("m_arr"))
-    emb
-      .select(expr(
-        s"transform(embedding, v -> cast(round((cast(v AS double) + 1.0d) * $KmScale, 0) AS bigint))")
-        .as("q_arr"))
-      .crossJoin(broadcast(mArr))
-      .select(zip_with(col("q_arr"), col("m_arr"), (q, mm) => q - mm).as("c_arr"))
-      .select(col("c_arr"), posexplode(col("c_arr")).as(Seq("i", "ci")))
-      .select(col("i"), col("ci"), posexplode(col("c_arr")).as(Seq("j", "cj")))
-      .groupBy("i", "j").agg(sum(col("ci") * col("cj")).as("cij"))
-  }
-
   def embedPc1(spark: SparkSession, sfDir: String): DataFrame = {
     val cov = pc1CovOf(Tables.embeddings(spark, sfDir), quantized(spark, sfDir))
       .localCheckpoint()
@@ -1635,7 +1620,7 @@ object Training extends QueryFamily {
     * which is how production drift monitors run it anyway.
     */
   def embedMmd(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.VectorFunctions.floatDot
+    import VectorFunctions.floatDot
     // per-label sample selection via the bounded top-K AGGREGATE, not a
     // per-label window — a 2-value partition key would funnel each
     // label's whole corpus through one sorting task at scale, while the
@@ -1681,12 +1666,10 @@ object Training extends QueryFamily {
   }
 
   val embedMmdSql: String = {
-    val dot = "list_reduce(list_transform(range(1, len(a.embedding) + 1), " +
-      "i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE), (x, y) -> x + y)"
+    val dot = VectorFunctions.duckDot("a.embedding", "b.embedding")
     s"""WITH capped AS MATERIALIZED (
        |  SELECT vec_id, label, embedding,
-       |    list_reduce(list_transform(range(1, len(embedding) + 1),
-       |      i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (x, y) -> x + y) AS nsq
+       |    ${VectorFunctions.duckDot("embedding", "embedding")} AS nsq
        |  FROM (
        |    SELECT vec_id, label, embedding,
        |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS crk

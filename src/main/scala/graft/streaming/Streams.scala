@@ -288,8 +288,8 @@ object Streams extends QueryFamily {
     * user_id — one shuffle each, no broadcast (both sides are
     * event-volume); per-task state is the watermark-bounded horizon
     * window of one user-hash slice.
-    */
-  /** @param joinType "inner" (default) or "left_outer". On streams the
+    *
+    * @param joinType "inner" (default) or "left_outer". On streams the
     * outer form is the stricter discipline: an unmatched click can only
     * be emitted (null-padded) once the purchase-side watermark proves
     * no match can still arrive — i.e. passes click_ts + horizon — so
@@ -679,15 +679,8 @@ object Streams extends QueryFamily {
   /** The arriving interactions: orders on/after [[StreamScoreFrom]]
     * (the orders scan carries the pushed filter), collapsed to
     * (user, item, strength). */
-  private[graft] def streamArrivals(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = Tables.orders(spark, sfDir)
-      .where(col("o_orderdate") >= lit(StreamScoreFrom).cast("timestamp_ntz"))
-      .select("o_orderkey", "o_custkey")
-    val l = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_partkey", "l_quantity")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .groupBy(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-      .agg(sum("l_quantity").as("strength"))
-  }
+  private[graft] def streamArrivals(spark: SparkSession, sfDir: String): DataFrame =
+    graft.operators.Recsys.deltaBetween(spark, sfDir, StreamScoreFrom, None)
 
   /** The reloaded serving model, broadcast-hinted (K·|items| rows). */
   private[graft] def cfServingModel(spark: SparkSession, sfDir: String): DataFrame = {

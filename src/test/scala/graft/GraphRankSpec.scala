@@ -218,7 +218,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
 
   test("kcore: fixed rounds reach the fixpoint on the fixture (one more round is a no-op)") {
     import org.apache.spark.sql.functions.col
-    val half = operators.GraphRank.sparsifiedHalfEdges(spark, sfTest)
+    val half = operators.GraphRank.halfEdges(spark, sfTest)
     val m = half.select(col("item_i").as("a"), col("item_j").as("b"))
       .unionByName(half.select(col("item_j").as("a"), col("item_i").as("b")))
     def run(rounds: Int) =
@@ -262,7 +262,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
 
   test("assortativity: matches the exact local Pearson over mirrored endpoint degrees") {
     import org.apache.spark.sql.functions._
-    val half = operators.GraphRank.sparsifiedHalfEdges(spark, sfTest)
+    val half = operators.GraphRank.halfEdges(spark, sfTest)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val m = half ++ half.map(_.swap)
     val deg = m.groupBy(_._1).view.mapValues(_.size.toLong).toMap
@@ -283,7 +283,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("shortest paths matches a local bellman-ford replay; seed at distance zero") {
-    val half = GraphRank.weightedHalfEdges(spark, sfTest)
+    val half = GraphRank.halfEdges(spark, sfTest)
       .select("item_i", "item_j", "co")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val edges = half.flatMap { case (i, j, w) => Seq((i, j, w), (j, i, w)) }
@@ -305,7 +305,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("rwr proximity matches a local integer fixed-point replay; seed leads") {
-    val half = GraphRank.weightedHalfEdges(spark, sfTest)
+    val half = GraphRank.halfEdges(spark, sfTest)
       .select("item_i", "item_j", "co")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val edges = half.flatMap { case (i, j, w) => Seq((i, j, w), (j, i, w)) }
@@ -332,7 +332,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("local clustering: cc and transitivity match an exact local recompute") {
-    val e = GraphRank.weightedHalfEdges(spark, sfTest)
+    val e = GraphRank.halfEdges(spark, sfTest)
       .where(col("co") >= GraphRank.TriMinCo).select("item_i", "item_j")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = (e.map(p => p._1 -> p._2) ++ e.map(p => p._2 -> p._1))
@@ -372,7 +372,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("link predict: AA units match a local recompute; no emitted pair is an edge") {
-    val e = GraphRank.weightedHalfEdges(spark, sfTest)
+    val e = GraphRank.halfEdges(spark, sfTest)
       .where(col("co") >= GraphRank.TriMinCo).select("item_i", "item_j")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = (e.map(p => p._1 -> p._2) ++ e.map(p => p._2 -> p._1))
@@ -457,7 +457,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("katz: fixed-point attenuated path counts match an exact local replay") {
-    val half = GraphRank.weightedHalfEdges(spark, sfTest)
+    val half = GraphRank.halfEdges(spark, sfTest)
       .select("item_i", "item_j", "co")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .filter(_._3 >= GraphRank.EdgeMinCo)
@@ -482,7 +482,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("closeness: landmark harmonic centrality matches an exact local BFS replay") {
-    val half = GraphRank.weightedHalfEdges(spark, sfTest)
+    val half = GraphRank.halfEdges(spark, sfTest)
       .select("item_i", "item_j", "co").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .filter(_._3 >= GraphRank.EdgeMinCo)
@@ -531,7 +531,7 @@ class GraphRankSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ktruss: peel curve matches a local replay and the declared rounds reach the fixpoint") {
-    val half = GraphRank.weightedHalfEdges(spark, sfTest)
+    val half = GraphRank.halfEdges(spark, sfTest)
       .select("item_i", "item_j", "co").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .filter(_._3 >= GraphRank.TriMinCo)
