@@ -2,11 +2,12 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{col, explode, posexplode}
 import org.apache.spark.sql.types._
 
 /** Bounded top-K buffer: entries ordered by (score desc, id asc), at
@@ -70,7 +71,8 @@ final class TopKBuffer(val k: Int) {
   * heap-scanning them map-side.
   *
   * Output: array<struct<score double, id long, extra long>> in rank
-  * order; explode with posexplode for (rk, ...) rows.
+  * order; [[TopKByScore.rows]] and [[TopKByScore.ranked]] turn it into
+  * rows.
   */
 case class TopKByScore(
     score: Expression, id: Expression, extra: Expression, k: Int,
@@ -148,4 +150,34 @@ object TopKByScore {
         GraftSqlBridge.expression(score),
         GraftSqlBridge.expression(id),
         GraftSqlBridge.expression(extra), k).toAggregateExpression())
+
+  /** Each `keys` group's top k rows of `df`, `keys ++ (id, score,
+    * extra)`, unranked (explode). Callers rename with one `select`.
+    *
+    * Per-key top-K by aggregate, not a `row_number()` window: the
+    * partial phase caps every (group, partition) at k entries, so there
+    * is no full sort and the shuffle carries at most k·|groups| rows.
+    * The rows are exactly those of `row_number() OVER (PARTITION BY keys
+    * ORDER BY score DESC, id ASC) <= k`, ties included, whatever the
+    * partitioning. */
+  def rows(df: DataFrame, keys: Seq[String], k: Int,
+      score: Column, id: Column, extra: Column): DataFrame =
+    grouped(df, keys, k, score, id, extra)
+      .select(keys.map(col) :+ explode(col("topk")).as("e"): _*)
+      .select(keys.map(col) ++ entryCols: _*)
+
+  /** [[rows]] ranked: `keys ++ (rk, id, score, extra)`, where `rk` is the
+    * 1-based Int rank of the `row_number()` window (posexplode). */
+  def ranked(df: DataFrame, keys: Seq[String], k: Int,
+      score: Column, id: Column, extra: Column): DataFrame =
+    grouped(df, keys, k, score, id, extra)
+      .select(keys.map(col) :+ posexplode(col("topk")).as(Seq("pos", "e")): _*)
+      .select(keys.map(col) ++ ((col("pos") + 1).cast("int").as("rk") +: entryCols): _*)
+
+  private def grouped(df: DataFrame, keys: Seq[String], k: Int,
+      score: Column, id: Column, extra: Column): DataFrame =
+    df.groupBy(keys.head, keys.tail: _*).agg(topK(k, score, id, extra).as("topk"))
+
+  private def entryCols: Seq[Column] =
+    Seq(col("e.id").as("id"), col("e.score").as("score"), col("e.extra").as("extra"))
 }

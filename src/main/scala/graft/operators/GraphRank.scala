@@ -635,11 +635,9 @@ object GraphRank extends QueryFamily {
     // shuffle of the full mirrored pair table; same CF-tier trick).
     // Ranking casts s to double (exact: s < 0.8e12 << 2^53) while the
     // extra slot carries the original BIGINT through unchanged.
-    val s1t = s1m.groupBy("u")
-      .agg(graft.functions.TopKByScore.topK(
-        SimrankNbrK, col("s").cast("double"), col("v"), col("s")).as("nb"))
-      .select(col("u"), explode(col("nb")).as("n"))
-      .select(col("u"), col("n.id").as("v"), col("n.extra").as("s"))
+    val s1t = graft.functions.TopKByScore.rows(s1m, Seq("u"),
+        SimrankNbrK, col("s").cast("double"), col("v"), col("s"))
+      .select(col("u"), col("id").as("v"), col("extra").as("s"))
     // round-2 contribution: scored user pair -> every capped (item of u,
     // item of v) combination. The aggregate keys on the PACKED pair
     // (r13, guide §2.4): the memoized item-pair aggregate below is

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryFamily, QuerySpec, Tables}
+import graft.functions.TopKByScore
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -74,12 +75,9 @@ object Recsys extends QueryFamily {
     * interaction tables.
     */
   private[graft] def capHistories(interactions: DataFrame): DataFrame =
-    interactions
-      .groupBy("user_id")
-      .agg(graft.functions.TopKByScore.topK(
-        MaxHistory, col("strength"), col("item_id"), lit(0L)).as("hs"))
-      .select(col("user_id"), explode(col("hs")).as("h"))
-      .select(col("user_id"), col("h.id").as("item_id"), col("h.score").as("strength"))
+    TopKByScore.rows(interactions, Seq("user_id"), MaxHistory,
+        col("strength"), col("item_id"), lit(0L))
+      .select(col("user_id"), col("id").as("item_id"), col("score").as("strength"))
 
   /** Deterministically capped user→item interactions: top MaxHistory
     * items per user by (strength desc, item asc).
@@ -103,13 +101,15 @@ object Recsys extends QueryFamily {
       capHistories(Tables.interactions(spark, sfDir))
     }
 
+  private val PackBase = graft.functions.PairPack.Base
+
   /** Map-side pair expansion: per-key sorted element arrays → all (a<b)
-    * combinations via higher-order functions, NO self-join. The groupBy
-    * reuses the hash partitioning the history-cap window already
-    * produced, so pair generation adds zero shuffles — the only
-    * remaining exchange is the pair-count aggregate itself. At 100 TB
-    * this is the difference between shuffling the interaction table
-    * twice (join build+probe) and once.
+    * combinations via higher-order functions, NO self-join. Keyed on
+    * user_id, the groupBy reuses the hash partitioning of the history
+    * cap's top-K aggregate ([[capHistories]]), so pair generation adds
+    * zero shuffles — the only remaining exchange is the pair-count
+    * aggregate itself. At 100 TB this is the difference between
+    * shuffling the interaction table twice (join build+probe) and once.
     *
     * Each pair is PACKED into one long (a·2³² + b; ids are well under
     * 2³¹ — they key 20k-ish parts/customers) in column `pk`: the
@@ -118,8 +118,6 @@ object Recsys extends QueryFamily {
     * measurably cheaper at ~13M pairs than the struct formulation.
     * Unpack with [[unpack]].
     */
-  private val PackBase = graft.functions.PairPack.Base
-
   private[graft] def pairsWithin(df: DataFrame, key: String, elem: String): DataFrame =
     df.groupBy(key)
       .agg(sort_array(collect_list(col(elem))).as("es"))
@@ -158,10 +156,14 @@ object Recsys extends QueryFamily {
     * the rating-weighted variant consumes `dot` and `co` — so both
     * queries read ONE memoized aggregate instead of each re-expanding
     * the ~n² per-user pair space (the two expansions were the top two
-    * entries in the round-2 bench). Expansion itself is fully codegen:
-    * [[graft.functions.PairPack]] packs the id pairs and
-    * [[graft.functions.PairProd]] emits the aligned strength products,
-    * zipped positionally — identical iteration order by construction.
+    * entries in the round-2 bench). The pair kernels are codegen
+    * expressions — [[graft.functions.PairPack]] packs the id pairs,
+    * [[graft.functions.PairProd]] / [[graft.functions.PairDiff]] emit
+    * the aligned strength products and differences, zipped positionally
+    * (identical iteration order by construction) — but the `transform`
+    * lambdas feeding them are `CodegenFallback`, so the whole Generate
+    * runs interpreted (node (42) of
+    * plans/r15/pair_expand/q_itemcf_weighted_after.txt).
     */
   private[operators] def itemPairAgg(spark: SparkSession, sfDir: String): DataFrame =
     graft.QueryCache.memo(spark, s"recsys:itempairs:$sfDir") {
@@ -180,18 +182,27 @@ object Recsys extends QueryFamily {
       .join(broadcast(norms.select(col("item_id").as("item_i"), col("nrm").as("ni"))), "item_i")
       .join(broadcast(norms.select(col("item_id").as("item_j"), col("nrm").as("nj"))), "item_j")
       .withColumn("sim", round(col("dot") / (col("ni") * col("nj")), 6))
+    knnOf(half, "item_i", "item_j")
+  }
+
+  /** The neighbour list of an (a < b, sim, co) half-pair table, shared
+    * by every CF similarity model: mirror each pair with ONE generator
+    * pass (a half.union(half.swap) would make Spark compute the whole
+    * pair pipeline twice — round-1 plan), keep each `a`'s top [[TopK]]
+    * by (sim desc, b asc) — the oracle's row_number window exactly — and
+    * rank them: (a, rk, b, sim, co), ordered by (a, rk). The top-K is the
+    * bounded aggregate ([[TopKByScore.ranked]]): no 25M-row sort, and
+    * the shuffle carries ≤ K·|a| rows. */
+  private def knnOf(half: DataFrame, a: String, b: String): DataFrame = {
     val mirrored = half.select(explode(array(
-        struct(col("item_i"), col("item_j"), col("sim"), col("co")),
-        struct(col("item_j").as("item_i"), col("item_i").as("item_j"), col("sim"), col("co"))
+        struct(col(a), col(b), col("sim"), col("co")),
+        struct(col(b).as(a), col(a).as(b), col("sim"), col("co"))
       )).as("p"))
-      .select(col("p.item_i").as("item_i"), col("p.item_j").as("item_j"),
+      .select(col(s"p.$a").as(a), col(s"p.$b").as(b),
               col("p.sim").as("sim"), col("p.co").as("co"))
-    mirrored.groupBy("item_i")
-      .agg(graft.functions.TopKByScore.topK(TopK, col("sim"), col("item_j"), col("co")).as("nbrs"))
-      .select(col("item_i"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("item_i"), (col("pos") + 1).cast("int").as("rk"),
-              col("nbr.id").as("item_j"), col("nbr.score").as("sim"), col("nbr.extra").as("co"))
-      .orderBy("item_i", "rk")
+    TopKByScore.ranked(mirrored, Seq(a), TopK, col("sim"), col(b), col("co"))
+      .select(col(a), col("rk"), col("id").as(b), col("score").as("sim"), col("extra").as("co"))
+      .orderBy(a, "rk")
   }
 
   private[operators] val cappedSql: String =
@@ -246,30 +257,12 @@ object Recsys extends QueryFamily {
     // re-shuffled the ~10M-row pair table twice.
     val ci = counts.select(col("item_id").as("item_i"), col("n_users").as("ni"))
     val cj = counts.select(col("item_id").as("item_j"), col("n_users").as("nj"))
-    // Join counts on the i<j half-space FIRST, then mirror each pair with
-    // one generator pass — a pairs.union(pairs.swap) would make Spark
-    // compute the whole pair pipeline twice (round-1 plan).
-    val half = pairs
+    // counts join the i<j half-space first; knnOf mirrors after
+    knnOf(pairs
       .join(broadcast(ci), "item_i")
       .join(broadcast(cj), "item_j")
-      .withColumn("sim", round(col("co") / sqrt(col("ni") * col("nj")), 6))
-    val sim = half.select(explode(array(
-        struct(col("item_i"), col("item_j"), col("sim"), col("co")),
-        struct(col("item_j").as("item_i"), col("item_i").as("item_j"), col("sim"), col("co"))
-      )).as("p"))
-      .select(col("p.item_i").as("item_i"), col("p.item_j").as("item_j"),
-              col("p.sim").as("sim"), col("p.co").as("co"))
-    // Per-item top-K via the bounded-buffer aggregate (graft.functions
-    // .TopKByScore): the partial phase caps every (item, partition) at
-    // K entries, so no 25M-row sort and the shuffle carries ≤ K·|items|
-    // rows. Order (sim desc, item_j asc) matches the previous
-    // row_number window exactly.
-    sim.groupBy("item_i")
-      .agg(graft.functions.TopKByScore.topK(TopK, col("sim"), col("item_j"), col("co")).as("nbrs"))
-      .select(col("item_i"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("item_i"), (col("pos") + 1).cast("int").as("rk"),
-              col("nbr.id").as("item_j"), col("nbr.score").as("sim"), col("nbr.extra").as("co"))
-      .orderBy("item_i", "rk")
+      .withColumn("sim", round(col("co") / sqrt(col("ni") * col("nj")), 6)),
+      "item_i", "item_j")
   }
 
   val itemcfSimilaritySql: String =
@@ -311,35 +304,38 @@ object Recsys extends QueryFamily {
     */
   def itemcfRecommend(spark: SparkSession, sfDir: String): DataFrame =
     graft.QueryCache.memo(spark, s"recsys:itemcfrecs:$sfDir") {
-      itemcfRecommendPlan(spark, sfDir)
+      recommendFrom(cappedInteractions(spark, sfDir), itemcfSimilarity(spark, sfDir))
     }
 
-  private def itemcfRecommendPlan(spark: SparkSession, sfDir: String): DataFrame = {
-    val hist = cappedInteractions(spark, sfDir)
+  /** ItemCF scoring of capped histories against ANY (item_i, item_j,
+    * sim) neighbour table — the training pipeline's model or a
+    * persisted one ([[itemcfServe]], [[itemcfRefreshServe]]): Σ
+    * sim·strength per (user, candidate), seen items dropped, top-N. */
+  private def recommendFrom(hist: DataFrame, neighbours: DataFrame): DataFrame = {
     // K·|items| rows — small relative to the fact side at any SF: broadcast
-    val sim = broadcast(itemcfSimilarity(spark, sfDir).select("item_i", "item_j", "sim"))
+    val sim = broadcast(neighbours.select("item_i", "item_j", "sim"))
     val scored = hist
       .join(sim, hist("item_id") === sim("item_i"))
       .groupBy(col("user_id"), col("item_j").as("cand"))
       .agg(round(sum(col("sim") * col("strength")), 6).as("score"))
-    val unseen = scored.join(hist.select(col("user_id").as("hu"), col("item_id").as("hi")),
-        col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
-    topNPerUser(unseen)
+    topNPerUser(dropSeen(scored, hist))
   }
 
-  /** Final per-user ranking via the bounded top-K aggregate (partial
-    * phase caps each (user, partition) at TopN entries) instead of a
-    * row_number window — the scored candidate set is millions of rows
+  /** The (user_id, cand) rows of `scored` whose item the user has not
+    * seen: a left anti-join against `hist`'s (user_id, item_id). */
+  private def dropSeen(scored: DataFrame, hist: DataFrame): DataFrame =
+    scored.join(hist.select(col("user_id").as("hu"), col("item_id").as("hi")),
+      col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
+
+  /** Final per-user ranking via the bounded top-K aggregate instead of
+    * a row_number window — the scored candidate set is millions of rows
     * and the window's full sort shuffle was the recommend queries'
     * dominant stage. Order (score desc, cand asc) matches the windows
     * the oracle SQL still uses.
     */
   private def topNPerUser(unseen: DataFrame): DataFrame =
-    unseen.groupBy("user_id")
-      .agg(graft.functions.TopKByScore.topK(TopN, col("score"), col("cand"), lit(0L)).as("recs"))
-      .select(col("user_id"), posexplode(col("recs")).as(Seq("pos", "r")))
-      .select(col("user_id"), (col("pos") + 1).cast("int").as("rk"),
-              col("r.id").as("item_id"), col("r.score").as("score"))
+    TopKByScore.ranked(unseen, Seq("user_id"), TopN, col("score"), col("cand"), lit(0L))
+      .select(col("user_id"), col("rk"), col("id").as("item_id"), col("score"))
       .orderBy("user_id", "rk")
 
   /** Catalog name of the persisted ItemCF model, unique per fixture
@@ -373,23 +369,7 @@ object Recsys extends QueryFamily {
     */
   def itemcfServe(spark: SparkSession, sfDir: String): DataFrame = {
     ensureCfModel(spark, sfDir)
-    serveFromModel(spark, sfDir, cfModelName(sfDir))
-  }
-
-  /** Recommendation scoring against ANY persisted neighbor table —
-    * shared by the fresh-model serve and the refreshed-model serve
-    * (the publish leg). Only user histories are live. */
-  private def serveFromModel(spark: SparkSession, sfDir: String,
-      model: String): DataFrame = {
-    val hist = cappedInteractions(spark, sfDir)
-    val sim = broadcast(spark.table(model).select("item_i", "item_j", "sim"))
-    val scored = hist
-      .join(sim, hist("item_id") === sim("item_i"))
-      .groupBy(col("user_id"), col("item_j").as("cand"))
-      .agg(round(sum(col("sim") * col("strength")), 6).as("score"))
-    val unseen = scored.join(hist.select(col("user_id").as("hu"), col("item_id").as("hi")),
-        col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
-    topNPerUser(unseen)
+    recommendFrom(cappedInteractions(spark, sfDir), spark.table(cfModelName(sfDir)))
   }
 
   /** Pre-split interaction table — the corpus as it stood when the
@@ -476,6 +456,10 @@ object Recsys extends QueryFamily {
     * statistics (the refresh store), unique per fixture dir. */
   private[graft] def cfStoreNames(sfDir: String): Map[String, String] =
     CfStoreParts.map(n => n -> Sources.serveName(s"cfstore_$n", sfDir)).toMap
+
+  /** A store snapshot's tables by part name, read from the catalog. */
+  private def storeOf(spark: SparkSession, names: Map[String, String]): String => DataFrame =
+    part => spark.table(names(part))
 
   /** Build-once: persist the FROZEN ItemCF model's internal state —
     * the pre-[[SplitDate]] per-(user, item) strength aggregate
@@ -566,11 +550,9 @@ object Recsys extends QueryFamily {
     */
   def itemcfRefresh(spark: SparkSession, sfDir: String): DataFrame = {
     ensureCfStore(spark, sfDir)
-    val names = cfStoreNames(sfDir)
     val post = postSplitDelta(spark, sfDir)
       .localCheckpoint() // changed-user list + strength merge read it
-    refreshAdaptive(spark.table(names("strengths")), spark.table(names("pairs")),
-      spark.table(names("counts")), post, spark.table(names("model")))
+    refreshAdaptive(storeOf(spark, cfStoreNames(sfDir)), post)
   }
 
   /** The delta-merged statistics of one refresh step, before ranking:
@@ -793,15 +775,22 @@ object Recsys extends QueryFamily {
   private[graft] def rerankDelta(nCntChanged: Long, nStoreItems: Long): Boolean =
     nCntChanged < CfRerankFullFrac * nStoreItems.max(1L)
 
-  /** One refresh step with the ADAPTIVE ranking tail — the registry
-    * path of q_itemcf_refresh / _chain / _delete. Output is identical
-    * on either path; see [[CfRerankFullFrac]]. */
-  private[graft] def refreshAdaptive(oldStrengths: DataFrame, oldPairs: DataFrame,
-      oldCounts: DataFrame, post: DataFrame, oldModel: DataFrame): DataFrame = {
-    val m = mergeStats(oldStrengths, oldPairs, oldCounts, post)
-    val delta = rerankDelta(m.cntDelta.count(), oldCounts.count())
-    refreshRank(m, oldPairs, if (delta) Some(oldModel) else None)
+  /** One refresh step of a persisted store by the batch `post`, with
+    * the ADAPTIVE ranking tail — the registry path of q_itemcf_refresh
+    * / _chain / _delete. Output is identical on either path; see
+    * [[CfRerankFullFrac]]. */
+  private def refreshAdaptive(store: String => DataFrame, post: DataFrame): DataFrame = {
+    val oldPairs = store("pairs")
+    val m = mergeStats(store("strengths"), oldPairs, store("counts"), post)
+    refreshRank(m, oldPairs, adaptiveModel(m, store))
   }
+
+  /** The adaptive gate: the store's persisted model when the
+    * delta-proportional tail applies ([[rerankDelta]] over the merge's
+    * count delta and the store's item count — two driver counts, each
+    * ≤ |items|), else None (re-rank the whole merged model). */
+  private def adaptiveModel(m: CfMerge, store: String => DataFrame): Option[DataFrame] =
+    if (rerankDelta(m.cntDelta.count(), store("counts").count())) Some(store("model")) else None
 
   /** The items whose top-K can differ after a merge — see
     * [[refreshFrom]]'s case analysis. `oldPairs` supplies the
@@ -854,7 +843,7 @@ object Recsys extends QueryFamily {
     * hash-verified end to end. */
   def itemcfRefreshServe(spark: SparkSession, sfDir: String): DataFrame = {
     ensureRefreshedModel(spark, sfDir)
-    serveFromModel(spark, sfDir, cfRefreshedName(sfDir))
+    recommendFrom(cappedInteractions(spark, sfDir), spark.table(cfRefreshedName(sfDir)))
   }
 
   /** Catalog names of the ADVANCED store — the frozen store's snapshot
@@ -881,24 +870,20 @@ object Recsys extends QueryFamily {
   private[graft] def ensureChainStore(spark: SparkSession, sfDir: String): Unit =
     graft.QueryCache.once(spark, s"itemcf_chain_advanced:$sfDir") {
       ensureCfStore(spark, sfDir)
-      val old = cfStoreNames(sfDir)
+      val old = storeOf(spark, cfStoreNames(sfDir))
       val adv = cfChainNames(sfDir)
       val post1 = deltaBetween(spark, sfDir, SplitDate, Some(ChainDate))
         .localCheckpoint() // merge + model refresh read it
-      val m = mergeStats(spark.table(old("strengths")), spark.table(old("pairs")),
-        spark.table(old("counts")), post1)
+      val m = mergeStats(old("strengths"), old("pairs"), old("counts"), post1)
       Sources.publish(
-        spark.table(old("strengths")).join(m.changed, Seq("user_id"), "left_anti")
+        old("strengths").join(m.changed, Seq("user_id"), "left_anti")
           .unionByName(m.mergedStr),
         adv("strengths"), Seq("user_id"), CfStoreBuckets, Seq("user_id", "item_id"))
       Sources.publish(m.mergedPairs, adv("pairs"), Seq("pk"), CfStoreBuckets, Seq("pk"))
       Sources.publish(m.mergedCounts, adv("counts"))
       Sources.publish(
-        refreshRank(m, spark.table(old("pairs")),
-          // same adaptive tail as the registry path (b₁ is fixture-shaped)
-          oldModelOpt = if (rerankDelta(m.cntDelta.count(),
-              spark.table(old("counts")).count()))
-            Some(spark.table(old("model"))) else None),
+        // same adaptive tail as the registry path (b₁ is fixture-shaped)
+        refreshRank(m, old("pairs"), adaptiveModel(m, old)),
         adv("model"), Seq("item_i"), CfStoreBuckets, Seq("item_i", "rk"))
     }
 
@@ -919,11 +904,9 @@ object Recsys extends QueryFamily {
     * the advanced model table. */
   def itemcfRefreshChain(spark: SparkSession, sfDir: String): DataFrame = {
     ensureChainStore(spark, sfDir)
-    val adv = cfChainNames(sfDir)
     val post2 = deltaBetween(spark, sfDir, ChainDate, None)
       .localCheckpoint() // changed-user list + strength merge read it
-    refreshAdaptive(spark.table(adv("strengths")), spark.table(adv("pairs")),
-      spark.table(adv("counts")), post2, spark.table(adv("model")))
+    refreshAdaptive(storeOf(spark, cfChainNames(sfDir)), post2)
   }
 
   /** GDPR DELETE as a refresh (r12 verdict #4, CF pillar): forgetting
@@ -944,13 +927,12 @@ object Recsys extends QueryFamily {
     * a compliance job and a full retrain. */
   def itemcfDelete(spark: SparkSession, sfDir: String): DataFrame = {
     ensureCfStore(spark, sfDir)
-    val names = cfStoreNames(sfDir)
-    val negDelta = spark.table(names("strengths"))
+    val store = storeOf(spark, cfStoreNames(sfDir))
+    val negDelta = store("strengths")
       .where(col("user_id") % DeleteMod === 0)
       .select(col("user_id"), col("item_id"), (-col("strength")).as("strength"))
       .localCheckpoint() // changed-user list + strength merge read it
-    refreshAdaptive(spark.table(names("strengths")), spark.table(names("pairs")),
-      spark.table(names("counts")), negDelta, spark.table(names("model")))
+    refreshAdaptive(store, negDelta)
   }
 
   /** Oracle: the frozen-corpus model rebuilt WITHOUT the deleted
@@ -1100,8 +1082,8 @@ object Recsys extends QueryFamily {
 
   private def usercfSimilarityPlan(spark: SparkSession, sfDir: String): DataFrame = {
     val r = cappedInteractions(spark, sfDir).select("user_id", "item_id")
-    // Same plan shape as itemcfSimilarity: broadcast count joins on the
-    // half-space, then a single-generator mirror (see comments there).
+    // Same plan shape as itemcfSimilarity: count joins on the
+    // half-space, then knnOf's single-generator mirror.
     val counts = r.groupBy("user_id").agg(count(lit(1)).as("n_items"))
     val pairs = unpack(userPairAgg(spark, sfDir), "user_u", "user_v")
     val cu = counts.select(col("user_id").as("user_u"), col("n_items").as("nu"))
@@ -1109,23 +1091,11 @@ object Recsys extends QueryFamily {
     // count attach unhinted: unlike the CATALOG-sized item-count tables
     // in the itemcf tiers, this side is |users| rows — broadcast is
     // AQE's call while small, a shuffled equi-join at population scale
-    val half = pairs
+    knnOf(pairs
       .join(cu, "user_u")
       .join(cv, "user_v")
-      .withColumn("sim", round(col("co") / sqrt(col("nu") * col("nv")), 6))
-    val sim = half.select(explode(array(
-        struct(col("user_u"), col("user_v"), col("sim"), col("co")),
-        struct(col("user_v").as("user_u"), col("user_u").as("user_v"), col("sim"), col("co"))
-      )).as("p"))
-      .select(col("p.user_u").as("user_u"), col("p.user_v").as("user_v"),
-              col("p.sim").as("sim"), col("p.co").as("co"))
-    // bounded top-K aggregate — see itemcfSimilarityPlan
-    sim.groupBy("user_u")
-      .agg(graft.functions.TopKByScore.topK(TopK, col("sim"), col("user_v"), col("co")).as("nbrs"))
-      .select(col("user_u"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("user_u"), (col("pos") + 1).cast("int").as("rk"),
-              col("nbr.id").as("user_v"), col("nbr.score").as("sim"), col("nbr.extra").as("co"))
-      .orderBy("user_u", "rk")
+      .withColumn("sim", round(col("co") / sqrt(col("nu") * col("nv")), 6)),
+      "user_u", "user_v")
   }
 
   val usercfSimilaritySql: String =
@@ -1167,9 +1137,7 @@ object Recsys extends QueryFamily {
       .join(hist.select(col("user_id").as("user_v"), col("item_id").as("cand"), col("strength")), "user_v")
       .groupBy(col("user_u").as("user_id"), col("cand"))
       .agg(round(sum(col("sim") * col("strength")), 6).as("score"))
-    val unseen = scored.join(hist.select(col("user_id").as("hu"), col("item_id").as("hi")),
-        col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
-    topNPerUser(unseen) // bounded top-K aggregate, see itemcfRecommend
+    topNPerUser(dropSeen(scored, hist))
   }
 
   val usercfRecommendSql: String =
@@ -1451,17 +1419,13 @@ object Recsys extends QueryFamily {
       .withColumn("prk", row_number().over(wP))
       .where(col("prk") <= BrandTop)
       .select(col("p_brand"), col("item_id").as("cand"), col("pop"))
-    val cands = profile.join(broadcast(shortlist), "p_brand")
-    val unseen = cands.join(hist.select(col("user_id").as("hu"), col("item_id").as("hi")),
-        col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
+    val unseen = dropSeen(profile.join(broadcast(shortlist), "p_brand"), hist)
     // bounded top-K (pop is an exact small integer — lossless in the
     // double score slot; rides as extra to come back out as a long)
-    unseen.groupBy("user_id", "p_brand")
-      .agg(graft.functions.TopKByScore.topK(
-        TopN, col("pop").cast("double"), col("cand"), col("pop")).as("recs"))
-      .select(col("user_id"), col("p_brand"), posexplode(col("recs")).as(Seq("pos", "r")))
-      .select(col("user_id"), (col("pos") + 1).cast("int").as("rk"),
-              col("r.id").as("item_id"), col("p_brand"), col("r.extra").as("pop"))
+    TopKByScore.ranked(unseen, Seq("user_id", "p_brand"), TopN,
+        col("pop").cast("double"), col("cand"), col("pop"))
+      .select(col("user_id"), col("rk"), col("id").as("item_id"), col("p_brand"),
+              col("extra").as("pop"))
       .orderBy("user_id", "rk")
   }
 
@@ -1555,13 +1519,11 @@ object Recsys extends QueryFamily {
     val trans = transitionEdges(spark, sfDir)
     val outs = trans.groupBy("item_id").agg(sum("n").as("n_out"))
       .where(col("n_out") >= MarkovMinOut)
-    trans.join(broadcast(outs), "item_id")
+    val probs = trans.join(broadcast(outs), "item_id")
       .withColumn("prob", round(col("n") / col("n_out"), 6))
-      .groupBy("item_id")
-      .agg(graft.functions.TopKByScore.topK(MarkovTop, col("prob"), col("next_item"), col("n")).as("nx"))
-      .select(col("item_id"), posexplode(col("nx")).as(Seq("pos", "x")))
-      .select(col("item_id"), (col("pos") + 1).cast("int").as("rk"),
-              col("x.id").as("next_item"), col("x.score").as("prob"), col("x.extra").as("n"))
+    TopKByScore.ranked(probs, Seq("item_id"), MarkovTop, col("prob"), col("next_item"), col("n"))
+      .select(col("item_id"), col("rk"), col("id").as("next_item"), col("score").as("prob"),
+              col("extra").as("n"))
       .orderBy("item_id", "rk")
   }
 
@@ -1812,14 +1774,11 @@ object Recsys extends QueryFamily {
       .localCheckpoint() // feeds pair gen AND the seen-item anti join
     // history postings: every non-active basket, recency-capped per item
     val hist = bi.join(active.select(col("abk")), bi("bk") === col("abk"), "left_anti")
-    val postings = hist
-      .join(baskets.select(col("bk"), col("dt")), "bk")
-      .withColumn("ds", expr("cast(unix_date(cast(dt AS date)) AS double)"))
-      .groupBy("item_id")
-      .agg(graft.functions.TopKByScore.topK(
-        SknnPostings, col("ds"), col("bk"), lit(0L)).as("ps"))
-      .select(col("item_id"), explode(col("ps")).as("p"))
-      .select(col("item_id"), col("p.id").as("hbk"))
+    val postings = TopKByScore.rows(
+        hist.join(baskets.select(col("bk"), col("dt")), "bk")
+          .withColumn("ds", expr("cast(unix_date(cast(dt AS date)) AS double)")),
+        Seq("item_id"), SknnPostings, col("ds"), col("bk"), lit(0L))
+      .select(col("item_id"), col("id").as("hbk"))
       .join(sizes.select(col("bk").as("hbk"), col("n").as("nh")), "hbk")
     // neighbor generation: shared-item join -> exact integer sim² units.
     // Group on the 2 determining keys (user has ONE active basket; nh is
@@ -1831,24 +1790,18 @@ object Recsys extends QueryFamily {
       .agg(count(lit(1)).as("inter"), max("na").as("na"), max("nh").as("nh"))
       .withColumn("s_units",
         expr(s"(inter * inter * ${SknnUnits}L) div (na * nh)"))
-    val nbrs = pairs.groupBy("user_id")
-      .agg(graft.functions.TopKByScore.topK(
-        SknnK, col("s_units").cast("double"), col("hbk"), col("s_units")).as("nb"))
-      .select(col("user_id"), explode(col("nb")).as("n"))
-      .select(col("user_id"), col("n.id").as("hbk"), col("n.extra").as("s_units"))
+    val nbrs = TopKByScore.rows(pairs, Seq("user_id"),
+        SknnK, col("s_units").cast("double"), col("hbk"), col("s_units"))
+      .select(col("user_id"), col("id").as("hbk"), col("extra").as("s_units"))
     // score neighbor items not already in the active basket
     val histItems = bi.select(col("bk").as("hbk"), col("item_id"))
     val recs = nbrs.join(histItems, "hbk")
       .join(aItems.select("user_id", "item_id"), Seq("user_id", "item_id"), "left_anti")
       .groupBy("user_id", "item_id")
       .agg(sum("s_units").as("score_units"))
-    recs.groupBy("user_id")
-      .agg(graft.functions.TopKByScore.topK(
-        SknnTopN, col("score_units").cast("double"), col("item_id"),
-        col("score_units")).as("r"))
-      .select(col("user_id"), posexplode(col("r")).as(Seq("pos", "rec")))
-      .select(col("user_id"), (col("pos") + 1).cast("int").as("rk"),
-              col("rec.id").as("item_id"), col("rec.extra").as("score_units"))
+    TopKByScore.ranked(recs, Seq("user_id"),
+        SknnTopN, col("score_units").cast("double"), col("item_id"), col("score_units"))
+      .select(col("user_id"), col("rk"), col("id").as("item_id"), col("extra").as("score_units"))
       .orderBy("user_id", "rk")
   }
 
@@ -2498,14 +2451,12 @@ object Recsys extends QueryFamily {
     // so neighbor selection AND payload come out of a single 2|pairs|-row
     // scan (the join-back formulation scanned it twice). Order (co desc,
     // target asc) matches the oracle's row_number tie-break.
-    val knnRows = mirrored.groupBy("other")
-      .agg(graft.functions.TopKByScore.topK(
+    val knnRows = TopKByScore.rows(mirrored, Seq("other"),
         TopK, col("co").cast("double"), col("target"),
-        graft.functions.BitCast.doubleBits(col("sd"))).as("ns"))
-      .select(col("other"), explode(col("ns")).as("n"))
-      .select(col("other"), col("n.id").as("target"),
-              graft.functions.BitCast.bitsDouble(col("n.extra")).as("sd"),
-              col("n.score").cast("long").as("co"))
+        graft.functions.BitCast.doubleBits(col("sd")))
+      .select(col("other"), col("id").as("target"),
+              graft.functions.BitCast.bitsDouble(col("extra")).as("sd"),
+              col("score").cast("long").as("co"))
     // K·|items| rows after the cap — broadcast into the history join so
     // the interaction table never shuffles (same shape as itemcfRecommend)
     val knn = broadcast(knnRows)
@@ -2513,9 +2464,7 @@ object Recsys extends QueryFamily {
       .join(knn, hist("item_id") === knn("other"))
       .groupBy(col("user_id"), col("target").as("cand"))
       .agg(round(sum(col("strength") * col("co") + col("sd")) / sum(col("co")), 6).as("score"))
-    val unseen = scored.join(hist.select(col("user_id").as("hu"), col("item_id").as("hi")),
-        col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
-    topNPerUser(unseen)
+    topNPerUser(dropSeen(scored, hist))
   }
 
   val slopeOneSql: String =
@@ -3139,21 +3088,14 @@ object Recsys extends QueryFamily {
         .as("p"))
       .select(col("p.item").as("item"), col("p.cand").as("cand"), col("p.co").as("co"))
     // bounded per-item neighbor head ((co desc, cand asc) — exact ints)
-    val knn = sym.groupBy("item")
-      .agg(graft.functions.TopKByScore.topK(
-        SerTopM, col("co").cast("double"), col("cand"), lit(0L)).as("nbrs"))
-      .select(col("item"), explode(col("nbrs")).as("nb"))
-      .select(col("item"), col("nb.id").as("cand"), col("nb.score").cast("long").as("co"))
+    val knn = TopKByScore.rows(sym, Seq("item"),
+        SerTopM, col("co").cast("double"), col("cand"), lit(0L))
+      .select(col("item"), col("id").as("cand"), col("score").cast("long").as("co"))
     val scored = capped.join(knn, col("item_id") === col("item"))
       .groupBy("user_id", "cand").agg(sum("co").as("score"))
-    val unseen = scored.join(
-        capped.select(col("user_id").as("hu"), col("item_id").as("hi")),
-        col("user_id") === col("hu") && col("cand") === col("hi"), "left_anti")
-    val recs = unseen.groupBy("user_id")
-      .agg(graft.functions.TopKByScore.topK(
-        EvalK, col("score").cast("double"), col("cand"), lit(0L)).as("recs"))
-      .select(col("user_id"), explode(col("recs")).as("r"))
-      .select(col("user_id"), col("r.id").as("cand"))
+    val recs = TopKByScore.rows(dropSeen(scored, capped), Seq("user_id"),
+        EvalK, col("score").cast("double"), col("cand"), lit(0L))
+      .select(col("user_id"), col("id").as("cand"))
     val perUser = recs
       .join(broadcast(popRecs.select(col("item_id"), lit(1).as("expected"))),
         col("cand") === col("item_id"), "left")

@@ -264,11 +264,9 @@ object Similarity extends QueryFamily {
     // output. Truth itself comes from the bounded TopKByScore
     // aggregate (same (cos DESC, nid ASC) order as the old window),
     // carrying pn through as the extra slot.
-    val truth = cand.groupBy("qid")
-      .agg(graft.functions.TopKByScore.topK(
-        k, col("cos"), col("nid"), col("pn").cast("long")).as("tk"))
-      .select(explode(col("tk")).as("t"))
-      .select(col("t.extra").cast("int").as("pn"))
+    val truth = graft.functions.TopKByScore.rows(cand, Seq("qid"),
+        k, col("cos"), col("nid"), col("pn").cast("long"))
+      .select(col("extra").cast("int").as("pn"))
     val candHist = cand.groupBy("pn").agg(count(lit(1)).as("cnt"))
     val hitHist = truth.groupBy("pn").agg(count(lit(1)).as("hcnt"))
     val spine = e0.sparkSession.range(1, nCells + 1L)
@@ -414,13 +412,10 @@ object Similarity extends QueryFamily {
     // (TopKByScore keeps (score DESC, id ASC) = (dist ASC, id ASC),
     // the oracle's row_number order); dist ≤ dims·(2·KmScale)² ≈
     // 2.6e8 ≪ 2⁵³, so the double negation is exact
-    val shortTop = adc.groupBy("query_id")
-      .agg(graft.functions.TopKByScore.topK(rerank,
-        -col("adc_dist_units").cast("double"), col("neighbor_id"),
-        col("adc_dist_units")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).as("adc_rk"),
-        col("col.id").as("neighbor_id"), col("col.extra").as("adc_dist_units"))
+    val shortTop = graft.functions.TopKByScore.ranked(adc, Seq("query_id"), rerank,
+        -col("adc_dist_units").cast("double"), col("neighbor_id"), col("adc_dist_units"))
+      .select(col("query_id"), col("rk").as("adc_rk"),
+        col("id").as("neighbor_id"), col("extra").as("adc_dist_units"))
     val exact = shortTop
       .join(es.select(col("vec_id").as("neighbor_id"), col("pos"),
         col("q").as("nq")), "neighbor_id")
@@ -660,11 +655,9 @@ object Similarity extends QueryFamily {
         Seq("query_id", "pos"))
       .groupBy("query_id", "neighbor_id")
       .agg(sum((col("nq") - col("qq")) * (col("nq") - col("qq"))).as("exact_dist_units"))
-    val truth = exactAll.groupBy("query_id")
-      .agg(graft.functions.TopKByScore.topK(k,
-        -col("exact_dist_units").cast("double"), col("neighbor_id"), lit(0L)).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("t"))
-      .select(col("query_id"), col("t.id").as("neighbor_id"))
+    val truth = graft.functions.TopKByScore.rows(exactAll, Seq("query_id"), k,
+        -col("exact_dist_units").cast("double"), col("neighbor_id"), lit(0L))
+      .select(col("query_id"), col("id").as("neighbor_id"))
     val truthAdc = adc.join(broadcast(truth), Seq("query_id", "neighbor_id"))
       .select(col("query_id").as("t_qid"), col("neighbor_id").as("t_nid"),
         col("adc_dist_units").as("t_adc"))
@@ -1020,12 +1013,9 @@ object Similarity extends QueryFamily {
     val truthSet = truthAgg.select(col("query_id"), explode(col("tk")).as("t"))
       .select(col("query_id"), col("t.id").as("neighbor_id"))
     val totTruth = truthAgg.agg(sum("n_truth").as("total_truth"))
-    val kept = cand.groupBy("query_id")
-      .agg(graft.functions.TopKByScore.topK(bufMax, col("cos"),
-        col("neighbor_id"), col("label").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).as("rk"),
-              col("col.id").as("neighbor_id"), col("col.extra").as("lbl"))
+    val kept = graft.functions.TopKByScore.ranked(cand, Seq("query_id"), bufMax,
+        col("cos"), col("neighbor_id"), col("label").cast("long"))
+      .select(col("query_id"), col("rk"), col("id").as("neighbor_id"), col("extra").as("lbl"))
       .where(col("lbl") === label)
       .localCheckpoint() // two consumers: kept histogram + hit histogram
     val keptHist = kept.groupBy("rk").agg(count(lit(1)).as("kcnt"))
@@ -1261,11 +1251,9 @@ object Similarity extends QueryFamily {
         .select(col("a.qid").as("query_id"), col("b.vec_id").as("neighbor_id"),
                 round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
     def hitsOf(scored: DataFrame, tag: String): DataFrame =
-      scored.groupBy("query_id")
-        .agg(graft.functions.TopKByScore.topK(
-          k, col("cos"), col("neighbor_id"), lit(0L)).as("tk"))
-        .select(col("query_id"), explode(col("tk")).as("t"))
-        .select(col("query_id"), col("t.id").as("neighbor_id"))
+      graft.functions.TopKByScore.rows(scored, Seq("query_id"),
+          k, col("cos"), col("neighbor_id"), lit(0L))
+        .select(col("query_id"), col("id").as("neighbor_id"))
         .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("n_hits"))
         .select(lit(tag).as("variant"), col("n_hits"))
@@ -1632,16 +1620,14 @@ object Similarity extends QueryFamily {
     val qIds = es.select("vec_id").distinct().orderBy("vec_id").limit(nQueries)
     val q = es.join(broadcast(qIds), "vec_id")
       .select(col("vec_id").as("query_id"), col("pos"), col("q").as("qq"))
-    es.select(col("vec_id"), col("pos"), col("q").as("nq"))
+    val dists = es.select(col("vec_id"), col("pos"), col("q").as("nq"))
       .join(broadcast(q), Seq("pos"))
       .where(col("query_id") =!= col("vec_id"))
       .groupBy("query_id", "vec_id")
       .agg(sum((col("nq") - col("qq")) * (col("nq") - col("qq"))).as("dist"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScore.topK(k,
-        -col("dist").cast("double"), col("vec_id"), lit(0L)).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("t"))
-      .select(col("query_id"), col("t.id").as("vec_id"))
+    graft.functions.TopKByScore.rows(dists, Seq("query_id"), k,
+        -col("dist").cast("double"), col("vec_id"), lit(0L))
+      .select(col("query_id"), col("id").as("vec_id"))
   }
 
   /** Oracle: both codebook chains side by side (prefixed CTEs), each

@@ -1625,13 +1625,10 @@ object Training extends QueryFamily {
     // per-label window — a 2-value partition key would funnel each
     // label's whole corpus through one sorting task at scale, while the
     // partial top-K keeps every task's state at MmdN ids
-    val sampleIds = Tables.embeddings(spark, sfDir)
-      .where(col("label").isin(0, 1))
-      .groupBy("label")
-      .agg(graft.functions.TopKByScore.topK(
-        MmdN, -col("vec_id").cast("double"), col("vec_id"), lit(0L)).as("ids"))
-      .select(col("label"), explode(col("ids")).as("s"))
-      .select(col("label"), col("s.id").as("vec_id"))
+    val sampleIds = graft.functions.TopKByScore.rows(
+        Tables.embeddings(spark, sfDir).where(col("label").isin(0, 1)), Seq("label"),
+        MmdN, -col("vec_id").cast("double"), col("vec_id"), lit(0L))
+      .select(col("label"), col("id").as("vec_id"))
     val capped = Tables.embeddings(spark, sfDir)
       .join(broadcast(sampleIds.select("vec_id")), "vec_id")
       .select(col("vec_id"), col("label"), col("embedding"),

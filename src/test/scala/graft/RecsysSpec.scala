@@ -489,5 +489,16 @@ class RecsysSpec extends AnyFunSuite with SparkFixture {
     assert(!items.contains(m.toLong), s"evicted item $m must leave the model")
     assert(items.contains((m + 1).toLong), "boosted item must enter the model")
     assert(items.contains(7L) && items.contains(8L), "new user's items must enter")
+    // Negative-id contract: the merge keys count deltas as -(item_id)-1,
+    // so a negative id would alias into the pair key space. A changed
+    // single-item user holding item -1 must fail on pair_pack's range
+    // check, never merge.
+    val negative = Seq((4L, -1L, 3.0)).toDF("user_id", "item_id", "strength")
+    val e = intercept[Exception] {
+      operators.Recsys.refreshFrom(oldStrengths, oldPairs, oldCounts, negative).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(messages.exists(_.contains("outside [0, 2^32)")), e.toString)
   }
 }

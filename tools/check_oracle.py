@@ -22,6 +22,14 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
+# DuckDB's default memory limit is 80% of RAM: uncapped, q_kcore's oracle
+# grew to 8.7 GB RSS at sf0.01 and was OOM-killed beside two JVMs on a
+# 16 GB host. 4 GB runs all 318 oracles at sf0.001 (3 GB does not:
+# q_kcore). At sf0.01 q_kcore's oracle fails with DuckDB's out-of-memory
+# error under a 4, 6 or 8 GB cap alike, and is reported as a failure.
+MEMORY_LIMIT = "4GB"
+
+
 def canon(rows, cols):
     """Sort columns by name, normalize values, sort rows."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -43,6 +51,8 @@ def main(sf_dir, out_dir):
     out = Path(out_dir)
     oracle = json.loads((out / "oracle_sql.json").read_text())
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
+    print(f"duckdb memory_limit={MEMORY_LIMIT}")
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.exists():
