@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{col, explode, posexplode}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, explode, posexplode, row_number}
 import org.apache.spark.sql.types._
 
 /** Bounded top-K buffer: entries ordered by (score desc, id asc), at
@@ -173,6 +174,18 @@ object TopKByScore {
     grouped(df, keys, k, score, id, extra)
       .select(keys.map(col) :+ posexplode(col("topk")).as(Seq("pos", "e")): _*)
       .select(keys.map(col) ++ ((col("pos") + 1).cast("int").as("rk") +: entryCols): _*)
+
+  /** Window form of [[ranked]]: `df` plus the Int `rk` of `row_number()
+    * OVER (PARTITION BY key ORDER BY score, id ASC)`, `rk <= k` kept;
+    * `score` carries its direction. A site uses it when its rows carry
+    * more than [[ranked]]'s one Long `extra`, or an integer distance it
+    * would negate into a Double; it sorts each key's whole partition, so
+    * candidate sets that grow with the corpus use [[ranked]] (at most k
+    * rows per key shuffled). Both give the same rows and ranks. */
+  def windowRanked(df: DataFrame, key: String, k: Int,
+      score: Column, id: Column): DataFrame =
+    df.withColumn("rk", row_number().over(Window.partitionBy(key).orderBy(score, id.asc)))
+      .where(col("rk") <= k)
 
   private def grouped(df: DataFrame, keys: Seq[String], k: Int,
       score: Column, id: Column, extra: Column): DataFrame =

@@ -1381,12 +1381,14 @@ object GraphRank extends QueryFamily {
     degrees(half)
   }
 
-  /** Oracle: identical peel unrolled (s1/e1..sR/eR chained CTEs). */
+  /** Oracle: identical peel unrolled (s1/e1..sR/eR chained CTEs), each
+    * `AS MATERIALIZED`: every one has two readers, and inlined DuckDB
+    * re-expands the chain per reader (out of memory at sf0.01 in 4 GB). */
   val kcoreSql: String = {
     val rounds = (1 to KcoreRounds).map { k =>
-      s"""s$k AS (
+      s"""s$k AS MATERIALIZED (
          |  SELECT a FROM e${k - 1} GROUP BY a HAVING count(*) >= $KcoreK
-         |), e$k AS (
+         |), e$k AS MATERIALIZED (
          |  SELECT e.a, e.b FROM e${k - 1} e
          |  JOIN s$k x ON x.a = e.a JOIN s$k y ON y.a = e.b
          |)""".stripMargin

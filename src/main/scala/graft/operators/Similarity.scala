@@ -1,24 +1,27 @@
 package graft.operators
 
 import graft.{QueryFamily, QuerySpec, Tables}
+import graft.functions.TopKByScore
 import graft.sources.Sources
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Approximate/exact nearest-neighbor search over the embedding column
-  * (SURVEY.md §2.10 L3). Three tiers:
+/** Nearest-neighbour search over the embedding column (SURVEY.md §2.10
+  * L3): exact brute-force cosine top-k against a broadcast query side
+  * (the ground truth of every recall audit); IVF cell probe (the first
+  * NCells vectors quantize, each query probes its NProbe nearest cells),
+  * plain, filtered, composed with PQ/ADC + exact L2 re-rank, and served
+  * from persisted tables that are built, grown, compacted and
+  * tombstoned; recall audits by probe depth, re-rank depth, filter
+  * buffer and ingest policy; within-cell hard negatives and mutual-kNN
+  * graphs; MLlib and sign-random-projection LSH.
   *
-  *  - brute-force cosine top-k (exact; the correctness baseline — at
-  *    100 TB only viable for small query sets against a broadcast
-  *    query side, which is exactly how it is written here);
-  *  - IVF-style cell probe (scale path, still oracle-checkable: a
-  *    deterministic coarse quantizer assigns every vector to its
-  *    nearest probe centroid; queries search only their own cell —
-  *    the |candidates| term drops from N to N/cells);
-  *  - BucketedRandomProjectionLSH (MLlib; rows-only check, seed-pinned,
-  *    invariants + recall in LlmPipelineSpec).
+  * Each search step is written once: [[cosAB]], [[bruteScored]],
+  * [[centroidScored]], [[probeJoin]], [[exactL2]], [[cumulative]],
+  * [[recallLedger]] and [[basisPoints]]; per-key top-K is
+  * [[graft.functions.TopKByScore]]'s `windowRanked`, `ranked` or `rows`.
   *
   * All cosine math folds left-to-right in DOUBLE on both engines
   * (zip_with+aggregate ↔ list_reduce), so values are bit-identical and
@@ -65,8 +68,30 @@ object Similarity extends QueryFamily {
     */
   private def dotAB: Column = floatDot(col("a.embedding"), col("b.embedding"))
 
+  /** Cosine of join sides `a`/`b`, rounded to 6dp before any ranking
+    * reads it, so both engines rank on the same digits (as every
+    * oracle's `round(dot / (a.nrm * b.nrm), 6)` does). */
+  private def cosAB: Column = round(dotAB / (col("a.nrm") * col("b.nrm")), 6)
+
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", floatNorm(col("embedding")))
+
+  /** `num` in basis points of `den`, 0 where `den` is 0 (an empty truth
+    * set is a real input, and ANSI mode throws on a zero divisor). */
+  private def basisPoints(num: String, den: String): Column =
+    when(col(den) > 0, expr(s"($num * 10000) div $den")).otherwise(lit(0L))
+
+  /** The exact scoring pass: the broadcast `vec_id < nQueries` rows of
+    * `e` (normed) × `neighbours(e)`, self excluded, as (query_id,
+    * neighbor_id, cos); the corpus streams past with no shuffle. */
+  private def bruteScored(e: DataFrame, nQueries: Int,
+      neighbours: DataFrame => DataFrame = identity): DataFrame = {
+    val q = broadcast(e.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("embedding"), col("nrm")))
+    q.as("a").join(neighbours(e).as("b"), col("a.qid") =!= col("b.vec_id"))
+      .select(col("a.qid").as("query_id"), col("b.vec_id").as("neighbor_id"),
+              cosAB.as("cos"))
+  }
 
   /** Exact brute-force top-K cosine neighbors for the first $NQueries
     * vectors. The query side is tiny by construction → broadcast; the
@@ -78,19 +103,11 @@ object Similarity extends QueryFamily {
 
   /** Frame-parameterized exact tier — AnnScaleSpec runs it as ground
     * truth on a synthesized corpus far larger than the fixture. */
-  private[graft] def knnBruteFrom(e0: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val e = withNorm(e0.select("vec_id", "embedding"))
-    val q = broadcast(e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding"), col("nrm")))
-    val scored = q.as("a").join(e.as("b"), col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("query_id"), col("b.vec_id").as("neighbor_id"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+  private[graft] def knnBruteFrom(e0: DataFrame, nQueries: Int, k: Int): DataFrame =
+    TopKByScore.windowRanked(bruteScored(withNorm(e0.select("vec_id", "embedding")), nQueries),
+        "query_id", k, col("cos").desc, col("neighbor_id"))
       .select(col("query_id"), col("rk"), col("neighbor_id"), col("cos"))
       .orderBy("query_id", "rk")
-  }
 
   private val normDuck = graft.functions.VectorFunctions.duckNorm("embedding")
   private val dotDuck = graft.functions.VectorFunctions.duckDot("a.embedding", "b.embedding")
@@ -133,15 +150,22 @@ object Similarity extends QueryFamily {
     // the probe list: each query fans out to its nProbe nearest cells
     // — the rank window runs over the nQueries × nCells QUERY subset,
     // never the corpus
-    queryProbes(e0, nCells, nQueries).where(col("crk") <= nProbe)
+    val probes = queryProbes(e0, nCells, nQueries).where(col("crk") <= nProbe)
       .select(col("vec_id").as("qid"), col("embedding"), col("nrm"), col("cid"))
-      .as("a")
-      // a neighbor appears at most once per query (it lives in one cell)
-      .join(assigned.as("b"), col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("query_id"), col("a.cid").as("cell"),
-              col("b.vec_id").as("neighbor_id"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
+    probeJoin(probes, assigned, probeCols = Seq(col("a.cid").as("cell")))
   }
+
+  /** The IVF probe join: `probes` (qid, embedding, nrm, cid, …) ⋈ the
+    * inverted `lists` (vec_id, embedding, nrm, cid, …) on `cid`, the
+    * query itself excluded, as (query_id, `probeCols` of `a`,
+    * neighbor_id, `listCols` of `b`, cos). A neighbour lives in one
+    * cell, so it appears at most once per query. */
+  private def probeJoin(probes: DataFrame, lists: DataFrame,
+      probeCols: Seq[Column] = Nil, listCols: Seq[Column] = Nil): DataFrame =
+    probes.as("a")
+      .join(lists.as("b"), col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
+      .select((col("a.qid").as("query_id") +: probeCols) ++
+              (col("b.vec_id").as("neighbor_id") +: listCols) :+ cosAB.as("cos"): _*)
 
   /** Every (query, cell) scored and rank-ordered per query — the probe
     * preference list. The query subset is filtered BEFORE the centroid
@@ -155,16 +179,22 @@ object Similarity extends QueryFamily {
   /** Probe list against a decoupled quantizer (see [[cellAssignTo]]). */
   private[graft] def queryProbesTo(e0: DataFrame, centSrc: DataFrame, nCells: Int,
                             nQueries: Int): DataFrame = {
+    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid").asc)
     val e = withNorm(e0.select("vec_id", "embedding"))
+    centroidScored(e.where(col("vec_id") < nQueries), centSrc, nCells)
+      .withColumn("crk", row_number().over(wAssign))
+  }
+
+  /** `e` (vec_id, embedding, nrm) × the broadcast `vec_id < nCells`
+    * centroids of `centSrc`, adding (cid, csim): the probe list ranks
+    * it per query, the cell assignment takes its argmax per vector. */
+  private def centroidScored(e: DataFrame, centSrc: DataFrame, nCells: Int): DataFrame = {
     val cents = broadcast(withNorm(centSrc.select("vec_id", "embedding"))
       .where(col("vec_id") < nCells)
       .select(col("vec_id").as("cid"), col("embedding"), col("nrm")))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid").asc)
-    e.where(col("vec_id") < nQueries).as("b").join(cents.as("a"))
+    e.as("b").join(cents.as("a"))
       .select(col("b.vec_id").as("vec_id"), col("b.embedding").as("embedding"),
-              col("b.nrm").as("nrm"), col("cid"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("csim"))
-      .withColumn("crk", row_number().over(wAssign))
+              col("b.nrm").as("nrm"), col("cid"), cosAB.as("csim"))
   }
 
   /** Frame-parameterized IVF tier: the scale test widens cells to
@@ -177,13 +207,10 @@ object Similarity extends QueryFamily {
   /** The top-K ranking over an [[ivfScored]] candidate frame — split
     * out so the scale spec can cache one candidate pass and reuse it
     * for both the volume count and the ranked answer. */
-  private[graft] def rankIvf(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+  private[graft] def rankIvf(scored: DataFrame, k: Int): DataFrame =
+    TopKByScore.windowRanked(scored, "query_id", k, col("cos").desc, col("neighbor_id"))
       .select(col("query_id"), col("cell"), col("rk"), col("neighbor_id"), col("cos"))
       .orderBy("query_id", "rk")
-  }
 
   val knnIvfSql: String =
     s"""WITH e AS (
@@ -242,12 +269,7 @@ object Similarity extends QueryFamily {
     val qpref = queryProbes(e0, nCells, nQueries)
       .select(col("vec_id").as("qid"), col("embedding"), col("nrm"),
               col("cid"), col("crk").as("pn"))
-    val cand = qpref.as("a")
-      .join(assigned.as("b"),
-            col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("qid"), col("a.pn").as("pn"),
-              col("b.vec_id").as("nid"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
+    val cand = probeJoin(qpref, assigned, probeCols = Seq(col("a.pn").as("pn")))
       .localCheckpoint() // read twice: truth top-K + the pn histogram
     // The r7 formulation exploded every candidate to all probe depths
     // >= its pn and ranked a top-K window PER (query, depth) —
@@ -262,10 +284,10 @@ object Similarity extends QueryFamily {
     // accumulated over a generated probe spine by a broadcast
     // triangle join — no explode, no per-depth window, identical
     // output. Truth itself comes from the bounded TopKByScore
-    // aggregate (same (cos DESC, nid ASC) order as the old window),
-    // carrying pn through as the extra slot.
-    val truth = graft.functions.TopKByScore.rows(cand, Seq("qid"),
-        k, col("cos"), col("nid"), col("pn").cast("long"))
+    // aggregate (same (cos DESC, neighbor_id ASC) order as the old
+    // window), carrying pn through as the extra slot.
+    val truth = TopKByScore.rows(cand, Seq("query_id"),
+        k, col("cos"), col("neighbor_id"), col("pn").cast("long"))
       .select(col("extra").cast("int").as("pn"))
     val candHist = cand.groupBy("pn").agg(count(lit(1)).as("cnt"))
     val hitHist = truth.groupBy("pn").agg(count(lit(1)).as("hcnt"))
@@ -412,26 +434,30 @@ object Similarity extends QueryFamily {
     // (TopKByScore keeps (score DESC, id ASC) = (dist ASC, id ASC),
     // the oracle's row_number order); dist ≤ dims·(2·KmScale)² ≈
     // 2.6e8 ≪ 2⁵³, so the double negation is exact
-    val shortTop = graft.functions.TopKByScore.ranked(adc, Seq("query_id"), rerank,
+    val shortTop = TopKByScore.ranked(adc, Seq("query_id"), rerank,
         -col("adc_dist_units").cast("double"), col("neighbor_id"), col("adc_dist_units"))
       .select(col("query_id"), col("rk").as("adc_rk"),
         col("id").as("neighbor_id"), col("extra").as("adc_dist_units"))
-    val exact = shortTop
+    val exact = exactL2(shortTop, es, nQueries, "adc_rk", "adc_dist_units")
+    TopKByScore.windowRanked(exact, "query_id", k, col("exact_dist_units").asc, col("neighbor_id"))
+      .select("query_id", "rk", "neighbor_id", "adc_rk", "adc_dist_units",
+        "exact_dist_units")
+      .orderBy("query_id", "rk")
+  }
+
+  /** Exact integer L2 (`exact_dist_units`) of each (query_id,
+    * neighbor_id) in `pairs` over quantized rows `es`, the query rows
+    * broadcast; `carry` names further `pairs` columns to keep. */
+  private def exactL2(pairs: DataFrame, es: DataFrame, nQueries: Int,
+      carry: String*): DataFrame =
+    pairs
       .join(es.select(col("vec_id").as("neighbor_id"), col("pos"),
         col("q").as("nq")), "neighbor_id")
       .join(broadcast(es.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("pos"), col("q").as("qq"))),
         Seq("query_id", "pos"))
-      .groupBy("query_id", "neighbor_id", "adc_rk", "adc_dist_units")
+      .groupBy("query_id", "neighbor_id" +: carry: _*)
       .agg(sum((col("nq") - col("qq")) * (col("nq") - col("qq"))).as("exact_dist_units"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("exact_dist_units").asc, col("neighbor_id").asc)
-    exact.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
-      .select("query_id", "rk", "neighbor_id", "adc_rk", "adc_dist_units",
-        "exact_dist_units")
-      .orderBy("query_id", "rk")
-  }
 
   /** Oracle: the knnIvf cell CTEs + the shared PQ-training chain +
     * shortlist-scoped ADC + the two-stage re-rank, all exact
@@ -647,15 +673,8 @@ object Similarity extends QueryFamily {
       k: Int, codesOpt: Option[DataFrame] = None): DataFrame = {
     val adc = ivfPqAdcFrom(e0, es, cent, nCells, nProbe, nQueries, codesOpt)
       .localCheckpoint() // three consumers: exact pass, truth attach, rank join
-    val exactAll = adc.select("query_id", "neighbor_id")
-      .join(es.select(col("vec_id").as("neighbor_id"), col("pos"),
-        col("q").as("nq")), "neighbor_id")
-      .join(broadcast(es.where(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"), col("pos"), col("q").as("qq"))),
-        Seq("query_id", "pos"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum((col("nq") - col("qq")) * (col("nq") - col("qq"))).as("exact_dist_units"))
-    val truth = graft.functions.TopKByScore.rows(exactAll, Seq("query_id"), k,
+    val exactAll = exactL2(adc.select("query_id", "neighbor_id"), es, nQueries)
+    val truth = TopKByScore.rows(exactAll, Seq("query_id"), k,
         -col("exact_dist_units").cast("double"), col("neighbor_id"), lit(0L))
       .select(col("query_id"), col("id").as("neighbor_id"))
     val truthAdc = adc.join(broadcast(truth), Seq("query_id", "neighbor_id"))
@@ -673,13 +692,20 @@ object Similarity extends QueryFamily {
       .agg(count(lit(1)).as("adc_rk"))
     val hist = ranks.where(col("adc_rk") <= rerank)
       .groupBy("adc_rk").agg(count(lit(1)).as("hcnt"))
-    val spine = e0.sparkSession.range(1, rerank + 1L).select(col("id").as("rerank"))
-    spine.join(broadcast(hist), col("adc_rk") <= col("rerank"), "left")
-      .groupBy("rerank")
-      .agg(coalesce(sum("hcnt"), lit(0L)).as("n_hits"))
+    cumulative(hist, "adc_rk", "hcnt", rerank, "rerank", "n_hits")
       .withColumn("recall_bp", expr(s"(n_hits * 10000) div ${nQueries.toLong * k}"))
       .orderBy("rerank")
   }
+
+  /** Cumulative depth curve: per `depth` 1..`n`, the sum of the
+    * broadcast histogram's `cnt` over `rank <= depth` as `out` (0 where
+    * none). */
+  private def cumulative(hist: DataFrame, rank: String, cnt: String,
+      n: Int, depth: String, out: String): DataFrame =
+    hist.sparkSession.range(1, n + 1L).select(col("id").as(depth))
+      .join(broadcast(hist), col(rank) <= col(depth), "left")
+      .groupBy(depth)
+      .agg(coalesce(sum(cnt), lit(0L)).as(out))
 
   /** Oracle: the composed chain's CTEs + window-rank formulations of
     * the same truth/rank/cumulative-histogram pipeline. */
@@ -803,11 +829,7 @@ object Similarity extends QueryFamily {
       .join(e0.select(col("vec_id"), col("label")), "vec_id")
     val probes = queryProbes(e0, nCells, nQueries).where(col("crk") <= nProbe)
       .select(col("vec_id").as("qid"), col("embedding"), col("nrm"), col("cid"))
-    probes.as("a").join(assigned.as("b"),
-        col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("query_id"), col("b.vec_id").as("neighbor_id"),
-              col("b.label").as("label"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
+    probeJoin(probes, assigned, listCols = Seq(col("b.label").as("label")))
   }
 
   /** Exact filtered ground truth, one row per query: n_match
@@ -817,16 +839,11 @@ object Similarity extends QueryFamily {
     * streams past it). */
   private[graft] def filteredTruthFrom(e0: DataFrame, nQueries: Int, k: Int,
                                        label: Int): DataFrame = {
-    val e = withNorm(e0.select("vec_id", "embedding", "label"))
-    val q = broadcast(e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding"), col("nrm")))
-    q.as("a").join(e.where(col("label") === label).as("b"),
-        col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("query_id"), col("b.vec_id").as("neighbor_id"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
+    bruteScored(withNorm(e0.select("vec_id", "embedding", "label")), nQueries,
+        _.where(col("label") === label))
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_match"),
-           graft.functions.TopKByScore.topK(
+           TopKByScore.topK(
              k, col("cos"), col("neighbor_id"), lit(0L)).as("tk"))
       .withColumn("n_truth", least(lit(k.toLong), col("n_match")))
   }
@@ -845,7 +862,7 @@ object Similarity extends QueryFamily {
     val pre = cand.where(col("label") === label)
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_scored"),
-           graft.functions.TopKByScore.topK(
+           TopKByScore.topK(
              k, col("cos"), col("neighbor_id"), lit(0L)).as("tk"))
     val preOut = pre.select(col("query_id"), col("n_scored"), explode(col("tk")).as("t"))
       .select(col("query_id"), col("n_scored"), col("t.id").as("neighbor_id"))
@@ -858,7 +875,7 @@ object Similarity extends QueryFamily {
     // slot), predicate applied to the survivors after
     val post = cand.groupBy("query_id")
       .agg(count(lit(1)).as("n_scored"),
-           graft.functions.TopKByScore.topK(
+           TopKByScore.topK(
              k, col("cos"), col("neighbor_id"), col("label").cast("long")).as("tk"))
     val postOut = post.select(col("query_id"), col("n_scored"), explode(col("tk")).as("t"))
       .select(col("query_id"), col("n_scored"), col("t.id").as("neighbor_id"),
@@ -881,9 +898,7 @@ object Similarity extends QueryFamily {
               coalesce(col("n_scored"), lit(0L)).as("n_scored"),
               coalesce(col("n_results"), lit(0L)).as("n_results"),
               coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-      .withColumn("recall_bp",
-        when(col("n_truth") > 0, expr("(n_hits * 10000) div n_truth"))
-          .otherwise(lit(0L)))
+      .withColumn("recall_bp", basisPoints("n_hits", "n_truth"))
       .orderBy("mode", "query_id")
   }
 
@@ -1013,7 +1028,7 @@ object Similarity extends QueryFamily {
     val truthSet = truthAgg.select(col("query_id"), explode(col("tk")).as("t"))
       .select(col("query_id"), col("t.id").as("neighbor_id"))
     val totTruth = truthAgg.agg(sum("n_truth").as("total_truth"))
-    val kept = graft.functions.TopKByScore.ranked(cand, Seq("query_id"), bufMax,
+    val kept = TopKByScore.ranked(cand, Seq("query_id"), bufMax,
         col("cos"), col("neighbor_id"), col("label").cast("long"))
       .select(col("query_id"), col("rk"), col("id").as("neighbor_id"), col("extra").as("lbl"))
       .where(col("lbl") === label)
@@ -1022,17 +1037,11 @@ object Similarity extends QueryFamily {
     val hitHist = kept
       .join(broadcast(truthSet), Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("rk").agg(count(lit(1)).as("hcnt"))
-    val spine = e0.sparkSession.range(1, bufMax + 1L)
-      .select(col("id").as("buffer"))
-    val kc = spine.join(broadcast(keptHist), col("rk") <= col("buffer"), "left")
-      .groupBy("buffer").agg(coalesce(sum("kcnt"), lit(0L)).as("n_kept"))
-    val hc = spine.join(broadcast(hitHist), col("rk") <= col("buffer"), "left")
-      .groupBy("buffer").agg(coalesce(sum("hcnt"), lit(0L)).as("n_hits"))
+    val kc = cumulative(keptHist, "rk", "kcnt", bufMax, "buffer", "n_kept")
+    val hc = cumulative(hitHist, "rk", "hcnt", bufMax, "buffer", "n_hits")
     kc.join(hc, Seq("buffer"))
       .crossJoin(broadcast(totTruth))
-      .withColumn("recall_bp",
-        when(col("total_truth") > 0, expr("(n_hits * 10000) div total_truth"))
-          .otherwise(lit(0L)))
+      .withColumn("recall_bp", basisPoints("n_hits", "total_truth"))
       .select("buffer", "n_kept", "n_hits", "recall_bp")
       .orderBy("buffer")
   }
@@ -1162,8 +1171,7 @@ object Similarity extends QueryFamily {
       .join(drift, Seq("cid"), "left")
       .select(col("cid").as("cell"), col("n_base"), col("n_new"),
               (col("n_base") + col("n_new")).as("n_total"),
-              when(col("n_base") > 0, expr("(n_new * 10000) div n_base"))
-                .otherwise(lit(0L)).as("growth_bp"),
+              basisPoints("n_new", "n_base").as("growth_bp"),
               coalesce(col("n_drift"), lit(0L)).as("n_drift"))
       .orderBy("cell")
   }
@@ -1239,33 +1247,35 @@ object Similarity extends QueryFamily {
       frozenAssign(e0, base, nCells).localCheckpoint())
     val truth = knnBruteFrom(e0, nQueries, k)
       .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint() // two hit joins + the denominator read it
-    val truthN = truth.agg(count(lit(1)).as("n_truth"))
-    def scoredOn(assigned: DataFrame, centSrc: DataFrame): DataFrame =
-      queryProbesTo(e0, centSrc, nCells, nQueries).where(col("crk") <= nProbe)
+    def topOn(assigned: DataFrame, centSrc: DataFrame): DataFrame = {
+      val probes = queryProbesTo(e0, centSrc, nCells, nQueries).where(col("crk") <= nProbe)
         .select(col("vec_id").as("qid"), col("embedding"), col("nrm"), col("cid"))
         .localCheckpoint() // ≤ nQueries·nProbe rows; severs the probe spine
-        .as("a")
-        .join(assigned.as("b"),
-              col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-        .select(col("a.qid").as("query_id"), col("b.vec_id").as("neighbor_id"),
-                round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    def hitsOf(scored: DataFrame, tag: String): DataFrame =
-      graft.functions.TopKByScore.rows(scored, Seq("query_id"),
+      TopKByScore.rows(probeJoin(probes, assigned), Seq("query_id"),
           k, col("cos"), col("neighbor_id"), lit(0L))
         .select(col("query_id"), col("id").as("neighbor_id"))
-        .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(tag).as("variant"), col("n_hits"))
+    }
     val rebuilt = rebuiltOpt.getOrElse(
       cellAssignFrom(e0, nCells).localCheckpoint()) // rebuild arm, once
-    hitsOf(scoredOn(frozen, base), "frozen")
-      .unionByName(hitsOf(scoredOn(rebuilt, e0), "rebuilt"))
-      .crossJoin(broadcast(truthN))
+    recallLedger(truth, Seq("query_id", "neighbor_id"),
+      "frozen" -> topOn(frozen, base), "rebuilt" -> topOn(rebuilt, e0))
+  }
+
+  /** Recall ledger: one (variant, n_truth, n_hits, recall_bp) row per
+    * named arm, hits being the arm's `keys` found in the broadcast
+    * `truth` (checkpointed: every hit join and the denominator read it). */
+  private def recallLedger(truth: DataFrame, keys: Seq[String],
+      arms: (String, DataFrame)*): DataFrame = {
+    val t = truth.localCheckpoint()
+    arms.map { case (tag, got) =>
+      got.select(keys.map(col): _*)
+        .join(broadcast(t), keys, "left_semi")
+        .agg(count(lit(1)).as("n_hits"))
+        .select(lit(tag).as("variant"), col("n_hits"))
+    }.reduce(_ unionByName _)
+      .crossJoin(broadcast(t.agg(count(lit(1)).as("n_truth"))))
       .select(col("variant"), col("n_truth"), col("n_hits"))
-      .withColumn("recall_bp",
-        when(col("n_truth") > 0, expr("(n_hits * 10000) div n_truth"))
-          .otherwise(lit(0L)))
+      .withColumn("recall_bp", basisPoints("n_hits", "n_truth"))
       .orderBy("variant")
   }
 
@@ -1386,13 +1396,7 @@ object Similarity extends QueryFamily {
     val probes = queryProbesTo(Tables.embeddings(spark, sfDir), cents, NCells, NQueries)
       .where(col("crk") <= NProbe)
       .select(col("vec_id").as("qid"), col("embedding"), col("nrm"), col("cid"))
-    val scored = probes.as("a")
-      .join(lists.as("b"),
-            col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("query_id"), col("a.cid").as("cell"),
-              col("b.vec_id").as("neighbor_id"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    rankIvf(scored, K)
+    rankIvf(probeJoin(probes, lists, probeCols = Seq(col("a.cid").as("cell"))), K)
   }
 
   /** Catalog name of the COMPACTED ingest index (one table: the
@@ -1436,17 +1440,7 @@ object Similarity extends QueryFamily {
   private[graft] def ivfServeIngestTwin(spark: SparkSession, sfDir: String): DataFrame = {
     val e0 = Tables.embeddings(spark, sfDir)
     val base = e0.where(!isIngestBatch)
-    val assigned = cellAssignTo(e0, base, NCells)
-    val probes = queryProbesTo(e0, base, NCells, NQueries)
-      .where(col("crk") <= NProbe)
-      .select(col("vec_id").as("qid"), col("embedding"), col("nrm"), col("cid"))
-    val scored = probes.as("a")
-      .join(assigned.as("b"),
-            col("a.cid") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-      .select(col("a.qid").as("query_id"), col("a.cid").as("cell"),
-              col("b.vec_id").as("neighbor_id"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    rankIvf(scored, K)
+    ivfFlatRetrieve(spark, sfDir, cellAssignTo(e0, base, NCells), base)
   }
 
   /** Oracle: [[knnIvfSql]]'s multi-probe search with the quantizer
@@ -1590,13 +1584,6 @@ object Similarity extends QueryFamily {
     val names = pqIngestNames(sfDir)
     val es = Training.pqSub(spark, sfDir) // memoized full-corpus quantized rows
     val truth = pqExactTruth(es, Training.PqNQueries, Training.PqTopK)
-      .localCheckpoint() // two hit joins + the denominator read it
-    val truthN = truth.agg(count(lit(1)).as("n_truth"))
-    def hitsOf(adc: DataFrame, tag: String): DataFrame =
-      adc.select(col("query_id"), col("vec_id"))
-        .join(broadcast(truth), Seq("query_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(tag).as("variant"), col("n_hits"))
     val frozen = Training.pqAdcFrom(
       spark.table(pqIngestNames(sfDir)("vectors_q")),
       spark.table(names("codebooks")),
@@ -1605,13 +1592,8 @@ object Similarity extends QueryFamily {
     val retrained = Training.pqAdcFrom(es, Training.pqCodebooks(spark, sfDir),
       Training.PqNQueries, Training.PqTopK,
       codes = Some(Training.pqCodes(spark, sfDir)))
-    hitsOf(frozen, "frozen").unionByName(hitsOf(retrained, "retrained"))
-      .crossJoin(broadcast(truthN))
-      .select(col("variant"), col("n_truth"), col("n_hits"))
-      .withColumn("recall_bp",
-        when(col("n_truth") > 0, expr("(n_hits * 10000) div n_truth"))
-          .otherwise(lit(0L)))
-      .orderBy("variant")
+    recallLedger(truth, Seq("query_id", "vec_id"),
+      "frozen" -> frozen, "retrained" -> retrained)
   }
 
   /** Exact integer-L2 top-K over quantized rows for the lowest
@@ -1625,7 +1607,7 @@ object Similarity extends QueryFamily {
       .where(col("query_id") =!= col("vec_id"))
       .groupBy("query_id", "vec_id")
       .agg(sum((col("nq") - col("qq")) * (col("nq") - col("qq"))).as("dist"))
-    graft.functions.TopKByScore.rows(dists, Seq("query_id"), k,
+    TopKByScore.rows(dists, Seq("query_id"), k,
         -col("dist").cast("double"), col("vec_id"), lit(0L))
       .select(col("query_id"), col("id").as("vec_id"))
   }
@@ -1814,11 +1796,8 @@ object Similarity extends QueryFamily {
             col("a.label") =!= col("b.label"))
       .select(col("a.vec_id").as("anchor_id"), col("a.label").as("anchor_label"),
               col("b.vec_id").as("negative_id"), col("b.label").as("negative_label"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cos").desc, col("negative_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= HardNegK)
+              cosAB.as("cos"))
+    TopKByScore.windowRanked(scored, "anchor_id", HardNegK, col("cos").desc, col("negative_id"))
       .select(col("anchor_id"), col("rk"), col("negative_id"),
               col("anchor_label"), col("negative_label"), col("cos"))
       .orderBy("anchor_id", "rk")
@@ -1904,12 +1883,8 @@ object Similarity extends QueryFamily {
   private[graft] def cellAssignTo(e0: DataFrame, centSrc: DataFrame,
                                   nCells: Int): DataFrame = {
     val e = withNorm(e0.select("vec_id", "embedding"))
-    val cents = broadcast(withNorm(centSrc.select("vec_id", "embedding"))
-      .where(col("vec_id") < nCells)
-      .select(col("vec_id").as("cid"), col("embedding"), col("nrm")))
-    val best = e.as("b").join(cents.as("a"))
-      .select(col("b.vec_id").as("vec_id"), col("cid"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("csim"))
+    val best = centroidScored(e, centSrc, nCells)
+      .select("vec_id", "cid", "csim")
       .groupBy("vec_id")
       .agg(max(struct(col("csim"), (-col("cid")).as("ncid"))).as("__m"))
       .select(col("vec_id"), (-col("__m.ncid")).as("cid"))
@@ -1935,11 +1910,8 @@ object Similarity extends QueryFamily {
       .join(assigned.as("b"),
             col("a.cid") === col("b.cid") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.cid").as("cell"), col("a.vec_id").as("src"),
-              col("b.vec_id").as("dst"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    val wK = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst").asc)
-    val knn = scored.withColumn("rk", row_number().over(wK))
-      .where(col("rk") <= k)
+              col("b.vec_id").as("dst"), cosAB.as("cos"))
+    val knn = TopKByScore.windowRanked(scored, "src", k, col("cos").desc, col("dst"))
       // rank on the 6dp-rounded cosine, summarize in exact fp units
       .select(col("cell"), col("src"), col("dst"),
               round(col("cos") * 1e6).cast("long").as("cos_fp"))
@@ -2090,9 +2062,7 @@ object Similarity extends QueryFamily {
               col("datasetB.vec_id").as("neighbor_id"),
               round(col("dist"), 6).as("dist"))
       .where(col("query_id") =!= col("neighbor_id"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("neighbor_id").asc)
-    joined.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= K)
+    TopKByScore.windowRanked(joined, "query_id", K, col("dist").asc, col("neighbor_id"))
       .select(col("query_id"), col("rk"), col("neighbor_id"), col("dist"))
       .orderBy("query_id", "rk")
   }
@@ -2149,11 +2119,8 @@ object Similarity extends QueryFamily {
     val scored = cands
       .join(full.select(col("vec_id").as("qid"), col("embedding"), col("nrm")).as("a"), "qid")
       .join(full.select(col("vec_id").as("nid"), col("embedding"), col("nrm")).as("b"), "nid")
-      .select(col("qid").as("query_id"), col("nid").as("neighbor_id"),
-              round(dotAB / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= K)
+      .select(col("qid").as("query_id"), col("nid").as("neighbor_id"), cosAB.as("cos"))
+    TopKByScore.windowRanked(scored, "query_id", K, col("cos").desc, col("neighbor_id"))
       .select(col("query_id"), col("rk"), col("neighbor_id"), col("cos"))
       .orderBy("query_id", "rk")
   }

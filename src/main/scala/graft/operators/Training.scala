@@ -1154,14 +1154,12 @@ object Training extends QueryFamily {
     val cd = codes.getOrElse(pqCodesOf(es, cent))
     val qIds = es.select("vec_id").distinct().orderBy("vec_id").limit(nQueries)
     val lut = lutOf(es.join(broadcast(qIds), "vec_id"), cent)
-    cd.join(broadcast(lut), Seq("sub", "cluster"))
+    val adc = cd.join(broadcast(lut), Seq("sub", "cluster"))
       .where(col("query_id") =!= col("vec_id"))
       .groupBy("query_id", "vec_id")
       .agg(sum("d").as("adc_dist_units"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("adc_dist_units").asc, col("vec_id").asc)))
-      .where(col("rk") <= topK)
+    graft.functions.TopKByScore.windowRanked(adc, "query_id", topK,
+        col("adc_dist_units").asc, col("vec_id"))
       .select("query_id", "rk", "vec_id", "adc_dist_units")
       .orderBy("query_id", "rk")
   }

@@ -241,6 +241,25 @@ class LlmPipelineSpec extends AnyFunSuite with SparkFixture {
     ivf.foreach { case (q, c) => assert(c <= bf(q) + 1e-9, s"query $q: IVF $c > BF ${bf(q)}") }
   }
 
+  test("IVF tier is partitioning-independent: 1 and 8 input partitions give identical rows") {
+    import operators.Similarity._
+    val e = Tables.embeddings(spark, sfTest)
+    // rows compared exactly, as sorted sequences (not sets): a
+    // duplicated or dropped row, or any value that moved, fails
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+      df.collect().toSeq.sortBy(_.toString)
+    def each(q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+      val one = rows(q(e.repartition(1)))
+      val eight = rows(q(e.repartition(8)))
+      assert(one.nonEmpty)
+      assert(one === eight)
+      assert(one === rows(q(e)))
+    }
+    each(knnIvfFrom(_, NCells, NProbe, NQueries, K))
+    each(ivfRecallCurveFrom(_, NCells, NQueries, K))
+    each(knnFilteredFrom(_, NCells, NProbe, NQueries, K, FilterLabel))
+  }
+
   test("IVF and LSH recall@K vs brute force is reported and nontrivial") {
     def topSets(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "neighbor_id").collect()

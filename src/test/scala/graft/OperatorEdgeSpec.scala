@@ -229,6 +229,31 @@ class OperatorEdgeSpec extends AnyFunSuite with SparkFixture {
     assert(m3(0).getAs[Long]("src") === 0L && m3(0).getAs[Long]("dst") === 1L)
   }
 
+  // Spark runs with ANSI on, so a ledger whose basis-point column lost
+  // its zero-denominator guard throws DIVIDE_BY_ZERO; the curve's empty
+  // truth total is NULL, so there the unguarded column reads NULL
+  test("IVF ingest recall ledger with no queries: two zero rows, no division by zero") {
+    import operators.Similarity._
+    val e = Tables.embeddings(spark, sfTest)
+    val out = ivfIngestRecallFrom(e, e.where(col("vec_id") % 5 =!= 0), NCells, NProbe,
+        nQueries = 0, k = K)
+      .select("variant", "n_truth", "n_hits", "recall_bp").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(out === Seq(("frozen", 0L, 0L, 0L), ("rebuilt", 0L, 0L, 0L)))
+  }
+
+  test("filtered post-filter curve for a label no vector carries: 0 bp at every buffer") {
+    import operators.Similarity._
+    val e = Tables.embeddings(spark, sfTest)
+    val absent = 1000003
+    assert(e.where(col("label") === absent).isEmpty)
+    // getLong, not getAs[Long]: getAs unboxes a NULL to 0
+    val out = knnFilteredCurveFrom(e, NCells, NProbe, NQueries, K, absent, FilterBufMax)
+      .select("buffer", "n_kept", "n_hits", "recall_bp").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(out === (1L to FilterBufMax.toLong).map(b => (b, 0L, 0L, 0L)))
+  }
+
   test("span corruption boundaries: minimum-length doc gets exactly one span; shorter docs drop") {
     val session = spark
     import session.implicits._

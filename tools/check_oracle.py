@@ -24,9 +24,10 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 # DuckDB's default memory limit is 80% of RAM: uncapped, q_kcore's oracle
 # grew to 8.7 GB RSS at sf0.01 and was OOM-killed beside two JVMs on a
-# 16 GB host. 4 GB runs all 318 oracles at sf0.001 (3 GB does not:
-# q_kcore). At sf0.01 q_kcore's oracle fails with DuckDB's out-of-memory
-# error under a 4, 6 or 8 GB cap alike, and is reported as a failure.
+# 16 GB host. That was q_kcore's unrolled peel re-expanding its
+# unmaterialized round CTEs once per reader; with every round CTE
+# `AS MATERIALIZED` it needs under 1 GB at sf0.1, and 4 GB runs all 318
+# oracles at sf0.001 and sf0.01.
 MEMORY_LIMIT = "4GB"
 
 
