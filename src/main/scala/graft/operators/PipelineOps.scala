@@ -514,41 +514,25 @@ object PipelineOps extends QueryFamily {
     * that cross a chunk boundary (the ones a loader would split or
     * mask across). Everything is integer arithmetic on a running token
     * count, so both engines agree exactly. Scale shape (r8): the
-    * per-source running token sum rides the two-level coarse prefix —
-    * within-bucket prefixes partition by (source, doc_id coarse
-    * bucket), the ≤1024 bucket offsets by source — so packing keeps
-    * EXACT global doc order per source while no task ever holds a
-    * whole source's stream (the earlier note suggested a hash
-    * sub-shard at 100 TB, which would have CHANGED the packing; the
-    * coarse prefix preserves it).
+    * per-source running token sum is [[RankPrefix.before]] keyed by
+    * source — within-cell prefixes partition by (source, doc_id cell),
+    * the cell offsets come from a per-source broadcast triangle
+    * join — so packing keeps EXACT global doc order per source while
+    * no task ever holds a whole source's stream (the earlier note
+    * suggested a hash sub-shard at 100 TB, which would have CHANGED
+    * the packing; the prefix preserves it).
     */
   def seqPack(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // r10 rescan sever: the slim token-count frame feeds the id-bounds
-    // pass, the bucket offsets and the final packing join — severed
-    // once so the tokenize scan runs once (documents ×4 in the r9 plan)
+    // r10 rescan sever: the slim token-count frame feeds the prefix's
+    // id bounds, cell totals and running sums — severed once so the
+    // tokenize scan runs once (documents ×4 in the r9 plan)
     val t = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
         size(split(expr(TextNorm.normSpark), " "))
           .cast("long").as("n_tok"))
       .localCheckpoint()
-    val mm = t.agg(min("doc_id").as("__mn"), max("doc_id").as("__mx"))
-    val b = t.crossJoin(broadcast(mm))
-      .withColumn("__w", greatest(lit(1L),
-        ((col("__mx") - col("__mn")) / lit(1024L)).cast("long") + lit(1L)))
-      .withColumn("__b", ((col("doc_id") - col("__mn")) / col("__w")).cast("long"))
-      .drop("__mn", "__mx", "__w")
-    val wIn = Window.partitionBy("source", "__b").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wPre = Window.partitionBy("source").orderBy("__b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = b.groupBy("source", "__b").agg(sum("n_tok").as("__bt"))
-      .withColumn("__off", coalesce(sum("__bt").over(wPre), lit(0L)))
-      .select("source", "__b", "__off")
-    b.join(broadcast(offs), Seq("source", "__b"))
-      .withColumn("cum_before",
-        col("__off") + coalesce(sum("n_tok").over(wIn), lit(0L)))
-      .drop("__b", "__off")
+    RankPrefix.before(t, Seq("source"), "doc_id", "n_tok")
+      .withColumnRenamed("n_tok_before", "cum_before")
       .withColumn("seq_id", floor(col("cum_before") / SeqLen))
       .withColumn("spans",
         (floor((col("cum_before") + col("n_tok") - 1) / SeqLen) =!= col("seq_id")).cast("long"))

@@ -2339,7 +2339,7 @@ object Recsys extends QueryFamily {
     * weighted sum collapse to the per-VALUE closed form
     * x·Σ_{i=lo..hi} i = x·cnt·(lo+hi)/2 over the exposure-count
     * histogram — rank intervals come from
-    * [[Relational.coarseRankLo]]'s two-level prefix, so no global
+    * [[RankPrefix.before]]'s two-level prefix, so no global
     * window touches the catalog (the r7-era catalog-wide row_number
     * is retired; cnt·(lo+hi) is always even, the `div 2` is exact).
     */
@@ -2349,10 +2349,8 @@ object Recsys extends QueryFamily {
     val cat = Tables.part(spark, sfDir).select(col("p_partkey"))
     val full = cat.join(expo, cat("p_partkey") === expo("item_id"), "left")
       .select(col("p_partkey"), coalesce(col("n"), lit(0L)).as("x"))
-    val byVal = full.groupBy(col("x").as("__k")).agg(count(lit(1)).as("__cnt"))
-    Relational.coarseRankLo(byVal)
-      .join(byVal, "__k")
-      .select(col("__k").as("x"), col("__cnt").as("cnt"), col("__lo").as("lo"))
+    RankPrefix.before(full.groupBy("x").agg(count(lit(1)).as("cnt")), Nil, "x", "cnt")
+      .select(col("x"), col("cnt"), (col("cnt_before") + 1L).as("lo"))
       .withColumn("ix", expr("x * ((cnt * (lo + lo + cnt - 1)) div 2)"))
       .agg(sum("cnt").as("n_catalog"),
            sum(when(col("x") > 0, col("cnt")).otherwise(0L)).as("n_recommended"),

@@ -926,51 +926,11 @@ object Relational extends QueryFamily {
       |ORDER BY n_above DESC, o_custkey ASC
       |LIMIT 100""".stripMargin
 
-  /** Coarse-range bucket count for the distributed exact-rank quartile
-    * scoring below: bounds the broadcast prefix table regardless of
-    * the key domain's spread. */
-  private val RfmCoarseBuckets = 1024L
-
-  /** Exact global rank INTERVALS per distinct key value, computed
-    * without a single-partition global sort. Input: a `(__k LONG,
-    * __cnt LONG)` value histogram (one parallel shuffle upstream);
-    * output `(__k, __lo)` where `__lo` is the 1-based rank of the
-    * first row holding value `__k` under a global ASC sort. The
-    * two-level prefix idea of [[Stats.equidepthHist]]:
-    *
-    *  1. deterministic coarse range bucket floor((key−min)/width) with
-    *     width sized so ≤ [[RfmCoarseBuckets]] buckets exist whatever
-    *     the domain spread; within-coarse cumulative counts run as
-    *     PARTITIONED windows, and the ≤1k coarse totals get their
-    *     prefix sum via a broadcast triangle join (b.coarse < a.coarse)
-    *     — no SinglePartition exchange anywhere, no driver collect.
-    */
-  private[graft] def coarseRankLo(byVal: DataFrame): DataFrame = {
-    val mm = byVal.agg(min("__k").as("__mn"), max("__k").as("__mx"))
-    val bv = byVal.crossJoin(broadcast(mm))
-      .withColumn("__w",
-        greatest(lit(1L),
-          ((col("__mx") - col("__mn")) / lit(RfmCoarseBuckets)).cast("long") + lit(1L)))
-      .withColumn("__coarse", ((col("__k") - col("__mn")) / col("__w")).cast("long"))
-      .select("__k", "__cnt", "__coarse")
-    val wIn = Window.partitionBy("__coarse").orderBy("__k")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = bv.withColumn("__cum", sum("__cnt").over(wIn))
-    val totals = bv.groupBy("__coarse").agg(sum("__cnt").as("__tot"))
-    val offs = totals.as("a")
-      .join(broadcast(totals.as("b")), col("b.__coarse") < col("a.__coarse"), "left")
-      .groupBy(col("a.__coarse").as("__coarse"))
-      .agg(coalesce(sum(col("b.__tot")), lit(0L)).as("__off"))
-    local.join(broadcast(offs), Seq("__coarse"))
-      .withColumn("__lo", col("__off") + col("__cum") - col("__cnt") + 1)
-      .select("__k", "__lo")
-  }
-
   /** 0-based dense index of a frame of long keys under key-ASC order
     * — `row_number() OVER (ORDER BY key) - 1` semantics over the
     * DISTINCT keys, with no global window: the groupBy collapses
-    * duplicates to one slot of weight 1, so the rank interval start
-    * from [[coarseRankLo]] IS the key's dense index even on a dirty
+    * duplicates to one slot of weight 1, so the prefix from
+    * [[RankPrefix.before]] IS the key's dense index even on a dirty
     * input (the r8 form fed real counts, so a duplicate key silently
     * opened gaps in the index — a hash draw mapped into a gap matched
     * nothing and a negative-sample slot vanished without a trace).
@@ -983,19 +943,19 @@ object Relational extends QueryFamily {
     */
   private[graft] def denseIndexOf(keys: DataFrame, keyName: String,
       idxName: String): DataFrame =
-    coarseRankLo(
+    RankPrefix.before(
       keys.select(col(keyName).cast("long").as("__k"))
-        .groupBy("__k").agg(lit(1L).as("__cnt")))
-      .select(col("__k").as(keyName), (col("__lo") - 1L).as(idxName))
+        .groupBy("__k").agg(lit(1L).as("__cnt")), Nil, "__k", "__cnt")
+      .select(col("__k").as(keyName), col("__cnt_before").as(idxName))
 
   /** SQL-exact ntile(`buckets`) of every row under (key ASC, tie ASC)
-    * — computed WITHOUT a single-partition global sort. Same
-    * two-level prefix idea as [[Stats.equidepthHist]], extended to
-    * per-ROW assignment (a value that straddles a quartile boundary is
-    * split among its customers by the custkey tie-break):
+    * — computed WITHOUT a single-partition global sort. The
+    * [[RankPrefix.before]] rank intervals of [[Stats.equidepthHist]],
+    * extended to per-ROW assignment (a value that straddles a quartile
+    * boundary is split among its customers by the custkey tie-break):
     *
     *  1. aggregate to (key, cnt) — one parallel shuffle on key —
-    *     and rank intervals via [[coarseRankLo]];
+    *     and rank intervals via [[RankPrefix.before]];
     *  2. each key's global rank interval [lo, lo+cnt) joins back
     *     (broadcastable offsets, key-partitioned ranks), a row's exact
     *     rank is lo + row_number within its key ordered by the tie
@@ -1009,18 +969,17 @@ object Relational extends QueryFamily {
       tieCol: Column = col("o_custkey"), buckets: Int = 4): DataFrame = {
     val keyed = df.withColumn("__k", keyCol)
     val byVal = keyed.groupBy("__k").agg(count(lit(1)).as("__cnt"))
-    val ranks = coarseRankLo(byVal)
+    val ranks = RankPrefix.before(byVal, Nil, "__k", "__cnt").select("__k", "__cnt_before")
     val nDf = byVal.agg(sum("__cnt").as("__n"))
     val wTie = Window.partitionBy("__k").orderBy(tieCol)
     keyed.join(ranks, Seq("__k"))
       .crossJoin(broadcast(nDf))
       .withColumn("__q", expr(s"__n DIV $buckets"))
       .withColumn("__rem", expr(s"__n % $buckets"))
-      .withColumn("__rank", col("__lo") + row_number().over(wTie) - 1)
-      .withColumn(scoreName, expr(
-        "CAST(CASE WHEN __rank <= __rem * (__q + 1) THEN (__rank + __q) DIV (__q + 1) " +
-          "ELSE __rem + (__rank - __rem * (__q + 1) + __q - 1) DIV __q END AS INT)"))
-      .drop("__k", "__lo", "__rank", "__n", "__q", "__rem")
+      .withColumn("__rank", col("__cnt_before") + row_number().over(wTie))
+      .withColumn(scoreName,
+        RankPrefix.ntileBucket(col("__rank"), col("__q"), col("__rem")).cast("int"))
+      .drop("__k", "__cnt_before", "__rank", "__n", "__q", "__rem")
   }
 
   /** RFM customer segmentation — the classic recsys-companion

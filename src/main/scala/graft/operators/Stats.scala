@@ -4,7 +4,7 @@ import graft.{QueryFamily, QuerySpec, Tables}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -25,12 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - The equi-depth histogram is EXACT yet fully distributed: instead
   *    of a global ntile sort over all rows, it aggregates to distinct
-  *    values, range-partitions them, computes a per-partition prefix
-  *    sum in parallel windows keyed by partition id, stitches
-  *    partitions with a driver-side offset table (|partitions| rows —
-  *    the one legitimate collect), and assigns each value's global
-  *    rank interval to ntile buckets in closed form. At 100 TB the
-  *    only global structure is the range partitioner's sample.
+  *    values, takes each value's global rank interval from
+  *    [[RankPrefix.before]]'s two-level prefix sum, and assigns the
+  *    interval to ntile buckets in closed form. Every exact rank,
+  *    quantile and running sum in this file rides the same kernel.
   *
   *  - Sliding distinct-users turns the per-day range self-join
   *    (days × events) into a 7× explode of deduplicated (user, day)
@@ -89,50 +87,15 @@ object Stats extends QueryFamily {
   /** Equi-depth histogram buckets (the optimizer-statistics default). */
   val HistBuckets = 10
 
-  /** Coarse prefix-cell ceiling: every two-level-prefix core below
-    * buckets its value domain into ≤ this many cells, so the
-    * broadcast per-cell offsets table is a constant size whatever the
-    * domain's spread or shift. */
-  val CoarseCells = 1024
-
-  /** Adaptive coarse prefix cell over `valueCol`:
-    * floor((v − min) · C / (max − min)) capped to C — the
-    * double-domain twin of [[Relational.coarseRankLo]]'s adaptive
-    * min/width sizing. IEEE multiplication/division by a shared
-    * positive scalar and floor are all monotone, so cell order agrees
-    * with value order and downstream (…, coarse)-prefix sums see
-    * exactly a global sort's order; the min/max normalization bounds
-    * the cell count by [[CoarseCells]] REGARDLESS of the domain — the
-    * retired fixed-width constants (MwCoarseWidth et al.) bounded
-    * cells only by domain-spread/width, so a wide or shifted value
-    * domain could blow the broadcast offsets tables past any limit.
-    * A degenerate single-value domain collapses to cell 0.
-    */
-  private[graft] def withCoarseCell(df: DataFrame, valueCol: String): DataFrame = {
-    val mm = df.agg(min(col(valueCol)).cast("double").as("__vmn"),
-      max(col(valueCol)).cast("double").as("__vmx"))
-    df.crossJoin(broadcast(mm))
-      .withColumn("coarse",
-        when(col("__vmx") > col("__vmn"),
-          least(
-            floor((col(valueCol).cast("double") - col("__vmn")) *
-              lit(CoarseCells.toDouble) / (col("__vmx") - col("__vmn"))).cast("long"),
-            lit(CoarseCells.toLong)))
-          .otherwise(lit(0L)))
-      .drop("__vmn", "__vmx")
-  }
-
   /** Exact equi-depth histogram of l_extendedprice in [[HistBuckets]]
     * buckets with SQL ntile semantics (first n%B buckets take the
     * extra row), computed WITHOUT a global row sort:
     *
     *  1. aggregate to (value, cnt) — bounded by the value domain, not
     *     row count;
-    *  2. global rank intervals via a two-level prefix sum keyed by a
-    *     DETERMINISTIC coarse bucket of the value itself
-    *     (floor(v / width)): within-coarse cumulative counts run as
-    *     parallel windows, the coarse totals (a few dozen rows) take
-    *     one tiny global prefix window and broadcast back as offsets.
+    *  2. global rank intervals from [[RankPrefix.before]]'s two-level
+    *     prefix sum (a coarse cell of the value itself, within-cell
+    *     running counts in parallel windows, broadcast cell offsets).
     *     No spark_partition_id, no collect — re-execution of any
     *     subtree cannot change an assignment;
     *  3. closed-form ntile: with q = n div B, rem = n mod B, bucket
@@ -150,36 +113,22 @@ object Stats extends QueryFamily {
       HistBuckets)
 
   /** Frame-parameterized core of [[equidepthHist]]: equi-depth buckets
-    * of `vals.v` (any numeric) with the two-level coarse prefix
-    * machinery. Exposed so the scale spec can drive it with a
-    * synthetic ≥10⁶-row, wide-domain corpus the fixtures can't
-    * provide. */
+    * of `vals.v` (any numeric) over [[RankPrefix.before]]. Exposed so
+    * the scale spec can drive it with a synthetic ≥10⁶-row,
+    * wide-domain corpus the fixtures can't provide. */
   private[graft] def equidepthHistOf(
       vals: DataFrame, buckets: Int): DataFrame = {
-    val byVal = withCoarseCell(
-      vals.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(), "v") // severed once — three consumers (r9s2)
-    val wIn = Window.partitionBy("coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = byVal.withColumn("cum_in", sum("cnt").over(wIn))
-    val totals = byVal.groupBy("coarse").agg(sum("cnt").as("tot"))
-    val wPre = Window.orderBy("coarse").rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals
-      .withColumn("off", coalesce(sum("tot").over(wPre), lit(0L)))
-      .select("coarse", "off")
-    val nDf = totals.agg(sum("tot").as("n"))
-    // Integer-exact ceils; q/rem are columns of the broadcast n scalar.
-    def bucketOf(r: String): String =
-      s"CASE WHEN $r <= rem * (q + 1) THEN ($r + q) DIV (q + 1) " +
-      s"ELSE rem + ($r - rem * (q + 1) + q - 1) DIV q END"
-    val ranked = local.join(broadcast(offs), "coarse")
+    val byVal = vals.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
+      .localCheckpoint() // severed once — the prefix and n both read it (r9s2)
+    val nDf = byVal.agg(sum("cnt").as("n"))
+    val ranked = RankPrefix.before(byVal, Nil, "v", "cnt")
       .crossJoin(broadcast(nDf))
       .withColumn("q", expr(s"n DIV $buckets"))
       .withColumn("rem", expr(s"n % $buckets"))
-      .withColumn("hi", col("cum_in") + col("off"))
-      .withColumn("lo", col("hi") - col("cnt") + 1)
-      .withColumn("b_lo", expr(bucketOf("lo")))
-      .withColumn("b_hi", expr(bucketOf("hi")))
+      .withColumn("hi", col("cnt_before") + col("cnt"))
+      .withColumn("lo", col("cnt_before") + 1)
+      .withColumn("b_lo", RankPrefix.ntileBucket(col("lo"), col("q"), col("rem")))
+      .withColumn("b_hi", RankPrefix.ntileBucket(col("hi"), col("q"), col("rem")))
       .withColumn("bucket", explode(expr("sequence(b_lo, b_hi)")))
       // E(b) = b*q + least(b, rem); rows of v in bucket b is the
       // overlap of [lo, hi] with (E(b-1), E(b)].
@@ -668,38 +617,26 @@ object Stats extends QueryFamily {
       .agg(
         sum(when(col("is_ref"), 1).otherwise(0)).as("ref_c"),
         sum(when(!col("is_ref"), 1).otherwise(0)).as("cur_c"))
-      // the (type, value) histogram feeds the coarse-cell min/max,
-      // the totals, the offsets AND the running sums — severed once
-      // so the corpus scan doesn't re-plan per consumer (r9s2 sweep)
+      // the (type, value) histogram feeds the totals and the prefix's
+      // min/max, cell totals and running sums — severed once so the
+      // corpus scan doesn't re-plan per consumer (r9s2 sweep)
       .localCheckpoint()
-    // CDF prefixes ride the two-level coarse-bucket form (the r7
+    // CDF prefixes ride RankPrefix.before keyed by type (the r7
     // mann-whitney treatment, applied per type): the running sums
-    // partition by (type, coarse cell) and the ≤ domain/width cell
-    // offsets by (type) — no task ever sorts a whole type's value
-    // histogram, which at 100 TB of continuous values grows with the
-    // corpus. Totals come from a slim aggregate join, not a whole-
-    // partition window. byVal is distinct per (type, value), so the
-    // ROWS running frame equals the old RANGE-with-peers frame.
-    val bv = withCoarseCell(byVal, "value")
-    val tots = bv.groupBy("event_type")
+    // partition by (type, coarse cell) and the cell offsets come from a
+    // per-type broadcast triangle join — no task ever sorts a whole
+    // type's value histogram, which at 100 TB of continuous values
+    // grows with the corpus. Totals come from a slim aggregate join,
+    // not a whole-partition window. byVal is distinct per (type,
+    // value), so prefix + own count equals the old RANGE-with-peers
+    // frame.
+    val tots = byVal.groupBy("event_type")
       .agg(sum("ref_c").as("ref_tot"), sum("cur_c").as("cur_tot"))
-    val wIn = Window.partitionBy("event_type", "coarse").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPre = Window.partitionBy("event_type").orderBy("coarse")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = bv.groupBy("event_type", "coarse")
-      .agg(sum("ref_c").as("cr"), sum("cur_c").as("cc"))
-      .withColumn("ref_off", coalesce(sum("cr").over(wPre), lit(0L)))
-      .withColumn("cur_off", coalesce(sum("cc").over(wPre), lit(0L)))
-      .select("event_type", "coarse", "ref_off", "cur_off")
-    bv
-      .withColumn("ref_in", sum("ref_c").over(wIn))
-      .withColumn("cur_in", sum("cur_c").over(wIn))
-      .join(broadcast(offs), Seq("event_type", "coarse"))
+    RankPrefix.before(byVal, Seq("event_type"), "value", "ref_c", "cur_c")
       .join(broadcast(tots), "event_type")
       .withColumn("d", abs(
-        (col("ref_off") + col("ref_in")).cast("double") / col("ref_tot") -
-        (col("cur_off") + col("cur_in")).cast("double") / col("cur_tot")))
+        (col("ref_c_before") + col("ref_c")).cast("double") / col("ref_tot") -
+        (col("cur_c_before") + col("cur_c")).cast("double") / col("cur_tot")))
       .groupBy("event_type")
       .agg(
         max("ref_tot").as("n_ref"),
@@ -1435,7 +1372,7 @@ object Stats extends QueryFamily {
     * assumption). Same pairing as [[Analytics.mcnemar]]: per-user
     * H2 − H1 purchase cents (fixed-pointed before summation), zero
     * deltas dropped per the standard procedure, ranks of |d| with
-    * average-rank ties via [[avgRanks2]]'s coarse-bucket two-level
+    * average-rank ties via [[avgRanks2]]'s [[RankPrefix.before]]
     * prefix — DOUBLED ranks keep W⁺ exact (W2 = Σ_{d>0} r2 = 2·W⁺ is
     * a BIGINT), and the tie-corrected normal approximation
     * z = (W⁺ − n(n+1)/4) / √(n(n+1)(2n+1)/24 − Σ(t³−t)/48) is one
@@ -1464,11 +1401,7 @@ object Stats extends QueryFamily {
     val s = g.join(avgRanks2(per.select("v")), "v")
       .agg(sum(col("npos") * col("r2")).as("w2p"),
            sum("t").as("n"),
-           // t³ in DECIMAL(38,0): a single |d| tie group past ~2.09M
-           // users would wrap t*t*t in int64 (where DuckDB raises) —
-           // the decimal moment is exact to t ≈ 4.6e12 per group
-           sum(col("t").cast("decimal(38,0)") * col("t") * col("t") - col("t"))
-             .as("tie3"))
+           tieSum(col("t")).as("tie3"))
     val varD = col("n").cast("double") * (col("n") + 1).cast("double") *
       (lit(2L) * col("n") + 1).cast("double") / 24.0 -
       col("tie3").cast("double") / 48.0
@@ -1527,9 +1460,8 @@ object Stats extends QueryFamily {
     * Scale: ranks are NEVER assigned per row — one aggregate
     * collapses the stream to (value, n_a, n_b) groups (bounded by the
     * value domain: 2-decimal readings), and the prefix sum over that
-    * aggregate runs in the [[equidepthHist]] coarse-bucket two-level
-    * form (within-coarse partitioned windows + a tiny coarse-total
-    * prefix broadcast back), so even an UNBOUNDED value domain never
+    * aggregate is [[RankPrefix.before]] (within-cell partitioned
+    * windows + broadcast cell offsets), so even an UNBOUNDED value domain never
     * funnels through one task. Every tie group's average rank is the
     * closed form before + (t+1)/2; rank sums are then weighted sums.
     * Ranks stay in exact .5 steps (doubles are exact there), so U is
@@ -1540,36 +1472,34 @@ object Stats extends QueryFamily {
       .where(col("event_type").isin(MwA, MwB))
       .select(col("value").as("v"), (col("event_type") === MwA).as("is_a")))
 
-  /** Shared rank-sum aggregate over (v, is_a) pairs: the coarse-bucket
-    * two-level average-rank prefix (see [[mannWhitney]]'s scaladoc)
+  /** Shared rank-sum aggregate over (v, is_a) pairs: the
+    * [[RankPrefix.before]] average-rank prefix (see [[mannWhitney]]'s scaladoc)
     * reduced to ONE row (n1, n2, r1, tie3) — r1 = Σ avg-ranks of
     * group A. Feeds both the U test and [[evalAuc]] (AUC is exactly
     * U1/(n1·n2), the probability a random positive outranks a random
     * negative). */
   private[graft] def rankSumAgg(pairs: DataFrame): DataFrame = {
-    // severed once: the value histogram feeds the coarse min/max, the
-    // offsets and the prefix chain (r9s2 sweep — one corpus scan)
-    val g = withCoarseCell(
-      pairs
-        .groupBy(col("v"))
-        .agg(sum(when(col("is_a"), 1).otherwise(0)).as("na"),
-             sum(when(!col("is_a"), 1).otherwise(0)).as("nb"))
-        .withColumn("t", col("na") + col("nb"))
-        .localCheckpoint(), "v")
-    val wIn = Window.partitionBy("coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = g.groupBy("coarse").agg(sum("t").as("tot"))
-      .withColumn("off", coalesce(sum("tot").over(
-        Window.orderBy("coarse").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("coarse", "off")
-    g.withColumn("b_in", coalesce(sum(col("t")).over(wIn), lit(0L)))
-      .join(broadcast(offs), "coarse")
-      .withColumn("before", col("off") + col("b_in"))
-      .withColumn("avg_rank", col("before") + (col("t") + 1.0) / 2.0)
+    // severed once: the value histogram feeds the prefix's min/max,
+    // cell totals and running sums (r9s2 sweep — one corpus scan)
+    val g = pairs
+      .groupBy(col("v"))
+      .agg(sum(when(col("is_a"), 1).otherwise(0)).as("na"),
+           sum(when(!col("is_a"), 1).otherwise(0)).as("nb"))
+      .withColumn("t", col("na") + col("nb"))
+      .localCheckpoint()
+    RankPrefix.before(g, Nil, "v", "t")
+      .withColumn("avg_rank", col("t_before") + (col("t") + 1.0) / 2.0)
       .agg(sum("na").as("n1"), sum("nb").as("n2"),
            sum(col("na") * col("avg_rank")).as("r1"),
-           sum(col("t") * col("t") * col("t") - col("t")).as("tie3"))
+           tieSum(col("t")).as("tie3"))
   }
+
+  /** Σ(t³ − t) over tie-group sizes t, the rank tests' tie correction,
+    * in DECIMAL(38,0): one tie group past ~2.09M rows would wrap t³ in
+    * int64 (where DuckDB raises); the decimal moment is exact to
+    * t ≈ 4.6e12 per group. The oracles sum `t::HUGEINT * t * t - t`. */
+  private def tieSum(t: Column): Column =
+    sum(t.cast("decimal(38,0)") * t * t - t)
 
   private[graft] def mannWhitneyOf(pairs: DataFrame): DataFrame = {
     rankSumAgg(pairs)
@@ -1602,7 +1532,7 @@ object Stats extends QueryFamily {
        |), agg AS (
        |  SELECT sum(na)::BIGINT AS n1, sum(nb)::BIGINT AS n2,
        |    sum(na * avg_rank) AS r1,
-       |    sum(t * t * t - t)::BIGINT AS tie3
+       |    sum(t::HUGEINT * t * t - t) AS tie3
        |  FROM r
        |), u AS (
        |  SELECT n1, n2, r1 - n1 * (n1 + 1) / 2.0 AS u1, tie3, n1 + n2 AS n
@@ -1626,7 +1556,7 @@ object Stats extends QueryFamily {
     * they purchase on/after [[AucLabelStart]], and compute ROC AUC =
     * P(score_pos > score_neg) + ½P(tie) — which is EXACTLY the
     * Mann-Whitney U₁/(n₁·n₂), so the query rides [[rankSumAgg]]'s
-    * coarse-bucket average-rank machinery unchanged (no global sort,
+    * average-rank prefix unchanged (no global sort,
     * no per-pair comparison — the rank-sum identity turns the n₁·n₂
     * pair space into one aggregate). The propensity baseline "activity
     * predicts conversion" is the eval every ranking team runs before
@@ -1696,30 +1626,21 @@ object Stats extends QueryFamily {
        |FROM agg""".stripMargin
 
   /** Doubled average rank (2·avg-rank, an exact INTEGER even for tie
-    * groups: 2·before + t + 1) of every distinct value, via the
-    * [[equidepthHist]]-style coarse-bucket two-level prefix — the
-    * building block that lets [[spearman]] run entirely in BIGINT. */
+    * groups: 2·before + t + 1) of every distinct value, via
+    * [[RankPrefix.before]] — the building block that lets [[spearman]] run entirely in BIGINT. */
   private def avgRanks2(vals: DataFrame): DataFrame = {
-    val g = withCoarseCell(
-      vals.groupBy("v").agg(count(lit(1)).as("t"))
-        .localCheckpoint(), "v") // severed once — three consumers (r9s2)
-    val wIn = Window.partitionBy("coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = g.groupBy("coarse").agg(sum("t").as("tot"))
-      .withColumn("off", coalesce(sum("tot").over(
-        Window.orderBy("coarse").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("coarse", "off")
-    g.withColumn("b_in", coalesce(sum(col("t")).over(wIn), lit(0L)))
-      .join(broadcast(offs), "coarse")
+    val g = vals.groupBy("v").agg(count(lit(1)).as("t"))
+      .localCheckpoint() // severed once — the prefix reads it three times (r9s2)
+    RankPrefix.before(g, Nil, "v", "t")
       .select(col("v"),
-        (lit(2L) * (col("off") + col("b_in")) + col("t") + lit(1L)).as("r2"))
+        (lit(2L) * col("t_before") + col("t") + lit(1L)).as("r2"))
   }
 
   /** Spearman rank correlation between customer account balance and
     * lifetime order spend — the monotone-association check behind
     * "does stated wealth track actual purchasing". Ties get average
-    * ranks; both rank passes run the coarse-bucket two-level prefix
-    * (no global row sort), and because DOUBLED average ranks are exact
+    * ranks; both rank passes run [[RankPrefix.before]] (no global row
+    * sort), and because DOUBLED average ranks are exact
     * integers, every moment (Σrx, Σrx², Σrx·ry …) is a BIGINT — the
     * only floating-point is the single closed-form division
     * ρ = (nΣxy−ΣxΣy)/√((nΣxx−Σx²)(nΣyy−Σy²)), IEEE-identical
@@ -1856,9 +1777,9 @@ object Stats extends QueryFamily {
     * revenue share over per-customer lifetime revenue — the 80/20
     * audit behind every "whale" segmentation decision. All arithmetic
     * is integer until the final two divisions: revenue is exact
-    * cents; ranks come from the coarse-bucketed two-level prefix sum
-    * ([[equidepthHist]]'s mechanism — parallel within-bucket windows
-    * + a tiny global bucket prefix, no global sort, no collect); a
+    * cents; ranks and the revenue before each value come from
+    * [[RankPrefix.before]] (parallel within-cell windows + broadcast
+    * cell offsets, no global sort, no collect); a
     * tie group of value v spanning ranks lo..hi contributes
     * v·(lo+hi)·cnt to 2S in closed form, so
     * G = (2S − (n+1)T) / (nT) is bit-exact on any engine. The
@@ -1876,26 +1797,15 @@ object Stats extends QueryFamily {
   /** Frame-parameterized core of [[revenueGini]] over a `cents`
     * column. Exposed for the off-fixture scale spec. */
   private[graft] def revenueGiniOf(rev: DataFrame): DataFrame = {
-    // severed once — four consumers of the revenue histogram (r9s2)
-    val byVal = withCoarseCell(
-      rev.groupBy(col("cents").as("v")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(), "v")
-    val wIn = Window.partitionBy("coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val within = byVal
-      .withColumn("cb_in", coalesce(sum("cnt").over(wIn), lit(0L)))
-      .withColumn("sb_in", coalesce(sum(col("v") * col("cnt")).over(wIn), lit(0L)))
-    val wCoarse = Window.orderBy("coarse").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = byVal.groupBy("coarse")
-      .agg(sum("cnt").as("c_cnt"), sum(col("v") * col("cnt")).as("c_sum"))
-      .withColumn("cb_off", coalesce(sum("c_cnt").over(wCoarse), lit(0L)))
-      .withColumn("sb_off", coalesce(sum("c_sum").over(wCoarse), lit(0L)))
-      .select("coarse", "cb_off", "sb_off")
-    val groups = within.join(broadcast(offsets), "coarse")
+    // severed once — the prefix reads the revenue histogram three times (r9s2)
+    val byVal = rev.groupBy(col("cents").as("v")).agg(count(lit(1)).as("cnt"))
+      .withColumn("vc", col("v") * col("cnt"))
+      .localCheckpoint()
+    val groups = RankPrefix.before(byVal, Nil, "v", "cnt", "vc")
       .select(col("v"), col("cnt"),
-        (col("cb_off") + col("cb_in") + 1L).as("lo"),
-        (col("cb_off") + col("cb_in") + col("cnt")).as("hi"),
-        (col("sb_off") + col("sb_in")).as("cumrev_before"))
+        (col("cnt_before") + 1L).as("lo"),
+        (col("cnt_before") + col("cnt")).as("hi"),
+        col("vc_before").as("cumrev_before"))
     val tot = groups.agg(
       sum(col("v") * col("cnt")).as("t"),
       sum(col("cnt")).as("n"),
@@ -2083,7 +1993,7 @@ object Stats extends QueryFamily {
     * dominate the others? H = 12/(N(N+1))·Σ R_j²/n_j − 3(N+1) with the
     * tie correction C = 1 − Σ(t³−t)/(N³−N), df = k−1.
     *
-    * Scale: identical to [[rankSumAgg]]'s two-level coarse-bucket
+    * Scale: identical to [[rankSumAgg]]'s [[RankPrefix.before]]
     * average-rank prefix — ranks are never assigned per row; the
     * stream collapses to (value, type) counts (bounded by the value
     * domain × 5 types) and per-value DOUBLED average ranks
@@ -2102,16 +2012,8 @@ object Stats extends QueryFamily {
     // the (v, grp) histogram feeds the rank chain AND the per-group
     // join — severed once (r9s2 sweep: one corpus scan, not four)
     val g = e.groupBy("v", "grp").agg(count(lit(1)).as("n")).localCheckpoint()
-    val byV = withCoarseCell(g.groupBy("v").agg(sum("n").as("t")), "v")
-    val wIn = Window.partitionBy("coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = byV.groupBy("coarse").agg(sum("t").as("tot"))
-      .withColumn("off", coalesce(sum("tot").over(
-        Window.orderBy("coarse").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("coarse", "off")
-    val ranked = byV.withColumn("b_in", coalesce(sum("t").over(wIn), lit(0L)))
-      .join(broadcast(offs), "coarse")
-      .withColumn("r2", (col("off") + col("b_in")) * 2 + col("t") + 1)
+    val ranked = RankPrefix.before(g.groupBy("v").agg(sum("n").as("t")), Nil, "v", "t")
+      .withColumn("r2", col("t_before") * 2 + col("t") + 1)
       .select("v", "t", "r2")
     val perGroup = g.join(ranked, "v")
       .groupBy("grp")
@@ -2121,7 +2023,7 @@ object Stats extends QueryFamily {
         sum((col("r2_j").cast("double") / 2.0) * (col("r2_j").cast("double") / 2.0)
           / col("n_j")).as("sq"))
       .crossJoin(broadcast(
-        ranked.agg(sum(col("t") * col("t") * col("t") - col("t")).as("tie3"))))
+        ranked.agg(tieSum(col("t")).as("tie3"))))
       .select(col("k"),
         (lit(12.0) / (col("nn") * (col("nn") + 1.0)) * col("sq")
           - lit(3.0) * (col("nn") + 1.0)).as("h0"),
@@ -2155,7 +2057,7 @@ object Stats extends QueryFamily {
       |    sum((r2_j::DOUBLE / 2.0) * (r2_j::DOUBLE / 2.0) / n_j) AS sq
       |  FROM pg
       |), tie AS (
-      |  SELECT sum(t * t * t - t)::BIGINT AS tie3 FROM r
+      |  SELECT sum(t::HUGEINT * t * t - t) AS tie3 FROM r
       |), hh AS (
       |  SELECT k,
       |    12.0 / (nn * (nn + 1.0)) * sq - 3.0 * (nn + 1.0) AS h0,
@@ -2419,11 +2321,11 @@ object Stats extends QueryFamily {
     * user: exact spend in cents (fixed-point BEFORE summation), a
     * deterministic hash arm (the house A/B idiom); per arm: the exact
     * type-1 quantile VALUES at [[QteTaus]] — the k-th order statistic
-    * (k = ⌈τ·n/100⌉) located WITHOUT a global sort via the same
-    * two-level coarse prefix as [[equidepthHistOf]]: by-value
-    * aggregation (bounded by the value domain), within-coarse
-    * cumulative windows keyed (arm, coarse), and a per-arm prefix over
-    * the few-dozen coarse totals. A value holds rank k iff its
+    * (k = ⌈τ·n/100⌉) located WITHOUT a global sort via
+    * [[RankPrefix.before]] keyed by arm: by-value aggregation (bounded
+    * by the value domain), within-cell cumulative windows keyed
+    * (arm, cell), and per-arm cell offsets from a broadcast triangle
+    * join of the cell totals. A value holds rank k iff its
     * contiguous rank interval [lo, hi] covers k — tie-insensitive by
     * construction. QTE(τ) = q_treat(τ) − q_control(τ), exact BIGINTs
     * end to end.
@@ -2439,26 +2341,16 @@ object Stats extends QueryFamily {
     * the scale spec drives it with a synthesized wide-domain
     * million-row population the fixture can't provide. */
   private[graft] def qteOf(perUser: DataFrame): DataFrame = {
-    // severed once — the histogram feeds the prefix chain, the cell
-    // offsets AND (since r9s2) the per-arm totals, which derive from
-    // it instead of a second pass over the per-user frame
-    val byVal = withCoarseCell(
-      perUser.groupBy("arm", "v").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(), "v")
-    val wIn = Window.partitionBy("arm", "coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = byVal.withColumn("cum_in", sum("cnt").over(wIn))
-    val totals = byVal.groupBy("arm", "coarse").agg(sum("cnt").as("tot"))
-    val wPre = Window.partitionBy("arm").orderBy("coarse")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals
-      .withColumn("off", coalesce(sum("tot").over(wPre), lit(0L)))
-      .select("arm", "coarse", "off")
+    // severed once — the histogram feeds the prefix AND (since r9s2)
+    // the per-arm totals, which derive from it instead of a second
+    // pass over the per-user frame
+    val byVal = perUser.groupBy("arm", "v").agg(count(lit(1)).as("cnt"))
+      .localCheckpoint()
     val nArm = byVal.groupBy("arm").agg(sum("cnt").as("n"))
-    val hit = local.join(offs, Seq("arm", "coarse"))
+    val hit = RankPrefix.before(byVal, Seq("arm"), "v", "cnt")
       .join(broadcast(nArm), "arm")
-      .withColumn("hi", col("cum_in") + col("off"))
-      .withColumn("lo", col("hi") - col("cnt") + 1)
+      .withColumn("hi", col("cnt_before") + col("cnt"))
+      .withColumn("lo", col("cnt_before") + 1)
       .withColumn("tau", explode(array(QteTaus.map(lit(_)): _*)))
       .withColumn("k", expr("(n * tau + 99) div 100"))
       .where(col("k") >= col("lo") && col("k") <= col("hi"))
@@ -2514,8 +2406,8 @@ object Stats extends QueryFamily {
     * distribution and the eval coverage are all functions of the
     * (segment, arm, cents) histogram, which is checkpointed slim and
     * feeds every downstream pass as weighted rows. q̂ is an exact
-    * order statistic, so it rides the same
-    * (group, coarse-cell) two-level prefix as [[qteOf]] — per-segment
+    * order statistic, so it rides [[RankPrefix.before]] keyed by
+    * segment, like [[qteOf]] — per-segment
     * score populations grow with the corpus, exactly the
     * low-cardinality-PARTITION-BY hazard the r8 sweep retired, so no
     * window ever sees more than one (segment, cell) slice; the
@@ -2559,21 +2451,11 @@ object Stats extends QueryFamily {
     val calS = hist.where(col("arm") === 0)
       .join(broadcast(mu), "segment")
       .withColumn("v", abs(col("cents") - col("mu_cents")))
-    val byVal = withCoarseCell(
-      calS.groupBy("segment", "v").agg(sum("hcnt").as("cnt")), "v")
-    val wIn = Window.partitionBy("segment", "coarse").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = byVal.withColumn("cum_in", sum("cnt").over(wIn))
-    val totals = byVal.groupBy("segment", "coarse").agg(sum("cnt").as("tot"))
-    val wPre = Window.partitionBy("segment").orderBy("coarse")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals
-      .withColumn("off", coalesce(sum("tot").over(wPre), lit(0L)))
-      .select("segment", "coarse", "off")
-    val qhat = local.join(broadcast(offs), Seq("segment", "coarse"))
+    val qhat = RankPrefix.before(
+        calS.groupBy("segment", "v").agg(sum("hcnt").as("cnt")), Seq("segment"), "v", "cnt")
       .join(broadcast(mu.select("segment", "n_cal")), "segment")
-      .withColumn("hi", col("cum_in") + col("off"))
-      .withColumn("lo", col("hi") - col("cnt") + 1)
+      .withColumn("hi", col("cnt_before") + col("cnt"))
+      .withColumn("lo", col("cnt_before") + 1)
       .withColumn("k", least(
         expr(s"((n_cal + 1) * $ConfNum + ${ConfDen - 1}) div $ConfDen"),
         col("n_cal")))

@@ -154,8 +154,6 @@ object TextAnalysis extends QueryFamily {
 
   /** Share of the corpus token mass the budget admits, percent. */
   val BudgetPct = 20L
-  /** Coarse range cells for the score-domain prefix. */
-  private val BudgetCoarse = 1024L
 
   /** Budgeted curation — "give me the best N tokens": keep documents
     * in descending quality order until the cumulative token count
@@ -166,12 +164,11 @@ object TextAnalysis extends QueryFamily {
     * hit a token target, only a rank cut can.
     *
     * The cut is found WITHOUT a global sort: cumulative-token
-    * prefixes ride the same two-level coarse machinery as
-    * [[Relational.quartileScore]], keyed on the 1e6-fixed-point score
-    * (by-score aggregation bounded by the score domain; within-coarse
-    * windows; ≤[[BudgetCoarse]] coarse totals via a broadcast triangle
-    * join; within-score per-doc cumulative ordered by doc_id — worst
-    * case one task scans one tied score's docs). A document is kept
+    * prefixes come from [[RankPrefix.before]] over the negated
+    * 1e6-fixed-point score (by-score aggregation bounded by the score
+    * domain; within-cell windows; broadcast cell offsets; within-score
+    * per-doc cumulative ordered by doc_id — worst case one task scans
+    * one tied score's docs). A document is kept
     * iff the token mass strictly before it is under budget — exact
     * BIGINT arithmetic end to end.
     */
@@ -181,8 +178,8 @@ object TextAnalysis extends QueryFamily {
               round(col("score") * 1e6).cast("long").as("sfp"))
       // r10 rescan sever: the slim 4-col scored frame has EIGHT
       // downstream consumers (budget total, by-score aggregate and its
-      // min/max + coarse-offset chain, the final keep join) — without
-      // the sever each re-plans the whole tokenize-and-score corpus
+      // RankPrefix min/max, cell totals and offsets, the final keep
+      // join) — without the sever each re-plans the whole tokenize-and-score corpus
       // chain (documents ×8 in the r9 plan)
       .localCheckpoint(),
       BudgetPct)
@@ -192,24 +189,11 @@ object TextAnalysis extends QueryFamily {
     * corpus with a wide score domain. */
   private[graft] def tokenBudgetOf(d: DataFrame, budgetPct: Long): DataFrame = {
     val bDf = d.agg(expr(s"(sum(toks) * $budgetPct) div 100").as("budget"))
-    val byKey = d.groupBy("sfp").agg(sum("toks").as("ktoks"))
-    val mm = byKey.agg(min("sfp").as("mn"), max("sfp").as("mx"))
-    val bv = byKey.crossJoin(broadcast(mm))
-      .withColumn("w", greatest(lit(1L),
-        ((col("mx") - col("mn")) / lit(BudgetCoarse)).cast("long") + lit(1L)))
-      // descending score maps to ascending coarse cells (best first)
-      .withColumn("coarse", ((col("mx") - col("sfp")) / col("w")).cast("long"))
-      .select("sfp", "ktoks", "coarse")
-    val wIn = Window.partitionBy("coarse").orderBy(col("sfp").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = bv.withColumn("cumk_prev", coalesce(sum("ktoks").over(wIn), lit(0L)))
-    val totals = bv.groupBy("coarse").agg(sum("ktoks").as("tot"))
-    val offs = totals.as("a")
-      .join(broadcast(totals.as("b")), col("b.coarse") < col("a.coarse"), "left")
-      .groupBy(col("a.coarse").as("coarse"))
-      .agg(coalesce(sum(col("b.tot")), lit(0L)).as("off"))
-    val keyPrev = local.join(broadcast(offs), Seq("coarse"))
-      .select(col("sfp"), (col("off") + col("cumk_prev")).as("prev_key_toks"))
+    // best score first: the prefix runs over the negated score
+    val keyPrev = RankPrefix.before(
+        d.groupBy("sfp").agg(sum("toks").as("ktoks")).withColumn("neg_sfp", -col("sfp")),
+        Nil, "neg_sfp", "ktoks")
+      .select(col("sfp"), col("ktoks_before").as("prev_key_toks"))
     val wTie = Window.partitionBy("sfp").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     d.join(keyPrev, "sfp").crossJoin(broadcast(bDf))
@@ -479,8 +463,8 @@ object TextAnalysis extends QueryFamily {
     * doc count, ll range, token mass, sources represented.
     *
     * Scale: bucket assignment goes through [[Relational.quartileScore]]'s
-    * distributed exact rank (two-level coarse prefix over the
-    * 6dp-fixed-point ll key + closed-form ntile bucket) — the r6 rfm
+    * distributed exact rank ([[RankPrefix.before]] over the
+    * 6dp-fixed-point ll key + [[RankPrefix.ntileBucket]]) — the r6 rfm
     * lesson applied here: the previous global `ntile` window funneled
     * the whole corpus through one task. The 1e6 fixed-point key is
     * round()ed, not truncated, so equal 6dp scores share a key and

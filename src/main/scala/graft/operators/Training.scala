@@ -657,9 +657,8 @@ object Training extends QueryFamily {
     * [cum_lo, cum_lo+mass) covers u), min-slot dedup, positive
     * anti-join, first [[NegK]] by slot order.
     *
-    * Scale: the cumulative-mass table rides
-    * [[graft.operators.Relational.coarseRankLo]] with __cnt := mass
-    * (the rank-interval machinery IS a weighted prefix sum — rank
+    * Scale: the cumulative-mass table is
+    * [[graft.operators.RankPrefix.before]] weighted by mass (rank
     * intervals are the special case mass ≡ 1), so nothing
     * catalog-sized ever global-sorts; it is memoized per (session,
     * sfDir) like [[catalogIndex]]. The draw→interval range join
@@ -698,23 +697,22 @@ object Training extends QueryFamily {
 
   /** (item_id, mass, cum_lo) from an (item_id, cnt) histogram: mass =
     * round(cnt^0.75 · [[PopMassScale]]) and cum_lo = Σ mass of items
-    * with smaller item_id — [[graft.operators.Relational.coarseRankLo]]
-    * fed mass as __cnt (its __lo − 1 IS the weighted prefix).
+    * with smaller item_id — [[graft.operators.RankPrefix.before]]
+    * weighted by mass.
     * PRECONDITION: `counts` has ONE row per item_id (guaranteed by the
     * [[itemPopCounts]] groupBy; a caller-supplied histogram with a
-    * duplicated key would fan the join-back out and double the key's
-    * interval — same class as denseIndexOf's uniqueness rule, so the
-    * scale spec asserts the engine cum table row-for-row against a
-    * local prefix, which any duplicate would break loudly). */
+    * duplicated key would break the kernel's one-row-per-value rule and
+    * overlap the key's intervals — same class as denseIndexOf's
+    * uniqueness rule, so the scale spec asserts the engine cum table
+    * row-for-row against a local prefix, which any duplicate would
+    * break loudly). */
   private[graft] def popMassCumOf(counts: DataFrame): DataFrame = {
     val mass = counts
-      .select(col("item_id").cast("long").as("__k"),
+      .select(col("item_id").cast("long").as("item_id"),
         round(sqrt(col("cnt").cast("double") * sqrt(col("cnt").cast("double")))
-          * PopMassScale, 0).cast("long").as("__cnt"))
-    Relational.coarseRankLo(mass)
-      .join(mass, "__k")
-      .select(col("__k").as("item_id"), col("__cnt").as("mass"),
-        (col("__lo") - 1L).as("cum_lo"))
+          * PopMassScale, 0).cast("long").as("mass"))
+    RankPrefix.before(mass, Nil, "item_id", "mass")
+      .select(col("item_id"), col("mass"), col("mass_before").as("cum_lo"))
   }
 
   /** Frame-parameterized core of [[negativeSamplePop]] (the scale spec
@@ -974,7 +972,7 @@ object Training extends QueryFamily {
     * [start, start+cnt) interval covers k — the doc_id tie-break of
     * the retired ranked-table form never changed the VALUE at a rank,
     * only which doc held it), so it is represented as ≤ |length
-    * domain| intervals from [[graft.operators.Relational.coarseRankLo]]
+    * domain| intervals from [[graft.operators.RankPrefix.before]]
     * — the ref source grows with the corpus, its distinct lengths
     * don't, and nothing ref-sized ever global-sorts or broadcasts.
     * The interpolation is evaluated once per DISTINCT (source,
@@ -993,11 +991,10 @@ object Training extends QueryFamily {
     val hist = d.groupBy("source", "n_chars").agg(count(lit(1)).as("__c"))
       .localCheckpoint()
     val refHist = hist.where(col("source") === QnRef)
-      .select(col("n_chars").cast("long").as("__k"), col("__c").as("__cnt"))
-    val refIval = Relational.coarseRankLo(refHist)
-      .join(refHist, "__k")
-      .select(col("__k").as("rv"), (col("__lo") - 1L).as("rk_s"),
-        (col("__lo") + col("__cnt") - 2L).as("rk_e"))
+      .select(col("n_chars").cast("long").as("rv"), col("__c").as("__cnt"))
+    val refIval = RankPrefix.before(refHist, Nil, "rv", "__cnt")
+      .select(col("rv"), col("__cnt_before").as("rk_s"),
+        (col("__cnt_before") + col("__cnt") - 1L).as("rk_e"))
     val nRef = refHist.agg(sum("__cnt").as("n_ref"))
     // percent_rank = (rank−1)/(n−1) with rank() tie semantics — it
     // depends only on the (source, n_chars) HISTOGRAM, so it is

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `row_number() OVER (ORDER BY item_id)` — the one place a frame
   * that genuinely grows with the catalog met a single-task global
   * window. It now rides [[graft.operators.Relational.denseIndexOf]]'s
-  * coarse-bucket two-level prefix; this spec measures (not argues)
+  * [[graft.operators.RankPrefix.before]] prefix; this spec measures (not argues)
   * that the swap is exact at ≥10⁶ catalog rows:
   *
   *  - denseIndexOf on 1.5M SCATTERED all-distinct keys (id·K mod P —

@@ -49,13 +49,6 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     "q_rolling_corr", "q_seasonal_decompose", "q_survival_km", "q_stream_late",
     "q_msprt")
 
-  /** The tiny coarse-totals prefix of the two-level rank machinery
-    * (≤ a few thousand coarse cells by construction). */
-  private val CoarsePrefix = Set(
-    "q_equidepth_hist", "q_mann_whitney", "q_revenue_gini", "q_eval_auc",
-    "q_spearman", "q_spearman_decimal", "q_kruskal_wallis",
-    "q_wilcoxon") // avgRanks2 offsets over ≤1024 coarse cells
-
   /** Graph-rank output heads: each of these ends in a top-K rank over
     * the node/pair score table and the optimizer provably pushes the
     * bounded head UNDER the global window (asserted below, same
@@ -65,8 +58,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     * members that were NOT heads are gone from this list because their
     * global windows are gone from the plans: q_negative_sample's item
     * index and q_rec_coverage's Gini rank both ride
-    * [[graft.operators.Relational.coarseRankLo]]'s two-level prefix
-    * now. */
+    * [[graft.operators.RankPrefix.before]] now, whose cell offsets are
+    * a broadcast triangle join — no rank, quantile or running sum
+    * built on it carries a global window, so no coarse-prefix entry is
+    * listed here. */
   private val GraphRankHeads = Set(
     "q_item_communities", "q_item_pagerank", "q_rwr_proximity", "q_salsa",
     "q_shortest_paths", "q_simrank",
@@ -86,7 +81,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     "q_window_ranks", "q_gain_deciles", "q_qini")
 
   private val Allow =
-    HeadRank ++ CalendarSeries ++ CoarsePrefix ++ GraphRankHeads ++ BoundedModel
+    HeadRank ++ CalendarSeries ++ GraphRankHeads ++ BoundedModel
 
   test("every global (unpartitioned) window sits on a documented bounded input",
       ScaleTest) {

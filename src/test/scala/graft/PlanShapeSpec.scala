@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.RankPrefix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.{concat, lit, when}
@@ -164,8 +165,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // entirely inside the InMemoryRelation, never inline in the outer
     // plan (the r8 regression inlined it once per consumer). Checked
     // structurally on the optimized plan: cache substitution leaves
-    // the cached subtree behind a leaf, so any __coarse-partitioned
-    // Window REACHABLE here means the memo was bypassed. (A textual
+    // the cached subtree behind a leaf, so any window partitioned by
+    // RankPrefix's cell column REACHABLE here means the memo was bypassed. (A textual
     // count over formatted explain is NOT stable for this: whether
     // the cached subtree's nodes print depends on which session
     // first materialized the shared CacheManager entry.)
@@ -173,7 +174,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       "idx join must read the memoized catalog index")
     val inlineCoarseWindows = df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.exists(_.toString.contains("__coarse")) => w
+          if w.partitionSpec.exists(_.toString.contains(RankPrefix.CellCol)) => w
     }.size
     assert(inlineCoarseWindows === 0,
       "the index chain must be planned once inside the cache, not once per consumer")
@@ -190,7 +191,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   test("negative_sample_pop: memoized mass index, cell equi-join, anti-join, no global window") {
     val df = operators.Training.negativeSamplePop(planSession, sfTest)
     val pl = plan(df)
-    // the cumulative-mass index rides coarseRankLo (weighted) — no
+    // the cumulative-mass index is RankPrefix.before weighted by mass — no
     // catalog-wide global window anywhere in the sampler
     assert(GlobalWindowRe.findFirstIn(pl).isEmpty,
       "the weighted sampler must not plan an unpartitioned window")
@@ -433,26 +434,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("equidepth_hist: no unpartitioned window touches the full value set") {
-    // the only global window is the coarse-total prefix (a few dozen
-    // rows); every per-value window must carry the coarse partition key
+    // every per-value window carries RankPrefix's cell partition key,
+    // and the cell offsets are a broadcast triangle join, not a window
     val df = operators.Stats.equidepthHist(planSession, sfTest)
     val windows = df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
     assert(windows.nonEmpty)
     val unpartitioned = windows.filter(_.partitionSpec.isEmpty)
-    // exactly the tiny coarse-prefix window may be unpartitioned, and it
-    // must sit above an Aggregate that has already collapsed to coarse
-    unpartitioned.foreach { w =>
-      val aggBelow = w.child.collectFirst {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }
-      assert(aggBelow.isDefined,
-        "an unpartitioned window must only see post-aggregate (coarse) rows")
-      val groupCols = aggBelow.get.groupingExpressions.flatMap(_.references.map(_.name))
-      assert(groupCols.forall(_ == "coarse"),
-        s"unpartitioned window must read coarse totals only, saw grouping $groupCols")
-    }
+    assert(unpartitioned.isEmpty,
+      s"no window may be unpartitioned, saw ${unpartitioned.size}")
   }
 
   test("kendall_tau: quadratic pair space is a broadcast over the bounded head, never a shuffle") {
@@ -562,7 +553,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("revenue_gini: rank prefix windows on the coarse bucket, offsets broadcast") {
     val p = plan(operators.Stats.revenueGini(planSession, sfTest))
-    assert(p.contains("windowspecdefinition(coarse#"),
+    assert(p.contains(s"windowspecdefinition(${RankPrefix.CellCol}#"),
       "within-bucket prefix sums must be coarse-partitioned windows, not global")
     assert(p.contains("BroadcastHashJoin"),
       "the bucket offset table must broadcast back onto the value groups")
@@ -575,7 +566,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // but a single-task funnel the moment the domain is wide. Now the
     // same two-level coarse machinery as equidepth/gini.
     val p = plan(operators.Stats.mannWhitney(planSession, sfTest))
-    assert(p.contains("windowspecdefinition(coarse#"),
+    assert(p.contains(s"windowspecdefinition(${RankPrefix.CellCol}#"),
       "within-bucket rank prefixes must be coarse-partitioned windows")
     assert(p.contains("BroadcastHashJoin"),
       "the coarse offset table must broadcast back onto the value groups")
@@ -597,7 +588,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       "quartile scoring must not run any global (unpartitioned) window")
     assert(!p.contains("ntile"),
       "scores must come from the closed-form rank bucket, not a global ntile window")
-    assert(p.contains("windowspecdefinition(__coarse#") || p.contains("windowspecdefinition(__k#"),
+    assert(p.contains(s"windowspecdefinition(${RankPrefix.CellCol}#") || p.contains("windowspecdefinition(__k#"),
       "prefix/tie windows must be partitioned")
   }
 
@@ -608,7 +599,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(GlobalWindowRe.findFirstIn(p).isEmpty,
       "curriculum bucketing must not run any global (unpartitioned) window")
     assert(!p.contains("ntile"))
-    assert(p.contains("windowspecdefinition(__coarse#") || p.contains("windowspecdefinition(__k#"),
+    assert(p.contains(s"windowspecdefinition(${RankPrefix.CellCol}#") || p.contains("windowspecdefinition(__k#"),
       "prefix/tie windows must be partitioned")
   }
 

@@ -174,6 +174,54 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     check("dense-index-parity", p)
   }
 
+  test("RankPrefix.before equals a sorted local prefix for every key and weight shape") {
+    // the kernel behind every exact rank, quantile and running sum:
+    // 0/1/2 key columns × 1/2 weights over mixed-sign values, a
+    // single-value domain and longs near ±2^62 (distinct values share
+    // a cell after the double cast), with a one-row group and null
+    // values (dropped); 1 and 8 input partitions must give the same rows
+    val session = spark
+    import session.implicits._
+    val far = 1L << 62
+    val domains = Seq[(String, Gen[Long])](
+      "mixed-sign" -> Gen.chooseNum(-50L, 50L),
+      "single-value" -> Gen.const(7L),
+      "near-2^62" -> Gen.oneOf(Gen.chooseNum(far - 40, far), Gen.chooseNum(-far - 40, -far)))
+    def genRows(value: Gen[Long]): Gen[List[PrefixRow]] = for {
+      n <- Gen.chooseNum(1, 40)
+      rows <- Gen.listOfN(n, for {
+        k1 <- Gen.chooseNum(0, 2); k2 <- Gen.oneOf("x", "y")
+        v <- Gen.frequency(9 -> value.map(Option(_)), 1 -> Gen.const(Option.empty[Long]))
+        w1 <- Gen.chooseNum(0L, 9L); w2 <- Gen.chooseNum(0L, 1000L)
+      } yield PrefixRow(k1, k2, v, w1, w2))
+      lone <- value
+    } yield PrefixRow(9, "z", Some(lone), 3L, 4L) :: PrefixRow(0, "x", None, 5L, 5L) :: rows
+    def holds(keys: Seq[String], ws: Seq[String])(all: List[PrefixRow]): Boolean = {
+      def keyOf(r: PrefixRow): Seq[Any] = keys.map(Map[String, Any]("k1" -> r.k1, "k2" -> r.k2))
+      def weight(r: PrefixRow, w: String): Long = if (w == "w1") r.w1 else r.w2
+      // the precondition: one row per (keys, value)
+      val rows = all.groupBy(r => (keyOf(r), r.v)).values.map(_.head).toSeq
+      val exp = rows.filter(_.v.isDefined).groupBy(keyOf).values.flatMap { g =>
+        val sorted = g.sortBy(_.v.get)
+        sorted.indices.map(i => (keyOf(sorted(i)), sorted(i).v.get,
+          ws.map(w => sorted.take(i).map(weight(_, w)).sum)))
+      }.toSet
+      Seq(1, 8).forall { parts =>
+        val got = operators.RankPrefix.before(rows.toDF().repartition(parts), keys, "v", ws: _*)
+          .collect().toSeq
+          .map(r => (keys.map(r.getAs[Any](_)), r.getAs[Long]("v"),
+            ws.map(w => r.getAs[Long](s"${w}_before"))))
+        got.size == exp.size && got.toSet == exp
+      }
+    }
+    val params3 = SCTest.Parameters.default.withMinSuccessfulTests(3)
+    for ((name, value) <- domains; keys <- Seq(Nil, Seq("k1"), Seq("k1", "k2"));
+         ws <- Seq(Seq("w1"), Seq("w1", "w2"))) {
+      val res = SCTest.check(params3, Prop.forAll(genRows(value))(holds(keys, ws)))
+      assert(res.passed, s"rank-prefix $name keys=$keys weights=$ws: $res")
+    }
+  }
+
   test("quartileScore equals Spark's own ntile on random tied multisets") {
     // the distributed exact-rank machinery behind q_rfm_segments and
     // q_quality_curriculum: coarse buckets + closed-form ntile must be
@@ -266,3 +314,6 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     assert(res.passed, s"mw-closed-form: $res")
   }
 }
+
+/** One generated histogram row of the RankPrefix property test. */
+final case class PrefixRow(k1: Int, k2: String, v: Option[Long], w1: Long, w2: Long)

@@ -702,6 +702,33 @@ class StatsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("mann-whitney: a 2^21-row tie group keeps an exact tie sum (no BIGINT overflow)") {
+    // t³ of one 2,097,152-row tie group is 2^63: a BIGINT tie sum
+    // raises ARITHMETIC_OVERFLOW; the DECIMAL(38,0) sum stays exact
+    val tied = 1L << 21
+    val singles = (1 to 10).map(i => (if (i < 5) i else i + 1).toDouble -> (i % 2 == 0))
+    val pairs = spark.range(0L, tied)
+      .select(lit(5.0).as("v"), (col("id") % 2 === 0).as("is_a"))
+      .union(spark.createDataFrame(singles).toDF("v", "is_a"))
+    val r = operators.Stats.mannWhitneyOf(pairs).collect().head
+
+    // local closed form over the value groups in ascending order
+    val groups = (singles.map { case (v, a) => (v, 1L, if (a) 1L else 0L) } :+
+      ((5.0, tied, tied / 2))).sortBy(_._1)
+    val before = groups.scanLeft(0L)(_ + _._2)
+    val r1 = groups.zip(before).map { case ((_, t, na), b) => na * (b + (t + 1.0) / 2.0) }.sum
+    val n1 = groups.map(_._3).sum
+    val n = groups.map(_._2).sum
+    val n2 = n - n1
+    val tie3 = groups.map { case (_, t, _) => BigInt(t).pow(3) - t }.sum
+    val u1 = r1 - n1 * (n1 + 1) / 2.0
+    val z = (u1 - n1 * n2 / 2.0) /
+      math.sqrt(n1 * n2 / 12.0 * ((n + 1) - tie3.toDouble / (n * (n - 1.0))))
+    assert(r.getAs[Long]("n1") === n1 && r.getAs[Long]("n2") === n2)
+    assert(r.getAs[Double]("u1") === u1)
+    assert(math.abs(r.getAs[Double]("z") - z) < 1e-4, s"z ${r.getAs[Double]("z")} vs $z")
+  }
+
   test("anova: F, eta-squared and group means match a local recompute; permuted labels kill F") {
     val rows = Tables.customer(spark, sfTest)
       .select("c_mktsegment", "c_acctbal").collect()
