@@ -1545,13 +1545,15 @@ object Analytics extends QueryFamily {
     * window. Points carry their day; within-day running sums execute
     * as parallel day-partitioned windows, the day NET totals
     * (calendar-bounded rows) take one tiny global prefix window, and
-    * each day's carry-in offset broadcasts back — the same two-level
-    * prefix sum as [[Stats.equidepthHist]]. Cross-midnight sessions
-    * are exact for free: a day's carry-in IS the number of sessions
-    * still open at its midnight. The output covers the FULL calendar
-    * range between the first and last point day: a day fully spanned
-    * by long-running sessions (no start/end point of its own) emits
-    * peak = carry_in, n_starts = 0 — without the fill, exactly the
+    * each day's carry-in offset broadcasts back — a two-level prefix
+    * sum with the calendar day as the cell (its offsets come from that
+    * window, not from [[RankPrefix.before]]'s triangle join).
+    * Cross-midnight sessions are exact for free: a day's carry-in IS
+    * the number of sessions still open at its midnight. The output
+    * covers the FULL calendar range between the first and last point
+    * day: a day fully spanned by long-running sessions (no start/end
+    * point of its own) emits peak = carry_in, n_starts = 0 — without
+    * the fill, exactly the
     * days with sustained load went missing. The per-day max is
     * order-invariant among equal (instant, delta) points, so the
     * result is deterministic even though individual running-sum rows

@@ -1461,8 +1461,8 @@ object Stats extends QueryFamily {
     * collapses the stream to (value, n_a, n_b) groups (bounded by the
     * value domain: 2-decimal readings), and the prefix sum over that
     * aggregate is [[RankPrefix.before]] (within-cell partitioned
-    * windows + broadcast cell offsets), so even an UNBOUNDED value domain never
-    * funnels through one task. Every tie group's average rank is the
+    * windows + broadcast cell offsets), so even an UNBOUNDED value
+    * domain never funnels through one task. Every tie group's average rank is the
     * closed form before + (t+1)/2; rank sums are then weighted sums.
     * Ranks stay in exact .5 steps (doubles are exact there), so U is
     * exact and the rounded outputs are engine-invariant.
@@ -1473,8 +1473,8 @@ object Stats extends QueryFamily {
       .select(col("value").as("v"), (col("event_type") === MwA).as("is_a")))
 
   /** Shared rank-sum aggregate over (v, is_a) pairs: the
-    * [[RankPrefix.before]] average-rank prefix (see [[mannWhitney]]'s scaladoc)
-    * reduced to ONE row (n1, n2, r1, tie3) — r1 = Σ avg-ranks of
+    * [[RankPrefix.before]] average-rank prefix (see [[mannWhitney]]'s
+    * scaladoc) reduced to ONE row (n1, n2, r1, tie3) — r1 = Σ avg-ranks of
     * group A. Feeds both the U test and [[evalAuc]] (AUC is exactly
     * U1/(n1·n2), the probability a random positive outranks a random
     * negative). */
@@ -1627,7 +1627,8 @@ object Stats extends QueryFamily {
 
   /** Doubled average rank (2·avg-rank, an exact INTEGER even for tie
     * groups: 2·before + t + 1) of every distinct value, via
-    * [[RankPrefix.before]] — the building block that lets [[spearman]] run entirely in BIGINT. */
+    * [[RankPrefix.before]] — the building block that lets [[spearman]]
+    * run entirely in BIGINT. */
   private def avgRanks2(vals: DataFrame): DataFrame = {
     val g = vals.groupBy("v").agg(count(lit(1)).as("t"))
       .localCheckpoint() // severed once — the prefix reads it three times (r9s2)

@@ -179,8 +179,8 @@ object TextAnalysis extends QueryFamily {
       // r10 rescan sever: the slim 4-col scored frame has EIGHT
       // downstream consumers (budget total, by-score aggregate and its
       // RankPrefix min/max, cell totals and offsets, the final keep
-      // join) — without the sever each re-plans the whole tokenize-and-score corpus
-      // chain (documents ×8 in the r9 plan)
+      // join) — without the sever each re-plans the whole
+      // tokenize-and-score corpus chain (documents ×8 in the r9 plan)
       .localCheckpoint(),
       BudgetPct)
 

@@ -567,8 +567,8 @@ object Training extends QueryFamily {
       index: Option[DataFrame] = None): DataFrame = {
     // dense item index WITHOUT a catalog-wide global row_number: the
     // item catalog is the one "dimension" that genuinely grows into
-    // the billions at 100 TB, so its index rides the coarse-bucket
-    // two-level prefix (per-task worst case = one coarse cell), and
+    // the billions at 100 TB, so its index rides RankPrefix.before
+    // (per-task worst case = one cell of the value domain), and
     // the idx equi-join below is left unhinted — AQE broadcasts it at
     // dimension scale (PlanShapeSpec pins the conversion on the
     // memoized index) and shuffles it at web scale.

@@ -563,8 +563,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   test("mann-whitney: rank prefix on coarse-partitioned windows, offsets broadcast") {
     // r6 watch item: the tie-group prefix ran as one global
     // Window.orderBy(v) — bounded by the value domain on the fixture,
-    // but a single-task funnel the moment the domain is wide. Now the
-    // same two-level coarse machinery as equidepth/gini.
+    // but a single-task funnel the moment the domain is wide. Now
+    // RankPrefix.before, like equidepth/gini.
     val p = plan(operators.Stats.mannWhitney(planSession, sfTest))
     assert(p.contains(s"windowspecdefinition(${RankPrefix.CellCol}#"),
       "within-bucket rank prefixes must be coarse-partitioned windows")
@@ -594,7 +594,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("quality curriculum: exact-rank buckets, no global ntile window") {
     // the last corpus-sized global ntile (after r6's rfm fix): bucket
-    // assignment now rides the same two-level quartileScore machinery
+    // assignment now rides quartileScore over RankPrefix.before
     val p = plan(operators.TextAnalysis.qualityCurriculum(planSession, sfTest))
     assert(GlobalWindowRe.findFirstIn(p).isEmpty,
       "curriculum bucketing must not run any global (unpartitioned) window")

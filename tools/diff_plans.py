@@ -15,6 +15,15 @@ change between any two runs masked:
   - serve-table build nonces  `graft_serve/<table>/5580b715`
                                 -> `graft_serve/<table>/<nonce>`
     (`Sources.publish` writes every build under a fresh random dir)
+  - formatted-explain operator numbers, which shift whenever a subtree
+    gains or loses a node: `Project (13)`, `(13) Project` and
+    `BroadcastQueryStage (61), Statistics(...)` -> `(N)`,
+    `Reuses operator id: 12`, `Hosting operator id = 5`, `Subquery:1`
+    and `codegen id : 3` -> `N`
+
+With the operator numbers masked, an operator inserted or removed in
+one subtree prints as that subtree's lines only, not as a renumbering
+of every line after it.
 
 It prints every line pair that still differs (a line present on one side
 only pairs with `<none>`) and every unpaired file, and exits 1 on any
@@ -35,6 +44,10 @@ MASKS = [
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
     (re.compile(r"(graft_serve/\w+)/[0-9a-f]{8}\b"), r"\1/<nonce>"),
+    (re.compile(r"(\s)\(\d+\)(?=$|,|\s)"), r"\1(N)"),
+    (re.compile(r"^\(\d+\) "), "(N) "),
+    (re.compile(r"(Reuses operator id: |Hosting operator id = |Subquery:|codegen id : )\d+"),
+     r"\1N"),
 ]
 
 
